@@ -25,7 +25,8 @@ object GraftSession {
       // q_dup_ngrams/q_corpus_clean/q_cooccurrence ~1.2× — because the
       // row-count estimator walks every operator of every re-planned
       // iteration while no table carries catalog statistics. Sessions
-      // that query ANALYZE'd tables (Warehouse.analyzeTable) should set
+      // that query tables registered with statistics (cnpj.Warehouse
+      // writeTableWithStats / analyzeTable) should set
       // spark.sql.cbo.enabled=true themselves; CboStatsSpec pins the
       // stats-driven broadcast flip that buys.
       .config("spark.sql.session.timeZone", "UTC")

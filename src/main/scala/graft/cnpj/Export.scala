@@ -1,7 +1,6 @@
 package graft.cnpj
 
-import java.io.{File, FileOutputStream}
-import java.nio.file.Files
+import java.io.{BufferedInputStream, File, FileInputStream, FileOutputStream}
 
 import org.apache.spark.sql.DataFrame
 
@@ -44,22 +43,27 @@ object Export {
       .option("ignoreLeadingWhiteSpace", "false")
       .option("ignoreTrailingWhiteSpace", "false")
       .csv(dir)
-    val parts = new File(dir).listFiles()
+    mergeShards(new File(dir).listFiles()
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
-      .sortBy(_.getName)
+      .sortBy(_.getName).toSeq, outFile)
+  }
+
+  /** BOM, then the shards in order, each after the first without its
+    * header line (up to and including its first `\n`). Streamed shard by
+    * shard, so no shard's size is bounded by a byte array's. */
+  private[graft] def mergeShards(parts: Seq[File], outFile: File): Unit = {
     val out = new FileOutputStream(outFile)
     try {
       out.write(Array[Byte](0xEF.toByte, 0xBB.toByte, 0xBF.toByte)) // BOM
-      var headerWritten = false
-      parts.foreach { p =>
-        val bytes = Files.readAllBytes(p.toPath)
-        if (!headerWritten) { out.write(bytes); headerWritten = true }
-        else {
-          // drop this shard's header line
-          val nl = bytes.indexOf('\n'.toByte)
-          if (nl >= 0 && nl + 1 < bytes.length)
-            out.write(bytes, nl + 1, bytes.length - nl - 1)
-        }
+      parts.zipWithIndex.foreach { case (p, i) =>
+        val in = new BufferedInputStream(new FileInputStream(p))
+        try {
+          if (i > 0) {
+            var b = in.read()
+            while (b != -1 && b != '\n') b = in.read()
+          }
+          in.transferTo(out)
+        } finally in.close()
       }
     } finally out.close()
   }

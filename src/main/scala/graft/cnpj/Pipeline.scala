@@ -23,29 +23,37 @@ object Pipeline {
 
   /** Ingest raw CSVs → typed parquet warehouse. `rawDir` holds one
     * subdirectory per table of `;`-separated headerless latin-1 CSVs
-    * (the Receita Federal layout). */
+    * (the Receita Federal layout).
+    *
+    * The five queried tables are also registered as catalog tables
+    * `cnpj_<table>` carrying planner statistics over their joined and
+    * filtered columns — the reference's post-load ANALYZE step
+    * (readme.md:135) — so the flagship (and any ad-hoc query over the
+    * catalog names) plans with row counts and filter selectivity instead
+    * of raw file bytes. The statistics ride each table's write (see
+    * [[Warehouse.writeTableWithStats]]): loading reads nothing back.
+    * flagship() reads through these registrations when they point at
+    * this warehouse. */
   def buildWarehouse(spark: SparkSession, rawDir: String, warehouseDir: String)
       : Unit = {
     def raw(sub: String, schema: org.apache.spark.sql.types.StructType) =
       Ingest.readRawCsv(spark, s"$rawDir/$sub", schema)
 
-    Warehouse.writeTable(
-      Warehouse.typedEmpresas(raw("empresas", Schemas.empresasRaw)),
-      s"$warehouseDir/empresas", Some("cnpj_basico"))
-    Warehouse.writeTable(
-      Warehouse.typedEstabelecimentos(
-        raw("estabelecimentos", Schemas.estabelecimentosRaw)),
-      s"$warehouseDir/estabelecimentos", Some("cnpj_basico"))
-    Warehouse.writeTable(
-      Warehouse.typedCnae(raw("cnae", Schemas.cnaeRaw)),
-      s"$warehouseDir/cnae", None)
-    Warehouse.writeTable(
-      Warehouse.typedMunicipios(raw("municipios", Schemas.municipiosRaw)),
-      s"$warehouseDir/municipios", None)
-    Warehouse.writeTable(
-      Warehouse.typedMotivoSituacao(
-        raw("motivo_situacao_cadastral", Schemas.motivoSituacaoRaw)),
-      s"$warehouseDir/motivo_situacao_cadastral", None)
+    Seq(
+      ("empresas", Schemas.empresasRaw, Warehouse.typedEmpresas _,
+        Some("cnpj_basico"), Seq("cnpj_basico", "natureza_juridica")),
+      ("estabelecimentos", Schemas.estabelecimentosRaw,
+        Warehouse.typedEstabelecimentos _, Some("cnpj_basico"),
+        Seq("cnpj_basico", "id_cnae", "id_municipio", "id_situacao_cadastral")),
+      ("cnae", Schemas.cnaeRaw, Warehouse.typedCnae _, None, Seq("id_cnae")),
+      ("municipios", Schemas.municipiosRaw, Warehouse.typedMunicipios _, None,
+        Seq("id_municipio")),
+      ("motivo_situacao_cadastral", Schemas.motivoSituacaoRaw,
+        Warehouse.typedMotivoSituacao _, None, Seq("id_situacao_cadastral"))
+    ).foreach { case (t, schema, typed, key, statsColumns) =>
+      Warehouse.writeTableWithStats(spark, s"cnpj_$t", typed(raw(t, schema)),
+        s"$warehouseDir/$t", key, statsColumns)
+    }
 
     // FK-only catalogs (referenced by the DDL's FOREIGN KEYs, never queried
     // — ETLCNPJFinalEmpresaEstabelecimentos.py:122-152). Optional: loaded
@@ -62,29 +70,12 @@ object Pipeline {
         Warehouse.writeTable(typed(raw(sub, schema)),
           s"$warehouseDir/$sub", None)
     }
-
-    // The reference's post-load ANALYZE step (readme.md:135) — collect
-    // planner statistics over the joined/filtered columns so the
-    // flagship (and any ad-hoc query over the catalog names) plans with
-    // row counts and filter selectivity instead of raw file bytes. One
-    // extra scan per table at load time; flagship() reads through these
-    // registrations when they point at this warehouse.
-    Seq(
-      ("estabelecimentos", Seq("cnpj_basico", "id_cnae", "id_municipio",
-        "id_situacao_cadastral")),
-      ("empresas", Seq("cnpj_basico", "natureza_juridica")),
-      ("cnae", Seq("id_cnae")),
-      ("municipios", Seq("id_municipio")),
-      ("motivo_situacao_cadastral", Seq("id_situacao_cadastral"))
-    ).foreach { case (t, cols) =>
-      Warehouse.analyzeTable(spark, s"cnpj_$t", s"$warehouseDir/$t", cols)
-    }
   }
 
-  /** Run the flagship query over the warehouse — through the ANALYZE'd
-    * catalog registrations when buildWarehouse made them for THIS
-    * warehouse dir (CBO then sees row counts + column stats), plain
-    * path reads otherwise. */
+  /** Run the flagship query over the warehouse — through the catalog
+    * registrations when buildWarehouse made them for THIS warehouse dir
+    * (CBO then sees row counts + column stats), plain path reads
+    * otherwise. */
   def flagship(spark: SparkSession, warehouseDir: String): DataFrame = {
     def t(n: String) =
       Warehouse.readTableWithStats(spark, s"cnpj_$n", s"$warehouseDir/$n")

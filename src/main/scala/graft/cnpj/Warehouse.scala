@@ -1,7 +1,12 @@
 package graft.cnpj
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, TableIdentifier}
+import org.apache.spark.sql.catalyst.catalog.CatalogStatistics
+import org.apache.spark.sql.catalyst.plans.logical.ColumnStat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types._
 
 /** Parquet warehouse + typed views (SURVEY.md §2.1 S8–S10, §1.4).
   *
@@ -31,53 +36,140 @@ object Warehouse {
   def readTable(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(dir)
 
-  /** S10 adjunct — the reference readme's post-load `ANALYZE` suggestion
-    * (readme.md:135, SQLite's planner statistics) mapped to Spark's
-    * cost-based optimizer: register the parquet directory as an external
-    * catalog table and collect table-level statistics (size, row count)
-    * plus per-column min/max/ndv/null-count for the named columns.
+  /** S8–S10 in one pass: [[writeTable]] `df` and register it as the
+    * external catalog table `name` carrying planner statistics for the
+    * named columns — the reference's post-load `ANALYZE` (readme.md:135,
+    * SQLite's planner statistics) mapped to Spark's cost-based optimizer
+    * without reading the table back. The statistics are aggregates an
+    * `Observation` evaluates while the write streams its rows, the
+    * registration takes the frame's own schema (no inference job), and
+    * the size is the data-file sum ANALYZE itself records.
     *
-    * Why it matters at warehouse scale: without catalog statistics the
+    * Why the statistics matter at warehouse scale: without them the
     * planner sees only file bytes, and a FILTERED relation keeps its
     * full-scan estimate (Filter is a pass-through in size-only
     * estimation) — so a dimension that shrinks to a few KB after its
     * predicate still plans as a shuffle join. With column stats, CBO's
     * FilterEstimation turns ndv/min-max into selectivity, the estimate
     * drops below the broadcast threshold, and the join flips to
-    * BroadcastHashJoin (CboStatsSpec pins exactly that flip). Stats are
-    * one extra scan at load time, amortized over every later query.
-    * Column-selectivity estimation needs `spark.sql.cbo.enabled=true` in
-    * the QUERYING session — deliberately not GraftSession's default,
-    * because on deep plans with NO catalog stats the CBO estimator is
-    * measurable pure overhead (see the GraftSession comment); table-level
-    * size/row-count stats improve estimates either way.
+    * BroadcastHashJoin (CboStatsSpec pins exactly that flip). They cost
+    * no extra job here. Column-selectivity estimation needs
+    * `spark.sql.cbo.enabled=true` in the QUERYING session — deliberately
+    * not GraftSession's default, because on deep plans with NO catalog
+    * stats the CBO estimator is measurable pure overhead (see the
+    * GraftSession comment); table-level size/row-count stats improve
+    * estimates either way. */
+  def writeTableWithStats(spark: SparkSession, name: String, df: DataFrame,
+      dir: String, partitionKey: Option[String], statsColumns: Seq[String])
+      : DataFrame = {
+    val stats = new TableStats(spark, df.schema, statsColumns)
+    val obs = Observation()
+    writeTable(df.observe(obs, stats.aggregates.head, stats.aggregates.tail: _*),
+      dir, partitionKey)
+    register(spark, name, df.schema, dir, stats.of(obs.get))
+  }
+
+  /** The same registration and statistics for a parquet directory that
+    * already exists: one schema read and one aggregate scan.
     *
-    * Overwrite-by-design: re-registration replaces the previous
-    * definition, matching the overwrite warehouse write above. */
+    * Overwrite-by-design in both verbs: re-registration replaces the
+    * previous definition, matching the overwrite warehouse write. */
   def analyzeTable(spark: SparkSession, name: String, dir: String,
       statsColumns: Seq[String] = Nil): DataFrame = {
-    // qualify the location up front: a relative dir in LOCATION would
-    // otherwise resolve against spark.sql.warehouse.dir, not the cwd the
-    // caller wrote the parquet to
+    val df = readTable(spark, dir)
+    val stats = new TableStats(spark, df.schema, statsColumns)
+    val row = df.agg(stats.aggregates.head, stats.aggregates.tail: _*).head()
+    register(spark, name, df.schema, dir,
+      stats.of(row.getValuesMap[Any](row.schema.fieldNames)))
+  }
+
+  /** The aggregates Spark's `ANALYZE TABLE ... COMPUTE STATISTICS FOR
+    * COLUMNS` evaluates (`CommandUtils.statExprs`), and the
+    * `CatalogStatistics` it builds from their values: row count; per
+    * column ndv (HyperLogLog++ at `spark.sql.statistics.ndv.maxError`,
+    * capped by the non-null count), null count, and min/max with
+    * `defaultSize` lengths for fixed-width types, or ceil(avg)/max
+    * lengths (`defaultSize` when all null) and no min/max for strings and
+    * binaries. Histograms (`spark.sql.statistics.histogram.enabled`) are
+    * not computed. WarehouseStatsSpec pins field-for-field equality with
+    * Spark's own ANALYZE. */
+  private final class TableStats(spark: SparkSession, schema: StructType,
+      statsColumns: Seq[String]) {
+    private val fields = statsColumns.map { c =>
+      schema.find(f => spark.sessionState.conf.resolver(f.name, c))
+        .getOrElse(throw new IllegalArgumentException(
+          s"stats column $c is not in (${schema.fieldNames.mkString(", ")})"))
+    }.distinct
+
+    private def varWidth(f: StructField) = f.dataType match {
+      case _: StringType | BinaryType => true
+      case ByteType | ShortType | IntegerType | LongType | FloatType |
+          DoubleType | _: DecimalType | BooleanType | DateType |
+          TimestampType | TimestampNTZType => false
+      case t => throw new IllegalArgumentException(
+        s"no column statistics for ${f.name} of type ${t.simpleString}")
+    }
+
+    val aggregates: Seq[Column] =
+      count(lit(1)).as("rows") +: fields.zipWithIndex.flatMap { case (f, i) =>
+        val c = col(s"`${f.name.replace("`", "``")}`")
+        val size = lit(f.dataType.defaultSize.toLong)
+        Seq(least(approx_count_distinct(c, spark.sessionState.conf.ndvMaxError),
+              count(c)).as(s"ndv$i"),
+            (count(lit(1)) - count(c)).as(s"nulls$i")) ++
+          (if (varWidth(f))
+            Seq(coalesce(ceil(avg(length(c))), size).as(s"avgLen$i"),
+              coalesce(max(length(c)).cast("long"), size).as(s"maxLen$i"))
+          else Seq(min(c).as(s"min$i"), max(c).as(s"max$i")))
+      }
+
+    /** The statistics from the aggregates' values, given the table size. */
+    def of(v: Map[String, Any])(sizeInBytes: BigInt): CatalogStatistics = {
+      def long(k: String) = v(k).asInstanceOf[Long]
+      def value(k: String) =
+        v.get(k).flatMap(Option(_)).map(CatalystTypeConverters.convertToCatalyst)
+      val colStats = fields.zipWithIndex.map { case (f, i) =>
+        val fixed = f.dataType.defaultSize.toLong
+        f.name -> ColumnStat(
+          distinctCount = Some(BigInt(long(s"ndv$i"))),
+          min = value(s"min$i"), max = value(s"max$i"),
+          nullCount = Some(BigInt(long(s"nulls$i"))),
+          avgLen = Some(if (varWidth(f)) long(s"avgLen$i") else fixed),
+          maxLen = Some(if (varWidth(f)) long(s"maxLen$i") else fixed))
+          .toCatalogColumnStat(f.name, f.dataType)
+      }.toMap
+      CatalogStatistics(sizeInBytes, Some(BigInt(long("rows"))), colStats)
+    }
+  }
+
+  /** (Re-)register `dir` as the external parquet table `name` with the
+    * given schema (made nullable, as Spark reads parquet back) and store
+    * its statistics. The location travels as an option value, never
+    * spliced into SQL text, so any directory name registers. It is
+    * qualified first: a relative path would otherwise resolve against
+    * spark.sql.warehouse.dir, not the cwd the caller wrote the parquet
+    * to. */
+  private def register(spark: SparkSession, name: String, schema: StructType,
+      dir: String, stats: BigInt => CatalogStatistics): DataFrame = {
+    val ident = TableIdentifier(name)
     val loc = {
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
     }
-    spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    spark.sql(s"CREATE TABLE `$name` USING parquet LOCATION '$loc'")
-    spark.sql(s"ANALYZE TABLE `$name` COMPUTE STATISTICS")
-    if (statsColumns.nonEmpty)
-      spark.sql(s"ANALYZE TABLE `$name` COMPUTE STATISTICS FOR COLUMNS " +
-        statsColumns.map(c => s"`$c`").mkString(", "))
-    spark.table(name)
+    spark.sql(s"DROP TABLE IF EXISTS ${ident.quotedString}")
+    spark.catalog.createTable(ident.quotedString, "parquet",
+      ColumnBridge.nullableSchema(schema), Map("path" -> loc.toString))
+    spark.sessionState.catalog.alterTableStats(ident,
+      Some(stats(ColumnBridge.tableTotalSize(spark, ident))))
+    spark.table(ident.quotedString)
   }
 
-  /** Read through the ANALYZE'd catalog table when one named `name` is
-    * registered AT exactly `dir` — the statistics then flow into this
-    * plan — and fall back to the plain path read otherwise (a session
-    * that never ran [[analyzeTable]], or a test pointing the same name
-    * at a different warehouse). Qualified-path comparison, so relative
-    * dirs and URI-style catalog locations compare equal. */
+  /** Read through the catalog table when one named `name` is registered
+    * AT exactly `dir` — its statistics then flow into this plan — and
+    * fall back to the plain path read otherwise (a session that never
+    * ran [[writeTableWithStats]] or [[analyzeTable]], or a test pointing
+    * the same name at a different warehouse). Qualified-path comparison,
+    * so relative dirs and URI-style catalog locations compare equal. */
   def readTableWithStats(spark: SparkSession, name: String, dir: String)
       : DataFrame = {
     import org.apache.hadoop.fs.Path

@@ -235,13 +235,13 @@ object Advanced {
   private[graft] val QuantilePairBytes = 16L
 
   /** rowCount from catalog statistics, when the querying session has a
-    * table ANALYZE'd (cnpj.Warehouse.analyzeTable) at exactly this
-    * directory's lineitem path. A measured cardinality beats the
-    * file-size proxy: parquet compression makes size-in-bytes a ~3×-off
-    * row-count estimator depending on encoding, while ANALYZE counted
-    * the actual rows — this is the first dispatch decision consuming CBO
-    * stats (r11 verdict task 7), the same one-scan-at-load-time,
-    * amortized-over-every-query trade the Warehouse doc describes.
+    * table registered with statistics (cnpj.Warehouse.analyzeTable or
+    * writeTableWithStats) at exactly this directory's lineitem path. A
+    * measured cardinality beats the file-size proxy: parquet compression
+    * makes size-in-bytes a ~3×-off row-count estimator depending on
+    * encoding, while the statistics counted the actual rows — this is
+    * the first dispatch decision consuming CBO stats (r11 verdict task
+    * 7), paid once at load time and amortized over every query.
     * Catalog iteration is pure metadata (no job); qualified-path
     * comparison mirrors Warehouse.readTableWithStats. */
   private[graft] def catalogLineitemRowCount(s: SparkSession, d: String)

@@ -38,6 +38,16 @@ object ColumnBridge {
       : org.apache.spark.sql.types.StructType =
     s.asNullable
 
+  /** A catalog table's data size exactly as `ANALYZE TABLE` measures it
+    * (`CommandUtils.calculateTotalSize`: the summed length of the data
+    * files under its location) — a file listing, not a Spark job. */
+  def tableTotalSize(spark: SparkSession,
+      table: org.apache.spark.sql.catalyst.TableIdentifier): BigInt = {
+    val cs = spark.asInstanceOf[classic.SparkSession]
+    org.apache.spark.sql.execution.command.CommandUtils.calculateTotalSize(
+      cs, cs.sessionState.catalog.getTableMetadata(table))._1
+  }
+
   /** A BATCH BaseRelation over concrete data files — what a v1
     * RelationProvider returns so `spark.read.format(...)` gets the full
     * file-source machinery (filter pushdown, column pruning, vectorized

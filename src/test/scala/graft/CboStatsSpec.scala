@@ -51,9 +51,9 @@ class CboStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val dir = "target/cbo_spec/orders"
   private val table = "cbo_spec_orders"
 
-  private def joinPlan(): String = {
+  private def joinPlan(dimTable: String = table): String = {
     val li = Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity")
-    val dim = spark.table(table).where(col("o_custkey") === 42)
+    val dim = spark.table(dimTable).where(col("o_custkey") === 42)
       .select("o_orderkey", "o_orderstatus")
     li.join(dim, li("l_orderkey") === dim("o_orderkey"))
       .queryExecution.executedPlan.toString
@@ -81,6 +81,19 @@ class CboStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // and the catalog stats really are plan-visible: row count is exact
     val rc = spark.table(table).queryExecution.optimizedPlan.stats.rowCount
+    assert(rc.isDefined && rc.get.toLong == Tables.orders(spark, sf).count())
+  }
+
+  test("statistics recorded during the write flip the same join to broadcast") {
+    // the warehouse load's path: the stats ride the parquet write
+    val written = "cbo_spec_orders_written"
+    Warehouse.writeTableWithStats(spark, written, Tables.orders(spark, sf),
+      "target/cbo_spec/orders_written", None, Seq("o_custkey"))
+    val plan = joinPlan(written)
+    assert(plan.contains("BroadcastHashJoin"),
+      "write-time column stats did not flip the join to broadcast:\n" +
+        plan.take(1200))
+    val rc = spark.table(written).queryExecution.optimizedPlan.stats.rowCount
     assert(rc.isDefined && rc.get.toLong == Tables.orders(spark, sf).count())
   }
 

@@ -128,6 +128,52 @@ class CnpjPipelineSpec extends AnyFunSuite {
     assert(text.contains("AÇAÍ DO PORTO")) // UTF-8 re-encoded from latin-1
   }
 
+  test("export merge streams shards into the bytes a whole-shard merge writes") {
+    // the merge as it was: each shard read whole, the header dropped by
+    // index — the byte oracle for the streamed merge
+    def wholeShardMerge(parts: Seq[File]): Array[Byte] = {
+      val out = new java.io.ByteArrayOutputStream()
+      out.write(Array[Byte](0xEF.toByte, 0xBB.toByte, 0xBF.toByte))
+      parts.zipWithIndex.foreach { case (p, i) =>
+        val bytes = Files.readAllBytes(p.toPath)
+        if (i == 0) out.write(bytes)
+        else {
+          val nl = bytes.indexOf('\n'.toByte)
+          if (nl >= 0 && nl + 1 < bytes.length)
+            out.write(bytes, nl + 1, bytes.length - nl - 1)
+        }
+      }
+      out.toByteArray
+    }
+    // hand-made shards: a header-only shard, one without a trailing
+    // newline, one with no newline at all, multi-byte UTF-8 cells
+    val dir = new File(s"$base/merge_shards"); dir.mkdirs()
+    val header = "cnpj_basico;nome_fantasia\n"
+    val shards = Seq(
+      header + "1;AÇAÍ\n2;B\n",
+      header,
+      header + "3;C",
+      "cnpj_basico;nome_fantasia",
+      header + "4;TABOÃO\n5;\n").zipWithIndex.map { case (text, i) =>
+      val f = new File(dir, f"part-$i%05d.csv")
+      Files.write(f.toPath, text.getBytes("UTF-8"))
+      f
+    }
+    val merged = new File(s"$base/merged.csv")
+    Export.mergeShards(shards, merged)
+    assert(Files.readAllBytes(merged.toPath).sameElements(wholeShardMerge(shards)))
+    // and Spark's own shards, through the export verb
+    val df = spark.range(0, 500).selectExpr("id AS cnpj_basico",
+      "concat('AÇAÍ ', id) AS nome_fantasia").repartition(3)
+    val out = new File(s"$base/merged_spark.csv")
+    Export.writeCsvUtf8SigSingle(df, s"$base/export_shards", out)
+    val sparkShards = new File(s"$base/export_shards").listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
+      .sortBy(_.getName).toSeq
+    assert(sparkShards.size > 1)
+    assert(Files.readAllBytes(out.toPath).sameElements(wholeShardMerge(sparkShards)))
+  }
+
   test("pandas-compat golden export reproduces the reference artifacts byte-for-byte") {
     fixture()
     val out = new File(s"$base/resultado_compat.csv")
