@@ -2,11 +2,12 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** THE timing protocol, shared by [[Bench]], [[ScaleProbe]] and
-  * [[AbBench]] so all three measure under identical rules — the round-11
-  * review found the clearCaches + noop-sink + error-sentinel contract
-  * copied into three files and the variance-bound constants into two,
-  * which meant a calibration change (as happened with the 0.2 → 0.4
+/** THE timing protocol, shared by [[Bench]], [[ScaleProbe]] and the
+  * perfbench harness (`perfbench/`) so all three measure under
+  * identical rules — the round-11 review found the clearCaches +
+  * noop-sink + error-sentinel contract copied into three files and the
+  * variance-bound constants into two, which meant a calibration
+  * change (as happened with the 0.2 → 0.4
   * spread floor) had to be applied in several places or the bench and
   * the probe would silently measure different things.
   *

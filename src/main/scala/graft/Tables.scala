@@ -77,7 +77,7 @@ object Tables {
       .map(_.toLong).getOrElse(FanOutSmallScanBytesDefault)
     // min(cores, 8), conf-overridable: the stages this feeds (tokenize,
     // gram explode, string building) are MEMORY-BANDWIDTH-bound, not
-    // ALU-bound — the r21 AbBench sweep measured wall flat beyond ~8-way
+    // ALU-bound — the r21 A/B sweep measured wall flat beyond ~8-way
     // while total CPU-seconds inflated superlinearly with thread count
     // (4-way 2.3 s, 8-way 3.9 s, 16-way 7.7 s, 32-way 22 s CPU for the
     // same q_substring_dedup work at walls within ±20%). Past the

@@ -166,14 +166,14 @@ object Graph {
     * compose via the broadcast-crossJoin idiom. */
   def qTriangleCount(s: SparkSession, d: String): DataFrame = {
     import graft.functions.SortedIntersectCount.sortedIntersectCount
-    // Pair generation is conf-dispatched (spark.graft.triangle.pairgen)
-    // so both forms stay A/B-able; the default is the KEYED SELF-JOIN:
-    // distinct (order, part) joined against itself on l_orderkey with
-    // pa < pb. The earlier per-order array form (collect_set +
-    // higher-order transform/slice explode) avoided the join's shuffle,
-    // but HOFs evaluate OUTSIDE whole-stage codegen and allocate a
-    // slice array + struct per emitted pair — measured 2.6× the CPU of
-    // the join form on this stage (StageProbe r21: 3.5 s → ~1.3 s).
+    // Pair generation is the KEYED SELF-JOIN (the q_triangle_count
+    // oracle pins its result): distinct (order, part) joined against
+    // itself on l_orderkey with pa < pb. The earlier per-order array
+    // form (collect_set + higher-order transform/slice explode) avoided
+    // the join's shuffle, but HOFs evaluate OUTSIDE whole-stage codegen
+    // and allocate a slice array + struct per emitted pair — measured
+    // 2.6× the CPU of the join form on this stage (StageProbe r21:
+    // 3.5 s → ~1.3 s).
     // The join stays bounded at scale for the same reason the array
     // form did: per-order pair volume is capped by basket size (≤ 7
     // lineitems per order here → ≤ 21 pairs), and the shuffle it adds
@@ -181,27 +181,14 @@ object Graph {
     // the collect_set shuffle moved anyway.
     val dp = lineitem(s, d)
       .select(col("l_orderkey"), col("l_partkey")).distinct()
-    val pairGen = s.conf
-      .getOption("spark.graft.triangle.pairgen").getOrElse("selfjoin")
-    val rawPairs =
-      if (pairGen == "hof") {
-        dp.groupBy("l_orderkey")
-          .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-          .select(explode(expr(
-            "flatten(transform(ps, (x, i) -> transform(" +
-              "slice(ps, i + 2, size(ps)), y -> struct(x AS pa, y AS pb))))"))
-            .as("p"))
-          .select(col("p.pa").as("pa"), col("p.pb").as("pb"))
-      } else {
-        // SHUFFLE_HASH: both sides are the same 16 B/row key-pair set —
-        // a hash build beats sort-merge's two sorts (A/B r21: wall 3.0 →
-        // 2.4 s, CPU 14.2 → 13.8 s), and the per-partition build side is
-        // bounded by the same basket cap that bounds the join output
-        dp.as("x").hint("SHUFFLE_HASH").join(dp.as("y"),
-            col("x.l_orderkey") === col("y.l_orderkey") &&
-              col("x.l_partkey") < col("y.l_partkey"))
-          .select(col("x.l_partkey").as("pa"), col("y.l_partkey").as("pb"))
-      }
+    // SHUFFLE_HASH: both sides are the same 16 B/row key-pair set — a
+    // hash build beats sort-merge's two sorts (A/B r21: wall 3.0 →
+    // 2.4 s, CPU 14.2 → 13.8 s), and the per-partition build side is
+    // bounded by the same basket cap that bounds the join output
+    val rawPairs = dp.as("x").hint("SHUFFLE_HASH").join(dp.as("y"),
+        col("x.l_orderkey") === col("y.l_orderkey") &&
+          col("x.l_partkey") < col("y.l_partkey"))
+      .select(col("x.l_partkey").as("pa"), col("y.l_partkey").as("pb"))
     val e = rawPairs
       .distinct()
       // the degree join and both adjacency sides read this; without the

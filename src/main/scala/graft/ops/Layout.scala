@@ -4930,39 +4930,28 @@ object Layout {
         .select(col(key), input_file_name().as("__f"))
         .join(src.select(col(key)), Seq(key), "left_semi")
         .select(col("__f")).distinct()
-      // FUSED control probe (r22, guide §7 driver dwell / §6 one-pass
-      // I/O): the uniqueness aggregate and the affected-file scan are
-      // both probes over inputs already pinned for this merge (the
-      // persisted source; the v0 snapshot), and neither result depends
-      // on the other — one unioned collect runs them as ONE scheduled
-      // job instead of two, halving this verb's probe-phase job floor.
-      // The union rides a tagged 4-column shape; the uniqueness row is
-      // the one with a NULL file name (input_file_name() is never NULL
-      // on a file scan). Conf-dispatched so both forms stay A/B-able;
-      // result-identical by construction: the same two subtrees
-      // evaluate either way, only the number of driver actions changes.
-      val fuseProbe = spark.conf.getOption("spark.graft.merge.fusedprobe")
-        .forall(_ == "true")
-      val (nTotal, nDistinct, nNulls, affNames) =
-        if (fuseProbe) {
-          val rows = controlPlane(spark) {
-            uniq.select(lit(null).cast("string").as("__f"),
-                col("n"), col("k"), col("nulls"))
-              .unionByName(affectedNames.select(col("__f"),
-                lit(null).cast("long").as("n"),
-                lit(null).cast("long").as("k"),
-                lit(null).cast("long").as("nulls")))
-              .collect()
-          }
-          val (us, as) = rows.partition(_.isNullAt(0))
-          (us.head.getLong(1), us.head.getLong(2), us.head.getLong(3),
-            as.toSeq.map(_.getString(0)))
-        } else {
-          val r = controlPlane(spark)(uniq.head)
-          (r.getLong(0), r.getLong(1), r.getLong(2),
-            controlPlane(spark)(affectedNames.collect())
-              .toSeq.map(_.getString(0)))
-        }
+      // ONE control probe: the uniqueness aggregate and the
+      // affected-file scan both read inputs already pinned for this
+      // merge (the persisted source; the v0 snapshot), and neither
+      // result depends on the other, so one unioned collect runs them as
+      // a single scheduled job instead of two. The union rides a tagged
+      // 4-column shape; the uniqueness row is the one with a NULL file
+      // name (input_file_name() is never NULL on a file scan).
+      // SnapshotIsolationSpec and the q_snapshot_merge oracle pin the
+      // merge's results.
+      val rows = controlPlane(spark) {
+        uniq.select(lit(null).cast("string").as("__f"),
+            col("n"), col("k"), col("nulls"))
+          .unionByName(affectedNames.select(col("__f"),
+            lit(null).cast("long").as("n"),
+            lit(null).cast("long").as("k"),
+            lit(null).cast("long").as("nulls")))
+          .collect()
+      }
+      val (us, as) = rows.partition(_.isNullAt(0))
+      val (nTotal, nDistinct, nNulls) =
+        (us.head.getLong(1), us.head.getLong(2), us.head.getLong(3))
+      val affNames = as.toSeq.map(_.getString(0))
       require(nTotal == nDistinct + math.min(nNulls, 1L),
         s"mergeInto: source is not unique on `$key`")
       val affectedAbs = affNames.map(fsPathOf).toSet
@@ -5048,11 +5037,11 @@ object Layout {
               // dv-aware: rows a prior MOR delete removed must not
               // resurrect through this rewrite
               val old = readManifestLines(spark, fs, root, v0, affLines)
-              // ONE left-outer join replaces the old carried(anti) +
-              // updated(inner) pair (r22, guide §2.4/§1.2): the pair
-              // read the affected files TWICE and shuffled/joined them
-              // twice for decisions derivable from a single probe of
-              // the (unique-keyed, checked above) source. Per old row:
+              // ONE left-outer join, not a carried(anti) +
+              // updated(inner) pair, which would read the affected files
+              // TWICE and shuffle/join them twice for decisions
+              // derivable from a single probe of the (unique-keyed,
+              // checked above) source. Per old row:
               //   no source match        → carry the old row
               //   match, deleteWhen-true → drop (ALL matched rows leave
               //                            the rewrite; deleted ones
@@ -5067,43 +5056,34 @@ object Layout {
               //                            is unique, so no fan-out)
               // NULL-keyed old rows never match (SQL join semantics)
               // and carry, exactly as the anti-join carried them.
-              // Source columns ride under a reserved prefix; a user
-              // schema that collides falls back to the two-join form
-              // (same result set — the fusion is an optimization).
-              val pfx = "__graft_ms_"
-              // conf-dispatched (spark.graft.merge.fusedcow, default
-              // on) so both forms stay A/B-able; MergeFusionSpec pins
-              // result equality
-              val safe = spark.conf
-                .getOption("spark.graft.merge.fusedcow")
-                .forall(_ == "true") &&
-                !tcols.exists(_.startsWith(pfx)) &&
-                !src.columns.exists(_.startsWith(pfx))
-              if (safe) {
-                val marker = deleteWhen.fold(lit(false))(c =>
-                  coalesce(c, lit(false)))
-                val srcSide = src.select(
-                  col(key).as(s"${pfx}k") +:
-                    (tcols.filterNot(_ == key)
-                      .map(c => col(c).as(s"$pfx$c")) :+
-                      marker.as(s"${pfx}del")): _*)
-                old.join(srcSide,
-                    old(key) === srcSide(s"${pfx}k"), "left_outer")
-                  .where(col(s"${pfx}k").isNull || !col(s"${pfx}del"))
-                  .select(tcols.map { c =>
-                    if (c == key) col(key)
-                    else when(col(s"${pfx}k").isNotNull, col(s"$pfx$c"))
-                      .otherwise(col(c)).as(c)
-                  }: _*)
-                  .unionByName(insertsObs)
-              } else {
-                val carried =
-                  old.join(src.select(col(key)), Seq(key), "left_anti")
-                val updated = old.select(col(key))
-                  .join(upSrc, Seq(key), "inner")
-                  .select(tcols.map(col): _*)
-                carried.unionByName(updated).unionByName(insertsObs)
-              }
+              // Source columns ride under an internal prefix, minted
+              // longer until no target or source column starts with it
+              // (case-insensitively, as Spark resolves names), so no
+              // user column can collide with an internal alias; the
+              // key and marker aliases sit outside the `c_` namespace
+              // the table columns take. MergeFusionSpec pins the result
+              // against the two-join form (carried = anti-join,
+              // updated = inner join).
+              val names = (tcols ++ src.columns)
+                .map(_.toLowerCase(java.util.Locale.ROOT))
+              val pfx = Iterator.iterate("__graft_ms_")(_ + "_")
+                .find(p => !names.exists(_.startsWith(p))).get
+              val (sk, sdel) = (s"${pfx}k", s"${pfx}del")
+              val marker = deleteWhen.fold(lit(false))(c =>
+                coalesce(c, lit(false)))
+              val srcSide = src.select(
+                col(key).as(sk) +:
+                  (tcols.filterNot(_ == key)
+                    .map(c => col(c).as(s"${pfx}c_$c")) :+
+                    marker.as(sdel)): _*)
+              old.join(srcSide, old(key) === srcSide(sk), "left_outer")
+                .where(col(sk).isNull || !col(sdel))
+                .select(tcols.map { c =>
+                  if (c == key) col(key)
+                  else when(col(sk).isNotNull, col(s"${pfx}c_$c"))
+                    .otherwise(col(c)).as(c)
+                }: _*)
+                .unionByName(insertsObs)
             }
           // rewritten + inserted files keep the table's recorded
           // bounds, as in deleteWhere; a rewrite keeping ZERO rows

@@ -72,42 +72,21 @@ object QualitySignals {
       (col("doc_id") % 256).cast("string"), lit("."),
       (col("doc_id") % 100).cast("string"), lit(" or call 555-01"),
       lpad((col("doc_id") % 100).cast("string"), 2, "0"))
-    // conf-dispatched (spark.graft.pii.fused, default on) so both forms
-    // stay A/B-able; the fused kernel is output-identical by
-    // PiiScrubKernelSpec. r22, guide §1.2: the unfused form ran SIX
-    // regex expressions per row, each re-decoding the same augmented
-    // UTF8String; the kernel decodes once and fuses the email
-    // count+replace pass (see functions/PiiScrub.scala).
-    if (s.conf.getOption("spark.graft.pii.fused").forall(_ == "true")) {
-      val pii = graft.functions.PiiScrub
-        .piiScrub(aug, emailRe, ipRe, phoneRe)
-      documents(s, d).select(col("doc_id"), pii.as("p"))
-        .select(
-          col("doc_id"),
-          col("p.n_email").as("n_email"),
-          col("p.n_ip").as("n_ip"),
-          col("p.n_phone").as("n_phone"),
-          length(col("p.scrubbed")).cast("long").as("n_scrub"),
-          md5(col("p.scrubbed")).as("scrub_fp"))
-        .orderBy("doc_id")
-    } else {
-      val scrubbed = regexp_replace(
-        regexp_replace(
-          regexp_replace(aug, emailRe, "<EMAIL>"),
-          ipRe, "<IP>"),
-        phoneRe, "<PHONE>")
-      documents(s, d).select(
+    // One fused kernel in place of six regex expressions per row, each
+    // re-decoding the same augmented UTF8String: the kernel decodes once
+    // and fuses the email count+replace pass (functions/PiiScrub.scala).
+    // PiiScrubKernelSpec pins it output-identical to the six-regex form.
+    val pii = graft.functions.PiiScrub
+      .piiScrub(aug, emailRe, ipRe, phoneRe)
+    documents(s, d).select(col("doc_id"), pii.as("p"))
+      .select(
         col("doc_id"),
-        size(regexp_extract_all(aug, lit(emailRe), lit(0)))
-          .cast("long").as("n_email"),
-        size(regexp_extract_all(aug, lit(ipRe), lit(0)))
-          .cast("long").as("n_ip"),
-        size(regexp_extract_all(aug, lit(phoneRe), lit(0)))
-          .cast("long").as("n_phone"),
-        length(scrubbed).cast("long").as("n_scrub"),
-        md5(scrubbed).as("scrub_fp"))
-        .orderBy("doc_id")
-    }
+        col("p.n_email").as("n_email"),
+        col("p.n_ip").as("n_ip"),
+        col("p.n_phone").as("n_phone"),
+        length(col("p.scrubbed")).cast("long").as("n_scrub"),
+        md5(col("p.scrubbed")).as("scrub_fp"))
+      .orderBy("doc_id")
   }
 
   /** Unigram surprisal — the model-free perplexity surrogate used to

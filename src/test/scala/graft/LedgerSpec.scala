@@ -122,4 +122,37 @@ class LedgerSpec extends AnyFunSuite {
     assert(readme.contains(s"$nOracle DuckDB-oracle hash-matched"),
       s"README oracle count stale: code has $nOracle oracle keys")
   }
+
+  test("README Configuration table lists exactly the spark.graft.* keys src/main reads") {
+    import scala.jdk.CollectionConverters._
+    // a key passed to a conf read or write (`conf.get/getOption/set/...`
+    // or a builder's `.config`), never a mention in message text
+    // (GraftCatalog's WAP error splits its key across two literals)
+    val confCall = ("""(?i)(?:conf\s*\.\s*(?:get|getOption|set|unset|""" +
+      """contains)|\.config)\s*\(\s*"(spark\.graft\.[A-Za-z0-9_.]+)"""").r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val codeKeys =
+      try files.iterator().asScala
+        .filter(f => f.toString.endsWith(".scala") ||
+          f.toString.endsWith(".java"))
+        .flatMap { f =>
+          val src = new String(java.nio.file.Files.readAllBytes(f),
+            java.nio.charset.StandardCharsets.UTF_8)
+          confCall.findAllMatchIn(src).map(_.group(1))
+        }.toSet
+      finally files.close()
+    assert(codeKeys.nonEmpty, "no spark.graft.* conf read found in src/main")
+    val readme = new String(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("README.md")),
+      java.nio.charset.StandardCharsets.UTF_8)
+    val section = readme.split("\n## ")
+      .find(_.startsWith("Configuration\n"))
+    assert(section.isDefined, "README has no `## Configuration` section")
+    val docKeys = """(?m)^\| `(spark\.graft\.[A-Za-z0-9_.]+)` \|""".r
+      .findAllMatchIn(section.get).map(_.group(1)).toSet
+    assert(codeKeys == docKeys,
+      s"README Configuration table stale: undocumented " +
+        s"${(codeKeys -- docKeys).toSeq.sorted}; no longer read " +
+        s"${(docKeys -- codeKeys).toSeq.sorted}")
+  }
 }

@@ -1,15 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The r22 fused PII kernel (functions/PiiScrub.scala) must be
   * output-identical to the six unfused Spark regex expressions it
   * replaces — counts over the ORIGINAL augmented text, sequential
-  * email → ip → phone replace chain — because the conf dispatch that
-  * picks it is a pure cost decision. Pinned at kernel level on
-  * adversarial strings and at operator level on testdata. */
+  * email → ip → phone replace chain. The six-regex form lives here as
+  * the oracle, pinned at kernel level on adversarial strings and at
+  * operator level (q_pii_scrub) on testdata. */
 class PiiScrubKernelSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -22,6 +22,20 @@ class PiiScrubKernelSpec extends AnyFunSuite {
   private val emailRe = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
   private val ipRe = "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b"
   private val phoneRe = "\\b\\d{3}-\\d{4}\\b"
+
+  /** The six-regex form: three regexp_extract_all counts over the
+    * original text, then the email → ip → phone regexp_replace chain. */
+  private def sixRegex(aug: Column): Column = {
+    val scrubbed = regexp_replace(regexp_replace(
+      regexp_replace(aug, emailRe, "<EMAIL>"),
+      ipRe, "<IP>"), phoneRe, "<PHONE>")
+    def n(re: String) =
+      size(regexp_extract_all(aug, lit(re), lit(0))).cast("long")
+    struct(n(emailRe).as("n_email"), n(ipRe).as("n_ip"),
+      n(phoneRe).as("n_phone"), scrubbed.as("scrubbed"),
+      length(scrubbed).cast("long").as("n_scrub"),
+      md5(scrubbed).as("scrub_fp"))
+  }
 
   test("kernel == unfused expressions on adversarial strings") {
     import spark.implicits._
@@ -49,17 +63,9 @@ class PiiScrubKernelSpec extends AnyFunSuite {
           .piiScrub(col("aug"), emailRe, ipRe, phoneRe).as("p"))
       .select(col("doc_id"), col("p.n_email"), col("p.n_ip"),
         col("p.n_phone"), col("p.scrubbed"))
-    val scrubbed = regexp_replace(regexp_replace(
-      regexp_replace(col("aug"), emailRe, "<EMAIL>"),
-      ipRe, "<IP>"), phoneRe, "<PHONE>")
     val unfused = df.select(col("doc_id"),
-      size(regexp_extract_all(col("aug"), lit(emailRe), lit(0)))
-        .cast("long").as("n_email"),
-      size(regexp_extract_all(col("aug"), lit(ipRe), lit(0)))
-        .cast("long").as("n_ip"),
-      size(regexp_extract_all(col("aug"), lit(phoneRe), lit(0)))
-        .cast("long").as("n_phone"),
-      scrubbed.as("scrubbed"))
+      sixRegex(col("aug")).dropFields("n_scrub", "scrub_fp").as("u"))
+      .select("doc_id", "u.*")
     assert(fused.orderBy("doc_id").collect().toSeq ==
       unfused.orderBy("doc_id").collect().toSeq)
   }
@@ -68,10 +74,18 @@ class PiiScrubKernelSpec extends AnyFunSuite {
     val d = "/root/testdata/sf0.001"
     val fused =
       ops.QualitySignals.qPiiScrub(spark, d).collect().toSeq
-    spark.conf.set("spark.graft.pii.fused", "false")
-    val unfused =
-      try ops.QualitySignals.qPiiScrub(spark, d).collect().toSeq
-      finally spark.conf.unset("spark.graft.pii.fused")
+    // the operator's augmentation: synthetic contact strings appended
+    // to every document, then the six-regex form over that text
+    val aug = concat(col("text"),
+      lit(" contact user"), col("doc_id").cast("string"),
+      lit("@mail.example.com via 10.0."),
+      (col("doc_id") % 256).cast("string"), lit("."),
+      (col("doc_id") % 100).cast("string"), lit(" or call 555-01"),
+      lpad((col("doc_id") % 100).cast("string"), 2, "0"))
+    val unfused = Tables.documents(spark, d)
+      .select(col("doc_id"), sixRegex(aug).dropFields("scrubbed").as("u"))
+      .select("doc_id", "u.*")
+      .orderBy("doc_id").collect().toSeq
     assert(fused == unfused)
     assert(fused.nonEmpty)
     // the deployed plan actually runs the kernel (not silently unfused)
