@@ -922,15 +922,15 @@ object Layout {
       if (newPaths.isEmpty) { provenFor = Some(constraints); return }
       val spark = SparkSession.active
       try {
-        // plain (footer-inferred) read first: staged files self-describe,
-        // so a type-WIDENING append reads correctly — the head's
+        // footer-typed read first: staged files self-describe, so a
+        // type-WIDENING append reads correctly — the head's
         // pre-widening schema would crash on the wider parquet types. A
         // NARROW append missing a constrained column fails analysis and
         // falls back to the recorded schema, whose null-fill then fails
         // a NOT-NULL-style check — which is exactly right.
         def enforce(df: DataFrame): Unit =
           enforceConstraints(df, constraints, op)
-        try enforce(spark.read.parquet(newPaths: _*))
+        try enforce(readSidecars(spark, newPaths))
         catch {
           case _: org.apache.spark.sql.AnalysisException =>
             val r = spark.read
@@ -2139,29 +2139,10 @@ object Layout {
       fan.write.mode("overwrite").partitionBy(dups: _*).parquet(txn.toString)
       flattenStagedDirs(fs, txn)
     } else out.write.mode("overwrite").parquet(txn.toString)
-    // record the staged schema so withStats can skip parquet schema
-    // INFERENCE over the just-written files — the r21 StageProbe showed
-    // that inference running as its own 1-task Spark job per commit
-    // (~70-90 ms with scheduling), for files whose schema this method
-    // knows exactly. The fanout writers drop the duplicated __gp_*
-    // partition columns from the data files, so the staged files carry
-    // precisely out.schema minus __gp_* (original column order — the
-    // dups were appended last). Same-JVM planning metadata for an
-    // in-flight commit, not a result cache; bounded (cleared at 64).
-    stagedSchemas.synchronized {
-      if (stagedSchemas.size > 64) stagedSchemas.clear()
-      stagedSchemas(txn.getName) = types.StructType(
-        out.schema.filterNot(_.name.startsWith("__gp_")))
-    }
     fs.listStatus(txn).toSeq
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       .map(st => (s"data/${txn.getName}/${st.getPath.getName}", st.getLen))
   }
-
-  /** txn-dir name → schema of the parquet files staged there by
-    * [[stageTxn]] in this JVM (see the note at the recording site). */
-  private val stagedSchemas =
-    scala.collection.mutable.Map.empty[String, types.StructType]
 
   /** Guards the scoped AQE set/restore inside [[controlPlane]]. */
   private val aqeToggleLock = new Object
@@ -2922,21 +2903,9 @@ object Layout {
     if (statsAll.isEmpty && !allProps.contains(BloomColumnsProp) &&
         bucketSpec.isEmpty)
       return bare
-    // skip schema inference when every staged path belongs to ONE txn
-    // dir whose schema stageTxn recorded in this JVM (the overwhelmingly
-    // common case: each verb stats exactly what it just staged) —
-    // inference otherwise runs a footer-reading Spark job per commit.
-    // Fallback to inference is always correct.
-    val txnDirs = staged
-      .map { case (rel, _) => new Path(rel).getParent }
-      .map(p => if (p == null) "" else p.getName).distinct
-    val schemaHint = txnDirs match {
-      case Seq(one) => stagedSchemas.synchronized(stagedSchemas.get(one))
-      case _ => None
-    }
-    val reader = spark.read
-    schemaHint.foreach(reader.schema)
-    val df = reader.parquet(stagedPaths: _*)
+    // footer-typed: schema inference would schedule a Spark job per
+    // commit (~70-90 ms with scheduling, r21 StageProbe)
+    val df = readSidecars(spark, stagedPaths)
     def isIntegral(dt: types.DataType) = dt match {
       case types.ByteType | types.ShortType | types.IntegerType |
            types.LongType => true
@@ -3260,7 +3229,7 @@ object Layout {
     val dvPaths = dvLines.flatMap(entryDvs).distinct
       .map(r => new Path(root, r).toString)
     controlPlane(spark) {
-      spark.read.parquet(dvPaths: _*)
+      readSidecars(spark, dvPaths)
         .groupBy("grp")
         .agg(sort_array(collect_set(col("pos"))).as("ps"))
         .collect()
@@ -3289,6 +3258,18 @@ object Layout {
     }).parquet(paths: _*)
   }
 
+  /** Read parquet files this engine wrote itself — position-delete
+    * sidecars and just-staged txn files — under the schema of their
+    * footer, read on the driver
+    * ([[ColumnBridge.parquetFooterSchema]]: the same footer and the same
+    * conversion inference uses). A schema-less `spark.read.parquet`
+    * would infer it through a 1-task Spark job on every read, and in
+    * `maskedDvRead` that job would run inside the optimizer. */
+  private[graft] def readSidecars(spark: SparkSession,
+      paths: Seq[String]): DataFrame =
+    spark.read.schema(ColumnBridge.parquetFooterSchema(spark, paths))
+      .parquet(paths: _*)
+
   /** Read a set of manifest LINES under `v`'s recorded schema with
     * merge-on-read deletion vectors ANTI-APPLIED — the one read core
     * every snapshot consumer (readSnapshot, the skipping reads, the
@@ -3316,7 +3297,7 @@ object Layout {
         return readVersionFiles(spark, fs, root, v, absOf(plain))
       val dvPaths = dvLines.flatMap(entryDvs).distinct
         .map(r => new Path(root, r).toString)
-      val del = spark.read.parquet(dvPaths: _*)
+      val del = readSidecars(spark, dvPaths)
         .select(col("grp").as("__grp"), col("pos").as("__pos"))
       val masked = readVersionFiles(spark, fs, root, v, absOf(dvLines))
         .withColumn("__grp",
@@ -3348,6 +3329,8 @@ object Layout {
       .sortBy(_._1.toSeq
         .map { case (rel, cols) => rel + ";" + cols.mkString(",") }
         .sorted.mkString("|"))
+    val keyFooters = // per path: the sets nest
+      scala.collection.mutable.Map.empty[String, types.StructType]
     val parts = eqGroups.map { case (eqSet, ls) =>
       val base = dvApplied(ls)
       if (eqSet.isEmpty) base
@@ -3358,13 +3341,19 @@ object Layout {
             s"${keyLists.map(_.mkString("+")).mkString(", ")} — compact " +
             "before changing keys")
         val cols = keyLists.head
+        // each key file's own footer, the footers widened into one
+        // schema: upserts may key one column int, then long, and no
+        // single footer's type reads both files
+        val paths = eqSet.map(e => new Path(root, e._1).toString).toSeq
+        val keySchema = paths.map(p => keyFooters.getOrElseUpdate(p,
+            ColumnBridge.parquetFooterSchema(spark, Seq(p))))
+          .reduce(mergeWiden)
         // no .distinct(): an anti-join is idempotent in its build keys,
         // and this plan is INJECTED into an already-running optimizer
         // by MorPerFileDispatch — a Deduplicate node here would arrive
         // after the batch that rewrites it into an Aggregate and fail
         // planning (the sidecars are distinct-at-write anyway)
-        val keys = spark.read.parquet(
-            eqSet.map(e => new Path(root, e._1).toString).toSeq: _*)
+        val keys = spark.read.schema(keySchema).parquet(paths: _*)
           .select(cols.map(col): _*)
         base.join(keys, cols, "left_anti")
       }
@@ -3694,7 +3683,7 @@ object Layout {
       require(basis.nonEmpty,
         s"changes: $table has no recorded schema and no files to infer " +
           "one from")
-      spark.read.parquet(basis: _*).schema
+      ColumnBridge.parquetFooterSchema(spark, basis)
     }
     (added, sch)
   }
@@ -4464,7 +4453,7 @@ object Layout {
     val dvPaths = lines.flatMap(entryDvs).distinct
       .map(r => new Path(root, r).toString)
     if (dvPaths.isEmpty) base
-    else base.join(spark.read.parquet(dvPaths: _*)
+    else base.join(readSidecars(spark, dvPaths)
         .select(col("grp").as("__grp"), col("pos").as("__pos")),
       Seq("__grp", "__pos"), "left_anti")
   }
@@ -4491,9 +4480,8 @@ object Layout {
       fsPathOf(fs.makeQualified(new Path(root, rel)).toString) -> rel
     }.toMap
     val mapping = controlPlane(spark) {
-      spark.read
-        .parquet(staged.map { case (rel, _) =>
-          new Path(root, rel).toString }: _*)
+      readSidecars(spark,
+          staged.map { case (rel, _) => new Path(root, rel).toString })
         .select(col("grp"), input_file_name().as("f")).distinct()
         .collect()
     }
@@ -4768,7 +4756,7 @@ object Layout {
     try {
       if (offObs.get("off").asInstanceOf[Long] > 0L) {
         val offenders = controlPlane(spark) {
-          spark.read.parquet(stagedPaths: _*)
+          readSidecars(spark, stagedPaths)
             .where(!coalesce(predicate, lit(false))).limit(1).collect()
         }
         throw new IllegalArgumentException(

@@ -560,10 +560,10 @@ class GraftTable(path: String, version: Option[Int],
   override def schema(): StructType = {
     val (files, recorded) = pinnedLayout
     recorded.getOrElse {
-      // legacy pre-schema-tracking table: footer inference
+      // legacy pre-schema-tracking table: the files' footer schema
       require(files.nonEmpty,
         s"$path has no recorded schema and no files to infer one from")
-      spark.read.parquet(files: _*).schema
+      ColumnBridge.parquetFooterSchema(spark, files)
     }
   }
 

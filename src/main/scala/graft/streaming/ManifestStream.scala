@@ -522,7 +522,7 @@ class ManifestStreamSource(spark: SparkSession, table: String,
     val sidecars = dvAdded.flatMap(dvByRel).distinct
       .map(rel => new Path(root, rel).toString)
     val grps = dvAdded.map(Layout.grpOfRel)
-    val del = spark.read.parquet(sidecars: _*)
+    val del = Layout.readSidecars(spark, sidecars)
       .where(col("grp").isin(grps: _*))
       .select(col("grp").as("__grp"), col("pos").as("__pos"))
     base
@@ -593,9 +593,9 @@ class ManifestStreamSource(spark: SparkSession, table: String,
       val dels = eqNew.groupBy(_._2).toSeq
         .sortBy(_._1.mkString(",")).map { case (keyCols, group) =>
           val paths = group.map(g => new Path(root, g._1).toString)
-          // footer-inferred key schema (driver-only, tiny files), cast
-          // to the pinned column types below
-          val keySchema = spark.read.parquet(paths: _*).schema
+          // the key files' footer schema (read on the driver, no Spark
+          // job), cast to the pinned column types below
+          val keySchema = ColumnBridge.parquetFooterSchema(spark, paths)
           val rel = ColumnBridge.streamingFileRelation(spark, "parquet",
             paths, keySchema)
           val sel = pinnedSchema.fields.toSeq.map { f =>

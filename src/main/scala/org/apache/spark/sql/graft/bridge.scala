@@ -48,6 +48,35 @@ object ColumnBridge {
       cs, cs.sessionState.catalog.getTableMetadata(table))._1
   }
 
+  /** The schema `spark.read.parquet(paths: _*)` would infer for parquet
+    * FILES (not directories), read from one footer on the driver instead
+    * of by a scheduled Spark job. Picks the footer non-merging inference
+    * picks (`ParquetUtils.inferSchema`): a `_common_metadata`, else a
+    * `_metadata` summary, else the data file with the lowest qualified
+    * path string; converts it as inference does (see
+    * [[org.apache.spark.sql.execution.datasources.parquet.FooterSchemaBridge]]).
+    * All-nullable, as the file relation reports it. For parquet whose
+    * writer is this engine — hand it to `spark.read.schema(…)`. */
+  def parquetFooterSchema(spark: SparkSession, paths: Seq[String])
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileWriter.{PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE}
+    val cs = spark.asInstanceOf[classic.SparkSession]
+    val conf = cs.sessionState.newHadoopConf()
+    val sorted = paths.map { p =>
+      val h = new Path(p)
+      h.getFileSystem(conf).makeQualified(h)
+    }.sortBy(_.toString)
+    val summaries = Seq(PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE)
+    val file = summaries.flatMap(n => sorted.find(_.getName == n))
+      .headOption
+      .orElse(sorted.find(p => !summaries.contains(p.getName)))
+      .getOrElse(throw new IllegalArgumentException(
+        "parquetFooterSchema: no parquet file given"))
+    org.apache.spark.sql.execution.datasources.parquet.FooterSchemaBridge
+      .schemaOf(conf, cs.sessionState.conf, file).asNullable
+  }
+
   /** A BATCH BaseRelation over concrete data files — what a v1
     * RelationProvider returns so `spark.read.format(...)` gets the full
     * file-source machinery (filter pushdown, column pruning, vectorized

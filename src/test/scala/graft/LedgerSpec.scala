@@ -155,4 +155,149 @@ class LedgerSpec extends AnyFunSuite {
         s"${(codeKeys -- docKeys).toSeq.sorted}; no longer read " +
         s"${(docKeys -- codeKeys).toSeq.sorted}")
   }
+
+  test("engine-internal parquet reads name a schema (no inference job)") {
+    import scala.jdk.CollectionConverters._
+    // reads still allowed to infer a schema, keyed (file, enclosing
+    // member, call), each with its reason
+    val allowed = Map(
+      ("graft/ops/Layout.scala", "compact", "spark.read.parquet(dir)") ->
+        "a whole directory: partition discovery applies",
+      ("graft/ops/Layout.scala", "compact",
+        "spark.read.parquet(rewrite.map(_.getPath.toString): _*)") ->
+        "the same directory's files, picked by size")
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val sources = {
+      val sql = java.nio.file.Files.list(root.resolve("graft/sql"))
+      try sql.iterator().asScala.map(f => root.relativize(f).toString)
+        .filter(_.endsWith(".scala")).toSeq.sorted
+      finally sql.close()
+    } ++ Seq("graft/ops/Layout.scala", "graft/streaming/ManifestStream.scala")
+    val calls = sources.flatMap { rel =>
+      val code = ParquetCalls.codeOnly(new String(
+        java.nio.file.Files.readAllBytes(root.resolve(rel)),
+        java.nio.charset.StandardCharsets.UTF_8))
+      ParquetCalls.of(code).map { case (d, recv, call) => (rel, d, recv, call) }
+    }
+    val reads = calls.filterNot(_._3.contains(".write"))
+    assert(reads.count(_._3.contains(".schema(")) >= 3,
+      s"guard found too few schema-typed reads: ${reads.map(_._4)}")
+    val bare = reads.filterNot(_._3.contains(".schema("))
+      .map { case (rel, d, _, call) => (rel, d, call) }
+    val unlisted = bare.filterNot(allowed.contains)
+    assert(unlisted.isEmpty,
+      "parquet read without .schema(…) — each one schedules a schema-" +
+        "inference Spark job; read the footer with Layout.readSidecars / " +
+        "ColumnBridge.parquetFooterSchema, or allow-list it with a " +
+        s"reason: ${unlisted.mkString("; ")}")
+    val stale = allowed.keySet -- bare
+    assert(stale.isEmpty, s"allow-list names reads that are gone: $stale")
+  }
+}
+
+/** Just enough Scala lexing for the source guard above. */
+private object ParquetCalls {
+  /** `src` with comments and string-literal contents blanked to spaces
+    * (same length, newlines kept), so parens and calls inside them
+    * never count. */
+  def codeOnly(src: String): String = {
+    val b = new StringBuilder(src)
+    def blank(from: Int, to: Int): Unit =
+      (from until math.min(to, b.length)).foreach(j =>
+        if (b(j) != '\n') b(j) = ' ')
+    def endOf(s: String, from: Int): Int = src.indexOf(s, from) match {
+      case -1 => src.length
+      case e  => e
+    }
+    /** Index just past the string literal opening at `i`. */
+    def skipString(i: Int): Int = {
+      var j = i + 1
+      while (j < src.length && src(j) != '"') {
+        if (src(j) == '\\') j += 1
+        else if (src.startsWith("${", j)) {
+          var depth = 1; j += 2
+          while (j < src.length && depth > 0) {
+            src(j) match {
+              case '{' => depth += 1
+              case '}' => depth -= 1
+              case '"' => j = skipString(j) - 1
+              case _   => ()
+            }
+            j += 1
+          }
+          j -= 1
+        }
+        j += 1
+      }
+      j + 1
+    }
+    var i = 0
+    while (i < src.length) {
+      if (src.startsWith("//", i)) {
+        val e = endOf("\n", i); blank(i, e); i = e
+      } else if (src.startsWith("/*", i)) {
+        val e = endOf("*/", i + 2) + 2; blank(i, e); i = e
+      } else if (src.startsWith("\"\"\"", i)) {
+        val e = endOf("\"\"\"", i + 3); blank(i + 3, e); i = e + 3
+      } else if (src(i) == '"') {
+        val e = skipString(i); blank(i + 1, e - 1); i = e
+      } else if (src(i) == '\'' && i + 2 < src.length &&
+          src(i + 2) == '\'') {
+        blank(i + 1, i + 2); i += 3
+      } else if (src(i) == '\'' && i + 3 < src.length &&
+          src(i + 1) == '\\' && src(i + 3) == '\'') {
+        blank(i + 1, i + 3); i += 4
+      } else i += 1
+    }
+    b.toString
+  }
+
+  private def ident(c: Char) = c.isLetterOrDigit || c == '_' || c == '$'
+
+  /** Every `.parquet(` call in comment-free `code`: (the enclosing
+    * member, a def or class indented two spaces; the receiver it is
+    * called on; the whole call), whitespace collapsed. The receiver is
+    * walked back over `a.b(c).d` chains, leading-dot continuations and
+    * balanced groups included. */
+  def of(code: String): Seq[(String, String, String)] =
+    """\.\s*parquet\s*\(""".r.findAllMatchIn(code).map { m =>
+      var i = m.start
+      def skipWs(): Unit = while (i > 0 && code(i - 1).isWhitespace) i -= 1
+      var done = false
+      while (!done) {
+        skipWs()
+        if (i > 0 && ")]}".contains(code(i - 1))) {
+          var depth = 0
+          do {
+            i -= 1
+            if (")]}".contains(code(i))) depth += 1
+            else if ("([{".contains(code(i))) depth -= 1
+          } while (depth > 0 && i > 0)
+        } else if (i > 0 && code(i - 1) == '"') {
+          i -= 1
+          while (i > 0 && code(i - 1) != '"') i -= 1
+          i -= 1
+        } else if (i > 0 && ident(code(i - 1))) {
+          while (i > 0 && ident(code(i - 1))) i -= 1
+          val afterIdent = i
+          skipWs()
+          if (i > 0 && code(i - 1) == '.') i -= 1
+          else { i = afterIdent; done = true }
+        } else done = true
+      }
+      var j = m.end; var depth = 1
+      while (depth > 0 && j < code.length) {
+        if (code(j) == '(') depth += 1 else if (code(j) == ')') depth -= 1
+        j += 1
+      }
+      def squash(s: String) = s.replaceAll("""\s+""", " ")
+        .replaceAll("""\s*\.\s*""", ".").replaceAll("""\(\s+""", "(")
+        .trim
+      val enclosing =
+        """(?m)^  (?:\w+(?:\[\w+\])? )*(?:def|class|object) (\w+)""".r
+        .findAllMatchIn(code.substring(0, m.start)).toSeq.lastOption
+        .map(_.group(1)).getOrElse("")
+      (enclosing, squash(code.substring(i, m.start)),
+        squash(code.substring(i, j)))
+    }.toSeq
 }
