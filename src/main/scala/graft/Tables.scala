@@ -40,82 +40,30 @@ object Tables {
   def dec2(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     c.cast("decimal(18,2)")
 
-  /** Ceiling under which [[fanOutSmallScan]] fires, conf-overridable
-    * (`spark.graft.fanout.smallScanBytes`). Default 64 MB: far above any
-    * local-testdata scan, far below anything a warehouse table reports. */
-  private val FanOutSmallScanBytesDefault: Long = 64L * 1024 * 1024
-
   /** Pin a compute-bound per-row pipeline to cluster parallelism when its
     * input scan is too small to split: a single-row-group parquet file
-    * yields ONE scan task no matter what `maxPartitionBytes` says, which
-    * serializes every expensive per-row stage stacked on it (tokenize,
-    * gram explode, perplexity scoring — the r21 StageProbe showed 0.6-1 s
-    * single-task stages across the text keys). A round-robin repartition
-    * of the tiny input buys full parallelism for those stages.
+    * yields ONE scan task whatever `maxPartitionBytes` says, serializing
+    * every per-row stage stacked on it (the r21 StageProbe showed 0.6-1 s
+    * single-task stages across the text keys). Dispatched through
+    * [[SizeTier]] at [[SizeTier.LocalBytes]]: above it the scan already
+    * splits and this is the identity, so it never shuffles a warehouse
+    * corpus. Round-robin repartition sorts before assignment, so re-runs
+    * are bit-identical.
     *
-    * Size-dispatched on pure plan metadata (no job), same adaptive style
-    * as Graph.triangleAdjEstimate: above the ceiling the scan already
-    * splits and this is the identity — the repartition must NEVER fire at
-    * warehouse scale, where it would shuffle the whole corpus for
-    * nothing. Determinism: round-robin repartition sorts before
-    * assignment (sortBeforeRepartition, Spark default), so the row →
-    * partition map is a pure function of the scan order and re-runs are
-    * bit-identical. */
-  def fanOutSmallScan(df: DataFrame): DataFrame =
-    fanOutSmallScan(df, Int.MaxValue)
-
-  /** [[fanOutSmallScan]] with a per-SITE parts cap (r22): the default
-    * min(cores, 8) is tuned for tokenize/shingle kernels, but the
-    * heaviest expand/gram sites (q_profile's 3× countDistinct Expand,
-    * q_dup_ngrams' gram explode) sit PAST the memory-bandwidth knee
-    * already at 8-way — r21 measured their cpu_ns up 1.8-4× for flat
-    * wall. A site that knows its stage is bandwidth-bound caps lower;
-    * `spark.graft.fanout.parts` still overrides (min of the two). */
-  def fanOutSmallScan(df: DataFrame, maxParts: Int): DataFrame = {
-    val s = df.sparkSession
-    val ceiling = s.conf.getOption("spark.graft.fanout.smallScanBytes")
-      .map(_.toLong).getOrElse(FanOutSmallScanBytesDefault)
-    // min(cores, 8), conf-overridable: the stages this feeds (tokenize,
-    // gram explode, string building) are MEMORY-BANDWIDTH-bound, not
-    // ALU-bound — the r21 A/B sweep measured wall flat beyond ~8-way
-    // while total CPU-seconds inflated superlinearly with thread count
-    // (4-way 2.3 s, 8-way 3.9 s, 16-way 7.7 s, 32-way 22 s CPU for the
-    // same q_substring_dedup work at walls within ±20%). Past the
-    // bandwidth knee, extra threads only stall on the same DRAM.
-    // an EXPLICIT conf wins over the site cap (it is the deploy-time /
-    // A/B override); only the default is capped per site
-    val parts = s.conf.getOption("spark.graft.fanout.parts")
-      .map(_.toInt)
-      .getOrElse(math.min(
-        math.min(s.sparkContext.defaultParallelism, 8), maxParts))
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        BigInt(ceiling))
-      df.repartition(parts)
+    * `maxParts` caps the width per site: these stages are memory-
+    * bandwidth-bound, and r21 measured CPU-seconds growing superlinearly
+    * past ~8-way at flat wall (2.3 s at 4-way, 22 s at 32-way for one
+    * q_substring_dedup); the heaviest expand/gram sites cap at 4.
+    *
+    * `sizeOf` dispatches on another frame, the base scan of a derived
+    * `df`: Catalyst's estimate multiplies through joins and aggregations
+    * and lands over the ceiling at kilobyte volume (q_cooccurrence's
+    * post-join docToks did), while the scan has exact file-size stats
+    * and upper-bounds the derived rows. */
+  def fanOutSmallScan(df: DataFrame, maxParts: Int = 8,
+      sizeOf: Option[DataFrame] = None): DataFrame =
+    if (SizeTier.small(sizeOf.getOrElse(df), SizeTier.LocalBytes))
+      df.repartition(
+        math.min(df.sparkSession.sparkContext.defaultParallelism, maxParts))
     else df
-  }
-
-  /** [[fanOutSmallScan]] with the size DISPATCH taken from a different
-    * frame than the one being fanned. For a frame a few operators past
-    * the scan (a join, a collect_set aggregation) Catalyst's stat
-    * estimate MULTIPLIES through the operators and lands above the
-    * ceiling even when the true data is kilobytes — the r21 StageProbe
-    * showed q_cooccurrence's pair expansion serialized on ONE task
-    * because its post-join docToks estimate blocked the dispatch. The
-    * base SCAN the frame derives from has exact file-size stats and
-    * upper-bounds the derived frame's rows (joins on a key subset and
-    * per-key aggregation only shrink it), so dispatching on the scan is
-    * sound: at warehouse scale the scan is over the ceiling and this is
-    * the identity, exactly as the single-frame form. */
-  def fanOutSmallScan(df: DataFrame, sizeOf: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    val ceiling = s.conf.getOption("spark.graft.fanout.smallScanBytes")
-      .map(_.toLong).getOrElse(FanOutSmallScanBytesDefault)
-    val parts = s.conf.getOption("spark.graft.fanout.parts")
-      .map(_.toInt)
-      .getOrElse(math.min(s.sparkContext.defaultParallelism, 8))
-    if (sizeOf.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        BigInt(ceiling))
-      df.repartition(parts)
-    else df
-  }
 }

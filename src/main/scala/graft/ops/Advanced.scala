@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.SizeTier
 import graft.Tables._
 import graft.Events
 
@@ -223,10 +224,11 @@ object Advanced {
     * metadata (file sizes after partition pruning), no extra job, known
     * before execution. Both branches share one oracle contract and are
     * independently oracle-green, so the dispatch can never change the
-    * answer, only the plan (PlanAuditSpec pins the branch choice at both
-    * ends of the threshold). */
+    * answer, only the plan (PlanAuditSpec pins the branch choice under
+    * both forced [[graft.SizeTier]] tiers and at the real estimates). */
   def qQuantilesAuto(s: SparkSession, d: String): DataFrame =
-    exactQuantiles(s, d, QuantileDispatchBytes)
+    if (quantilesAutoPicksBinned(s, d)) qQuantilesDist(s, d)
+    else qQuantiles(s, d)
 
   /** Bytes per (group, value) pair the window sort would move — the row
     * width the catalog-stats path multiplies rowCount by (string flag +
@@ -268,21 +270,16 @@ object Advanced {
   private[graft] def quantileInputEstimate(s: SparkSession, d: String): BigInt =
     catalogLineitemRowCount(s, d)
       .map(_ * QuantilePairBytes)
-      .getOrElse(
-        lineitem(s, d)
-          .select(col("l_returnflag"), col("l_extendedprice"))
-          .queryExecution.optimizedPlan.stats.sizeInBytes)
+      .getOrElse(SizeTier.planBytes(lineitem(s, d)
+        .select(col("l_returnflag"), col("l_extendedprice"))))
 
   /** True when [[qQuantilesAuto]] takes the binned scale path for this
-    * input — exposed so ScaleProbe and PlanAuditSpec assert the branch
-    * at real data sizes instead of arguing from the threshold. */
+    * input: the estimate is over [[QuantileDispatchBytes]], compared
+    * through [[graft.SizeTier.small]] so a forced tier picks the branch.
+    * Exposed so ScaleProbe and PlanAuditSpec assert the branch at real
+    * data sizes instead of arguing from the threshold. */
   private[graft] def quantilesAutoPicksBinned(s: SparkSession, d: String): Boolean =
-    quantileInputEstimate(s, d) > BigInt(QuantileDispatchBytes)
-
-  private[graft] def exactQuantiles(s: SparkSession, d: String,
-      thresholdBytes: Long): DataFrame =
-    if (quantileInputEstimate(s, d) > BigInt(thresholdBytes)) qQuantilesDist(s, d)
-    else qQuantiles(s, d)
+    !SizeTier.small(quantileInputEstimate(s, d), QuantileDispatchBytes)
 
   /** The quantile SCALE path: approx_percentile's mergeable sketch —
     * constant memory per group, one shuffle of sketches, no per-group

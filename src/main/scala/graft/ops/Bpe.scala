@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.SizeTier
 import graft.Tables._
 
 /** Byte-pair-encoding merge learning over the corpus — the tokenizer-
@@ -291,36 +292,27 @@ object Bpe {
       nMerges: Int = Merges): Seq[(Long, String, String, String, Long)] =
     mergeCache.getOrElseUpdate((d, nMerges), learnMergesFresh(s, d, nMerges))
 
-  /** Scan-size ceiling under which [[learnMergesLocal]] fires (conf
-    * `spark.graft.bpe.localScanBytes`, default 64 MB — the same
-    * plan-metadata dispatch style as Tables.fanOutSmallScan). Below it
-    * the corpus fits one executor's arm's reach and the distinct-word
-    * vocabulary is trivially driver-sized; above it the distributed
-    * learners run, so a 100 TB corpus can never be collected. */
-  private def localLearnCeiling(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.bpe.localScanBytes")
-      .map(_.toLong).getOrElse(64L * 1024 * 1024)
-
   /** Unconditional learn (cache-bypassing; [[qBpeLearn]]'s entry).
     * Three tiers (r22): a documents scan under the size ceiling takes
     * the LOCAL learner (one Spark job — the vocabulary collect — then a
     * driver-side fold; the r22 StageProbe measured the rescan learner's
     * 8 sequential argmax rounds costing ~1.6 s of per-job driver floor
     * for 0.4 s of executor CPU at sf0.1); above the ceiling the merge
-    * count picks rescan vs delta exactly as before. All three learners
-    * are output-equivalent with identical tie-breaks (BpeDeltaSpec,
+    * count picks rescan vs delta exactly as before. The ceiling is
+    * [[graft.SizeTier.LocalBytes]]: below it the corpus fits one
+    * executor's arm's reach and the distinct-word vocabulary is
+    * trivially driver-sized; above it the distributed learners run, so a
+    * 100 TB corpus can never be collected. All three learners are
+    * output-equivalent with identical tie-breaks (BpeDeltaSpec,
     * BpeLocalSpec) — dispatch is a pure cost decision. */
   private[graft] def learnMergesFresh(s: SparkSession, d: String,
-      nMerges: Int = Merges): Seq[(Long, String, String, String, Long)] = {
-    val scanBytes =
-      documents(s, d).queryExecution.optimizedPlan.stats.sizeInBytes
-    if (scanBytes <= BigInt(localLearnCeiling(s)))
+      nMerges: Int = Merges): Seq[(Long, String, String, String, Long)] =
+    if (SizeTier.small(documents(s, d), SizeTier.LocalBytes))
       learnMergesLocal(s, d, nMerges)
     else learnerFor(nMerges) match {
       case "rescan" => learnMergesRescan(s, d, nMerges)
       case _        => learnMergesDelta(s, d, nMerges)._1
     }
-  }
 
   /** The LOCAL learner: collect the distinct-word frequency table once
     * (the same first aggregate both distributed learners run — words

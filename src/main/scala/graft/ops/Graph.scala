@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.SizeTier
 import graft.Tables._
 
 /** Graph analytics over relationship tables — PageRank-style entity
@@ -35,17 +36,6 @@ object Graph {
   private val Scale = 1000000000L
   private val Iters = 3
 
-  /** Ceiling for broadcasting the triangle census' adjacency table,
-    * conf-overridable (`spark.graft.triangle.broadcastBytes`) so tests
-    * can pin both dispatch branches. 1 GiB default: well under Spark's
-    * 8 GB broadcast hard limit and the point where per-executor
-    * rebroadcast cost stops beating a shuffled join. */
-  private[graft] val TriangleBroadcastMaxBytes: Long = 1L << 30
-
-  private[graft] def triangleBroadcastBytes(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.triangle.broadcastBytes")
-      .map(_.toLong).getOrElse(TriangleBroadcastMaxBytes)
-
   /** Planning-time size signal for the adjacency attachment — the same
     * pure-plan-metadata style as Advanced.quantileInputEstimate (no job).
     * The adjacency table's payload is one 8-byte neighbor entry per
@@ -57,15 +47,17 @@ object Graph {
     * of wrongly broadcasting a data-proportional table at warehouse
     * scale is a driver OOM. */
   private[graft] def triangleAdjEstimate(s: SparkSession, d: String): BigInt =
-    lineitem(s, d).select(col("l_orderkey"), col("l_partkey"))
-      .queryExecution.optimizedPlan.stats.sizeInBytes * 2
+    SizeTier.planBytes(
+      lineitem(s, d).select(col("l_orderkey"), col("l_partkey"))) * 2
 
   /** True when [[qTriangleCount]] broadcasts the adjacency table for
-    * this input — exposed so PlanAuditSpec asserts BOTH dispatch
-    * branches instead of trusting the threshold. */
+    * this input: the estimate is at or under
+    * [[graft.SizeTier.BroadcastBytes]] (well under Spark's 8 GB
+    * broadcast hard limit). Exposed so PlanAuditSpec asserts BOTH
+    * dispatch branches instead of trusting the threshold. */
   private[graft] def triangleBroadcastsAdj(s: SparkSession, d: String)
       : Boolean =
-    triangleAdjEstimate(s, d) <= BigInt(triangleBroadcastBytes(s))
+    SizeTier.small(triangleAdjEstimate(s, d), SizeTier.BroadcastBytes)
 
   def qPagerank(s: SparkSession, d: String): DataFrame = {
     val pairs = lineitem(s, d)
@@ -118,15 +110,17 @@ object Graph {
     * broadcast — distinct node count is bounded by 2 × lineitem rows
     * (each row names one supplier and one part), so the pruned
     * (suppkey, partkey) scan estimate at 16 B/row upper-bounds the
-    * 16 B/node vector. Same conservative pure-plan-metadata style as
-    * [[triangleAdjEstimate]] (no job, and only the table the operator
-    * already reads): over-estimating only costs a shuffle; under-
-    * estimating at warehouse scale would OOM the driver. */
+    * 16 B/node vector, compared against the same
+    * [[graft.SizeTier.BroadcastBytes]] as [[triangleBroadcastsAdj]]. Same
+    * conservative pure-plan-metadata style as [[triangleAdjEstimate]] (no
+    * job, and only the table the operator already reads): over-estimating
+    * only costs a shuffle; under-estimating at warehouse scale would OOM
+    * the driver. */
   private[graft] def pagerankBroadcastsRanks(s: SparkSession, d: String)
       : Boolean =
-    lineitem(s, d).select(col("l_suppkey"), col("l_partkey"))
-      .queryExecution.optimizedPlan.stats.sizeInBytes * 2 <=
-      BigInt(triangleBroadcastBytes(s))
+    SizeTier.small(SizeTier.planBytes(
+      lineitem(s, d).select(col("l_suppkey"), col("l_partkey"))) * 2,
+      SizeTier.BroadcastBytes)
 
   /** Triangle census of the part co-purchase graph: nodes are parts,
     * with an edge between two parts iff some order contains both.

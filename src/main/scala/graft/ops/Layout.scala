@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types
+import graft.SizeTier
 
 /** Physical-layout operators: multi-dimensional clustering for write-time
   * data skipping.
@@ -2120,11 +2121,9 @@ object Layout {
       // disappear (the r22 StageProbe measured 3 scheduled jobs per
       // bucket commit, 2 of them AQE machinery), and the file layout is
       // bit-identical because the partitioning was never adaptive here
-      // to begin with. Above the ceiling (warehouse scale) AQE stays on.
-      val localWrite =
-        out.queryExecution.optimizedPlan.stats.sizeInBytes <=
-          BigInt(spark.conf.get("spark.graft.commit.localWriteBytes",
-            (64L << 20).toString).toLong)
+      // to begin with. Above SizeTier.LocalBytes (warehouse scale) AQE
+      // stays on.
+      val localWrite = SizeTier.small(out, SizeTier.LocalBytes)
       def bucketWrite(): Unit =
         fan.write.mode("overwrite").partitionBy("__gp_bucket")
           .parquet(txn.toString)

@@ -168,7 +168,7 @@ object Ranking {
     // silently blocked the fan-out (the r21 probe caught exactly that).
     // docToks has at most one row per document, so the scan bound is
     // sound, and at corpus scale the scan is over the ceiling → identity.
-    val pairs = fanOutSmallScan(docToks, documents(s, d))
+    val pairs = fanOutSmallScan(docToks, sizeOf = Some(documents(s, d)))
       .select(explode(expr(
         "flatten(transform(ts, (x, i) -> transform(" +
           "slice(ts, i + 2, size(ts)), y -> struct(x AS t1, y AS t2))))"))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.SizeTier
 import graft.Tables._
 
 /** Sketch-based near-duplicate detection (SURVEY.md §2.4 X2) — the 100 TB
@@ -268,8 +269,8 @@ object Sketches {
     // of it label-prop rounds. Adaptive planning buys nothing on a
     // graph that fits in one cache block, so once round 0 has
     // MATERIALIZED the edge cache (its stats then report exact cached
-    // bytes — plan metadata, no extra job), rounds below the ceiling
-    // run inside controlPlane with a pinned small shuffle width: one
+    // bytes — plan metadata, no extra job), rounds below
+    // SizeTier.LocalBytes run inside controlPlane with a pinned small shuffle width: one
     // scheduled job per round. At warehouse scale the edge cache
     // exceeds the ceiling and every round keeps AQE (skew splits,
     // coalescing) — the dispatch can only fire where the whole graph
@@ -277,8 +278,6 @@ object Sketches {
     // min-fixpoint, so join strategy/partitioning cannot change the
     // result (LabelPropagationSpec + the shared dedup oracles pin it).
     val sess = pairs.sparkSession
-    val localBytes = sess.conf
-      .get("spark.graft.labelprop.localBytes", (64L << 20).toString).toLong
     var smallGraph = false
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("lbl", col("id"))
@@ -319,8 +318,7 @@ object Sketches {
         // after round 0 the edge cache is materialized, so its plan
         // stats are the exact cached bytes — dispatch for the REMAINING
         // rounds on what the graph actually weighs, never an estimate
-        smallGraph = edges.queryExecution.optimizedPlan.stats.sizeInBytes
-          .<=(BigInt(localBytes)) // BigInt compare: never truncate
+        smallGraph = SizeTier.small(edges, SizeTier.LocalBytes)
       if (prevCached != null) prevCached.unpersist()
       prevCached = next
       labels = next.select(col("id"), col("lbl"))

@@ -1669,39 +1669,53 @@ object GraftSql {
     * a loss (publish dropping lines), or a duplication all
     * hash-mismatch. BranchWapSpec pins what the aggregate can't see
     * (invisibility before publish, divergence refusal, GC safety). */
-  def qWapPublish(s: SparkSession, d: String): DataFrame = {
-    val wh = s"${graft.ops.Sources.ioDir(s, d)}/sql_catalog"
-    val cat = catalogFor(s, wh)
-    val t = s"$cat.default.orders_wap"
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    orders(s, d)
-      .select(col("o_orderkey"), col("o_orderstatus"),
-        dec2(col("o_totalprice")).as("price"))
-      .createOrReplaceTempView("orders_wap_src")
-    s.sql(s"""CREATE TABLE $t
-            |  (o_orderkey BIGINT, o_orderstatus STRING,
-            |   price DECIMAL(18,2))""".stripMargin)
-    s.sql(s"""INSERT INTO $t
-            |SELECT * FROM orders_wap_src WHERE o_orderkey % 2 = 0"""
-      .stripMargin)
-    s.sql(s"CALL $cat.system.create_branch('default.orders_wap', 'audit')")
-    s.conf.set("spark.graft.wap.branch", "audit")
-    try s.sql(s"""INSERT INTO $t
+  def qWapPublish(s: SparkSession, d: String): DataFrame =
+    withWapBranch(s, None) {
+      val wh = s"${graft.ops.Sources.ioDir(s, d)}/sql_catalog"
+      val cat = catalogFor(s, wh)
+      val t = s"$cat.default.orders_wap"
+      s.sql(s"DROP TABLE IF EXISTS $t")
+      orders(s, d)
+        .select(col("o_orderkey"), col("o_orderstatus"),
+          dec2(col("o_totalprice")).as("price"))
+        .createOrReplaceTempView("orders_wap_src")
+      s.sql(s"""CREATE TABLE $t
+              |  (o_orderkey BIGINT, o_orderstatus STRING,
+              |   price DECIMAL(18,2))""".stripMargin)
+      s.sql(s"""INSERT INTO $t
+              |SELECT * FROM orders_wap_src WHERE o_orderkey % 2 = 0"""
+        .stripMargin)
+      s.sql(s"CALL $cat.system.create_branch('default.orders_wap', 'audit')")
+      withWapBranch(s, Some("audit")) {
+        s.sql(s"""INSERT INTO $t
                 |SELECT * FROM orders_wap_src WHERE o_orderkey % 2 = 1"""
-      .stripMargin)
-    finally s.conf.unset("spark.graft.wap.branch")
-    // the audit gate: a real validation query against the branch — a
-    // staged batch that fails it never publishes
-    val bad = s.sql(s"""SELECT COUNT(*) FROM $t VERSION AS OF 'audit'
-                      |WHERE o_orderkey IS NULL OR price < 0"""
-      .stripMargin).head.getLong(0)
-    require(bad == 0, s"audit failed: $bad bad rows — not publishing")
-    s.sql(s"CALL $cat.system.publish_branch('default.orders_wap', 'audit')")
-    s.sql(s"CALL $cat.system.drop_branch('default.orders_wap', 'audit')")
-    s.sql(s"""SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n,
-            |  CAST(SUM(price) AS DOUBLE) AS sum_price
-            |FROM $t GROUP BY o_orderstatus ORDER BY o_orderstatus"""
-      .stripMargin)
+          .stripMargin)
+      }
+      // the audit gate: a real validation query against the branch — a
+      // staged batch that fails it never publishes
+      val bad = s.sql(s"""SELECT COUNT(*) FROM $t VERSION AS OF 'audit'
+                        |WHERE o_orderkey IS NULL OR price < 0"""
+        .stripMargin).head.getLong(0)
+      require(bad == 0, s"audit failed: $bad bad rows — not publishing")
+      s.sql(s"CALL $cat.system.publish_branch('default.orders_wap', 'audit')")
+      s.sql(s"CALL $cat.system.drop_branch('default.orders_wap', 'audit')")
+      s.sql(s"""SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n,
+              |  CAST(SUM(price) AS DOUBLE) AS sum_price
+              |FROM $t GROUP BY o_orderstatus ORDER BY o_orderstatus"""
+        .stripMargin)
+    }
+
+  /** `body` with `spark.graft.wap.branch` at `branch` (None: unset), then
+    * the caller's value back: an operator's switch never wipes or leaks
+    * into the session's. */
+  private def withWapBranch[T](s: SparkSession, branch: Option[String])
+      (body: => T): T = {
+    val prev = s.conf.getOption("spark.graft.wap.branch")
+    def put(v: Option[String]): Unit = v.fold(
+      s.conf.unset("spark.graft.wap.branch"))(
+      s.conf.set("spark.graft.wap.branch", _))
+    put(branch)
+    try body finally put(prev)
   }
 
   /** Zero-copy shallow clone end to end (r18): land the even half on

@@ -86,12 +86,10 @@ class BpeLocalSpec extends AnyFunSuite {
       (2L, Seq.fill(2)("lower").mkString(" ")),
       (3L, Seq.fill(6)("newest").mkString(" ")),
       (4L, Seq.fill(3)("widest").mkString(" "))))
-    // force the distributed branch (ceiling 0), then the local branch
+    // force the distributed branch (large tier), then the local branch
     // (default ceiling far above the fixture) — identical tables
-    spark.conf.set("spark.graft.bpe.localScanBytes", "0")
     val viaDistributed =
-      try ops.Bpe.learnMergesFresh(spark, d, 4)
-      finally spark.conf.unset("spark.graft.bpe.localScanBytes")
+      SizeTier.forcing(SizeTier.Large)(ops.Bpe.learnMergesFresh(spark, d, 4))
     val viaLocal = ops.Bpe.learnMergesFresh(spark, d, 4)
     assert(viaDistributed == viaLocal)
     assert(viaLocal == ops.Bpe.learnMergesRescan(spark, d, 4))

@@ -329,4 +329,21 @@ class BranchWapSpec extends AnyFunSuite {
     assert(count(t) == 80)
     spark.sql(s"CALL $c.system.drop_branch('default.wap_part', 'w')")
   }
+
+  test("q_wap_publish keeps the caller's WAP branch setting") {
+    val sf = "/root/testdata/sf0.001"
+    def run() = SparkEntry.queries("q_wap_publish")(spark, sf).collect().toSeq
+    val direct = run()
+    // a caller's own branch neither leaks into the operator's main
+    // writes nor is wiped by its scoped switch to 'audit'
+    val viaCallerBranch = withWap("callers_branch") {
+      val rows = run()
+      assert(spark.conf.getOption("spark.graft.wap.branch")
+        .contains("callers_branch"),
+        "q_wap_publish unset the caller's spark.graft.wap.branch")
+      rows
+    }
+    assert(viaCallerBranch == direct)
+    assert(spark.conf.getOption("spark.graft.wap.branch").isEmpty)
+  }
 }

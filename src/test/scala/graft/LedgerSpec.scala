@@ -156,6 +156,32 @@ class LedgerSpec extends AnyFunSuite {
         s"${(docKeys -- codeKeys).toSeq.sorted}")
   }
 
+  test("plan-stats size estimates are read only in SizeTier") {
+    import scala.jdk.CollectionConverters._
+    // a size dispatch outside SizeTier is an ad-hoc ceiling: its own
+    // estimate code, its own threshold, its own (missing) forcing seam
+    val root = java.nio.file.Paths.get("src/main")
+    val files = java.nio.file.Files.walk(root)
+    val readers =
+      try files.iterator().asScala
+        .filter(f => f.toString.endsWith(".scala") ||
+          f.toString.endsWith(".java"))
+        .filter { f =>
+          val code = ParquetCalls.codeOnly(new String(
+            java.nio.file.Files.readAllBytes(f),
+            java.nio.charset.StandardCharsets.UTF_8))
+          """optimizedPlan\s*\.\s*stats\b""".r.findFirstIn(code).isDefined
+        }
+        .map(f => root.relativize(f).toString).toSet
+      finally files.close()
+    val home = "scala/graft/SizeTier.scala"
+    assert(readers.contains(home), s"no plan-stats read left in $home")
+    assert(readers == Set(home),
+      "optimizedPlan.stats read outside SizeTier — dispatch through " +
+        "SizeTier.small / SizeTier.planBytes instead: " +
+        (readers - home).toSeq.sorted.mkString(", "))
+  }
+
   test("engine-internal parquet reads name a schema (no inference job)") {
     import scala.jdk.CollectionConverters._
     // reads still allowed to infer a schema, keyed (file, enclosing

@@ -294,18 +294,19 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("quantiles auto-dispatch picks the binned plan beyond the threshold") {
-    // threshold 0 → any input is "large" → the binned scale path, whose
-    // signature is the (rf, bin)-keyed rank window + broadcast bin filter
-    val large = ops.Advanced.exactQuantiles(spark, sf, thresholdBytes = 0L)
-      .queryExecution.executedPlan.toString
+    // forced large tier → the binned scale path, whose signature is the
+    // (rf, bin)-keyed rank window + broadcast bin filter
+    val large = SizeTier.forcing(SizeTier.Large)(
+      ops.Advanced.qQuantilesAuto(spark, sf)).queryExecution.executedPlan
+      .toString
     assert(large.split("Window \\[").drop(1).exists(w =>
         w.contains("hashpartitioning(rf") && w.contains("bin")),
       "large input did not dispatch to the binned plan:\n" + large.take(1000))
     assert(large.contains("BroadcastHashJoin"))
-    // huge threshold → "small" → the single window sort keyed by rf alone
-    val small = ops.Advanced
-      .exactQuantiles(spark, sf, thresholdBytes = Long.MaxValue)
-      .queryExecution.executedPlan.toString
+    // forced small tier → the single window sort keyed by rf alone
+    val small = SizeTier.forcing(SizeTier.Small)(
+      ops.Advanced.qQuantilesAuto(spark, sf)).queryExecution.executedPlan
+      .toString
     assert(!small.contains("BroadcastHashJoin"),
       "small input paid the two-pass histogram plan:\n" + small.take(1000))
     // the deployed default must route the small fixtures (sf0.001 /
@@ -662,13 +663,12 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("triangle census drops the broadcast hint above the size ceiling") {
-    // force the ceiling below any real input: the dispatcher must fall
-    // back to shuffled adjacency joins, because adj grows with the graph
-    // and a forced broadcast of a data-proportional table is a driver
-    // OOM at warehouse scale (the r11 `weak`)
+    // force the large tier: the dispatcher must fall back to shuffled
+    // adjacency joins, because adj grows with the graph and a forced
+    // broadcast of a data-proportional table is a driver OOM at
+    // warehouse scale (the r11 `weak`)
     val broadcastRows =
       SparkEntry.queries("q_triangle_count")(spark, sf).collect()
-    spark.conf.set("spark.graft.triangle.broadcastBytes", "0")
     // ALSO disable auto-broadcast: at spec scale the planner would still
     // broadcast the now-unhinted adjacency on its own size estimate —
     // which is the correct planner behavior (the dispatcher only stops
@@ -676,15 +676,15 @@ class PlanAuditSpec extends AnyFunSuite {
     // inputs). To see the at-scale fallback shape, take the planner's
     // size-based choice off the table too.
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try SizeTier.forcing(SizeTier.Large) {
       assert(!ops.Graph.triangleBroadcastsAdj(spark, sf),
-        "ceiling=0 but dispatcher still picked broadcast")
+        "large tier but dispatcher still picked broadcast")
       val p = plan("q_triangle_count")
       // the adjacency attachments are now shuffle joins (the remaining
       // broadcasts are the three 1-row stat frames' crossJoin idiom,
       // which are BroadcastNestedLoopJoin, not BroadcastHashJoin)
       assert(!p.contains("BroadcastHashJoin"),
-        "adjacency still broadcast with ceiling=0:\n" + p.take(1500))
+        "adjacency still broadcast in the large tier:\n" + p.take(1500))
       assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
         "no shuffled adjacency join in the fallback plan:\n" + p.take(1500))
       assert(p.contains("graft_sorted_intersect"))
@@ -694,10 +694,7 @@ class PlanAuditSpec extends AnyFunSuite {
         SparkEntry.queries("q_triangle_count")(spark, sf).collect()
       assert(shuffledRows.toSeq == broadcastRows.toSeq,
         "shuffled-join branch returned different census numbers")
-    } finally {
-      spark.conf.unset("spark.graft.triangle.broadcastBytes")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    }
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("SQL catalog read keeps pushdown + pruning + columnar scan " +
