@@ -5,11 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main (driver contract): runs every declared query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
-  * Each query is executed twice and the FASTER run is reported: the first
-  * execution pays JVM/JIT/codegen warmup that a long-lived cluster never
-  * sees per-query, and what we're measuring is plan cost, not HotSpot
-  * compilation. AQE is on — it is the production configuration this
-  * engine is designed for (runtime broadcast demotion, skew splitting).
+  * Each query's figure is [[BenchProtocol.bestOf]] its runs: what we're
+  * measuring is plan cost, not HotSpot compilation. AQE is on — it is the
+  * production configuration this engine is designed for (runtime
+  * broadcast demotion, skew splitting).
   *
   * Contention evidence: the r8 driver artifact reported a 3.5× phantom
   * regression caused by machine contention during the bench window (an
@@ -19,17 +18,10 @@ import org.apache.spark.sql.SparkSession
   * (this JVM's process-CPU seconds ÷ wall seconds over the whole loop).
   * On an idle local[32] box the ratio sits well above 1; a contaminated
   * run shows high loadavg with a depressed ratio — external processes
-  * are stealing the cores. Additionally any key whose two timed runs
-  * disagree by >3× gets a THIRD run and reports the median, so a single
-  * scheduler hiccup cannot define a key's number.
+  * are stealing the cores.
   */
 object Bench {
-  private def loadAvg1m(): Double = {
-    // ManagementFactory's getSystemLoadAverage reads /proc/loadavg on
-    // Linux; -1 on platforms without the concept.
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .getSystemLoadAverage
-  }
+  import BenchProtocol.{jsonObj, loadAvg1m, r3}
 
   private def processCpuSec(): Double = {
     java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
@@ -40,15 +32,11 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession
-      .builder(s"local[$cpus]", Some(cpus.toInt))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = BenchProtocol.sfDir
+    val spark = GraftSession.local()
     // The clearCaches + noop-sink + -1-sentinel contract (and the
     // rationale for each choice) lives in BenchProtocol, shared with
-    // ScaleProbe and perfbench so the three measure identically.
+    // Probe and perfbench so they all measure identically.
     def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Double = BenchProtocol.timeOnce(spark, sfDir, fn)
     // One untimed global warmup before the loop: the first keys in
@@ -65,8 +53,8 @@ object Bench {
     // machine load. CPU-ns per run is load-invariant for a fixed plan,
     // so the next round diffs cpu_ns to find REAL regressions and
     // wall/cpu to find contention.
-    val cpu = new BenchProtocol.CpuListener
-    spark.sparkContext.addSparkListener(cpu)
+    val lis = new BenchProtocol.Listener
+    spark.sparkContext.addSparkListener(lis)
     val loadBefore = loadAvg1m()
     val cpuBefore = processCpuSec()
     val wallBefore = System.nanoTime()
@@ -82,32 +70,12 @@ object Bench {
       // spiked load-at-key is contention; flat load with high CPU is a
       // real plan problem.
       val loadAtKey = loadAvg1m()
-      val cpu0 = cpu.snapshot(spark)
-      var runs = 2
-      val a = timeOnce(fn)
-      val b = timeOnce(fn)
-      val t =
-        if (a < 0 || b < 0) -1.0
-        else if (math.max(a, b) > 3 * math.min(a, b) && math.max(a, b) > 0.5) {
-          // >3× disagreement between the two runs (and the slow one is
-          // non-trivial): a scheduler hiccup or GC pause hit one of them.
-          // Take a tie-breaking third run and report the median so one
-          // bad sample can't define the key.
-          runs += 1
-          val c = timeOnce(fn)
-          if (c < 0) math.min(a, b)
-          else Seq(a, b, c).sorted.apply(1)
-        } else
-          // moderate spread on a non-trivial key: r10's round-over-round
-          // "regressions" (q_fuzzy_join, q_unpivot) were exactly this
-          // band — run-to-run variance, not plan changes. One more
-          // sample and min-of-3 bounds it (band + floor constants and
-          // their calibration: BenchProtocol).
-          BenchProtocol.boundedMin(a, b, { runs += 1; timeOnce(fn) })
+      lis.clear(spark)
+      val (t, runs) = BenchProtocol.bestOf(() => timeOnce(fn))
       rerunCount += runs - 2
       // mean executor-CPU per run: totals would penalize triple-measured
       // keys; the mean is comparable across keys and across rounds
-      val cpuPerRun = (cpu.snapshot(spark) - cpu0) / runs
+      val cpuPerRun = lis.cpuNs(spark) / runs
       (n, t, cpuPerRun, seq, loadAtKey)
     }
     val wallSec = (System.nanoTime() - wallBefore) / 1e9
@@ -119,21 +87,14 @@ object Bench {
     val cpuWallRatio =
       if (cpuBefore < 0 || cpuAfter < 0 || wallSec <= 0) -1.0
       else (cpuAfter - cpuBefore) / wallSec
-    // per-query seconds rounded to ms: sub-ms digits are pure noise and
-    // ~40% of the artifact line's length
-    def r3(v: Double): Double = math.rint(v * 1000) / 1000
-    val qs = results.map { case (k, v, _, _, _) =>
-      "\"" + k + "\":" + (if (v < 0) -1.0 else r3(v))
-    }.mkString("{", ",", "}")
+    val qs = jsonObj(results.map { case (k, v, _, _, _) =>
+      k -> (if (v < 0) -1.0 else r3(v)) })
     // per-key mean executor-CPU ns per timed run (see protocol note)
-    val cpuQs = results.map { case (k, _, c, _, _) =>
-      "\"" + k + "\":" + c
-    }.mkString("{", ",", "}")
+    val cpuQs = jsonObj(results.map { case (k, _, c, _, _) => k -> c })
     // per-key run order + 1-min loadavg at key start (protocol r16.seq):
     // lets a reader bisect in-loop-only anomalies from the artifact
-    val seqQs = results.map { case (k, _, _, i, la) =>
-      "\"" + k + "\":[" + i + "," + r3(la) + "]"
-    }.mkString("{", ",", "}")
+    val seqQs = jsonObj(results.map { case (k, _, _, i, la) =>
+      k -> s"[$i,${r3(la)}]" })
     // -1 marks a failed query; only successful times enter the total so a
     // failure can't make the benchmark look FASTER
     val ok = results.map(_._2).filter(_ >= 0.0)
@@ -149,39 +110,18 @@ object Bench {
     println(fullLine)
     // Self-persist the COMPLETE line: the stdout tail truncates the
     // per-query map's head every round, losing per-key regression diffs.
-    // Round number = 1 + the highest driver-written BENCH_r{N}.json.
-    val repoDir = {
-      val r = new java.io.File("/root/repo")
-      if (r.isDirectory) r else new java.io.File(".")
-    }
-    // Artifact naming is deterministic: an explicit path via
-    // SPARK_GRAFT_BENCH_OUT (or argv(0)) is authoritative and no-clobber
-    // suffixed if it already exists (a prior record); without one the
-    // full line goes to BENCH_full_latest.json, overwritten by design —
-    // it means "the most recent run on this box", never a round claim.
-    // (The old fallback inferred "round N+1" from driver-written
-    // BENCH_r{N}.json files and mis-labeled a round when the driver wrote
-    // its file first — a guess baked into a filename is worse than an
-    // honest LATEST.)
+    // Artifact naming is deterministic (BenchProtocol.writeArtifact): an
+    // explicit path via SPARK_GRAFT_BENCH_OUT (or argv(0)), else
+    // BENCH_full_latest.json — never a round claim. (The old fallback
+    // inferred "round N+1" from driver-written BENCH_r{N}.json files and
+    // mis-labeled a round when the driver wrote its file first — a guess
+    // baked into a filename is worse than an honest LATEST.)
     val explicitOut =
       sys.env.get("SPARK_GRAFT_BENCH_OUT").orElse(args.headOption)
-    val outFile = explicitOut match {
-      case Some(p) =>
-        val f = new java.io.File(p)
-        if (!f.exists) f
-        else {
-          val alt = Iterator.from(1)
-            .map(i => new java.io.File(p + s".$i"))
-            .find(!_.exists).get
-          println(s"""{"warn":"$p exists; writing ${alt.getPath}"}""")
-          alt
-        }
-      case None =>
-        println(s"""{"warn":"SPARK_GRAFT_BENCH_OUT unset; writing BENCH_full_latest.json (overwrite-by-design, no round inference)"}""")
-        new java.io.File(repoDir, "BENCH_full_latest.json")
-    }
-    val w = new java.io.PrintWriter(outFile, "UTF-8")
-    try w.println(fullLine) finally w.close()
+    if (explicitOut.isEmpty)
+      println(s"""{"warn":"SPARK_GRAFT_BENCH_OUT unset; writing BENCH_full_latest.json (overwrite-by-design, no round inference)"}""")
+    val outFile = BenchProtocol.writeArtifact(fullLine, explicitOut,
+      "BENCH_full_latest.json")
     println(s"""{"bench_full_written":"${outFile.getPath}"}""")
     // The artifact of record keeps only a bounded TAIL of stdout; with
     // 170+ keys the full contract line above overflows it and the

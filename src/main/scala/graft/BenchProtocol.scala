@@ -1,9 +1,16 @@
 package graft
 
+import java.io.File
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** THE timing protocol, shared by [[Bench]], [[ScaleProbe]] and the
-  * perfbench harness (`perfbench/`) so all three measure under
+/** THE measurement harness, shared by [[Bench]], every [[Probe]]
+  * subcommand and the perfbench harness (`perfbench/`, which times its
+  * operator mix through [[timeOnce]]) so all of them measure under
   * identical rules — the round-11 review found the clearCaches +
   * noop-sink + error-sentinel contract copied into three files and the
   * variance-bound constants into two, which meant a calibration
@@ -33,24 +40,110 @@ object BenchProtocol {
     * bisectable from the artifact alone. */
   val ProtocolVersion = "r16.seq"
 
-  /** Accumulating executor-CPU listener: sums
-    * TaskMetrics.executorCpuTime (ns) across every task end. Executor
-    * CPU only — driver-side control work (1-row collects, manifest
-    * renames) is invisible here, which is exactly the point: wall-clock
-    * minus this is scheduler + driver + contention. [[snapshot]] drains
-    * the async listener bus first so a key's final-stage task events
-    * can't post after the next key's baseline snapshot. */
-  final class CpuListener extends org.apache.spark.scheduler.SparkListener {
-    private val ns = new java.util.concurrent.atomic.AtomicLong(0)
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) ns.addAndGet(m.executorCpuTime)
-    }
-    def snapshot(spark: SparkSession): Long = {
+  /** The data directory every measurement reads: SPARK_GRAFT_SF_DIR,
+    * default the sf0.1 testdata. */
+  def sfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  final case class StageRow(jobId: Int, stageId: Int, name: String,
+      tasks: Int, wallMs: Long, cpuMs: Long, runMs: Long,
+      shuffleReadMB: Double, shuffleWriteMB: Double, inputMB: Double)
+
+  /** (jobId, startMs, endMs, gapSincePrevJobEndMs): the GAP column is the
+    * driver-only dwell between one job finishing and the next starting —
+    * planning, file listing, commit protocol, fs renames. For multi-job
+    * lifecycle verbs the r21 probe showed stage walls summing to well
+    * under half the key's wall; this column is where the rest lives. */
+  final case class JobRow(jobId: Int, startMs: Long, endMs: Long,
+      gapMs: Long, site: String)
+
+  /** The one job/stage/task listener: per-stage wall/CPU/shuffle rows,
+    * per-job dwell rows, and the accumulating executor-CPU sum
+    * ([[cpuNs]]: TaskMetrics.executorCpuTime summed over every task
+    * end). Executor CPU only — driver-side control work (1-row
+    * collects, manifest renames) is invisible to the sum, which is
+    * exactly the point: wall-clock minus it is scheduler + driver +
+    * contention. [[clear]] and [[cpuNs]] drain the async listener bus
+    * first so a key's final-stage task events can't post after the next
+    * key's baseline. */
+  final class Listener extends SparkListener {
+    private val rowBuf = ArrayBuffer.empty[StageRow]
+    private val jobBuf = ArrayBuffer.empty[JobRow]
+    private val ns = new AtomicLong(0)
+    private var jobOfStage = Map.empty[Int, Int]
+    private var jobStart = Map.empty[Int, Long]
+    private var jobSite = Map.empty[Int, String]
+    private var lastJobEnd = 0L
+
+    def rows: Vector[StageRow] = synchronized(rowBuf.toVector)
+    def jobs: Vector[JobRow] = synchronized(jobBuf.toVector)
+    /** Entries in the per-job maps: only jobs started and not yet
+      * ended hold any. */
+    def perJobEntries: Int =
+      synchronized(jobOfStage.size + jobStart.size + jobSite.size)
+
+    def cpuNs(spark: SparkSession): Long = {
       org.apache.spark.sql.graft.ColumnBridge.drainListenerBus(spark)
       ns.get
     }
+
+    /** Start a new measurement window: rows, jobs, the CPU sum and the
+      * dwell clock all reset. */
+    def clear(spark: SparkSession): Unit = {
+      org.apache.spark.sql.graft.ColumnBridge.drainListenerBus(spark)
+      synchronized {
+        rowBuf.clear(); jobBuf.clear(); ns.set(0); lastJobEnd = 0L
+      }
+    }
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+      val m = e.taskMetrics
+      if (m != null) ns.addAndGet(m.executorCpuTime)
+    }
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      synchronized {
+        e.stageIds.foreach(sid => jobOfStage += (sid -> e.jobId))
+        jobStart += (e.jobId -> e.time)
+        jobSite += (e.jobId -> Option(e.properties).map { p =>
+          val d = p.getProperty("spark.job.description",
+            p.getProperty("callSite.short", ""))
+          // fall back to the first stage's name (the action call site)
+          if (d.nonEmpty) d.takeWhile(_ != '\n').take(90) else ""
+        }.getOrElse(""))
+      }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      synchronized {
+        val st = jobStart.getOrElse(e.jobId, e.time)
+        // clamp: a job that STARTED before the previous one ended
+        // (overlapping jobs) must not subtract from the dwell sum the
+        // probe's driver-latency conclusions rest on (r21 ADVICE)
+        val gap =
+          if (lastJobEnd == 0) 0 else math.max(0L, st - lastJobEnd)
+        jobBuf += JobRow(e.jobId, st, e.time, gap,
+          jobSite.getOrElse(e.jobId, ""))
+        lastJobEnd = math.max(lastJobEnd, e.time)
+        // prune per-job entries so a long session doesn't grow the maps
+        // for the listener's lifetime (r21 ADVICE); a stage's completion
+        // posts before its job's end, and skipped stages never complete
+        jobOfStage = jobOfStage.filter(_._2 != e.jobId)
+        jobStart -= e.jobId
+        jobSite -= e.jobId
+      }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      synchronized {
+        val si = e.stageInfo
+        val m = si.taskMetrics
+        val wall = (for {
+          a <- si.completionTime; b <- si.submissionTime
+        } yield a - b).getOrElse(-1L)
+        rowBuf += StageRow(
+          jobOfStage.getOrElse(si.stageId, -1), si.stageId,
+          si.name.takeWhile(_ != '\n').take(90), si.numTasks, wall,
+          m.executorCpuTime / 1000000, m.executorRunTime,
+          m.shuffleReadMetrics.totalBytesRead / 1e6,
+          m.shuffleWriteMetrics.bytesWritten / 1e6,
+          m.inputMetrics.bytesRead / 1e6)
+      }
   }
 
   /** Two runs of a non-trivial key disagreeing by more than this factor
@@ -72,17 +165,79 @@ object BenchProtocol {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** min-of-2, upgraded to min-of-3 when the two runs spread more than
-    * [[SpreadFactor]] on a key slower than [[SpreadFloorSec]] — so one
-    * GC pause or scheduler hiccup cannot masquerade as a regression (or,
-    * at 10× volume, as a superlinear ratio). `third` is only evaluated
-    * when the upgrade fires; callers wanting to count reruns increment
-    * inside the by-name argument. */
-  def boundedMin(a: Double, b: Double, third: => Double): Double =
-    if (a < 0 || b < 0) -1
-    else if (math.max(a, b) > SpreadFactor * math.min(a, b) &&
-        math.min(a, b) > SpreadFloorSec) {
-      val c = third
-      if (c < 0) math.min(a, b) else Seq(a, b, c).min
-    } else math.min(a, b)
+  /** The best-of rule for every figure reported as a best of several
+    * runs: (seconds, runs taken). Two runs, the faster reported — the
+    * first execution pays JVM/JIT/codegen warmup a long-lived cluster
+    * never sees per query; -1 if either failed. */
+  def bestOf(run: () => Double): (Double, Int) = {
+    var runs = 2
+    val a = run()
+    val b = run()
+    val t =
+      if (a < 0 || b < 0) -1.0
+      else if (math.max(a, b) > 3 * math.min(a, b) && math.max(a, b) > 0.5) {
+        // >3× disagreement between the two runs (and the slow one is
+        // non-trivial): a scheduler hiccup or GC pause hit one of them.
+        // Take a tie-breaking third run and report the median so one
+        // bad sample can't define the key.
+        runs += 1
+        val c = run()
+        if (c < 0) math.min(a, b)
+        else Seq(a, b, c).sorted.apply(1)
+      } else if (math.max(a, b) > SpreadFactor * math.min(a, b) &&
+          math.min(a, b) > SpreadFloorSec) {
+        // moderate spread on a non-trivial key: r10's round-over-round
+        // "regressions" (q_fuzzy_join, q_unpivot) were exactly this
+        // band — run-to-run variance, not plan changes. One more
+        // sample and min-of-3 bounds it (so one GC pause or scheduler
+        // hiccup cannot masquerade as a regression or, at 10× volume,
+        // as a superlinear ratio).
+        runs += 1
+        val c = run()
+        if (c < 0) math.min(a, b) else Seq(a, b, c).min
+      } else math.min(a, b)
+    (t, runs)
+  }
+
+  /** 1-minute system load average (ManagementFactory reads /proc/loadavg
+    * on Linux; -1 on platforms without the concept). */
+  def loadAvg1m(): Double =
+    java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .getSystemLoadAverage
+
+  /** Seconds rounded to ms: sub-ms digits are pure noise and ~40% of an
+    * artifact line's length. */
+  def r3(v: Double): Double = math.rint(v * 1000) / 1000
+
+  /** `{"k":v,...}`, each value rendered as is. */
+  def jsonObj(kv: Seq[(String, Any)]): String =
+    kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+
+  /** Persist an artifact line; returns the file written. An explicit
+    * path never clobbers a prior record: it falls to the first free
+    * `path.N`. Else `defaultName` in the repository directory (nearest
+    * one up holding `build.sbt`) or the working directory, overwritten:
+    * it means "the most recent run on this box". */
+  def writeArtifact(line: String, explicit: Option[String],
+      defaultName: String): File = {
+    val out = explicit match {
+      case Some(p) =>
+        val f = new File(p)
+        if (!f.exists) f
+        else {
+          val alt = Iterator.from(1).map(i => new File(s"$p.$i"))
+            .find(!_.exists).get
+          println(s"""{"warn":"$p exists; writing ${alt.getPath}"}""")
+          alt
+        }
+      case None =>
+        val cwd = new File(".").getAbsoluteFile.getParentFile
+        val repo = Iterator.iterate(cwd)(_.getParentFile)
+          .takeWhile(_ != null).find(d => new File(d, "build.sbt").isFile)
+        new File(repo.getOrElse(cwd), defaultName)
+    }
+    val w = new java.io.PrintWriter(out, "UTF-8")
+    try w.println(line) finally w.close()
+    out
+  }
 }

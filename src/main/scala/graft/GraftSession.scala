@@ -92,5 +92,12 @@ object GraftSession {
       .withExtensions(new GraftExtensions)
   }
 
-  def getOrCreate(): SparkSession = builder().getOrCreate()
+  /** The session every CLI main runs on: `local[N]` with N shuffle
+    * partitions, N = SPARK_GRAFT_CPUS (default 4), logging at WARN. */
+  def local(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = builder(s"local[$cpus]", Some(cpus)).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -2,8 +2,6 @@ package graft.cnpj
 
 import java.io.File
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry point for the CNPJ vertical — the Spark equivalent of the
   * reference's main() (ETLCNPJFinalEmpresaEstabelecimentos.py:237-265).
   *
@@ -18,11 +16,7 @@ import org.apache.spark.sql.SparkSession
 object CnpjMain {
   def main(args: Array[String]): Unit = {
     val Array(rawDir, warehouseDir, exportDir, exportFile) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.GraftSession
-      .builder(s"local[$cpus]", Some(cpus.toInt))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val result = Pipeline.run(spark, rawDir, warehouseDir, exportDir,
       new File(exportFile))
     val n = result.count()

@@ -213,7 +213,7 @@ object Advanced {
     * always takes the scale path — the earlier 64 MiB value kept the
     * 7.6×-scaling naive sort alive to several-hundred-MB inputs because
     * pruning shrinks the estimate ~3× vs file bytes (2 narrow cols of
-    * 16). ScaleProbe asserts the 10× replica dispatches binned. */
+    * 16). `Probe scale` asserts the 10× replica dispatches binned. */
   private[graft] val QuantileDispatchBytes: Long = 1L * 1024 * 1024
 
   /** The one exact-quantile ENTRY POINT — auto-dispatch between the spec
@@ -276,7 +276,7 @@ object Advanced {
   /** True when [[qQuantilesAuto]] takes the binned scale path for this
     * input: the estimate is over [[QuantileDispatchBytes]], compared
     * through [[graft.SizeTier.small]] so a forced tier picks the branch.
-    * Exposed so ScaleProbe and PlanAuditSpec assert the branch at real
+    * Exposed so `Probe scale` and PlanAuditSpec assert the branch at real
     * data sizes instead of arguing from the threshold. */
   private[graft] def quantilesAutoPicksBinned(s: SparkSession, d: String): Boolean =
     !SizeTier.small(quantileInputEstimate(s, d), QuantileDispatchBytes)

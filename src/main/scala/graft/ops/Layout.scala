@@ -679,16 +679,6 @@ object Layout {
     if (v == 0) Map.empty else propsOf(fs, root, v, chain)
   }
 
-  /** The `graft.stats.columns` property of `table`'s head, parsed —
-    * what the SQL write bridge passes as statsColumns on every INSERT.
-    * Columns absent from the written frame are skipped (bounds are an
-    * optimization; a narrower insert must not fail on them). */
-  private[graft] def statsColumnsProp(spark: SparkSession,
-      table: String): Seq[String] =
-    tableProps(spark, table).get(StatsColumnsProp)
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
-
   val StatsColumnsProp = "graft.stats.columns"
 
   /** Per-file Bloom-filter TBLPROPERTIES (r16) — the point-lookup
@@ -2290,7 +2280,7 @@ object Layout {
       })
   }
 
-  /** Dev-measurement hook ([[graft.ManifestScaleProbe]] and specs):
+  /** Dev-measurement hook (`graft.Probe manifest-scale` and specs):
     * append pre-formed manifest LINES through the real commit protocol
     * — exactly [[commitSnapshot]]'s CAS minus the data staging, so the
     * metadata plane's per-commit cost can be measured in isolation at
@@ -2304,7 +2294,7 @@ object Layout {
     // UNCHECKED CALLER CONTRACT (the delta fast path's line-uniqueness
     // invariant): `lines` must not repeat a line already listed — real
     // verbs get this for free from UUID txn-dir paths, and the sole
-    // current caller (ManifestScaleProbe's strictly-increasing
+    // current caller (`Probe manifest-scale`'s strictly-increasing
     // synthetic paths) satisfies it by construction. The against-the-
     // head half is deliberately NOT enforced at runtime: the set build
     // would cost exactly the O(table) hashing per commit this hook
@@ -2373,7 +2363,7 @@ object Layout {
           "system.relayout (one-shot full rewrite)")
     }
     set.get(StatsColumnsProp).foreach { v =>
-      val cols = v.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+      val cols = splitCols(v)
       validateStatsColumns(cols)
       schemaOf(fs, root, currentVersion(fs, root)).foreach { sch =>
         cols.foreach(c => require(sch.fieldNames.contains(c),

@@ -266,8 +266,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // index loop in SQL text. Validated HERE so a typo fails the DDL,
     // not some later read.
     val statsCols = Option(properties.get(Layout.StatsColumnsProp))
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
+      .map(Layout.splitCols).getOrElse(Nil)
     statsCols.foreach(c => require(schema.fieldNames.contains(c),
       s"${Layout.StatsColumnsProp} names unknown column '$c' " +
         s"(table columns: ${schema.fieldNames.mkString(", ")})"))

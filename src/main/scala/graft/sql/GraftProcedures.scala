@@ -217,12 +217,10 @@ object GraftProcedures {
           "files_after", DataTypes.IntegerType, nullable = false),
         org.apache.spark.sql.types.StructField(
           "bytes_rewritten", DataTypes.LongType, nullable = false)))
-      private def cols(s: String): Seq[String] =
-        s.split(',').map(_.trim).filter(_.nonEmpty).toSeq
       override def call(input: InternalRow): java.util.Iterator[Scan] = {
         val table = tableDir(cat, input.getUTF8String(0).toString)
-        val sortBy = cols(input.getUTF8String(2).toString)
-        val z = cols(input.getUTF8String(3).toString)
+        val sortBy = Layout.splitCols(input.getUTF8String(2).toString)
+        val z = Layout.splitCols(input.getUTF8String(3).toString)
         require(z.isEmpty || (z.length >= 2 && z.length <= 6),
           s"zorder_by takes two to six comma-separated columns, got " +
             s"'${z.mkString(",")}'")

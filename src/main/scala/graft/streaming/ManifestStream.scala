@@ -242,8 +242,7 @@ class ManifestStreamProvider extends StreamSourceProvider
     * already be [[lowered]]. */
   private def statsColumnsOf(p: Map[String, String]): Seq[String] =
     p.get("statscolumns").orElse(p.get("statscolumn"))
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
+      .map(Layout.splitCols).getOrElse(Nil)
 
   /** `p` must already be [[lowered]]. */
   private def tableOf(p: Map[String, String]): String =

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI: drive the streaming windowed aggregation synchronously over an
   * events parquet directory and print the result.
   *
@@ -10,11 +8,7 @@ import org.apache.spark.sql.SparkSession
 object StreamMain {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.GraftSession
-      .builder(s"local[$cpus]", Some(cpus.toInt))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val q = EventStream.windowedCounts(EventStream.readEvents(spark, dir))
       .writeStream.outputMode("complete")
       .format("memory").queryName("stream_out")

@@ -182,6 +182,51 @@ class LedgerSpec extends AnyFunSuite {
         (readers - home).toSeq.sorted.mkString(", "))
   }
 
+  test("one measurement harness: five mains, one session site, one listener") {
+    import scala.jdk.CollectionConverters._
+    // a dev main, session rule or listener outside these homes is a
+    // second harness: its own CPU default, best-of rule and artifact path
+    val root = java.nio.file.Paths.get("src/main")
+    val files = java.nio.file.Files.walk(root)
+    val sources =
+      try files.iterator().asScala
+        .filter(f => f.toString.endsWith(".scala") ||
+          f.toString.endsWith(".java"))
+        .map(f => f.getFileName.toString -> ParquetCalls.codeOnly(
+          new String(java.nio.file.Files.readAllBytes(f),
+            java.nio.charset.StandardCharsets.UTF_8)))
+        .toSeq
+      finally files.close()
+    // each `def main(` belongs to the last object declared above it
+    val mains = sources.flatMap { case (_, code) =>
+      val objects = """\bobject\s+(\w+)""".r.findAllMatchIn(code).toSeq
+      """\bdef\s+main\s*\(""".r.findAllMatchIn(code).map(m =>
+        objects.filter(_.start < m.start).last.group(1))
+    }
+    assert(mains.sorted ==
+      Seq("Bench", "CnpjMain", "Probe", "StreamMain", "Verify"),
+      "a main outside Bench/Verify/CnpjMain/StreamMain/Probe — add a " +
+        "Probe subcommand instead")
+    // sessions are built in one place: GraftSession.local's call of
+    // builder; no other file calls either builder
+    val sites = sources.map { case (name, code) =>
+      val calls =
+        if (name == "GraftSession.scala")
+          """(?<![.\w])(?<!def )builder\s*\(""".r.findAllIn(code).size
+        else """(?:GraftSession|SparkSession)\s*\.\s*builder\s*\(""".r
+          .findAllIn(code).size
+      name -> calls
+    }.filter(_._2 > 0)
+    assert(sites == Seq("GraftSession.scala" -> 1),
+      s"session built outside GraftSession.local: $sites")
+    val listeners = sources.flatMap { case (name, code) =>
+      """(?:extends|new)\s+(?:[\w.]+\.)?SparkListener\b""".r
+        .findAllIn(code).map(_ => name)
+    }
+    assert(listeners == Seq("BenchProtocol.scala"),
+      s"SparkListener subclasses outside BenchProtocol: $listeners")
+  }
+
   test("engine-internal parquet reads name a schema (no inference job)") {
     import scala.jdk.CollectionConverters._
     // reads still allowed to infer a schema, keyed (file, enclosing

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * checkpoint cadence, CAS races on delta commits, time travel across
   * checkpoint boundaries, and the expire-time `.ckpt` dependency cut.
   * The scaling claim itself (per-commit bytes flat in table file
-  * count) is measured by [[ManifestScaleProbe]] and recorded in
+  * count) is measured by `graft.Probe manifest-scale` and recorded in
   * BASELINE.md. */
 class ManifestDeltaSpec extends AnyFunSuite {
 
