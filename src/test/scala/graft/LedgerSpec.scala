@@ -232,18 +232,23 @@ class LedgerSpec extends AnyFunSuite {
     // reads still allowed to infer a schema, keyed (file, enclosing
     // member, call), each with its reason
     val allowed = Map(
-      ("graft/ops/Layout.scala", "compact", "spark.read.parquet(dir)") ->
+      ("graft/ops/layout/Maintenance.scala", "compact",
+        "spark.read.parquet(dir)") ->
         "a whole directory: partition discovery applies",
-      ("graft/ops/Layout.scala", "compact",
+      ("graft/ops/layout/Maintenance.scala", "compact",
         "spark.read.parquet(rewrite.map(_.getPath.toString): _*)") ->
         "the same directory's files, picked by size")
     val root = java.nio.file.Paths.get("src/main/scala")
-    val sources = {
-      val sql = java.nio.file.Files.list(root.resolve("graft/sql"))
-      try sql.iterator().asScala.map(f => root.relativize(f).toString)
+    def scalaFiles(dir: String): Seq[String] = {
+      val ls = java.nio.file.Files.list(root.resolve(dir))
+      try ls.iterator().asScala.map(f => root.relativize(f).toString)
         .filter(_.endsWith(".scala")).toSeq.sorted
-      finally sql.close()
-    } ++ Seq("graft/ops/Layout.scala", "graft/streaming/ManifestStream.scala")
+      finally ls.close()
+    }
+    val sources = scalaFiles("graft/sql") ++ scalaFiles("graft/ops/layout") ++
+      Seq("graft/ops/Layout.scala", "graft/streaming/ManifestStream.scala")
+    assert(sources.count(_.startsWith("graft/ops/layout/")) >= 7,
+      s"guard lost the Layout seam files: $sources")
     val calls = sources.flatMap { rel =>
       val code = ParquetCalls.codeOnly(new String(
         java.nio.file.Files.readAllBytes(root.resolve(rel)),
