@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.SizeTier
+import graft.{ControlPlane, SizeTier}
 import graft.Tables._
 
 /** Byte-pair-encoding merge learning over the corpus — the tokenizer-
@@ -333,13 +333,11 @@ object Bpe {
   private[graft] def learnMergesLocal(s: SparkSession, d: String,
       nMerges: Int = Merges): Seq[(Long, String, String, String, Long)] = {
     // ONE job (AQE off: bounded 1-row-per-word reduce — see
-    // Layout.controlPlane): the vocabulary collect.
-    val rows = Layout.controlPlane(s) {
-      documents(s, d)
+    // ControlPlane): the vocabulary collect.
+    val rows = ControlPlane(documents(s, d)
         .select(explode(Text.toks(col("text"))).as("w"))
-        .groupBy("w").agg(count(lit(1)).as("freq"))
-        .collect()
-    }
+        .groupBy("w").agg(count(lit(1)).as("freq")))
+      .collect()
     // (symbols, freq) per distinct word; initial symbols = characters
     val words: Array[(Array[String], Long)] = rows.map { r =>
       (r.getString(0).toCharArray.map(_.toString), r.getLong(1))

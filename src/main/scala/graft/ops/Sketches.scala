@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.SizeTier
+import graft.{ControlPlane, SizeTier}
 import graft.Tables._
 
 /** Sketch-based near-duplicate detection (SURVEY.md §2.4 X2) — the 100 TB
@@ -270,14 +270,13 @@ object Sketches {
     // graph that fits in one cache block, so once round 0 has
     // MATERIALIZED the edge cache (its stats then report exact cached
     // bytes — plan metadata, no extra job), rounds below
-    // SizeTier.LocalBytes run inside controlPlane with a pinned small shuffle width: one
+    // SizeTier.LocalBytes run through ControlPlane with a pinned small shuffle width: one
     // scheduled job per round. At warehouse scale the edge cache
     // exceeds the ceiling and every round keeps AQE (skew splits,
     // coalescing) — the dispatch can only fire where the whole graph
     // is kilobytes. Labels are exact integers under a deterministic
     // min-fixpoint, so join strategy/partitioning cannot change the
     // result (LabelPropagationSpec + the shared dedup oracles pin it).
-    val sess = pairs.sparkSession
     var smallGraph = false
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("lbl", col("id"))
@@ -307,13 +306,12 @@ object Sketches {
           (coalesce(col("nlbl"), col("lbl")) < col("lbl")).as("chg"))
       if (iter % 5 == 4) next = next.localCheckpoint(eager = false)
       next.cache()
-      def convergenceCount(): Long = next
+      val convergence = next
         .agg(coalesce(sum(when(col("chg"), lit(1L)).otherwise(lit(0L))),
           lit(0L))) // empty graph (no pairs at all) sums to NULL
-        .head.getLong(0) // 1-row convergence decision (driver control)
-      val changed =
-        if (smallGraph) Layout.controlPlane(sess, Some(4))(convergenceCount())
-        else convergenceCount()
+      val changed = // 1-row convergence decision (driver control)
+        (if (smallGraph) ControlPlane(convergence, Some(4))
+         else convergence).head.getLong(0)
       if (iter == 0)
         // after round 0 the edge cache is materialized, so its plan
         // stats are the exact cached bytes — dispatch for the REMAINING

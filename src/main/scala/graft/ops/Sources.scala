@@ -206,9 +206,8 @@ object Sources {
         dec2(col("value")).as("v"),
         expr(s"ts div $dayNs").as("day"))
     ev.write.mode("overwrite").partitionBy("day").parquet(out)
-    val lastDay = graft.ops.Layout.controlPlane(s) {
-      ev.agg(max(col("day"))).head.getLong(0)
-    } // 1-row control decision (see Layout.controlPlane)
+    val lastDay = graft.ControlPlane(ev.agg(max(col("day"))))
+      .head.getLong(0) // 1-row control decision (see graft.ControlPlane)
     // per-WRITER dynamic mode: the DataFrameWriter option scopes the
     // overwrite semantics to this one write — flipping the session conf
     // (the previous form) would leak dynamic semantics into any query
@@ -283,9 +282,8 @@ object Sources {
     val e = graft.Events.events(s, d)
       .select(col("event_type"), expr(s"ts div $dayNs").as("day"),
         (dec2(col("value")) * 100).cast("long").as("cents"))
-    val lastDay = graft.ops.Layout.controlPlane(s) {
-      e.agg(max(col("day"))).head.getLong(0)
-    } // 1-row control decision (see Layout.controlPlane)
+    val lastDay = graft.ControlPlane(e.agg(max(col("day"))))
+      .head.getLong(0) // 1-row control decision (see graft.ControlPlane)
     e.where(col("day") < lastDay)
       .groupBy("event_type", "day")
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types
-import graft.SizeTier
+import graft.{ControlPlane, SizeTier}
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** The manifest-table bench keys and their DuckDB oracle SQL.
@@ -206,9 +206,8 @@ private[ops] trait BenchKeys { this: Layout.type =>
       dec2(col("o_totalprice")).as("price"))
     commitSnapshot(s, table, o.where(pmod(col("o_orderkey"), lit(2)) === 0))
     commitSnapshot(s, table, o.where(pmod(col("o_orderkey"), lit(2)) === 1))
-    val mx = controlPlane(s) {
-      o.agg(max(col("o_orderkey"))).head.getLong(0)
-    } // 1-row control decision: AQE off = one job, not agg-stage + result
+    val mx = ControlPlane(o.agg(max(col("o_orderkey")))).head.getLong(0)
+    // 1-row control decision: AQE off = one job, not agg-stage + result
     val updates = o.where(pmod(col("o_orderkey"), lit(10)) === 3)
       .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
       .withColumn("is_retract", lit(false))
@@ -243,9 +242,8 @@ private[ops] trait BenchKeys { this: Layout.type =>
       o.where(pmod(col("o_orderkey"), lit(2)) === 0),
       props = Map(RowLevelModeProp -> "mor"))
     commitSnapshot(s, table, o.where(pmod(col("o_orderkey"), lit(2)) === 1))
-    val mx = controlPlane(s) {
-      o.agg(max(col("o_orderkey"))).head.getLong(0)
-    } // 1-row control decision: AQE off = one job, not agg-stage + result
+    val mx = ControlPlane(o.agg(max(col("o_orderkey")))).head.getLong(0)
+    // 1-row control decision: AQE off = one job, not agg-stage + result
     val updates = o.where(pmod(col("o_orderkey"), lit(10)) === 3)
       .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
       .withColumn("is_retract", lit(false))
@@ -281,9 +279,8 @@ private[ops] trait BenchKeys { this: Layout.type =>
       o.repartitionByRange(8, col("o_orderkey"))
         .sortWithinPartitions("o_orderkey"),
       statsColumns = Seq("o_orderkey"))
-    val mx = controlPlane(s) {
-      o.agg(max(col("o_orderkey"))).head.getLong(0)
-    } // 1-row control decision: AQE off = one job, not agg-stage + result
+    val mx = ControlPlane(o.agg(max(col("o_orderkey")))).head.getLong(0)
+    // 1-row control decision: AQE off = one job, not agg-stage + result
     readSnapshotRange(s, table, "o_orderkey", mx / 4, mx / 2)
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n"),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types
-import graft.SizeTier
+import graft.{ControlPlane, SizeTier}
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** The commit protocol: publish, the commit lock, the manifest CAS,
@@ -505,10 +505,9 @@ private[ops] trait Commits { this: Layout.type =>
       // to begin with. Above SizeTier.LocalBytes (warehouse scale) AQE
       // stays on.
       val localWrite = SizeTier.small(out, SizeTier.LocalBytes)
-      def bucketWrite(): Unit =
-        fan.write.mode("overwrite").partitionBy("__gp_bucket")
-          .parquet(txn.toString)
-      if (localWrite) controlPlane(spark)(bucketWrite()) else bucketWrite()
+      (if (localWrite) ControlPlane(fan) else fan)
+        .write.mode("overwrite").partitionBy("__gp_bucket")
+        .parquet(txn.toString)
       flattenStagedDirs(fs, txn)
     } else if (stamp && fanoutSafe && partCols.nonEmpty &&
         partCols.forall(out.columns.contains)) {
@@ -523,61 +522,6 @@ private[ops] trait Commits { this: Layout.type =>
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       .map(st => (s"data/${txn.getName}/${st.getPath.getName}", st.getLen))
   }
-
-  /** Guards the scoped AQE set/restore inside [[controlPlane]]. */
-  private val aqeToggleLock = new Object
-
-  /** Run a CONTROL-PLANE action — a verb-internal probe whose driver-side
-    * result is bounded by file/commit counts, never by data volume (a
-    * uniqueness aggregate, an affected-file-name collect, a limit(1)
-    * violation fetch, a per-file stats row) — with AQE off for just that
-    * action.
-    *
-    * Why (r22, guide §7 driver dwell): AQE materializes EVERY shuffle of
-    * a query as its own scheduled job plus a re-optimization pass, and
-    * the r22 StageProbe measured the lifecycle verbs spending most of
-    * their wall in exactly those per-job driver floors — q_snapshot_merge
-    * ran 26 jobs of which ~19 were AQE stage materializations of its
-    * four control probes, each paying 30-330 ms of inter-job dwell.
-    * These probes cannot benefit from adaptive replanning: their reduce
-    * sides are bounded (≤ one row per file / per constraint / exactly
-    * one row), so runtime re-optimization has nothing to improve, and
-    * skew-splitting a probe whose OUTPUT is tiny only reshapes work the
-    * probe barely does. The DATA-PLANE queries of every verb (staged
-    * writes, snapshot reads, the declared readback) keep AQE — this
-    * scoping is the r21 stats-collect trick generalized to every probe.
-    *
-    * Set/restore is serialized under a JVM-wide lock so two overlapping
-    * commits cannot interleave set("false")/restore and strand the
-    * session conf (r21 ADVICE).
-    *
-    * `shufflePartitions`: callers whose scoped plan is PROVABLY tiny (a
-    * size-dispatched iteration over a materialized cache measured under
-    * a byte ceiling — see Sketches.labelPropagation) may also pin the
-    * static shuffle width for the scope; without AQE's coalescing the
-    * session default (one partition per core) would otherwise fan each
-    * scoped shuffle into near-empty tasks. Never set from a constant
-    * belief about the data — only behind a measured size dispatch. */
-  private[graft] def controlPlane[T](spark: SparkSession,
-      shufflePartitions: Option[Int] = None)(body: => T): T =
-    aqeToggleLock.synchronized {
-      val aqeKey = "spark.sql.adaptive.enabled"
-      val spKey = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.getOption(aqeKey)
-      val prevSp = spark.conf.getOption(spKey)
-      spark.conf.set(aqeKey, "false")
-      shufflePartitions.foreach(n => spark.conf.set(spKey, n.toString))
-      try body finally {
-        prev match {
-          case Some(v) => spark.conf.set(aqeKey, v)
-          case None => spark.conf.unset(aqeKey)
-        }
-        if (shufflePartitions.isDefined) prevSp match {
-          case Some(v) => spark.conf.set(spKey, v)
-          case None => spark.conf.unset(spKey)
-        }
-      }
-    }
 
   /** Move every parquet leaf of a dynamic-partition staging tree up
     * into the txn root (metadata renames — no data moves) and drop the
@@ -1358,14 +1302,9 @@ private[ops] trait Commits { this: Layout.type =>
     // so adaptive replanning can never help, and AQE's per-shuffle stage
     // materialization turns the collect into TWO scheduled jobs — the
     // r21 StageProbe measured the extra job + replan at ~60-100 ms per
-    // commit across every committing verb. Set/restore on the session:
-    // the engine's verbs are driver-sequential per commit, and a
-    // concurrently PLANNED user query would only momentarily lose AQE
-    // (a plan property, never a result).
-    val rows = controlPlane(spark) {
-      df.groupBy(input_file_name().as("__f"))
-        .agg(aggs.head, aggs.tail: _*).collect()
-    }
+    // commit across every committing verb.
+    val rows = ControlPlane(df.groupBy(input_file_name().as("__f"))
+      .agg(aggs.head, aggs.tail: _*)).collect()
     val rowsIdx = 1 + 2 * present.size + bloomCols.size +
       (if (bucket.isDefined) 3 else 0)
     val rendered: Map[String, String] = rows.map { r =>

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types
-import graft.SizeTier
+import graft.{ControlPlane, SizeTier}
 
 /** The manifest layer: codec, cache, table props, the entry grammar
   * (bounds, blooms, sketches, deletion vectors, equality deletes) and
@@ -647,9 +647,7 @@ private[ops] trait Manifests { this: Layout.type =>
       max(when(!coalesce(expr(s), lit(false)), lit(1)).otherwise(lit(0)))
         .as(s"__viol_$n")
     }
-    val row = controlPlane(df.sparkSession) {
-      df.agg(flags.head, flags.tail: _*).head()
-    }
+    val row = ControlPlane(df.agg(flags.head, flags.tail: _*)).head()
     constraints.zipWithIndex.foreach { case ((name, sqlText), i) =>
       if (!row.isNullAt(i) && row.getInt(i) == 1) {
         val ex = df.where(!coalesce(expr(sqlText), lit(false)))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types
-import graft.SizeTier
+import graft.{ControlPlane, SizeTier}
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Snapshot reads, manifest-level skipping and change feeds.
@@ -162,12 +162,10 @@ private[ops] trait Reads { this: Layout.type =>
     }.toMap
     val dvPaths = dvLines.flatMap(entryDvs).distinct
       .map(r => new Path(root, r).toString)
-    controlPlane(spark) {
-      readSidecars(spark, dvPaths)
+    ControlPlane(readSidecars(spark, dvPaths)
         .groupBy("grp")
-        .agg(sort_array(collect_set(col("pos"))).as("ps"))
-        .collect()
-    }
+        .agg(sort_array(collect_set(col("pos"))).as("ps")))
+      .collect()
       .flatMap { r =>
         // a sidecar may carry groups whose lines were since compacted
         // away in a later version — this version's map keys only what

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types
-import graft.SizeTier
+import graft.{ControlPlane, SizeTier}
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Row-level verbs (delete, upsert, replace, merge) and table history.
@@ -62,12 +62,11 @@ private[ops] trait RowLevel { this: Layout.type =>
     // single-source-only, and a file whose only matching rows are
     // already position-deleted merely gets an unnecessary — dv-applied,
     // so harmless — rewrite)
-    val affectedAbs = controlPlane(spark) {
+    val affectedAbs = ControlPlane(
       readVersionFiles(spark, fs, root, v0, abs.map(_._2))
         .where(predicate)
-        .select(input_file_name().as("f")).distinct()
-        .collect()
-    }.map(r => fsPathOf(r.getString(0))).toSet
+        .select(input_file_name().as("f")).distinct())
+      .collect().map(r => fsPathOf(r.getString(0))).toSet
     // qualify through the FS before normalizing: a relative table root
     // ("target/…") would otherwise never string-match the absolute URIs
     // input_file_name() reports
@@ -145,12 +144,11 @@ private[ops] trait RowLevel { this: Layout.type =>
     val relByNorm = staged.map { case (rel, _) =>
       fsPathOf(fs.makeQualified(new Path(root, rel)).toString) -> rel
     }.toMap
-    val mapping = controlPlane(spark) {
+    val mapping = ControlPlane(
       readSidecars(spark,
           staged.map { case (rel, _) => new Path(root, rel).toString })
-        .select(col("grp"), input_file_name().as("f")).distinct()
-        .collect()
-    }
+        .select(col("grp"), input_file_name().as("f")).distinct())
+      .collect()
       .groupBy(_.getString(0))
       .map { case (g, rows) =>
         g -> rows.map(r => relByNorm(fsPathOf(r.getString(1))))
@@ -291,9 +289,8 @@ private[ops] trait RowLevel { this: Layout.type =>
     // job + replan with a bit-identical single-file layout (r22, same
     // reasoning as stageTxn's bucket write; bounded content per the
     // micro-batch contract above).
-    val sidecars = controlPlane(spark) {
-      stageTxn(spark, fs, root, keysObs.repartition(1), stamp = false)
-    }
+    val sidecars = stageTxn(spark, fs, root,
+      ControlPlane(keysObs.repartition(1)), stamp = false)
     // the sidecar write materialized the observed ranges; read them now
     // (post-action, never blocks) — `refuted` above closes over these
     // and is first called inside the CAS, well after this point
@@ -421,10 +418,8 @@ private[ops] trait RowLevel { this: Layout.type =>
       new Path(root, rel).toString }
     try {
       if (offObs.get("off").asInstanceOf[Long] > 0L) {
-        val offenders = controlPlane(spark) {
-          readSidecars(spark, stagedPaths)
-            .where(!coalesce(predicate, lit(false))).limit(1).collect()
-        }
+        val offenders = ControlPlane(readSidecars(spark, stagedPaths)
+          .where(!coalesce(predicate, lit(false))).limit(1)).collect()
         throw new IllegalArgumentException(
           "replaceWhere: incoming data contains rows that do NOT " +
             s"satisfy the replace predicate (e.g. ${offenders.head}) — " +
@@ -435,12 +430,11 @@ private[ops] trait RowLevel { this: Layout.type =>
     }
     val files = manifestFiles(fs, root, v0)
     val abs = files.map(l => l -> new Path(root, entryPath(l)).toString)
-    val affectedAbs = controlPlane(spark) {
+    val affectedAbs = ControlPlane(
       readVersionFiles(spark, fs, root, v0, abs.map(_._2))
         .where(predicate)
-        .select(input_file_name().as("f")).distinct()
-        .collect()
-    }.map(r => fsPathOf(r.getString(0))).toSet
+        .select(input_file_name().as("f")).distinct())
+      .collect().map(r => fsPathOf(r.getString(0))).toSet
     val (affected, untouched) = abs.partition { case (_, a) =>
       affectedAbs.contains(fsPathOf(fs.makeQualified(new Path(a)).toString))
     }
@@ -482,10 +476,9 @@ private[ops] trait RowLevel { this: Layout.type =>
         .map(l => new Path(root, entryPath(l)).toString)
         .filterNot(stagedPaths.toSet) // never our own staged batch
       if (foreign.nonEmpty) {
-        val clash = controlPlane(spark) {
+        val clash = ControlPlane(
           readVersionFiles(spark, fs, root, head, foreign)
-            .where(predicate).limit(1).collect()
-        }
+            .where(predicate).limit(1)).collect()
         require(clash.isEmpty,
           "replaceWhere: concurrent conflict — another commit landed " +
             "rows matching the replace predicate after this statement " +
@@ -593,15 +586,14 @@ private[ops] trait RowLevel { this: Layout.type =>
       // name (input_file_name() is never NULL on a file scan).
       // SnapshotIsolationSpec and the q_snapshot_merge oracle pin the
       // merge's results.
-      val rows = controlPlane(spark) {
+      val rows = ControlPlane(
         uniq.select(lit(null).cast("string").as("__f"),
             col("n"), col("k"), col("nulls"))
           .unionByName(affectedNames.select(col("__f"),
             lit(null).cast("long").as("n"),
             lit(null).cast("long").as("k"),
-            lit(null).cast("long").as("nulls")))
-          .collect()
-      }
+            lit(null).cast("long").as("nulls"))))
+        .collect()
       val (us, as) = rows.partition(_.isNullAt(0))
       val (nTotal, nDistinct, nNulls) =
         (us.head.getLong(1), us.head.getLong(2), us.head.getLong(3))

@@ -1138,9 +1138,8 @@ object GraftSql {
             |   price DECIMAL(18,2))
             |TBLPROPERTIES ('graft.stats.columns' = 'o_orderkey')"""
       .stripMargin)
-    val mx = graft.ops.Layout.controlPlane(s) {
-      orders(s, d).agg(max(col("o_orderkey"))).head().getLong(0)
-    } // 1-row control decision (see Layout.controlPlane)
+    val mx = graft.ControlPlane(orders(s, d).agg(max(col("o_orderkey"))))
+      .head().getLong(0) // 1-row control decision (see graft.ControlPlane)
     val step = mx / 4 + 1
     (0 until 4).foreach { i =>
       s.sql(s"""INSERT INTO $cat.default.orders_skip
@@ -1210,9 +1209,8 @@ object GraftSql {
     // recomputed batch (REPLACE WHERE predicates must be v1-Filter
     // translatable — range/equality/IN — which is exactly the
     // partition-shaped predicate real backfills use)
-    val cut = graft.ops.Layout.controlPlane(s) {
-      orders(s, d).agg(max(col("o_orderkey"))).head().getLong(0)
-    } / 2 // 1-row control decision (see Layout.controlPlane)
+    val cut = graft.ControlPlane(orders(s, d).agg(max(col("o_orderkey"))))
+      .head().getLong(0) / 2 // 1-row control decision (see graft.ControlPlane)
     s.sql(s"""INSERT INTO $cat.default.orders_rw
             |REPLACE WHERE o_orderkey >= $cut
             |SELECT o_orderkey, o_orderstatus,
@@ -1257,12 +1255,11 @@ object GraftSql {
     // 1-row control aggregates, the same driver-side decision posture
     // as the skipping key's quartile threshold
     val o = orders(s, d)
-    val (p1, p2) = graft.ops.Layout.controlPlane(s) {
-      (o.where(col("o_orderkey") % 4 === 2)
-        .agg(max(col("o_orderkey"))).head().getLong(0),
-        o.where(col("o_orderkey") % 4 === 1)
-          .agg(max(col("o_orderkey"))).head().getLong(0))
-    }
+    val (p1, p2) =
+      (graft.ControlPlane(o.where(col("o_orderkey") % 4 === 2)
+        .agg(max(col("o_orderkey")))).head().getLong(0),
+        graft.ControlPlane(o.where(col("o_orderkey") % 4 === 1)
+          .agg(max(col("o_orderkey")))).head().getLong(0))
     s.sql(s"""SELECT o_orderkey, o_orderstatus,
             |  CAST(price AS DOUBLE) AS price
             |FROM $cat.default.orders_bloom

@@ -18,6 +18,12 @@ object ColumnBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A copy of `spark`'s session (runtime conf, temp views, functions,
+    * listeners) over the same SparkContext and cache manager: conf set
+    * on the copy never reaches `spark` (`cloneSession` is `private[sql]`). */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
   /** The analyzed logical plan behind a Dataset. */
   def logicalPlan(df: Dataset[_]): LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].logicalPlan
