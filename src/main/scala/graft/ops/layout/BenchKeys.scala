@@ -27,11 +27,7 @@ private[ops] trait BenchKeys { this: Layout.type =>
     // crashed transaction: staged files, manifest never published
     o.limit(1000).write.mode("overwrite")
       .parquet(s"$table/data/txn-crashed")
-    readSnapshot(s, table)
-      .groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n"),
-        sum(dec2(col("o_totalprice"))).cast("double").as("sum_price"))
-      .orderBy("o_orderstatus")
+    statusTotals(readSnapshot(s, table), dec2(col("o_totalprice")))
   }
 
   /** OPTIMIZE-under-isolation, end to end: append the table as two
@@ -51,11 +47,7 @@ private[ops] trait BenchKeys { this: Layout.type =>
     commitSnapshot(s, table,
       o.where(pmod(col("o_orderkey"), lit(2)) === 1).repartition(10))
     compactSnapshot(s, table, sortBy = Seq("o_orderkey"))
-    readSnapshot(s, table)
-      .groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n"),
-        sum(dec2(col("o_totalprice"))).cast("double").as("sum_price"))
-      .orderBy("o_orderstatus")
+    statusTotals(readSnapshot(s, table), dec2(col("o_totalprice")))
   }
 
   /** Copy-on-write DELETE, end to end: two append transactions split the
@@ -75,11 +67,7 @@ private[ops] trait BenchKeys { this: Layout.type =>
     commitSnapshot(s, table, o.where(pmod(col("o_orderkey"), lit(2)) === 1))
     deleteWhere(s, table,
       pmod(col("o_orderkey"), lit(2)) === 1 && col("o_orderstatus") === "F")
-    readSnapshot(s, table)
-      .groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n"),
-        sum(dec2(col("o_totalprice"))).cast("double").as("sum_price"))
-      .orderBy("o_orderstatus")
+    statusTotals(readSnapshot(s, table), dec2(col("o_totalprice")))
   }
 
   /** Merge-on-read DELETE, end to end (r16 verdict task 1): the same
@@ -105,11 +93,7 @@ private[ops] trait BenchKeys { this: Layout.type =>
     commitSnapshot(s, table, o.where(pmod(col("o_orderkey"), lit(2)) === 1))
     deleteWhere(s, table,
       pmod(col("o_orderkey"), lit(2)) === 1 && col("o_orderstatus") === "F")
-    readSnapshot(s, table)
-      .groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n"),
-        sum(dec2(col("o_totalprice"))).cast("double").as("sum_price"))
-      .orderBy("o_orderstatus")
+    statusTotals(readSnapshot(s, table), dec2(col("o_totalprice")))
   }
 
   /** Merge-on-read EQUALITY-upsert lifecycle (r19): even + odd halves
@@ -141,11 +125,7 @@ private[ops] trait BenchKeys { this: Layout.type =>
       o.where(pmod(col("o_orderkey"), lit(2)) === 1 &&
         col("o_orderstatus") === "F").select("o_orderkey"),
       "o_orderkey", deleteOnly = true)
-    readSnapshot(s, table)
-      .groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n"),
-        sum(dec2(col("o_totalprice"))).cast("double").as("sum_price"))
-      .orderBy("o_orderstatus")
+    statusTotals(readSnapshot(s, table), dec2(col("o_totalprice")))
   }
 
   /** COMPOSITE-key equality upsert (r20), same visible state as
@@ -179,11 +159,7 @@ private[ops] trait BenchKeys { this: Layout.type =>
           col("o_orderstatus") =!= "F")
         .select(col("o_orderkey"), lit("F").as("o_orderstatus")),
       keys, deleteOnly = true)
-    readSnapshot(s, table)
-      .groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n"),
-        sum(dec2(col("o_totalprice"))).cast("double").as("sum_price"))
-      .orderBy("o_orderstatus")
+    statusTotals(readSnapshot(s, table), dec2(col("o_totalprice")))
   }
 
   /** Copy-on-write MERGE, end to end: the table (narrow orders
@@ -198,33 +174,8 @@ private[ops] trait BenchKeys { this: Layout.type =>
     * update-in-place, retraction, insert, and carry-through each did
     * exactly their rows. Prices stay DECIMAL(18,2) through the update
     * arithmetic so old and rewritten files share one physical schema. */
-  def qSnapshotMerge(s: SparkSession, d: String): DataFrame = {
-    import graft.Tables._
-    val table = s"${Sources.ioDir(s, d)}/orders_merge"
-    dropTable(s, table) // deterministic re-run: fresh table history
-    val o = orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
-      dec2(col("o_totalprice")).as("price"))
-    commitSnapshot(s, table, o.where(pmod(col("o_orderkey"), lit(2)) === 0))
-    commitSnapshot(s, table, o.where(pmod(col("o_orderkey"), lit(2)) === 1))
-    val mx = ControlPlane(o.agg(max(col("o_orderkey")))).head.getLong(0)
-    // 1-row control decision: AQE off = one job, not agg-stage + result
-    val updates = o.where(pmod(col("o_orderkey"), lit(10)) === 3)
-      .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
-      .withColumn("is_retract", lit(false))
-    val inserts = o.where(pmod(col("o_orderkey"), lit(10)) === 7)
-      .withColumn("o_orderkey", col("o_orderkey") + lit(2L * mx))
-      .withColumn("is_retract", lit(false))
-    val retracts = o.where(pmod(col("o_orderkey"), lit(10)) === 1)
-      .withColumn("is_retract", lit(true))
-    mergeInto(s, table,
-      updates.unionByName(inserts).unionByName(retracts),
-      "o_orderkey", deleteWhen = Some(col("is_retract")))
-    readSnapshot(s, table)
-      .groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n"),
-        sum(col("price")).cast("double").as("sum_price"))
-      .orderBy("o_orderstatus")
-  }
+  def qSnapshotMerge(s: SparkSession, d: String): DataFrame =
+    mergeFixture(s, d, "orders_merge", Map.empty)
 
   /** Merge-on-read MERGE, end to end: the same three-verb delta as
     * [[qSnapshotMerge]] (updates, inserts, retractions) against a
@@ -232,18 +183,22 @@ private[ops] trait BenchKeys { this: Layout.type =>
     * via a dv sidecar, updated+inserted rows append as new files, no
     * affected data file is rewritten. The shared oracle proves the MOR
     * merge's visible state ≡ the COW merge's. */
-  def qSnapshotMergeMor(s: SparkSession, d: String): DataFrame = {
+  def qSnapshotMergeMor(s: SparkSession, d: String): DataFrame =
+    mergeFixture(s, d, "orders_merge_mor", Map(RowLevelModeProp -> "mor"))
+
+  /** The merge keys' one fixture: `props` on the first commit picks the
+    * row-level mode. */
+  private def mergeFixture(s: SparkSession, d: String, name: String,
+      props: Map[String, String]): DataFrame = {
     import graft.Tables._
-    val table = s"${Sources.ioDir(s, d)}/orders_merge_mor"
+    val table = s"${Sources.ioDir(s, d)}/$name"
     dropTable(s, table) // deterministic re-run: fresh table history
     val o = orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
       dec2(col("o_totalprice")).as("price"))
     commitSnapshot(s, table,
-      o.where(pmod(col("o_orderkey"), lit(2)) === 0),
-      props = Map(RowLevelModeProp -> "mor"))
+      o.where(pmod(col("o_orderkey"), lit(2)) === 0), props = props)
     commitSnapshot(s, table, o.where(pmod(col("o_orderkey"), lit(2)) === 1))
-    val mx = ControlPlane(o.agg(max(col("o_orderkey")))).head.getLong(0)
-    // 1-row control decision: AQE off = one job, not agg-stage + result
+    val mx = maxOrderKey(o)
     val updates = o.where(pmod(col("o_orderkey"), lit(10)) === 3)
       .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
       .withColumn("is_retract", lit(false))
@@ -255,11 +210,7 @@ private[ops] trait BenchKeys { this: Layout.type =>
     mergeInto(s, table,
       updates.unionByName(inserts).unionByName(retracts),
       "o_orderkey", deleteWhen = Some(col("is_retract")))
-    readSnapshot(s, table)
-      .groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n"),
-        sum(col("price")).cast("double").as("sum_price"))
-      .orderBy("o_orderstatus")
+    statusTotals(readSnapshot(s, table), col("price"))
   }
 
   /** Manifest-level data skipping, end to end: land orders
@@ -279,13 +230,9 @@ private[ops] trait BenchKeys { this: Layout.type =>
       o.repartitionByRange(8, col("o_orderkey"))
         .sortWithinPartitions("o_orderkey"),
       statsColumns = Seq("o_orderkey"))
-    val mx = ControlPlane(o.agg(max(col("o_orderkey")))).head.getLong(0)
-    // 1-row control decision: AQE off = one job, not agg-stage + result
-    readSnapshotRange(s, table, "o_orderkey", mx / 4, mx / 2)
-      .groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n"),
-        sum(col("price")).cast("double").as("sum_price"))
-      .orderBy("o_orderstatus")
+    val mx = maxOrderKey(o)
+    statusTotals(readSnapshotRange(s, table, "o_orderkey", mx / 4, mx / 2),
+      col("price"))
   }
 
   /** Categorical manifest skipping, end to end: documents land
@@ -338,13 +285,9 @@ private[ops] trait BenchKeys { this: Layout.type =>
     val m = o.agg(max(col("o_orderkey")).as("mk"),
       max(col("o_custkey")).as("mc")).head
     val (mk, mc) = (m.getLong(0), m.getLong(1))
-    readSnapshotWhere(s, table, Seq(
+    statusTotals(readSnapshotWhere(s, table, Seq(
         SkipRange("o_custkey", mc / 8, mc / 4),
-        SkipRange("o_orderkey", mk / 8, mk / 4)))
-      .groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n"),
-        sum(col("price")).cast("double").as("sum_price"))
-      .orderBy("o_orderstatus")
+        SkipRange("o_orderkey", mk / 8, mk / 4))), col("price"))
   }
 
   /** Type-WIDENING schema evolution, end to end: generation 1 commits
@@ -392,11 +335,7 @@ private[ops] trait BenchKeys { this: Layout.type =>
     val v1 = commitSnapshot(s, table, o.where(pmod(col("o_orderkey"), lit(3)) === 0))
     commitSnapshot(s, table, o.where(pmod(col("o_orderkey"), lit(3)) === 1))
     val v3 = commitSnapshot(s, table, o.where(pmod(col("o_orderkey"), lit(3)) === 2))
-    readChanges(s, table, v1, v3)
-      .groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n"),
-        sum(dec2(col("o_totalprice"))).cast("double").as("sum_price"))
-      .orderBy("o_orderstatus")
+    statusTotals(readChanges(s, table, v1, v3), dec2(col("o_totalprice")))
   }
 
   /** Schema evolution on the manifest table, end to end: generation 1
@@ -453,11 +392,7 @@ private[ops] trait BenchKeys { this: Layout.type =>
       .select(col("o_orderstatus"), col("price"))
       .writeStream.format("memory").queryName(name).start()
     try q.processAllAvailable() finally q.stop()
-    val res = s.table(name)
-      .groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n"),
-        sum(col("price")).cast("double").as("sum_price"))
-      .orderBy("o_orderstatus")
+    val res = statusTotals(s.table(name), col("price"))
     // materialize the (few-row) aggregate, then drop the memory sink's
     // backing view so bench re-runs don't accumulate driver-side rows
     val rows = java.util.Arrays.asList(res.collect(): _*)
@@ -492,11 +427,7 @@ private[ops] trait BenchKeys { this: Layout.type =>
       .option("checkpointLocation", ckpt).option("path", dst)
       .start()
     try q.processAllAvailable() finally q.stop()
-    readSnapshot(s, dst)
-      .groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n"),
-        sum(col("price")).cast("double").as("sum_price"))
-      .orderBy("o_orderstatus")
+    statusTotals(readSnapshot(s, dst), col("price"))
   }
 
   /** The DataFrameReader/Writer surface of the format, end to end:
@@ -516,12 +447,20 @@ private[ops] trait BenchKeys { this: Layout.type =>
       .write.format("graft-manifest").mode("append").save(table)
     o.where(pmod(col("o_orderkey"), lit(2)) === 1)
       .write.format("graft-manifest").mode("append").save(table)
-    s.read.format("graft-manifest").load(table)
-      .groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n"),
-        sum(dec2(col("o_totalprice"))).cast("double").as("sum_price"))
-      .orderBy("o_orderstatus")
+    statusTotals(s.read.format("graft-manifest").load(table),
+      dec2(col("o_totalprice")))
   }
+
+  /** The largest `o_orderkey` of `o`, read as a 1-row control decision
+    * (see [[graft.ControlPlane]]: one job, not an agg stage + result). */
+  private[graft] def maxOrderKey(o: DataFrame): Long =
+    ControlPlane(o.agg(max(col("o_orderkey")))).head.getLong(0)
+
+  /** The orders keys' shared answer: rows and `price` total per status. */
+  private def statusTotals(df: DataFrame, price: Column): DataFrame =
+    df.groupBy("o_orderstatus")
+      .agg(count(lit(1)).as("n"), sum(price).cast("double").as("sum_price"))
+      .orderBy("o_orderstatus")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_manifest_snapshot" -> qManifestSnapshot _,

@@ -1138,8 +1138,7 @@ object GraftSql {
             |   price DECIMAL(18,2))
             |TBLPROPERTIES ('graft.stats.columns' = 'o_orderkey')"""
       .stripMargin)
-    val mx = graft.ControlPlane(orders(s, d).agg(max(col("o_orderkey"))))
-      .head().getLong(0) // 1-row control decision (see graft.ControlPlane)
+    val mx = Layout.maxOrderKey(orders(s, d))
     val step = mx / 4 + 1
     (0 until 4).foreach { i =>
       s.sql(s"""INSERT INTO $cat.default.orders_skip
@@ -1209,8 +1208,7 @@ object GraftSql {
     // recomputed batch (REPLACE WHERE predicates must be v1-Filter
     // translatable — range/equality/IN — which is exactly the
     // partition-shaped predicate real backfills use)
-    val cut = graft.ControlPlane(orders(s, d).agg(max(col("o_orderkey"))))
-      .head().getLong(0) / 2 // 1-row control decision (see graft.ControlPlane)
+    val cut = Layout.maxOrderKey(orders(s, d)) / 2
     s.sql(s"""INSERT INTO $cat.default.orders_rw
             |REPLACE WHERE o_orderkey >= $cut
             |SELECT o_orderkey, o_orderstatus,
@@ -1255,11 +1253,8 @@ object GraftSql {
     // 1-row control aggregates, the same driver-side decision posture
     // as the skipping key's quartile threshold
     val o = orders(s, d)
-    val (p1, p2) =
-      (graft.ControlPlane(o.where(col("o_orderkey") % 4 === 2)
-        .agg(max(col("o_orderkey")))).head().getLong(0),
-        graft.ControlPlane(o.where(col("o_orderkey") % 4 === 1)
-          .agg(max(col("o_orderkey")))).head().getLong(0))
+    val (p1, p2) = (Layout.maxOrderKey(o.where(col("o_orderkey") % 4 === 2)),
+      Layout.maxOrderKey(o.where(col("o_orderkey") % 4 === 1)))
     s.sql(s"""SELECT o_orderkey, o_orderstatus,
             |  CAST(price AS DOUBLE) AS price
             |FROM $cat.default.orders_bloom
