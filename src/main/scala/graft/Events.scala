@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Loader for the `events` table.
@@ -25,17 +27,23 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   *               likewise works on both TIMESTAMP and TIMESTAMP_NS)
   *   - `ts_t`  — TimestampType at microsecond precision (for window ops)
   *
-  * The session timezone is pinned to UTC here (GraftSession already does,
-  * but the loader must not depend on who built the session): with UTC, an
-  * NTZ wall-clock value casts to TimestampType without any zone shift, so
-  * `unix_micros` of the cast equals DuckDB's `epoch_us` of the naive value.
+  * The NTZ → TIMESTAMP casts name UTC themselves instead of reading the
+  * session time zone, so the loader works the same whoever built the
+  * session and never resets the caller's zone: an NTZ wall-clock value
+  * casts to TimestampType without any zone shift, and `unix_micros` of
+  * the cast equals DuckDB's `epoch_us` of the naive value.
   */
 object Events {
   def events(spark: SparkSession, dir: String): DataFrame = {
+    // a session setting, not a plan property: the parquet reader reads it
+    // when the scan executes, so it has to be on the session that runs it
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     normalize(Tables.eventsRaw(spark, dir))
   }
+
+  /** `c` (TIMESTAMP_NTZ) as TIMESTAMP, reading the wall clock as UTC. */
+  private def utcTimestamp(c: Column): Column = ColumnBridge.column(
+    Cast(ColumnBridge.expression(c), TimestampType, Some("UTC")))
 
   /** Normalize a raw events frame (batch or streaming) to the
     * `ts`=epoch-nanos-long / `ts_t`=timestamp contract. Fails fast with a
@@ -46,8 +54,8 @@ object Events {
       raw.withColumn("ts_t", timestamp_micros(expr("ts div 1000")))
     case TimestampNTZType | TimestampType => // micros file
       raw
-        .withColumn("ts_t", col("ts").cast(TimestampType))
-        .withColumn("ts", unix_micros(col("ts").cast(TimestampType)) * lit(1000L))
+        .withColumn("ts_t", utcTimestamp(col("ts")))
+        .withColumn("ts", unix_micros(utcTimestamp(col("ts"))) * lit(1000L))
     case other =>
       throw new IllegalStateException(
         s"events.parquet schema drift: column `ts` surfaced as $other; " +

@@ -33,8 +33,8 @@ object EventStream {
     * ([[graft.Events.normalize]]) so batch == streaming by construction
     * whichever encoding the testdata carries. */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
+    // read by the parquet reader when the scan executes (see Events.events)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     val tsType = spark.read
       .option("pathGlobFilter", "events.parquet").parquet(dir)
       .schema("ts").dataType

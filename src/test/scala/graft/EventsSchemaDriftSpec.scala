@@ -59,4 +59,25 @@ class EventsSchemaDriftSpec extends AnyFunSuite {
     val e = intercept[IllegalStateException](Events.events(spark, tmp))
     assert(e.getMessage.contains("schema drift"))
   }
+
+  test("a caller's time zone survives the load and does not move ts") {
+    val tz = "spark.sql.session.timeZone"
+    val tmp = Files.createTempDirectory("events-zone")
+    try {
+      // the zone-sensitive encoding: NTZ wall-clock micros
+      baseRows
+        .withColumn("ts", timestamp_micros(expr("ts div 1000")).cast("timestamp_ntz"))
+        .write.parquet(s"$tmp/events.parquet")
+      val local = spark.newSession()
+      local.conf.set(tz, "America/Sao_Paulo")
+      def values(s: SparkSession): Seq[(Long, Long)] =
+        Events.events(s, tmp.toString).orderBy("event_id")
+          .select(col("ts"), unix_micros(col("ts_t"))).collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      val utc = values(spark)
+      assert(values(local) == utc)
+      assert(local.conf.get(tz) == "America/Sao_Paulo")
+      assert(utc.head == (1704067200000000000L, 1704067200000000L))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+  }
 }
