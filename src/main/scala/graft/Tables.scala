@@ -1,20 +1,33 @@
 package graft
 
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Table loaders for the driver's testdata layout (TESTDATA.md): one parquet
   * file per table under a scale-factor directory.
   *
   * Scale posture: these are plain parquet scans — column pruning and predicate
   * pushdown reach the scan via Catalyst, so callers should express filters on
-  * the returned DataFrame (never pre-collect). At 100 TB each "file" becomes a
-  * directory of row-grouped parquet; the same `spark.read.parquet(path)` call
-  * handles both.
+  * the returned DataFrame (never pre-collect). A single file is read under
+  * its footer schema, read on the driver — the schema inference would pick,
+  * without inference's Spark job. At 100 TB each "file" becomes a directory
+  * of row-grouped parquet, which `spark.read.parquet(path)` discovers.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val p = new Path(path)
+    val isFile = Try(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p).isFile).getOrElse(false)
+    if (isFile)
+      spark.read.schema(ColumnBridge.parquetFooterSchema(spark, Seq(path)))
+        .parquet(path)
+    else spark.read.parquet(path)
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame   = table(s, d, "orders")
