@@ -50,8 +50,11 @@ class DocIngestDedupSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     val dir = fixtureDir()
-    val batchOut = ops.Text.qIncrementalDedup(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    val batchOut =
+      try ops.Text.qIncrementalDedup(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+      finally org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(dir))
 
     val ms = MemoryStream[(Long, String, Long)](spark)
     val docs = ms.toDF().toDF("doc_id", "text", "tsec")
