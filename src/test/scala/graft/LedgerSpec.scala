@@ -269,6 +269,95 @@ class LedgerSpec extends AnyFunSuite {
     val stale = allowed.keySet -- bare
     assert(stale.isEmpty, s"allow-list names reads that are gone: $stale")
   }
+
+  test("session conf writes in src/main are allow-listed; AQE and the " +
+      "time zone are never written to a caller's session") {
+    import scala.jdk.CollectionConverters._
+    // each write keyed (file, enclosing member, receiver, key argument),
+    // with the reason it may touch that session
+    val allowed = Map(
+      ("graft/sql/GraftCatalog.scala", "catalogFor", "s",
+        "s\"spark.sql.catalog.$name\"") ->
+        "registers the bench keys' catalog on the session that queries it",
+      ("graft/sql/GraftCatalog.scala", "catalogFor", "s",
+        "s\"spark.sql.catalog.$name.warehouse\"") ->
+        "the registered catalog's warehouse root",
+      ("graft/sql/GraftCatalog.scala", "withWapBranch", "s",
+        "\"spark.graft.wap.branch\"") ->
+        "WAP scope: set for the body, the caller's value restored after",
+      ("graft/ops/layout/Manifests.scala", "ensureFieldIdRead", "spark",
+        "\"spark.sql.parquet.fieldId.read.enabled\"") ->
+        "id-mapped tables must be read by field id on the reading session",
+      ("graft/ops/layout/Manifests.scala", "stampFieldIds", "spark",
+        "\"spark.sql.parquet.fieldId.write.enabled\"") ->
+        "id-mapped tables must write field ids into their footers",
+      ("graft/Events.scala", "events", "spark",
+        "\"spark.sql.legacy.parquet.nanosAsLong\"") ->
+        "read by the parquet reader when the scan executes",
+      ("graft/streaming/EventStream.scala", "readEvents", "spark",
+        "\"spark.sql.legacy.parquet.nanosAsLong\"") ->
+        "read by the parquet reader when the scan executes",
+      ("graft/Probe.scala", "stream", "spark", "key") ->
+        "dev probe: state partitions for one stream, restored after",
+      ("graft/ControlPlane.scala", "apply", "probe",
+        "\"spark.sql.adaptive.enabled\"") ->
+        "the probe's own clone, never the caller's session",
+      ("graft/ControlPlane.scala", "apply", "probe",
+        "\"spark.sql.shuffle.partitions\"") ->
+        "the probe's own clone, never the caller's session")
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root)
+    val writes =
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .toSeq.sorted.flatMap { f =>
+          val raw = new String(java.nio.file.Files.readAllBytes(f),
+            java.nio.charset.StandardCharsets.UTF_8)
+          ConfWrites.of(root.relativize(f).toString, raw)
+        }
+      finally files.close()
+    assert(writes.size >= allowed.size, s"guard found too few: $writes")
+    val unlisted = writes.filterNot(allowed.contains)
+    assert(unlisted.isEmpty,
+      "session conf write without an allow-list reason — a setting made " +
+        "for one query belongs to that query (see graft.ControlPlane): " +
+        unlisted.mkString("; "))
+    val stale = allowed.keySet -- writes
+    assert(stale.isEmpty, s"allow-list names writes that are gone: $stale")
+    val guarded = Seq("spark.sql.adaptive.enabled",
+      "spark.sql.session.timeZone")
+    val risky = writes.filter(w => guarded.exists(w._4.contains))
+    assert(risky.forall(w =>
+        w._1 == "graft/ControlPlane.scala" && w._3 == "probe"),
+      s"AQE or session time zone written outside ControlPlane's clone: $risky")
+    val cp = ParquetCalls.codeOnly(new String(java.nio.file.Files.readAllBytes(
+      root.resolve("graft/ControlPlane.scala")),
+      java.nio.charset.StandardCharsets.UTF_8))
+    assert("""val\s+probe\s*=\s*ColumnBridge\s*\.\s*cloneSession\s*\(""".r
+      .findFirstIn(cp).isDefined,
+      "ControlPlane's `probe` must be a clone of the caller's session")
+  }
+}
+
+/** `conf.set(` / `conf.unset(` calls in a source file. */
+private object ConfWrites {
+  /** (file, enclosing member, receiver, first argument as written). */
+  def of(file: String, raw: String): Seq[(String, String, String, String)] = {
+    val code = ParquetCalls.codeOnly(raw)
+    """(\w+)\s*\.\s*conf\s*\.\s*(?:set|unset)\s*\(""".r
+      .findAllMatchIn(code).map { m =>
+        var j = m.end; var depth = 0
+        while (j < code.length && (depth > 0 || !",)".contains(code(j)))) {
+          if ("([{".contains(code(j))) depth += 1
+          else if (")]}".contains(code(j))) depth -= 1
+          j += 1
+        }
+        val enclosing =
+          """(?m)^  (?:\w+(?:\[\w+\])? )*(?:def|class|object) (\w+)""".r
+          .findAllMatchIn(code.substring(0, m.start)).toSeq.lastOption
+          .map(_.group(1)).getOrElse("")
+        (file, enclosing, m.group(1), raw.substring(m.end, j).trim)
+      }.toSeq
+  }
 }
 
 /** Just enough Scala lexing for the source guard above. */
