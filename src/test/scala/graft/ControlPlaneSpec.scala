@@ -39,7 +39,9 @@ class ControlPlaneSpec extends AnyFunSuite {
       case s: ShuffleExchangeExec => s.outputPartitioning.numPartitions
     }
 
-  test("a running probe leaves AQE on for queries planned on the caller") {
+  /** Runs `body` while a probe is held open by a UDF blocked on a latch,
+    * then releases the probe and checks its answer; returns the probe. */
+  private def whileProbeRuns(body: => Unit): DataFrame = {
     ControlPlaneSpec.reset()
     val hold = udf { (x: Long) =>
       ControlPlaneSpec.entered.countDown()
@@ -56,6 +58,18 @@ class ControlPlaneSpec extends AnyFunSuite {
         ExecutionContext.fromExecutor(pool))
       assert(ControlPlaneSpec.entered.await(60, TimeUnit.SECONDS),
         "the probe never started")
+      body
+      ControlPlaneSpec.release.countDown()
+      assert(Await.result(running, 60.seconds).map(_.getLong(1)).sum == 4L)
+    } finally {
+      ControlPlaneSpec.release.countDown()
+      pool.shutdown()
+    }
+    probe
+  }
+
+  test("a running probe leaves AQE on for queries planned on the caller") {
+    val probe = whileProbeRuns {
       val seen = (0 until 20).map(_ => spark.conf.get(AqeKey))
       val q = spark.range(0, 100).groupBy(col("id") % 3).count()
       assert(q.collect().map(_.getLong(1)).sum == 100L)
@@ -64,14 +78,16 @@ class ControlPlaneSpec extends AnyFunSuite {
           q.queryExecution.executedPlan)
       assert(!seen.contains("false") && spark.conf.get(AqeKey) == "true",
         s"the caller's session read AQE as $seen")
-      ControlPlaneSpec.release.countDown()
-      assert(Await.result(running, 60.seconds).map(_.getLong(1)).sum == 4L)
-      assert(!probe.queryExecution.executedPlan
-        .isInstanceOf[AdaptiveSparkPlanExec])
-    } finally {
-      ControlPlaneSpec.release.countDown()
-      pool.shutdown()
     }
+    assert(!probe.queryExecution.executedPlan
+      .isInstanceOf[AdaptiveSparkPlanExec])
+  }
+
+  test("the caller's interruptAll does not reach a probe's jobs") {
+    // the clone carries its own session tag, so the caller's
+    // session-scoped cancel finds nothing of the probe's to cancel (and
+    // whileProbeRuns still gets the probe's answer)
+    whileProbeRuns(assert(spark.interruptAll().isEmpty))
   }
 
   test("a grouped collect through ControlPlane runs one job") {

@@ -12,7 +12,8 @@ span name: calls, jobs per call (min-max), jobs, tasks and CPU.
 
 --name keeps spans whose name starts with PREFIX (e.g. ops.Layout.).
 --site keeps only jobs whose call site matches REGEX, e.g.
-`--site '^parquet at Layout'` lists the parquet jobs Layout submitted.
+`--site '^parquet at (Manifests|Commits|Reads|Branches|Maintenance|RowLevel)'`
+lists the parquet jobs Layout's seams (ops/layout/) submitted.
 """
 import argparse
 import json
