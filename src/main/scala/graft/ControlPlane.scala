@@ -20,12 +20,12 @@ import org.apache.spark.sql.graft.ColumnBridge
   *
   * Why a clone: the caller's session is shared with whatever else plans
   * on it, so a setting made for one probe belongs to the probe. The
-  * clone is made per call and copies the caller's runtime conf — an
-  * id-mapped table's `spark.sql.parquet.fieldId.read.enabled` included —
-  * so the probe reads exactly what the caller's session would. It runs
-  * on the caller's SparkContext and cache manager (cached plans are
-  * reused) and under the clone's own session tag: `interruptAll()` on
-  * the caller does not reach a probe's jobs.
+  * clone is made per call and copies the caller's runtime conf, so the
+  * probe plans under the caller's settings; a `newSession()` would plan
+  * under SparkConf defaults. It runs on the caller's SparkContext and
+  * cache manager (cached plans are reused) and under the clone's own
+  * session tag: `interruptAll()` on the caller does not reach a probe's
+  * jobs.
   *
   * `shufflePartitions`: a caller whose plan is PROVABLY tiny (a
   * size-dispatched iteration over a materialized cache measured under a

@@ -102,14 +102,19 @@ class ControlPlaneSpec extends AnyFunSuite {
     assert(sc.statusTracker.getJobIdsForGroup(group).length == 1)
   }
 
-  test("the pinned shuffle width applies inside the probe only") {
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    val df = spark.range(0, 100).groupBy((col("id") % 7).as("g")).count()
-    val pinned = ControlPlane(df, Some(3))
-    assert(pinned.collect().map(_.getLong(1)).sum == 100L)
-    assert(shuffleWidths(pinned) == Seq(3))
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == before)
-    assert(shuffleWidths(ControlPlane(df)) == Seq(before.toInt))
+  test("a probe plans under the caller's runtime conf; a pinned width " +
+      "stays inside the probe") {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "5") // a runtime setting only the caller has
+    try {
+      val df = spark.range(0, 100).groupBy((col("id") % 7).as("g")).count()
+      assert(shuffleWidths(ControlPlane(df)) == Seq(5))
+      val pinned = ControlPlane(df, Some(3))
+      assert(pinned.collect().map(_.getLong(1)).sum == 100L)
+      assert(shuffleWidths(pinned) == Seq(3))
+      assert(spark.conf.get(key) == "5")
+    } finally spark.conf.set(key, before)
   }
 
   test("deleteWhere on a renamed column of an id-mapped table") {
@@ -124,7 +129,7 @@ class ControlPlaneSpec extends AnyFunSuite {
       props = Map(Layout.ColumnMappingProp -> "id"))
     Layout.renameColumn(spark, t, "v", "w")
     // the caller starts out reading by name: the verb itself turns on
-    // by-id reads, and the probe's session must carry that setting
+    // by-id reads for the files its probe scans
     spark.conf.unset("spark.sql.parquet.fieldId.read.enabled")
     Layout.deleteWhere(spark, t, col("w") >= 30.0)
     val left = Layout.readSnapshot(spark, t)
