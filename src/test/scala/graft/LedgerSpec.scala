@@ -299,12 +299,8 @@ class LedgerSpec extends AnyFunSuite {
         "read by the parquet reader when the scan executes",
       ("graft/Probe.scala", "stream", "spark", "key") ->
         "dev probe: state partitions for one stream, restored after",
-      ("graft/ControlPlane.scala", "apply", "probe",
-        "\"spark.sql.adaptive.enabled\"") ->
-        "the probe's own clone, never the caller's session",
-      ("graft/ControlPlane.scala", "apply", "probe",
-        "\"spark.sql.shuffle.partitions\"") ->
-        "the probe's own clone, never the caller's session")
+      ("graft/ControlPlane.scala", "probeSession", "probe", "k") ->
+        "the probe's own clone (caller's conf, AQE off), never the caller")
     val root = java.nio.file.Paths.get("src/main/scala")
     val files = java.nio.file.Files.walk(root)
     val writes =
@@ -326,15 +322,16 @@ class LedgerSpec extends AnyFunSuite {
     val guarded = Seq("spark.sql.adaptive.enabled",
       "spark.sql.session.timeZone")
     val risky = writes.filter(w => guarded.exists(w._4.contains))
-    assert(risky.forall(w =>
-        w._1 == "graft/ControlPlane.scala" && w._3 == "probe"),
-      s"AQE or session time zone written outside ControlPlane's clone: $risky")
+    assert(risky.isEmpty,
+      s"AQE or session time zone written to a caller's session: $risky")
+    // ControlPlane writes AQE through its conf map, only to `probe`,
+    // which is only ever a clone of the caller
     val cp = ParquetCalls.codeOnly(new String(java.nio.file.Files.readAllBytes(
       root.resolve("graft/ControlPlane.scala")),
       java.nio.charset.StandardCharsets.UTF_8))
-    assert("""val\s+probe\s*=\s*ColumnBridge\s*\.\s*cloneSession\s*\(""".r
-      .findFirstIn(cp).isDefined,
-      "ControlPlane's `probe` must be a clone of the caller's session")
+    assert("""ColumnBridge\s*\.\s*cloneSession\s*\(""".r.findFirstIn(cp)
+      .isDefined && """newSession|getOrCreate|builder""".r.findFirstIn(cp)
+      .isEmpty, "ControlPlane's `probe` must be a clone of the caller's session")
   }
 }
 
