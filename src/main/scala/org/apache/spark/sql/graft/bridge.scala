@@ -20,9 +20,15 @@ object ColumnBridge {
 
   /** A copy of `spark`'s session (runtime conf, temp views, functions,
     * listeners) over the same SparkContext and cache manager: conf set
-    * on the copy never reaches `spark` (`cloneSession` is `private[sql]`). */
-  def cloneSession(spark: SparkSession): SparkSession =
-    spark.asInstanceOf[classic.SparkSession].cloneSession()
+    * on the copy never reaches `spark` (`cloneSession` is `private[sql]`).
+    * `spark`'s observation listener is made first, so an `Observation`
+    * on a frame of `spark` completes when the copy runs it, whenever
+    * the frame was observed. */
+  def cloneSession(spark: SparkSession): SparkSession = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    s.observationManager
+    s.cloneSession()
+  }
 
   /** The analyzed logical plan behind a Dataset. */
   def logicalPlan(df: Dataset[_]): LogicalPlan =

@@ -117,6 +117,19 @@ class ControlPlaneSpec extends AnyFunSuite {
     } finally spark.conf.set(key, before)
   }
 
+  test("an observation completes when its frame runs through a reused clone") {
+    // earlier tests made this thread's clone before the session had any
+    // observation: the frame observed now still reports to its caller
+    ControlPlane(spark.range(0, 10).groupBy(col("id") % 2).count()).collect()
+    val obs = org.apache.spark.sql.Observation("probe_rows")
+    val observed = spark.range(0, 10).observe(obs, count(lit(1)).as("rows"))
+    ControlPlane(observed.groupBy(col("id") % 2).count()).collect()
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    try assert(Await.result(Future(obs.get("rows"))(
+      ExecutionContext.fromExecutor(pool)), 60.seconds) == 10L)
+    finally pool.shutdownNow()
+  }
+
   test("deleteWhere on a renamed column of an id-mapped table") {
     import spark.implicits._
     val t = s"$base/renamed"
