@@ -34,7 +34,10 @@ import org.apache.spark.sql.graft.ColumnBridge
   * lifecycle verbs run several probes per commit. Each thread keeps one
   * clone per (caller session, pinned width), so no two threads share a
   * clone's conf; the clone is softly held and made again after the JVM
-  * reclaims it.
+  * reclaims it. A reused clone keeps the caller's query-execution
+  * listeners from when it was made (the caller's observation listener is
+  * always among them, see ColumnBridge.cloneSession): a listener
+  * registered on the caller later does not see probe queries.
   *
   * `shufflePartitions`: a caller whose plan is PROVABLY tiny (a
   * size-dispatched iteration over a materialized cache measured under a
