@@ -348,11 +348,8 @@ private object ConfWrites {
           else if (")]}".contains(code(j))) depth -= 1
           j += 1
         }
-        val enclosing =
-          """(?m)^  (?:\w+(?:\[\w+\])? )*(?:def|class|object) (\w+)""".r
-          .findAllMatchIn(code.substring(0, m.start)).toSeq.lastOption
-          .map(_.group(1)).getOrElse("")
-        (file, enclosing, m.group(1), raw.substring(m.end, j).trim)
+        (file, ParquetCalls.enclosing(code, m.start), m.group(1),
+          raw.substring(m.end, j).trim)
       }.toSeq
   }
 }
@@ -455,11 +452,14 @@ private object ParquetCalls {
       def squash(s: String) = s.replaceAll("""\s+""", " ")
         .replaceAll("""\s*\.\s*""", ".").replaceAll("""\(\s+""", "(")
         .trim
-      val enclosing =
-        """(?m)^  (?:\w+(?:\[\w+\])? )*(?:def|class|object) (\w+)""".r
-        .findAllMatchIn(code.substring(0, m.start)).toSeq.lastOption
-        .map(_.group(1)).getOrElse("")
-      (enclosing, squash(code.substring(i, m.start)),
+      (enclosing(code, m.start), squash(code.substring(i, m.start)),
         squash(code.substring(i, j)))
     }.toSeq
+
+  /** The member enclosing offset `at`: the last def, class or object
+    * indented two spaces above it. */
+  def enclosing(code: String, at: Int): String =
+    """(?m)^  (?:\w+(?:\[\w+\])? )*(?:def|class|object) (\w+)""".r
+      .findAllMatchIn(code.substring(0, at)).toSeq.lastOption
+      .map(_.group(1)).getOrElse("")
 }
