@@ -481,7 +481,7 @@ object Probe {
     // round-17: merge-on-read row-level verbs — the r16 verdict's #1
     // ask. The MOR delete's cost is the matched-position scan + sidecar
     // write (∝ matched rows, never table size) and the dv-applied
-    // re-read adds one anti-join of the grid; the MOR merge adds the
+    // re-read adds an in-task mask of the grid; the MOR merge adds the
     // update/insert append. Both should track data volume with NO
     // file-rewrite component (the COW twins above carry that)
     "q_snapshot_delete_mor", "q_snapshot_merge_mor", "q_merge_sql_mor",
@@ -517,7 +517,7 @@ object Probe {
     // round-19: equality-upsert lifecycle — the two upsert commits are
     // append+annotate (zero data-file reads), so the key should track
     // the two-insert volume like the WAP twin, with the masked read's
-    // key anti-join ∝ batch size on top; the r20 composite-key twin
+    // key mask ∝ batch size on top; the r20 composite-key twin
     // runs THREE upserts on a two-column key, same envelope
     "q_upsert_eq", "q_upsert_eq_multi",
     // round-19 (probed r20 per the r19 verdict): relayout is the one

@@ -258,7 +258,7 @@ private[ops] trait Maintenance { this: Layout.type =>
       (bytesBefore + targetFileBytes - 1) / targetFileBytes).toInt
     // dv-aware read: compaction MATERIALIZES merge-on-read deletion
     // vectors — the rewritten files carry only live rows and the new
-    // lines carry no dv groups, resetting scan-side anti-join cost to
+    // lines carry no dv groups, resetting scan-side mask cost to
     // zero (the OPTIMIZE half of the MOR bargain)
     val df = readManifestLines(spark, fs, root, v0, inputs)
     // zorderBy = re-cluster on BOTH columns (the OPTIMIZE a

@@ -924,7 +924,7 @@ private[ops] trait Manifests { this: Layout.type =>
   // ("txn-<uuid>/part-….parquet" — table-wide unique, relocation-proof)
   // and `pos` its 0-based row ordinal. A line may carry SEVERAL dv
   // groups (one per MOR delete that touched the file); a reader
-  // anti-joins the union, so overlap is harmless.
+  // masks the union, so overlap is harmless.
   private val DvCol = "@dv"
   private val DvPfx = "D:"
   // commit-time NDV statistics (r19 verdict task 6): per-file KMV
@@ -1056,7 +1056,7 @@ private[ops] trait Manifests { this: Layout.type =>
   // "E:<url-enc sidecar rel>;<url-enc key col>", "E:") — the
   // merge-on-read currency for writers that CANNOT read matched
   // positions first (streaming CDC upserts): the sidecar is a one-
-  // column parquet of dead KEY VALUES, and a masked read anti-joins on
+  // column parquet of dead KEY VALUES, and a masked read drops rows by
   // the key instead of the ordinal. Scoping is per-line, like dvs: the
   // committing verb annotates the lines present at ITS head, so a file
   // appended later (including the upsert's own batch) is never masked —

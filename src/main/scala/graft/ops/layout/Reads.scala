@@ -5,7 +5,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types
-import graft.{ControlPlane, SizeTier}
+import org.apache.spark.sql.catalyst.analysis.TypeCoercion
+import org.apache.spark.sql.execution.datasources.parquet.SidecarReader
+import graft.functions.MorMask
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Snapshot reads, manifest-level skipping and change feeds.
@@ -144,36 +146,110 @@ private[ops] trait Reads { this: Layout.type =>
     * currency: qualified absolute data-file path → SORTED deleted row
     * ordinals. Empty for tables no MOR delete ever touched (the common
     * case — the SQL scan then takes the vectorized path untouched).
-    * Driver-side materialization is deliberate: the positions must
-    * reach every reader task anyway (Delta ships its deletion vectors
-    * the same way), the volume is ∝ LIVE deleted rows — bounded by
-    * compaction cadence, not table size — and one sidecar read here
-    * spares a per-task sidecar fetch. */
+    * Each file's ordinals come from its own line's sidecars, read on the
+    * driver by the same parquet read function the scan-side mask uses
+    * ([[graft.functions.MorMask]]), so building a plan over a dv'd
+    * version schedules no Spark job. The volume is ∝ LIVE deleted rows —
+    * bounded by compaction cadence, not table size — and the positions
+    * must reach every reader task anyway (Delta ships its deletion
+    * vectors the same way). */
   private[graft] def versionDvs(spark: SparkSession, table: String,
       version: Int): Map[String, Array[Long]] = {
     val root = new Path(table)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lines = manifestFiles(fs, root, version)
-    val dvLines = lines.filter(l => entryDvs(l).nonEmpty)
+    val dvLines = manifestFiles(fs, root, version)
+      .filter(l => entryDvs(l).nonEmpty)
     if (dvLines.isEmpty) return Map.empty
-    val absByGrp = dvLines.map { l =>
+    val reader = SidecarReader(spark, MorMask.DvSchema)
+    val bySidecar = scala.collection.mutable.Map
+      .empty[String, Map[String, Array[Long]]]
+    dvLines.map { l =>
       val rel = entryPath(l)
-      grpOfRel(rel) -> fs.makeQualified(new Path(root, rel)).toString
+      val grp = scanGrp(root, rel)
+      fs.makeQualified(new Path(root, rel)).toString ->
+        MorMask.sortedDistinct(entryDvs(l).flatMap { s =>
+          bySidecar.getOrElseUpdate(s, {
+            val st = fs.getFileStatus(new Path(root, s))
+            MorMask.positionsByGrp(reader, st.getPath.toString, st.getLen)
+          }).get(grp)
+        })
     }.toMap
-    val dvPaths = dvLines.flatMap(entryDvs).distinct
-      .map(r => new Path(root, r).toString)
-    ControlPlane(readSidecars(spark, dvPaths)
-        .groupBy("grp")
-        .agg(sort_array(collect_set(col("pos"))).as("ps")))
-      .collect()
-      .flatMap { r =>
-        // a sidecar may carry groups whose lines were since compacted
-        // away in a later version — this version's map keys only what
-        // its own lines reference
-        absByGrp.get(r.getString(0)).map(abs =>
-          abs -> r.getSeq[Long](1).toArray)
-      }.toMap
   }
+
+  /** A data file's position-delete group as the scan derives it from
+    * `_metadata.file_path` ([[MorMask.grpOf]]) — the form the delete
+    * records in its sidecars. */
+  private[ops] def scanGrp(root: Path, rel: String): String =
+    MorMask.grpOf(new Path(root, rel).toUri.toString)
+
+  /** The merge-on-read mask of `frame`, a read of data files: keep a row
+    * unless its file's own sidecars delete it — `dvs` pairs a data file
+    * (relative path) with its position-delete sidecars, `eqs` with its
+    * equality-delete (key sidecar, key columns) pointers. Built from
+    * manifest lines on the driver with no Spark job: one stat per
+    * sidecar, the key sidecars' footers (each file's own, widened into
+    * one schema — upserts may key one column int, then long), and
+    * Spark's parquet read function; the rows load inside the task that
+    * reads the file ([[MorMask]]). */
+  private[graft] def morMask(spark: SparkSession, fs: FileSystem,
+      root: Path, frame: DataFrame, dvs: Seq[(String, Seq[String])],
+      eqs: Seq[(String, Seq[(String, Seq[String])])]): Column = {
+    val keyLists = eqs.flatMap(_._2.map(_._2)).distinct
+    require(keyLists.size <= 1,
+      s"equality deletes with mixed key columns: " +
+        s"${keyLists.map(_.mkString("+")).mkString(", ")} — compact " +
+        "before changing keys")
+    val keyCols = keyLists.headOption.getOrElse(Nil)
+    val sizes = (dvs.flatMap(_._2) ++ eqs.flatMap(_._2.map(_._1))).distinct
+      .map { rel =>
+        val st = fs.getFileStatus(new Path(root, rel))
+        rel -> (st.getPath.toString, st.getLen)
+      }.toMap
+    def pointers(ps: Seq[(String, Seq[String])]) = ps.map { case (rel, s) =>
+      scanGrp(root, rel) -> s.map(sizes(_)._1).distinct.toArray
+    }.toMap
+    val keyPaths = eqs.flatMap(_._2.map(_._1)).distinct
+    val keySchema = keyPaths
+      .map(p => ColumnBridge.parquetFooterSchema(spark,
+        Seq(new Path(root, p).toString)))
+      .reduceOption(mergeWiden)
+    val stored = keySchema.toSeq.flatMap(s => keyCols.map(c =>
+      s.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
+        throw new IllegalArgumentException(
+          s"equality-delete sidecar lacks key column `$c`"))))
+    val dataTypes = if (keyCols.isEmpty) Nil
+      else frame.select(keyCols.map(col): _*).schema.map(_.dataType)
+    // both sides widen to one type, as a join's equality coerces them
+    val cmp = stored.zip(dataTypes).zip(keyCols).map { case ((f, d), c) =>
+      TypeCoercion.findWiderTypeForTwo(d, f.dataType).getOrElse(
+        throw new IllegalArgumentException(
+          s"equality-delete key `$c`: sidecar ${f.dataType.sql} cannot " +
+            s"compare with data ${d.sql}"))
+    }
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    val spec = new MorMask.Spec(pointers(dvs),
+      pointers(eqs.map { case (rel, e) => rel -> e.map(_._1) }),
+      sizes.values.toMap,
+      if (dvs.isEmpty) null else SidecarReader(spark, MorMask.DvSchema),
+      if (eqs.isEmpty) null
+      else SidecarReader(spark, types.StructType(stored)),
+      stored.zip(cmp).zipWithIndex.map { case ((f, t), i) =>
+        MorMask.keyCast(i, f.dataType, t, tz) }.toArray)
+    MorMask.keep(spec, col("_metadata.file_path"),
+      col("_metadata.row_index"),
+      keyCols.zip(dataTypes).zip(cmp).map { case ((c, d), t) =>
+        if (d == t) col(c) else col(c).cast(t) })
+  }
+
+  /** [[morMask]] of manifest `lines` (`withEqs = false`: position
+    * deletes only). */
+  private[ops] def linesMask(spark: SparkSession, fs: FileSystem,
+      root: Path, frame: DataFrame, lines: Seq[String],
+      withEqs: Boolean = true): Column =
+    morMask(spark, fs, root, frame,
+      lines.map(l => entryPath(l) -> entryDvs(l)).filter(_._2.nonEmpty),
+      if (!withEqs) Nil
+      else lines.map(l => entryPath(l) -> entryEqs(l)).filter(_._2.nonEmpty))
 
   /** Open manifest-listed files under `version`'s RECORDED schema when
     * present: files older than an added column null-fill it, files newer
@@ -190,116 +266,60 @@ private[ops] trait Reads { this: Layout.type =>
     }).parquet(paths: _*)
   }
 
-  /** Read parquet files this engine wrote itself — position-delete
-    * sidecars and just-staged txn files — under the schema of their
+  /** Read parquet files this engine wrote itself — just-staged txn
+    * files and position-delete sidecars — under the schema of their
     * footer, read on the driver
     * ([[ColumnBridge.parquetFooterSchema]]: the same footer and the same
     * conversion inference uses). A schema-less `spark.read.parquet`
-    * would infer it through a 1-task Spark job on every read, and in
-    * `maskedDvRead` that job would run inside the optimizer. */
+    * would infer it through a 1-task Spark job on every read. */
   private[graft] def readSidecars(spark: SparkSession,
       paths: Seq[String]): DataFrame =
     spark.read.schema(ColumnBridge.parquetFooterSchema(spark, paths))
       .parquet(paths: _*)
 
   /** Read a set of manifest LINES under `v`'s recorded schema with
-    * merge-on-read deletion vectors ANTI-APPLIED — the one read core
-    * every snapshot consumer (readSnapshot, the skipping reads, the
-    * rewrite verbs, compaction) goes through, so a position-deleted row
-    * is invisible everywhere at once. Mechanics: lines WITHOUT dv
-    * groups read on the plain vectorized path, untouched; lines WITH
-    * dv groups read with `_metadata` (file grp + row ordinal) and
-    * anti-join the union of their position-delete sidecars on
-    * (grp, pos) — cost ∝ live deleted rows, and Catalyst broadcasts
-    * the delete side while it is small (the normal case between
-    * compactions; `CALL system.compact` re-materializes to zero).
-    * The ordinal currency is `_metadata.row_index`, which Spark keeps
-    * correct under row-group skipping — the same contract Delta's
-    * deletion vectors rely on. */
+    * merge-on-read deletes APPLIED — the one read core every snapshot
+    * consumer (readSnapshot, the skipping reads, the rewrite verbs,
+    * compaction) goes through, so a deleted row is invisible everywhere
+    * at once. Lines WITHOUT masks read on the plain vectorized path,
+    * untouched; lines WITH position-delete or equality-delete sidecars
+    * read with one [[morMask]] filter, which loads each file's own
+    * sidecars inside the task that reads the file. Either way the read
+    * is one scan job at any sidecar count. Position deletes key on
+    * `_metadata.row_index`, which Spark keeps correct under row-group
+    * skipping — the same contract Delta's deletion vectors rely on.
+    * Equality deletes (r19) are per-line: each upsert annotates only the
+    * lines at ITS head, so a file is masked by every eq delete committed
+    * after it and by none committed before. Cost ∝ live sidecar rows per
+    * read file, bounded by maintenance cadence (compact/only_dv resets it
+    * to zero), the same bargain every MOR design strikes. */
   private[graft] def readManifestLines(spark: SparkSession,
       fs: FileSystem, root: Path, v: Int,
       lines: Seq[String]): DataFrame = {
-    def absOf(ls: Seq[String]) =
-      ls.map(l => new Path(root, entryPath(l)).toString)
-    /** Position-dv masking of `ls` (split inside: only its dv-carrying
-      * lines pay the ordinal read). */
-    def dvApplied(ls: Seq[String]): DataFrame = {
-      val (dvLines, plain) = ls.partition(l => entryDvs(l).nonEmpty)
-      if (dvLines.isEmpty)
-        return readVersionFiles(spark, fs, root, v, absOf(plain))
-      val dvPaths = dvLines.flatMap(entryDvs).distinct
-        .map(r => new Path(root, r).toString)
-      val del = readSidecars(spark, dvPaths)
-        .select(col("grp").as("__grp"), col("pos").as("__pos"))
-      val masked = readVersionFiles(spark, fs, root, v, absOf(dvLines))
-        .withColumn("__grp",
-          substring_index(col("_metadata.file_path"), "/", -2))
-        .withColumn("__pos", col("_metadata.row_index"))
-        .join(del, Seq("__grp", "__pos"), "left_anti")
-        .drop("__grp", "__pos")
-      if (plain.isEmpty) masked
-      else masked.unionByName(
-        readVersionFiles(spark, fs, root, v, absOf(plain)))
-    }
     if (lines.isEmpty) {
       val sch = schemaOf(fs, root, v).getOrElse(types.StructType(Nil))
       return emptyFrame(spark, sch)
     }
-    // equality deletes (r19): lines sharing an identical eq-sidecar
-    // SET anti-join against the union of exactly those keys — sets are
-    // per-line because each upsert annotates only the lines at ITS
-    // head (sets nest as upserts accumulate; a file is masked by every
-    // eq delete committed after it and by none committed before).
-    // Position dvs compose underneath: dv masking first, then the key
-    // anti-join. Sorted group order keeps the plan deterministic.
-    // Cost: one plan branch per DISTINCT set — i.e. per upsert since
-    // the last compaction — and nested sets re-read shared sidecars
-    // once per branch; like dv sidecar volume, this is bounded by
-    // maintenance cadence (compact/only_dv resets it to zero), the
-    // same bargain every MOR design strikes.
-    val eqGroups = lines.groupBy(l => entryEqs(l).toSet).toSeq
-      .sortBy(_._1.toSeq
-        .map { case (rel, cols) => rel + ";" + cols.mkString(",") }
-        .sorted.mkString("|"))
-    val keyFooters = // per path: the sets nest
-      scala.collection.mutable.Map.empty[String, types.StructType]
-    val parts = eqGroups.map { case (eqSet, ls) =>
-      val base = dvApplied(ls)
-      if (eqSet.isEmpty) base
-      else {
-        val keyLists = eqSet.map(_._2)
-        require(keyLists.size == 1,
-          s"equality deletes with mixed key columns on one file: " +
-            s"${keyLists.map(_.mkString("+")).mkString(", ")} — compact " +
-            "before changing keys")
-        val cols = keyLists.head
-        // each key file's own footer, the footers widened into one
-        // schema: upserts may key one column int, then long, and no
-        // single footer's type reads both files
-        val paths = eqSet.map(e => new Path(root, e._1).toString).toSeq
-        val keySchema = paths.map(p => keyFooters.getOrElseUpdate(p,
-            ColumnBridge.parquetFooterSchema(spark, Seq(p))))
-          .reduce(mergeWiden)
-        // no .distinct(): an anti-join is idempotent in its build keys,
-        // and this plan is INJECTED into an already-running optimizer
-        // by MorPerFileDispatch — a Deduplicate node here would arrive
-        // after the batch that rewrites it into an Aggregate and fail
-        // planning (the sidecars are distinct-at-write anyway)
-        val keys = spark.read.schema(keySchema).parquet(paths: _*)
-          .select(cols.map(col): _*)
-        base.join(keys, cols, "left_anti")
-      }
+    def read(ls: Seq[String]) = readVersionFiles(spark, fs, root, v,
+      ls.map(l => new Path(root, entryPath(l)).toString))
+    val (masked, plain) = lines.partition(l =>
+      entryDvs(l).nonEmpty || entryEqs(l).nonEmpty)
+    val maskedRead = if (masked.isEmpty) Nil else {
+      val f = read(masked)
+      Seq(f.where(linesMask(spark, fs, root, f, masked)))
     }
-    parts.reduce(_ unionByName _)
+    (maskedRead ++ (if (plain.isEmpty) Nil else Seq(read(plain))))
+      .reduce(_ unionByName _)
   }
 
-  /** The dv-applying read of ONLY `version`'s dv-CARRYING files — the
-    * masked branch of the SQL scan's per-file MOR dispatch
-    * ([[graft.sql.MorPerFileDispatch]]): the optimizer serves a
-    * dv-carrying version as Union(vectorized BatchScan over dv-free
-    * files, this plan), so one trickle-deleted file never costs a
-    * table-wide vectorization loss (r17 verdict task 1). Empty frame
-    * when the version carries no dvs. */
+  /** The masked read of ONLY `version`'s mask-CARRYING files (position
+    * or equality deletes) — the masked branch of the SQL scan's per-file
+    * MOR dispatch ([[graft.sql.MorPerFileDispatch]]): the optimizer
+    * serves a dv-carrying version as Union(vectorized BatchScan over
+    * dv-free files, this plan), so one trickle-deleted file never costs
+    * a table-wide vectorization loss (r17 verdict task 1). The plan is
+    * a file scan under one [[morMask]] Filter, so the injected branch
+    * adds no job. Empty frame when the version carries no masks. */
   private[graft] def maskedDvRead(spark: SparkSession, table: String,
       version: Int): DataFrame = {
     val root = new Path(table)

@@ -107,20 +107,18 @@ private[ops] trait RowLevel { this: Layout.type =>
   /** `lines` read dv-applied with the position currency retained:
     * data columns + `__grp` (the file's position-delete group key) +
     * `__pos` (its 0-based row ordinal) — what a MOR write needs to
-    * record the matched positions. */
+    * record the matched positions. Position deletes mask in the scan
+    * task ([[linesMask]]); equality deletes do not apply here. */
   private def readLinesPos(spark: SparkSession, fs: FileSystem,
       root: Path, v: Int, lines: Seq[String]): DataFrame = {
-    val base = readVersionFiles(spark, fs, root, v,
-        lines.map(l => new Path(root, entryPath(l)).toString))
+    val frame = readVersionFiles(spark, fs, root, v,
+      lines.map(l => new Path(root, entryPath(l)).toString))
+    (if (lines.forall(entryDvs(_).isEmpty)) frame
+     else frame.where(linesMask(spark, fs, root, frame, lines,
+       withEqs = false)))
       .withColumn("__grp",
         substring_index(col("_metadata.file_path"), "/", -2))
       .withColumn("__pos", col("_metadata.row_index"))
-    val dvPaths = lines.flatMap(entryDvs).distinct
-      .map(r => new Path(root, r).toString)
-    if (dvPaths.isEmpty) base
-    else base.join(readSidecars(spark, dvPaths)
-        .select(col("grp").as("__grp"), col("pos").as("__pos")),
-      Seq("__grp", "__pos"), "left_anti")
   }
 
   /** Stage a (grp, pos) frame as position-delete sidecar parquet and
@@ -201,8 +199,8 @@ private[ops] trait RowLevel { this: Layout.type =>
     * micro-batch): one commit that (1) appends `batch`'s rows, (2)
     * stages a one-column parquet of `batch`'s key values, and (3)
     * annotates every line present at the commit's head with the
-    * equality-delete pointer. A masked read then anti-joins those
-    * files on the KEY ([[readManifestLines]]'s eq branch) — the
+    * equality-delete pointer. A masked read then drops those files'
+    * rows by KEY ([[readManifestLines]]' in-task mask) — the
     * pre-existing row version dies, the appended one lives, and files
     * committed after this upsert (including its own) are never masked
     * (per-line scoping = Iceberg's sequence-number rule in the

@@ -692,7 +692,7 @@ class GraftTable(path: String, version: Option[Int],
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder = {
     // equality deletes mask by KEY, which only the per-file dispatch
-    // rewrite (readManifestLines' anti-join branch) can apply — the
+    // rewrite (readManifestLines' in-task mask) can apply — the
     // row-based fallback masks by ordinal and would resurrect deleted
     // rows. With GraftExtensions installed this builder is only ever
     // reached through the mask-free twin; reaching it with live eq

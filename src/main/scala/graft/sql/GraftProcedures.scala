@@ -343,7 +343,7 @@ object GraftProcedures {
     * source => 'updates_view', key => 'id')` — merge-on-read key
     * upserts without reading a single data file (Layout.upsertByKeys:
     * append the source's rows, stage a key sidecar, annotate head
-    * lines; masked reads anti-join on the key). `delete_only => true`
+    * lines; masked reads drop the listed keys). `delete_only => true`
     * records a tombstone batch. The source is any table or view the
     * session resolves — the natural shape for a CDC staging view. */
   private def upsertProc(cat: GraftCatalog): UnboundProcedure =

@@ -28,14 +28,23 @@ import org.apache.spark.sql.graft.ColumnBridge
   *     DataSourceV2Relation(snapshot restricted to dv-FREE files),
   *              // untouched vectorized parquet BatchScan: filter
   *              // pushdown, column pruning, manifest skipping
-  *     maskedDvRead(dv-CARRYING files))
-  *              // (grp, pos) anti-join of exactly the dv'd files
+  *     Filter(graft_mor_mask(_metadata.file_path, _metadata.row_index,
+  *                           key columns),
+  *       file scan of the mask-CARRYING files))
+  *              // maskedDvRead: each file's own position / equality
+  *              // deletes, loaded inside the task that reads it
   * }}}
   *
   * so the vectorization (and scan cost) penalty is ∝ the dv'd files,
-  * never the table. It runs in the operator-optimization batch — BEFORE
-  * `V2ScanRelationPushDown`, so Catalyst still pushes filters/projection
-  * through the Union into both branches.
+  * never the table, and the masked branch is part of the same scan job
+  * (no build side, no broadcast). It runs in the operator-optimization
+  * batch — BEFORE `V2ScanRelationPushDown`, so Catalyst still pushes
+  * filters/projection through the Union into both branches.
+  *
+  * The injected branch arrives after the batches that rewrite operators
+  * such as `Deduplicate` (into an Aggregate) have run, so it must hold
+  * none: the masked read is a file scan under one Filter, which the
+  * remaining batches plan as they are.
   *
   * Guards:
   *   - plans requesting `_file`/`_pos` keep the single row-based scan

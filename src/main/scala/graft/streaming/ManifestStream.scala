@@ -115,7 +115,7 @@ class ManifestStreamProvider extends StreamSourceProvider
     // back to a PRUNED+FILTERED scan over the dv-applying snapshot read
     // — column pruning and translatable filters re-plan the DataFrame,
     // so they reach the underlying parquet scans of BOTH branches
-    // (vectorized over dv-free files, masked anti-join over dv'd files;
+    // (vectorized over dv-free files, in-task mask over dv'd files;
     // Layout.readManifestLines dispatches per file). Spark re-evaluates
     // every filter above the scan (unhandledFilters defaults to all),
     // so partial translation is purely an optimization. The common
@@ -446,7 +446,7 @@ class ManifestStreamSource(spark: SparkSession, table: String,
     // verdict task 2):
     //   - a dv on a file FIRST SEEN in this batch is maskable — its
     //     rows were never emitted, so serving the file through the
-    //     dv-applying anti-join keeps stream ≡ batch read;
+    //     dv-applying mask keeps stream ≡ batch read;
     //   - a dv on an already-EMITTED file is a retraction the
     //     append-only contract cannot express — refuse as loudly as the
     //     REPLACE case, unless the consumer opted into Delta-style
@@ -506,30 +506,18 @@ class ManifestStreamSource(spark: SparkSession, table: String,
     dvMaskAdded(base, added, dvByRel)
   }
 
-  /** Anti-apply exactly `addedRel`'s position deletes to `base` —
+  /** Mask exactly `addedRel`'s position deletes out of `base` —
     * shared by the plain and change-feed batch paths so a fix to the
-    * ordinal contract can never diverge between them. */
+    * ordinal contract can never diverge between them. Each added file is
+    * masked by its own line's sidecars inside the task that reads it
+    * ([[Layout.morMask]]); `row_index` is Spark's own per-file ordinal,
+    * correct under row-group skipping. */
   private def dvMaskAdded(base: DataFrame, addedRel: Seq[String],
       dvByRel: Map[String, Seq[String]]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, substring_index}
     val dvAdded = addedRel.filter(dvByRel.contains)
-    if (dvAdded.isEmpty) return base
-    // (grp,pos) sidecar union, restricted to the added files' groups (a
-    // sidecar can carry other files' groups — those never match here),
-    // as the STATIC side of a stream-static left-anti join. `row_index`
-    // is Spark's own per-file ordinal, correct under row-group skipping.
-    val sidecars = dvAdded.flatMap(dvByRel).distinct
-      .map(rel => new Path(root, rel).toString)
-    val grps = dvAdded.map(Layout.grpOfRel)
-    val del = Layout.readSidecars(spark, sidecars)
-      .where(col("grp").isin(grps: _*))
-      .select(col("grp").as("__grp"), col("pos").as("__pos"))
-    base
-      .withColumn("__grp",
-        substring_index(col("_metadata.file_path"), "/", -2))
-      .withColumn("__pos", col("_metadata.row_index"))
-      .join(del, Seq("__grp", "__pos"), "left_anti")
-      .drop("__grp", "__pos")
+    if (dvAdded.isEmpty) base
+    else base.where(Layout.morMask(spark, fs, root, base,
+      dvAdded.map(rel => rel -> dvByRel(rel)), Nil))
   }
 
   /** The CDC change-feed batch (r20): every version in (from, to]

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * tokenizer training affordable, pinned here via the learner's reported
   * affected-word counts on a corpus built so each merge touches a known
   * small subset of a large vocabulary. */
-class BpeDeltaSpec extends AnyFunSuite {
+class BpeDeltaSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -22,7 +22,7 @@ class BpeDeltaSpec extends AnyFunSuite {
 
   private def docsDir(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-bped").toString
+    val dir = tempDir("graft-bped")
     rows.map { case (id, t) => (id, t, "en", "fix") }
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))

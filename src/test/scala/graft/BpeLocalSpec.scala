@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * fold — because the size dispatch that picks it is a pure cost
   * decision (Bpe.learnMergesFresh). Pinned on the classic fixture,
   * on testdata, on a randomized corpus, and at both dispatch settings. */
-class BpeLocalSpec extends AnyFunSuite {
+class BpeLocalSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -22,7 +22,7 @@ class BpeLocalSpec extends AnyFunSuite {
 
   private def docsDir(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-bpel").toString
+    val dir = tempDir("graft-bpel")
     rows.map { case (id, t) => (id, t, "en", "fix") }
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * hand below, including three lexicographic tie-breaks — so any change
   * to pair counting, tie-breaking, or the non-overlapping left-to-right
   * substitution fails this spec. */
-class BpeSpec extends AnyFunSuite {
+class BpeSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -21,7 +21,7 @@ class BpeSpec extends AnyFunSuite {
 
   private def docsDir(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-bpe").toString
+    val dir = tempDir("graft-bpe")
     rows.map { case (id, t) => (id, t, "en", "fix") }
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `q_dup_ngrams`, `q_classifier_score`, `q_semantic_dedup`): crafted
   * fixtures with hand-computed expected rows, plus semantic invariants the
   * oracle's hash compare can't express (idempotence, keeper-minimality). */
-class CurationSpec extends AnyFunSuite {
+class CurationSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -22,7 +22,7 @@ class CurationSpec extends AnyFunSuite {
     * returns the directory usable as an sfDir. */
   private def docsDir(rows: Seq[(Long, String, String, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-docs").toString
+    val dir = tempDir("graft-docs")
     rows.toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -31,7 +31,7 @@ class CurationSpec extends AnyFunSuite {
 
   private def embDir(rows: Seq[(Long, Seq[Float], Int)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-emb").toString
+    val dir = tempDir("graft-emb")
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     dir

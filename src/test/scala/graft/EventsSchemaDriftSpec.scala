@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * between rounds 8 and 9, silently killing every events key).
   * [[Events.normalize]] must produce IDENTICAL output for both encodings,
   * and fail fast with a named error for an encoding it doesn't know. */
-class EventsSchemaDriftSpec extends AnyFunSuite {
+class EventsSchemaDriftSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -31,7 +31,7 @@ class EventsSchemaDriftSpec extends AnyFunSuite {
   }
 
   test("nanos-long and micros-NTZ encodings normalize identically") {
-    val tmp = Files.createTempDirectory("events-drift").toString
+    val tmp = tempDir("events-drift")
     // Variant A: ts as plain int64 epoch-nanos — byte-identical to what the
     // nanos file surfaces under spark.sql.legacy.parquet.nanosAsLong.
     baseRows.write.parquet(s"$tmp/nanos/events.parquet")
@@ -53,7 +53,7 @@ class EventsSchemaDriftSpec extends AnyFunSuite {
   }
 
   test("unknown ts encoding fails fast with a named error") {
-    val tmp = Files.createTempDirectory("events-drift-bad").toString
+    val tmp = tempDir("events-drift-bad")
     baseRows.withColumn("ts", col("ts").cast("string"))
       .write.parquet(s"$tmp/events.parquet")
     val e = intercept[IllegalStateException](Events.events(spark, tmp))

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** q_pagerank pinned to a hand-computed star graph (every floor-division
   * step derived by hand below), q_pareto pinned to the brute-force O(n²)
   * dominance filter it replaces. */
-class GraphParetoSpec extends AnyFunSuite {
+class GraphParetoSpec extends AnyFunSuite with TempDirs {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -16,7 +16,7 @@ class GraphParetoSpec extends AnyFunSuite {
 
   test("pagerank matches the hand-computed star graph exactly") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-pr").toString
+    val dir = tempDir("graft-pr")
     // suppliers 1,2,3 all supplying part 1 → star: center = part node 3,
     // leaves = supplier nodes 2,4,6
     Seq((1L, 1L), (2L, 1L), (3L, 1L))

@@ -270,6 +270,47 @@ class LedgerSpec extends AnyFunSuite {
     assert(stale.isEmpty, s"allow-list names reads that are gone: $stale")
   }
 
+  test("merge-on-read deletes mask in the scan task: every anti-join in " +
+      "the layout and streaming code is allow-listed") {
+    import scala.jdk.CollectionConverters._
+    // anti-joins keyed (file, enclosing member), each with its reason;
+    // a delete mask joined against its sidecars costs a broadcast job
+    // per sidecar read — masks go through Layout.morMask instead
+    val allowed = Map(
+      ("graft/ops/layout/RowLevel.scala", "mergeInto") ->
+        ("MERGE's own semantics: source keys absent from the target " +
+          "insert; no sidecar is read"))
+    val root = java.nio.file.Paths.get("src/main/scala")
+    def scalaFiles(dir: String): Seq[String] = {
+      val ls = java.nio.file.Files.list(root.resolve(dir))
+      try ls.iterator().asScala.map(f => root.relativize(f).toString)
+        .filter(_.endsWith(".scala")).toSeq.sorted
+      finally ls.close()
+    }
+    val sources = scalaFiles("graft/ops/layout") ++
+      scalaFiles("graft/streaming")
+    assert(sources.count(_.startsWith("graft/ops/layout/")) >= 7 &&
+      sources.contains("graft/streaming/ManifestStream.scala"),
+      s"guard lost its source files: $sources")
+    // a join-type string literal in code (comments blanked), or
+    // Catalyst's join type object
+    val anti = """(?i)"(?:left_?anti|anti)"|\bLeftAnti\b""".r
+    val sites = sources.flatMap { rel =>
+      val raw = new String(java.nio.file.Files.readAllBytes(
+        root.resolve(rel)), java.nio.charset.StandardCharsets.UTF_8)
+      val code = ParquetCalls.codeOnly(raw)
+      anti.findAllMatchIn(raw).filter(m => code(m.start) == raw(m.start))
+        .map(m => (rel, ParquetCalls.enclosing(code, m.start)))
+    }.distinct
+    val unlisted = sites.filterNot(allowed.contains)
+    assert(unlisted.isEmpty,
+      "anti-join in the layout or streaming code — a merge-on-read mask " +
+        "must apply in the scan task (Layout.morMask), or allow-list the " +
+        s"join with a reason: ${unlisted.mkString("; ")}")
+    val stale = allowed.keySet -- sites
+    assert(stale.isEmpty, s"allow-list names anti-joins that are gone: $stale")
+  }
+
   test("session conf writes in src/main are allow-listed; AQE and the " +
       "time zone are never written to a caller's session") {
     import scala.jdk.CollectionConverters._

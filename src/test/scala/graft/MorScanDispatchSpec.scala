@@ -211,4 +211,23 @@ class MorScanDispatchSpec extends AnyFunSuite {
     assert(viaSql == viaCore)
     assert(viaSql.size == 300 - 82)
   }
+
+  test("versionDvs and a dv'd SQL read plan schedule no Spark job") {
+    val t = "nojob"
+    makeMor(t)
+    spark.sql(s"DELETE FROM gmor.default.$t WHERE k < 10 OR k >= 290")
+    val v = ops.Layout.history(spark, tablePath(t)).map(_._1).max
+    var dvs = Map.empty[String, Array[Long]]
+    var df: DataFrame = null
+    val jobs = JobCount.during(spark, "dispatch-plan") {
+      dvs = ops.Layout.versionDvs(spark, tablePath(t), v)
+      df = spark.sql(s"SELECT k, v FROM gmor.default.$t")
+      df.queryExecution.executedPlan
+    }
+    assert(jobs == 0, s"versionDvs + planning scheduled $jobs job(s)")
+    // the first file's first ten ordinals, the last file's last ten
+    assert(dvs.values.map(_.toSeq).toSet ==
+      Set(0L until 10L, 90L until 100L), dvs.view.mapValues(_.toSeq).toMap)
+    assert(df.count() == 280)
+  }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -85,40 +83,11 @@ class SidecarSchemaSpec extends AnyFunSuite {
     df.select(col("k").cast("long"), col("v")).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq.sortBy(_._1)
 
-  /** Jobs started while `body` runs, counted by job group; a drain job
-    * after it proves the async listener bus delivered everything. */
-  private def jobsDuring(group: String)(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val seen = new AtomicInteger
-    val drained = new AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = Option(js.properties)
-          .map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g == group) seen.incrementAndGet()
-        if (g == s"$group-drain") drained.incrementAndGet()
-      }
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "must schedule no jobs")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-drain", "bus drain marker")
-      try sc.parallelize(1 to 1, 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime + 10L * 1000 * 1000 * 1000
-      while (drained.get == 0 && System.nanoTime < deadline)
-        Thread.sleep(20)
-      assert(drained.get > 0, "listener bus never delivered the drain")
-      seen.get
-    } finally sc.removeSparkListener(l)
-  }
-
   test("MOR frames with dvs and eq deletes build without a Spark job") {
     val (t, expected) = morTable("frames")
     val v = Layout.currentVersion(fs, new Path(t))
     var frames = Seq.empty[DataFrame]
-    val jobs = jobsDuring("sidecar-plan") {
+    val jobs = JobCount.during(spark, "sidecar-plan") {
       frames = Seq(
         Layout.readSnapshot(spark, t),
         Layout.readSnapshotWhere(spark, t,

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * persisted per-source sketches must give EXACTLY the estimate a direct
   * sketch over the union gives (k-min-set union is associative), and the
   * estimate must stay within KMV tolerance of the exact distinct count. */
-class SketchColumnSpec extends AnyFunSuite {
+class SketchColumnSpec extends AnyFunSuite with TempDirs {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -69,8 +69,7 @@ class SketchColumnSpec extends AnyFunSuite {
 
   test("sketch columns survive a parquet round trip unchanged") {
     import graft.functions.KmvDistinct.{kmvDistinct, kmvMerge, kmvSketch}
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-sketch-rt").toString
+    val dir = tempDir("graft-sketch-rt")
     val hashed = Tables.documents(spark, sf)
       .select(explode(ops.Text.toks(col("text"))).as("t"))
       .select(xxhash64(col("t")).as("h"))
@@ -85,8 +84,7 @@ class SketchColumnSpec extends AnyFunSuite {
 
   test("sketch rollup IO: configurable root, Hadoop-FS cleanup, stale sweep") {
     import org.apache.hadoop.fs.Path
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-sketch-io").toString
+    val root = tempDir("graft-sketch-io")
     spark.conf.set("spark.graft.io.dir", root)
     try {
       val sketchRoot = new Path(s"$root/sf0.001/token_sketches")

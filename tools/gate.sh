@@ -22,7 +22,8 @@ if [ -f "$HOME/.sbt/repositories" ]; then
   sbt_flags+=("-Dsbt.repository.config=$HOME/.sbt/repositories")
 fi
 echo "[gate] sbt Test/compile + test ..."
-sbt "${sbt_flags[@]}" Test/compile test
+# a spec must delete the temp-directory fixtures it makes
+tools/no_leaked_fixtures.sh sbt "${sbt_flags[@]}" Test/compile test
 # the benchmark compiles src/main against its own calls into the engine
 # (perfbench/build.sbt): run its build and tests too, so a signature it
 # uses cannot break unnoticed
