@@ -61,8 +61,7 @@ private[ops] trait Branches { this: Layout.type =>
     val fs = sroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val sHead = currentVersion(fs, sroot)
     require(sHead > 0, s"cloneTable: no committed version in $src")
-    require(!versionHasDvs(fs, sroot, sHead) &&
-        !versionHasEqs(fs, sroot, sHead),
+    require(versionMasks(fs, sroot, sHead) == ((false, false)),
       s"cloneTable: $src head carries live row masks (deletion " +
         "vectors / equality deletes) — compact them first " +
         "(CALL system.compact(only_dv => true))")
@@ -157,8 +156,7 @@ private[ops] trait Branches { this: Layout.type =>
     require(head > 0, s"createBranch: no committed version in $table")
     require(currentVersion(fs, root, chain) == 0,
       s"branch '$name' already exists on $table")
-    require(!versionHasDvs(fs, root, head) &&
-        !versionHasEqs(fs, root, head),
+    require(versionMasks(fs, root, head) == ((false, false)),
       s"createBranch: head v$head carries live row masks (deletion " +
         "vectors / equality deletes) — compact them first " +
         "(CALL system.compact(only_dv => true))")

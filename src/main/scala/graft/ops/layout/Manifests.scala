@@ -1100,11 +1100,6 @@ private[ops] trait Manifests { this: Layout.type =>
     b.result()
   }
 
-  /** Whether `v` carries any live equality delete. */
-  private[graft] def versionHasEqs(fs: FileSystem, root: Path,
-      v: Int): Boolean =
-    v > 0 && manifestFiles(fs, root, v).exists(l => entryEqs(l).nonEmpty)
-
   /** Refuse a schema DDL touching a column that keys live equality
     * deletes — the annotations mask by NAME, so a rename orphans them
     * and a drop breaks every masked read. One definition, shared by
@@ -1117,8 +1112,8 @@ private[ops] trait Manifests { this: Layout.type =>
           "them first (CALL system.compact(only_dv => true))"))
 
   /** (live dvs?, live eqs?) of `v` in ONE line pass — the SQL table
-    * handle asks both on every scan, and two separate walks of a
-    * million-line manifest are a million wasted line parses. */
+    * handle and the branch/clone guards ask both, and two separate walks
+    * of a million-line manifest are a million wasted line parses. */
   private[graft] def versionMasks(fs: FileSystem, root: Path,
       v: Int): (Boolean, Boolean) = {
     if (v <= 0) return (false, false)
@@ -1144,24 +1139,12 @@ private[ops] trait Manifests { this: Layout.type =>
       .filter(_._2.nonEmpty)
       .toMap
 
-  /** The (table-wide unique) position-delete group key of a data file:
-    * its last two path segments — txn dir name + file name, both
-    * uuid'd. Relocation-proof (no table root) and cheap to derive on
-    * the scan side from `_metadata.file_path`. */
-  private[graft] def grpOfRel(rel: String): String = {
-    val parts = rel.split('/')
-    if (parts.length >= 2) parts(parts.length - 2) + "/" + parts.last
-    else rel
-  }
-
-  /** Whether `v`'s manifest carries any live deletion vector — the
-    * streaming source refuses such versions (its per-batch file
-    * relation reads raw paths and CANNOT anti-apply positions; emitting
-    * dv-deleted rows would silently break the append-only contract the
-    * same way an undetected REPLACE would). */
-  private[graft] def versionHasDvs(fs: FileSystem, root: Path,
-      v: Int): Boolean =
-    v > 0 && manifestFiles(fs, root, v).exists(l => entryDvs(l).nonEmpty)
+  /** The (table-wide unique) position-delete group key of a data file,
+    * relative or absolute: [[graft.functions.MorMask.grpOf]], the key
+    * the scan derives from `_metadata.file_path`. Relocation-proof (no
+    * table root). */
+  private[graft] def grpOfRel(path: String): String =
+    graft.functions.MorMask.grpOf(path)
 
   /** `v`'s live deletion-vector pointers keyed by root-relative data
     * file path (dv-carrying lines only) — the streaming source's
@@ -1182,11 +1165,12 @@ private[ops] trait Manifests { this: Layout.type =>
     * sidecars instead and every scan anti-applies them
     * ([[compactSnapshot]] materializes). [[upsertByKeys]] (r19) adds
     * the EQUALITY-delete currency for CDC writers that cannot read
-    * matched positions first. SQL `UPDATE`/`MERGE INTO`
-    * arrive through Spark's group-based rewrite and stay copy-on-write
-    * regardless of mode — they read dv-applied (position-deleted rows
-    * never resurrect through a rewrite) and their swapped-in lines
-    * carry no dv, which is correct under either mode. [[replaceWhere]]
+    * matched positions first. SQL `UPDATE`/`MERGE INTO` follow the
+    * mode too: Spark's group-based rewrite on `cow`
+    * ([[graft.sql.GraftRowLevelOperation]]), its delta rewrite on `mor`
+    * ([[graft.sql.GraftDeltaOperation]] — position deletes + appends);
+    * both scan through the same in-task [[graft.functions.MorMask]], so
+    * no position- or equality-deleted row resurrects. [[replaceWhere]]
     * and truncate stay copy-on-write by design in both modes too: a
     * backfill swaps whole value ranges, so the rewrite IS the payload,
     * not overhead. Concurrent MOR deletes compose: disjoint file sets

@@ -142,58 +142,22 @@ private[ops] trait Reads { this: Layout.type =>
     }, keys.result()))
   }
 
-  /** `version`'s live deletion vectors resolved to the SQL scan's
-    * currency: qualified absolute data-file path → SORTED deleted row
-    * ordinals. Empty for tables no MOR delete ever touched (the common
-    * case — the SQL scan then takes the vectorized path untouched).
-    * Each file's ordinals come from its own line's sidecars, read on the
-    * driver by the same parquet read function the scan-side mask uses
-    * ([[graft.functions.MorMask]]), so building a plan over a dv'd
-    * version schedules no Spark job. The volume is ∝ LIVE deleted rows —
-    * bounded by compaction cadence, not table size — and the positions
-    * must reach every reader task anyway (Delta ships its deletion
-    * vectors the same way). */
-  private[graft] def versionDvs(spark: SparkSession, table: String,
-      version: Int): Map[String, Array[Long]] = {
-    val root = new Path(table)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dvLines = manifestFiles(fs, root, version)
-      .filter(l => entryDvs(l).nonEmpty)
-    if (dvLines.isEmpty) return Map.empty
-    val reader = SidecarReader(spark, MorMask.DvSchema)
-    val bySidecar = scala.collection.mutable.Map
-      .empty[String, Map[String, Array[Long]]]
-    dvLines.map { l =>
-      val rel = entryPath(l)
-      val grp = scanGrp(root, rel)
-      fs.makeQualified(new Path(root, rel)).toString ->
-        MorMask.sortedDistinct(entryDvs(l).flatMap { s =>
-          bySidecar.getOrElseUpdate(s, {
-            val st = fs.getFileStatus(new Path(root, s))
-            MorMask.positionsByGrp(reader, st.getPath.toString, st.getLen)
-          }).get(grp)
-        })
-    }.toMap
-  }
-
-  /** A data file's position-delete group as the scan derives it from
-    * `_metadata.file_path` ([[MorMask.grpOf]]) — the form the delete
-    * records in its sidecars. */
-  private[ops] def scanGrp(root: Path, rel: String): String =
-    MorMask.grpOf(new Path(root, rel).toUri.toString)
-
-  /** The merge-on-read mask of `frame`, a read of data files: keep a row
-    * unless its file's own sidecars delete it — `dvs` pairs a data file
-    * (relative path) with its position-delete sidecars, `eqs` with its
-    * equality-delete (key sidecar, key columns) pointers. Built from
-    * manifest lines on the driver with no Spark job: one stat per
-    * sidecar, the key sidecars' footers (each file's own, widened into
-    * one schema — upserts may key one column int, then long), and
-    * Spark's parquet read function; the rows load inside the task that
-    * reads the file ([[MorMask]]). */
-  private[graft] def morMask(spark: SparkSession, fs: FileSystem,
-      root: Path, frame: DataFrame, dvs: Seq[(String, Seq[String])],
-      eqs: Seq[(String, Seq[(String, Seq[String])])]): Column = {
+  /** The merge-on-read mask of a read of data files under `dataSchema`:
+    * keep a row unless its file's own sidecars delete it — `dvs` pairs
+    * a data file (relative path) with its position-delete sidecars,
+    * `eqs` with its equality-delete (key sidecar, key columns) pointers.
+    * Returns what a task needs ([[MorMask.Spec]]) and the key columns
+    * as (name, data type, comparison type). Built from manifest lines on
+    * the driver with no Spark job: one stat per sidecar, the key
+    * sidecars' footers (each file's own, widened into one schema —
+    * upserts may key one column int, then long), and Spark's parquet
+    * read function; the rows load inside the task that reads the file
+    * ([[MorMask]]). */
+  private[graft] def maskSpec(spark: SparkSession, fs: FileSystem,
+      root: Path, dataSchema: types.StructType,
+      dvs: Seq[(String, Seq[String])],
+      eqs: Seq[(String, Seq[(String, Seq[String])])])
+      : (MorMask.Spec, Seq[(String, types.DataType, types.DataType)]) = {
     val keyLists = eqs.flatMap(_._2.map(_._2)).distinct
     require(keyLists.size <= 1,
       s"equality deletes with mixed key columns: " +
@@ -205,20 +169,23 @@ private[ops] trait Reads { this: Layout.type =>
         val st = fs.getFileStatus(new Path(root, rel))
         rel -> (st.getPath.toString, st.getLen)
       }.toMap
+    // keyed by the file's group as the scan derives it from its
+    // url-encoded `_metadata.file_path`
     def pointers(ps: Seq[(String, Seq[String])]) = ps.map { case (rel, s) =>
-      scanGrp(root, rel) -> s.map(sizes(_)._1).distinct.toArray
+      MorMask.grpOf(new Path(root, rel).toUri.toString) ->
+        s.map(sizes(_)._1).distinct.toArray
     }.toMap
     val keyPaths = eqs.flatMap(_._2.map(_._1)).distinct
     val keySchema = keyPaths
       .map(p => ColumnBridge.parquetFooterSchema(spark,
         Seq(new Path(root, p).toString)))
       .reduceOption(mergeWiden)
-    val stored = keySchema.toSeq.flatMap(s => keyCols.map(c =>
+    def field(s: types.StructType, c: String, what: String) =
       s.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
-        throw new IllegalArgumentException(
-          s"equality-delete sidecar lacks key column `$c`"))))
-    val dataTypes = if (keyCols.isEmpty) Nil
-      else frame.select(keyCols.map(col): _*).schema.map(_.dataType)
+        throw new IllegalArgumentException(s"$what lacks key column `$c`"))
+    val stored = keySchema.toSeq.flatMap(s =>
+      keyCols.map(field(s, _, "equality-delete sidecar")))
+    val dataTypes = keyCols.map(field(dataSchema, _, "data").dataType)
     // both sides widen to one type, as a join's equality coerces them
     val cmp = stored.zip(dataTypes).zip(keyCols).map { case ((f, d), c) =>
       TypeCoercion.findWiderTypeForTwo(d, f.dataType).getOrElse(
@@ -235,21 +202,41 @@ private[ops] trait Reads { this: Layout.type =>
       else SidecarReader(spark, types.StructType(stored)),
       stored.zip(cmp).zipWithIndex.map { case ((f, t), i) =>
         MorMask.keyCast(i, f.dataType, t, tz) }.toArray)
-    MorMask.keep(spec, col("_metadata.file_path"),
-      col("_metadata.row_index"),
-      keyCols.zip(dataTypes).zip(cmp).map { case ((c, d), t) =>
-        if (d == t) col(c) else col(c).cast(t) })
+    (spec, keyCols.lazyZip(dataTypes).lazyZip(cmp).toSeq)
   }
+
+  /** [[maskSpec]] of manifest `lines` (`withEqs = false`: position
+    * deletes only). */
+  private[graft] def linesMaskSpec(spark: SparkSession, fs: FileSystem,
+      root: Path, dataSchema: types.StructType, lines: Seq[String],
+      withEqs: Boolean = true)
+      : (MorMask.Spec, Seq[(String, types.DataType, types.DataType)]) =
+    maskSpec(spark, fs, root, dataSchema,
+      lines.map(l => entryPath(l) -> entryDvs(l)).filter(_._2.nonEmpty),
+      if (!withEqs) Nil
+      else lines.map(l => entryPath(l) -> entryEqs(l)).filter(_._2.nonEmpty))
+
+  /** [[maskSpec]] as a filter on `frame`, a read of data files: its
+    * `_metadata` file path and row index, its key columns widened to the
+    * comparison types. */
+  private[graft] def morMask(spark: SparkSession, fs: FileSystem,
+      root: Path, frame: DataFrame, dvs: Seq[(String, Seq[String])],
+      eqs: Seq[(String, Seq[(String, Seq[String])])]): Column =
+    maskColumn(maskSpec(spark, fs, root, frame.schema, dvs, eqs))
 
   /** [[morMask]] of manifest `lines` (`withEqs = false`: position
     * deletes only). */
   private[ops] def linesMask(spark: SparkSession, fs: FileSystem,
       root: Path, frame: DataFrame, lines: Seq[String],
       withEqs: Boolean = true): Column =
-    morMask(spark, fs, root, frame,
-      lines.map(l => entryPath(l) -> entryDvs(l)).filter(_._2.nonEmpty),
-      if (!withEqs) Nil
-      else lines.map(l => entryPath(l) -> entryEqs(l)).filter(_._2.nonEmpty))
+    maskColumn(linesMaskSpec(spark, fs, root, frame.schema, lines, withEqs))
+
+  private def maskColumn(
+      mask: (MorMask.Spec, Seq[(String, types.DataType, types.DataType)]))
+      : Column =
+    MorMask.keep(mask._1, col("_metadata.file_path"),
+      col("_metadata.row_index"), mask._2.map { case (c, d, t) =>
+        if (d == t) col(c) else col(c).cast(t) })
 
   /** Open manifest-listed files under `version`'s RECORDED schema when
     * present: files older than an added column null-fill it, files newer

@@ -523,13 +523,6 @@ private[ops] trait RowLevel { this: Layout.type =>
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val v0 = currentVersion(fs, root)
     require(v0 > 0, s"mergeInto: no committed version in $table")
-    // equality deletes mask by key, but this verb's matched-row reads
-    // key on positions — an eq-dead row would read back as "matched"
-    // and resurrect through the rewrite. Refuse with the way out (r19).
-    require(!versionHasEqs(fs, root, v0),
-      s"mergeInto: $table carries live equality deletes — materialize " +
-        "them first (CALL system.compact(only_dv => true)) or keep " +
-        "mutating through upsertByKeys")
     // Materialize the source ONCE at entry: this verb evaluates it
     // several times (uniqueness aggregate, matched-file semi-join,
     // insert anti-join, update join), and a source that is expensive
@@ -831,10 +824,6 @@ private[ops] trait RowLevel { this: Layout.type =>
         statsColumnsOf(fs, root, version)))
     replaceCommit(fs, root, op, affected.toSet, added)
   }
-
-  /** [[grpOfRel]] for the SQL layer (qualified-absolute or relative —
-    * only the last two segments matter). */
-  private[graft] def grpOfPath(p: String): String = grpOfRel(p)
 
   /** Snapshot GC (VACUUM): drop manifests older than the newest
     * `keepLast`, then delete every data file + empty txn directory no

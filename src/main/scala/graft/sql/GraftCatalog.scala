@@ -531,14 +531,9 @@ class GraftTable(path: String, version: Option[Int],
 
   /** Whether the pinned snapshot's manifest carries any live row mask —
     * position deletion vector OR equality delete (r19) — the
-    * [[MorPerFileDispatch]] eligibility test. */
+    * [[MorPerFileDispatch]] eligibility test, and what sends a read
+    * without the dispatch to the masking row-based scan. */
   private[graft] def hasLiveDvs: Boolean = liveMasks._1 || liveMasks._2
-
-  /** Equality deletes specifically — the one mask shape the row-based
-    * FALLBACK scan cannot apply (it masks by ordinal, not key), so a
-    * scan of an eq-carrying snapshot must come through the dispatch
-    * rewrite or refuse. */
-  private[graft] def hasLiveEqs: Boolean = liveMasks._2
 
   /** This snapshot restricted to its dv-FREE files — the vectorized
     * branch of the per-file MOR dispatch. */
@@ -644,20 +639,6 @@ class GraftTable(path: String, version: Option[Int],
     }
   }
 
-  /** Plain reads ride Spark's vectorized parquet ScanBuilder (pushdown,
-    * columnar batches) exactly as before; if the plan requests the
-    * `_file` metadata column — only the row-level group-filter subquery
-    * does — the builder switches to the row-based COW scan, which
-    * synthesizes `_file` per row. */
-  /** Live deletion vectors of the pinned snapshot. Non-empty ⇒ every
-    * read takes the row-based dv-applying scan (see
-    * [[org.apache.spark.sql.graft.SnapshotScanBuilder.build]]);
-    * empty (any table no MOR delete ever touched — the common case) ⇒
-    * zero overhead, the vectorized path is untouched. */
-  private lazy val pinnedDvs: Map[String, Array[Long]] =
-    if (dvFreeOnly || branch.isDefined) Map.empty
-    else Layout.versionDvs(spark, path, pinnedVersion)
-
   /** SPJ grouping of the pinned snapshot (r18): Some when the table is
     * PARTITIONED BY (identity cols or one bucket transform) and every
     * manifest line is single-valued on its key — the scan builder then
@@ -689,20 +670,14 @@ class GraftTable(path: String, version: Option[Int],
           Seq(org.apache.spark.sql.types.IntegerType), m))
     }
 
+  /** Plain reads ride Spark's vectorized parquet ScanBuilder (pushdown,
+    * columnar batches); a plan requesting `_file`/`_pos`, or any read of
+    * a snapshot with live row masks that the per-file dispatch did not
+    * split (a session without GraftExtensions), takes the row-based COW
+    * scan, which synthesizes the metadata columns and masks position
+    * and equality deletes in the task. */
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder = {
-    // equality deletes mask by KEY, which only the per-file dispatch
-    // rewrite (readManifestLines' in-task mask) can apply — the
-    // row-based fallback masks by ordinal and would resurrect deleted
-    // rows. With GraftExtensions installed this builder is only ever
-    // reached through the mask-free twin; reaching it with live eq
-    // deletes means no extensions (or a _file/_pos metadata scan,
-    // which row-level semantics can't define over key-masked rows) —
-    // refuse loudly with the two ways out.
-    require(!hasLiveEqs,
-      s"$path@v$pinnedVersion carries live equality deletes — read " +
-        "through GraftSession (MOR per-file dispatch) or materialize " +
-        "them first (CALL system.compact(only_dv => true))")
     val (files, _) = pinnedLayout
     // id-mapped table: the DSv2 parquet scan (and the row-based cow
     // scan's reader) must match columns by field id, not name
@@ -725,9 +700,9 @@ class GraftTable(path: String, version: Option[Int],
             Some(pinnedVersion), dvFreeOnly)._1.toSet
           universe.filter { case (l, _, _) => kept.contains(l) }
         }
-        new GraftCowScan(entries,
+        new GraftCowScan(path, entries,
           ColumnBridge.nullableSchema(schema()), required, pushedData,
-          s"$path@v$pinnedVersion", pinnedDvs)
+          s"$path@v$pinnedVersion")
       },
       // manifest-level file skipping for SQL WHERE clauses: bounds
       // predicates evaluate against THIS pinned version's recorded
@@ -738,7 +713,7 @@ class GraftTable(path: String, version: Option[Int],
       prune = if (branch.isDefined) null
         else skips => Layout.prunedFilePaths(spark, path, skips,
           Some(pinnedVersion), dvFreeOnly),
-      hasDv = pinnedDvs.nonEmpty,
+      hasDv = hasLiveDvs,
       spjKeys = spjKeys,
       // manifest-derived planner stats (r19): memoized per table
       // handle, O(manifest) on first use, zero data IO. Branch reads

@@ -5,17 +5,19 @@ import java.util.OptionalLong
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.connector.catalog.MetadataColumn
 import org.apache.spark.sql.connector.expressions.{Expressions, Literal => V2Literal, NamedReference}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.functions.MorMaskExpr
 import graft.ops.Layout
 
 /** Group-based row-level SQL (`MERGE INTO` / `UPDATE` / rewrite-path
@@ -50,7 +52,10 @@ import graft.ops.Layout
   * carry by manifest line, and the commit is O(manifest). The COW scan
   * itself is row-based (the per-row `_file` append precludes returning
   * ColumnarBatches), a deliberate trade: row-level commands are
-  * write-dominated, and the scan feeds a join anyway.
+  * write-dominated, and the scan feeds a join anyway. It applies the
+  * pinned snapshot's merge-on-read deletes — position and equality —
+  * with the same in-task [[graft.functions.MorMask]] every other read
+  * uses, so no deleted row resurrects through a rewrite.
   *
   * On a `graft.rowlevel.mode = 'mor'` table the SAME commands take the
   * DELTA rewrite instead ([[GraftDeltaOperation]], `SupportsDelta`):
@@ -68,19 +73,6 @@ import graft.ops.Layout
   * pays only for the delta. */
 object GraftRowLevel {
 
-  /** Refuse a row-level operation over a snapshot carrying equality
-    * deletes (r19): the COW/delta scans mask by ordinal, so a rewrite
-    * through them would resurrect key-masked rows. */
-  private[sql] def requireNoEqs(tablePath: String, v: Int): Unit = {
-    val spark = SparkSession.active
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!Layout.versionHasEqs(fs, root, v),
-      s"$tablePath@v$v carries live equality deletes — materialize " +
-        "them first (CALL system.compact(only_dv => true)) before " +
-        "UPDATE/MERGE, or keep mutating through upsertByKeys")
-  }
-
   /** The `_file` metadata column: which data file a row lives in — the
     * group identity for copy-on-write planning (Iceberg uses the same
     * name for the same purpose). Reserved for row-level planning; a
@@ -97,9 +89,9 @@ object GraftRowLevel {
   /** `_pos` (0-based row ordinal within its data file) — with `_file`
     * it forms the ROW ID of the delta-based (merge-on-read) row-level
     * path: a position-delete sidecar entry is exactly one
-    * (grpOf(_file), _pos) pair. Served by the row-based scan counting
-    * ordinals over an unfiltered read (pushdown would desynchronize
-    * the count), dv-deleted rows excluded but still counted. */
+    * (grpOf(_file), _pos) pair. Served by the row-based scan from
+    * Spark's own parquet row index (the column behind
+    * `_metadata.row_index`), which stays exact under pushed filters. */
   object PosColumn extends MetadataColumn {
     override def name: String = "_pos"
     override def dataType: DataType = org.apache.spark.sql.types.LongType
@@ -131,17 +123,6 @@ class GraftRowLevelOperation(
     * the pinned snapshot — absolute path is the `_file` currency. */
   val entries: Seq[(String, String, Long)] =
     Layout.rowLevelEntries(SparkSession.active, tablePath, pinnedVersion)
-
-  /** Live deletion vectors of the pinned snapshot: the COW scan must
-    * not read (and the rewrite must not resurrect) position-deleted
-    * rows of a merge-on-read table. */
-  val dvs: Map[String, Array[Long]] =
-    Layout.versionDvs(SparkSession.active, tablePath, pinnedVersion)
-
-  // equality deletes mask by KEY, which the ordinal-keyed COW scan
-  // cannot apply — a rewrite reading through it would resurrect
-  // eq-deleted rows. Refuse with the way out named (r19).
-  GraftRowLevel.requireNoEqs(tablePath, pinnedVersion)
 
   @volatile private var mainScan: GraftCowScan = null
   private[sql] def registerScan(s: GraftCowScan): Unit = synchronized {
@@ -183,13 +164,13 @@ class GraftRowLevelOperation(
   * synthesized by the reader, everything else flows to the parquet
   * machinery. Shared by the COW and the delta (merge-on-read) row-level
   * operations — `register` lets the COW op capture its commit scan. */
-class GraftCowScanBuilder(entries: Seq[(String, String, Long)],
-    tableSchema: StructType, dvs: Map[String, Array[Long]],
-    label: String, register: GraftCowScan => Unit) extends ScanBuilder
+class GraftCowScanBuilder(table: String, entries: Seq[(String, String, Long)],
+    tableSchema: StructType, label: String,
+    register: GraftCowScan => Unit) extends ScanBuilder
     with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
 
-  def this(op: GraftRowLevelOperation) = this(op.entries, op.tableSchema,
-    op.dvs, s"${op.tablePath}@v${op.pinnedVersion}", op.registerScan)
+  def this(op: GraftRowLevelOperation) = this(op.tablePath, op.entries,
+    op.tableSchema, s"${op.tablePath}@v${op.pinnedVersion}", op.registerScan)
 
   private var required: StructType = tableSchema
   private var pushed: Array[Filter] = Array.empty
@@ -210,8 +191,8 @@ class GraftCowScanBuilder(entries: Seq[(String, String, Long)],
   override def pushedFilters(): Array[Filter] = pushed
 
   override def build(): Scan = {
-    val scan = new GraftCowScan(entries, tableSchema, required,
-      pushed, label, dvs)
+    val scan = new GraftCowScan(table, entries, tableSchema, required,
+      pushed, label)
     register(scan)
     scan
   }
@@ -224,13 +205,13 @@ class GraftCowScanBuilder(entries: Seq[(String, String, Long)],
   * group filtering: Spark's IN-subquery over `_file` prunes the group
   * list before any footer opens. Built from raw pieces (not the
   * operation) because TWO plan shapes need it: the ReplaceData main
-  * scan, and the ordinary table read when a plan requests `_file` —
-  * which is exactly the group-filter subquery scanning the original
-  * relation (see [[org.apache.spark.sql.graft.SnapshotScanBuilder]]). */
-class GraftCowScan(entries: Seq[(String, String, Long)],
+  * scan, and the ordinary table read when a plan requests `_file` or
+  * the snapshot carries merge-on-read deletes without the per-file
+  * dispatch (see [[org.apache.spark.sql.graft.SnapshotScanBuilder]]).
+  * `table` is the root the entries' sidecar pointers resolve against. */
+class GraftCowScan(table: String, entries: Seq[(String, String, Long)],
     tableSchema: StructType, required: StructType,
-    pushedFilters: Array[Filter], label: String,
-    dvs: Map[String, Array[Long]] = Map.empty) extends Scan with Batch
+    pushedFilters: Array[Filter], label: String) extends Scan with Batch
     with SupportsRuntimeV2Filtering with SupportsReportStatistics {
 
   /** Survivor groups — starts at the full pinned snapshot, narrowed by
@@ -298,23 +279,47 @@ class GraftCowScan(entries: Seq[(String, String, Long)],
     files.map { case (_, abs, len) =>
       GraftCowInputPartition(abs, len): InputPartition }.toArray
 
+  /** One reader for every file: the survivor files' merge-on-read
+    * deletes (position and equality) mask in the task through
+    * [[MorMaskExpr]] — the same mask and spec builder every DataFrame
+    * read uses — keyed on Spark's own parquet row index, which also
+    * serves `_pos`. Key columns the plan pruned are read for the mask
+    * and projected away. Pushed filters apply everywhere: the row index
+    * stays exact when parquet skips row groups. */
   override def createReaderFactory(): PartitionReaderFactory = {
     val spark = SparkSession.active
-    val readFunc = ColumnBridge.parquetReaderFunc(spark,
-      tableSchema, dataRequired, pushedFilters.toSeq, Map.empty)
-    // dv'd files — and EVERY file when `_pos` is requested — read
-    // WITHOUT pushed parquet filters: both the anti-apply and the
-    // synthesized ordinal identify rows by position, which only equals
-    // the iterator index when the reader returns every row.
-    // Correctness is untouched — file-source pushdown is best-effort
-    // and Spark re-evaluates every filter above the scan; only the
-    // dv'd files (bounded by compaction cadence) and row-id scans pay
-    // the unpruned read.
-    val plainFunc =
-      if (dvs.isEmpty && !wantsPos) readFunc
-      else ColumnBridge.parquetReaderFunc(spark,
-        tableSchema, dataRequired, Nil, Map.empty)
-    GraftCowReaderFactory(readFunc, plainFunc, wantsFile, wantsPos, dvs)
+    val masked = files.map(_._1).filter(l =>
+      Layout.entryDvs(l).nonEmpty || Layout.entryEqs(l).nonEmpty)
+    val mask = if (masked.isEmpty) None else {
+      val root = new Path(table)
+      Some(Layout.linesMaskSpec(spark,
+        root.getFileSystem(spark.sparkContext.hadoopConfiguration), root,
+        tableSchema, masked))
+    }
+    val keys = mask.toSeq.flatMap(_._2)
+    val keyFields = keys.map { case (c, _, _) =>
+      tableSchema.find(_.name.equalsIgnoreCase(c)).get }
+      .filterNot(f => dataRequired.fieldNames.contains(f.name))
+    val rowIndex = if (mask.isEmpty && !wantsPos) Nil else Seq(StructField(
+      ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType))
+    val read = StructType(dataRequired ++ keyFields ++ rowIndex)
+    // read row ++ (url-encoded file path, `_file` value)
+    def ref(i: Int): Expression =
+      BoundReference(i, if (i < read.size) read(i).dataType else StringType,
+        nullable = true)
+    def refOf(c: String) =
+      ref(read.fields.indexWhere(_.name.equalsIgnoreCase(c)))
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    val keep = mask.map { case (spec, _) =>
+      MorMaskExpr(Seq(ref(read.size), ref(read.size - 1)) ++ keys.map {
+        case (c, d, t) => if (d == t) refOf(c) else Cast(refOf(c), t, Some(tz))
+      }, spec)
+    }
+    val out = dataRequired.indices.map(ref) ++
+      (if (wantsFile) Seq(ref(read.size + 1)) else Nil) ++
+      (if (wantsPos) Seq(ref(read.size - 1)) else Nil)
+    GraftCowReaderFactory(ColumnBridge.parquetReaderFunc(spark,
+      tableSchema, read, pushedFilters.toSeq, Map.empty), keep, out)
   }
 
   override def estimateStatistics(): Statistics = new Statistics {
@@ -330,82 +335,31 @@ class GraftCowScan(entries: Seq[(String, String, Long)],
 case class GraftCowInputPartition(path: String, length: Long)
   extends InputPartition
 
-/** Executor-side: parquet-read one file, anti-applying its deletion
-  * vector (sorted deleted ordinals — one ascending merge walk, O(1)
-  * per row) and appending the constant `_file` column via a reused
-  * JoinedRow when the plan asked for it. A partition is always a WHOLE
-  * file read in order with no pushed filters when a dv applies, so the
-  * iterator index IS the row ordinal the dv recorded. */
+/** Executor-side: parquet-read one file, keep the rows `keep` passes
+  * and project `out` — both bound to the read row followed by the
+  * file's (url-encoded path, `_file` value). */
 case class GraftCowReaderFactory(
     readFunc: org.apache.spark.sql.execution.datasources.PartitionedFile =>
       Iterator[InternalRow],
-    plainReadFunc:
-      org.apache.spark.sql.execution.datasources.PartitionedFile =>
-        Iterator[InternalRow],
-    wantsFile: Boolean,
-    wantsPos: Boolean,
-    dvs: Map[String, Array[Long]] = Map.empty)
+    keep: Option[Expression],
+    out: Seq[Expression])
   extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition)
       : PartitionReader[InternalRow] = {
     val gp = p.asInstanceOf[GraftCowInputPartition]
     val pf = ColumnBridge.partitionedFile(gp.path, gp.length)
-    val deleted = dvs.getOrElse(gp.path, Array.empty[Long])
-    val it: Iterator[InternalRow] =
-      if (!wantsPos && deleted.isEmpty) {
-        val base = readFunc(pf)
-        if (!wantsFile) base
-        else {
-          val fileRow = new GenericInternalRow(
-            Array[Any](UTF8String.fromString(gp.path)))
-          val joined = new JoinedRow
-          base.map(r => joined(r, fileRow))
-        }
-      } else {
-        // position-identified path: plain (unfiltered) read so the
-        // iterator index IS the row ordinal; dv'd ordinals skipped but
-        // still counted; `_file`/`_pos` appended via a reused meta row.
-        // Lookahead lives in hasNext (the standard filter-iterator
-        // shape): the underlying reader may REUSE its row buffer, so
-        // the next pull must not happen until the consumer is done
-        // with the previously returned row.
-        val rows = plainReadFunc(pf)
-        val nMeta = (if (wantsFile) 1 else 0) + (if (wantsPos) 1 else 0)
-        val metaRow = new GenericInternalRow(math.max(nMeta, 1))
-        if (wantsFile) metaRow.update(0, UTF8String.fromString(gp.path))
-        val posSlot = if (wantsFile) 1 else 0
-        val joined = new JoinedRow
-        new Iterator[InternalRow] {
-          private var ord = -1L
-          private var di = 0
-          private var pending: InternalRow = null
-          private var pendingOrd = -1L
-          override def hasNext: Boolean = {
-            while (pending == null && rows.hasNext) {
-              val r = rows.next(); ord += 1
-              while (di < deleted.length && deleted(di) < ord) di += 1
-              if (di >= deleted.length || deleted(di) != ord) {
-                pending = r; pendingOrd = ord
-              }
-            }
-            pending != null
-          }
-          override def next(): InternalRow = {
-            if (!hasNext) throw new NoSuchElementException("empty reader")
-            val r = pending; pending = null
-            if (nMeta == 0) r
-            else {
-              if (wantsPos) metaRow.setLong(posSlot, pendingOrd)
-              joined(r, metaRow)
-            }
-          }
-        }
-      }
+    val file = new GenericInternalRow(Array[Any](
+      UTF8String.fromString(pf.urlEncodedPath),
+      UTF8String.fromString(gp.path)))
+    val joined = new JoinedRow
+    val rows = readFunc(pf).map(joined(_, file))
+    val it = keep.fold(rows)(k => rows.filter(k.eval(_).asInstanceOf[Boolean]))
+    val project = UnsafeProjection.create(out)
     new PartitionReader[InternalRow] {
       private var row: InternalRow = _
       override def next(): Boolean =
-        if (it.hasNext) { row = it.next(); true } else false
+        if (it.hasNext) { row = project(it.next()); true } else false
       override def get(): InternalRow = row
       override def close(): Unit = ()
     }
@@ -472,8 +426,9 @@ case class GraftCowCommitMessage(relPath: String, bytes: Long, rows: Long)
 
 /** The merge-on-read twin of [[GraftRowLevelOperation]]: same pinned
   * snapshot, same shared COW scan (which serves the `_pos` ordinal and
-  * anti-applies existing dvs, so a re-UPDATE of a survivor row is keyed
-  * on TRUE file ordinals), but writes ride [[GraftDeltaBatchWrite]]. */
+  * masks existing position and equality deletes, so a re-UPDATE of a
+  * survivor row is keyed on TRUE file ordinals), but writes ride
+  * [[GraftDeltaBatchWrite]]. */
 class GraftDeltaOperation(
     val tablePath: String,
     val pinnedVersion: Int,
@@ -483,19 +438,13 @@ class GraftDeltaOperation(
 
   val entries: Seq[(String, String, Long)] =
     Layout.rowLevelEntries(SparkSession.active, tablePath, pinnedVersion)
-  val dvs: Map[String, Array[Long]] =
-    Layout.versionDvs(SparkSession.active, tablePath, pinnedVersion)
-
-  // same eq guard as the COW operation: the shared scan masks by
-  // ordinal only (r19)
-  GraftRowLevel.requireNoEqs(tablePath, pinnedVersion)
 
   override def command(): RowLevelOperation.Command = cmd
 
   override def newScanBuilder(options:
       org.apache.spark.sql.util.CaseInsensitiveStringMap): ScanBuilder = {
     Layout.ensureFieldIdRead(SparkSession.active, tableSchema)
-    new GraftCowScanBuilder(entries, tableSchema, dvs,
+    new GraftCowScanBuilder(tablePath, entries, tableSchema,
       s"$tablePath@v$pinnedVersion(mor)", _ => ())
   }
 
@@ -613,7 +562,7 @@ case class GraftDeltaWriterFactory(tablePath: String, txnRel: String,
 
     override def delete(meta: InternalRow, id: InternalRow): Unit = {
       // row id = (_file qualified path, _pos ordinal), rowId() order
-      val grp = Layout.grpOfPath(id.getUTF8String(0).toString)
+      val grp = Layout.grpOfRel(id.getUTF8String(0).toString)
       if (dvWriter == null)
         dvWriter = ColumnBridge.newOutputWriter(dvFactory, dvConf,
           s"$tablePath/$txnRel", f"dv-$partitionId%05d-$taskId",

@@ -11,13 +11,15 @@ import org.apache.spark.sql.graft.ColumnBridge
 /** Per-file deletion-vector dispatch for SQL reads of a graft-manifest
   * table (r17 verdict task 1).
   *
-  * Without this rule, ANY live merge-on-read deletion vector makes the
-  * DSv2 scan serve the ENTIRE pinned snapshot through the row-based
-  * dv-applying scan ([[org.apache.spark.sql.graft.SnapshotScanBuilder]]
-  * `hasDv` fallback — still correct, still the safety net when the
-  * extensions are not installed). At 100 TB that is a table-wide
-  * vectorization loss for one trickle-deleted file, between the delete
-  * and the next `CALL system.compact(only_dv => true)`.
+  * Without this rule, ANY live merge-on-read row mask (position or
+  * equality delete) makes the DSv2 scan serve the ENTIRE pinned
+  * snapshot through the row-based scan
+  * ([[org.apache.spark.sql.graft.SnapshotScanBuilder]] `hasDv`
+  * fallback, [[GraftCowScan]] — still correct, masking with the same
+  * in-task `graft_mor_mask` as the branch below, and the safety net
+  * when the extensions are not installed). At 100 TB that is a
+  * table-wide vectorization loss for one trickle-deleted file, between
+  * the delete and the next `CALL system.compact(only_dv => true)`.
   *
   * This optimizer rule makes the SQL path match what the programmatic
   * read core ([[graft.ops.Layout.readManifestLines]]) always did:

@@ -363,9 +363,9 @@ class SnapshotScanBuilder(
       requiredSchema.filterNot(f => MetaCols(f.name))))
   }
 
-  // a table with live deletion vectors must never answer from parquet
-  // footers: a pushed-down COUNT(*)/MIN/MAX would include position-
-  // deleted rows
+  // a table with live row masks must never answer from parquet
+  // footers: a pushed-down COUNT(*)/MIN/MAX would include position- or
+  // equality-deleted rows
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
       : Boolean = !hasDv && innerAgg.supportCompletePushDown(agg)
@@ -379,10 +379,10 @@ class SnapshotScanBuilder(
   }
 
   /** Plans requesting `_file` take the row-based scan (which
-    * synthesizes it); so does EVERY read of a version with live
-    * deletion vectors — the row-based reader is the one that can
-    * anti-apply position deletes by ordinal. Non-dv tables keep the
-    * vectorized parquet path untouched.
+    * synthesizes it); so does EVERY read of a version with live row
+    * masks (position or equality deletes) that reaches this builder —
+    * the row-based reader masks them in the task. Mask-free tables keep
+    * the vectorized parquet path untouched.
     *
     * SPJ (r18): an eligible partitioned snapshot (caller passed
     * spjKeys — every file single-valued on the partition columns)

@@ -291,4 +291,154 @@ class GraftRowLevelSpec extends AnyFunSuite {
     }
     assert(ex.getMessage != null)
   }
+
+  // ---- live equality deletes (upsertByKeys) under row-level verbs ----
+
+  private def masksOf(name: String): (Boolean, Boolean) = {
+    val root = new Path(tablePath(name))
+    ops.Layout.versionMasks(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root,
+      ops.Layout.currentVersion(
+        root.getFileSystem(spark.sparkContext.hadoopConfiguration), root))
+  }
+
+  private def allRows(name: String): Seq[(Long, String, Double)] =
+    spark.sql(s"SELECT k, v, amt FROM graftrl.default.$name")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
+      .toSeq.sorted
+
+  /** The three-group table with live equality deletes — k 5, 150 and
+    * 250 upserted (their old rows key-masked, new rows appended), k 7
+    * and 160 tombstoned — and a position delete on k 42; then switched
+    * to `mode`. */
+  private def makeEqTable(name: String, mode: String): Unit = {
+    import spark.implicits._
+    makeMorTable(name)
+    ops.Layout.upsertByKeys(spark, tablePath(name),
+      Seq((5L, "u5", 5.5), (150L, "u150", 150.5), (250L, "u250", 250.5))
+        .toDF("k", "v", "amt"), "k")
+    ops.Layout.upsertByKeys(spark, tablePath(name), Seq(7L, 160L).toDF("k"),
+      "k", deleteOnly = true)
+    spark.sql(s"DELETE FROM graftrl.default.$name WHERE k = 42")
+    spark.sql(s"ALTER TABLE graftrl.default.$name SET TBLPROPERTIES " +
+      s"('graft.rowlevel.mode' = '$mode')")
+  }
+
+  /** `verb` (given the table's name) on a `mode` table with live
+    * equality deletes leaves exactly the rows it leaves on the same
+    * table after `compactDeletes` (what `CALL system.compact(only_dv =>
+    * true)` runs) materialized the deletes. Returns those rows. */
+  private def sameAsCompacted(mode: String, name: String)(
+      verb: String => Unit): Map[Long, (String, Double)] = {
+    val (live, done) = (s"${name}_live", s"${name}_done")
+    Seq(live, done).foreach(makeEqTable(_, mode))
+    ops.Layout.compactDeletes(spark, tablePath(done))
+    assert(masksOf(live) == ((true, true)) && masksOf(done) == ((false, false)))
+    verb(live)
+    verb(done)
+    val got = allRows(live)
+    assert(got == allRows(done), s"$mode: the live masks changed the result")
+    assert(got == ops.Layout.readSnapshot(spark, tablePath(live))
+      .select("k", "v", "amt").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq.sorted)
+    got.map { case (k, v, a) => k -> ((v, a)) }.toMap
+  }
+
+  test("UPDATE over live equality deletes = the same UPDATE after compaction") {
+    Seq("cow", "mor").foreach { mode =>
+      val got = sameAsCompacted(mode, s"eq_upd_$mode") { t =>
+        spark.sql(s"UPDATE graftrl.default.$t SET v = concat('x', v) " +
+          "WHERE k < 10 OR k BETWEEN 150 AND 165 OR k = 42")
+      }
+      assert(got(5L) == (("xu5", 5.5)) && got(150L) == (("xu150", 150.5)))
+      assert(!got.contains(7L) && !got.contains(160L) && !got.contains(42L))
+      assert(got(6L) == (("xv6", 6.0)) && got.size == 297, mode)
+    }
+  }
+
+  test("MERGE INTO over live equality deletes = the same MERGE after " +
+      "compaction") {
+    spark.sql(
+      """SELECT id AS k, concat('m', id) AS v, CAST(-1 AS DOUBLE) AS amt,
+        |  id IN (150, 151) AS del
+        |FROM VALUES (5), (7), (150), (151), (160), (250), (1000) AS s(id)
+        |""".stripMargin).createOrReplaceTempView("eq_mrg_src")
+    Seq("cow", "mor").foreach { mode =>
+      val got = sameAsCompacted(mode, s"eq_mrg_$mode") { t =>
+        spark.sql(
+          s"""MERGE INTO graftrl.default.$t AS t USING eq_mrg_src AS s
+             |ON t.k = s.k
+             |WHEN MATCHED AND s.del THEN DELETE
+             |WHEN MATCHED THEN UPDATE SET v = s.v, amt = s.amt
+             |WHEN NOT MATCHED AND NOT s.del THEN
+             |  INSERT (k, v, amt) VALUES (s.k, s.v, s.amt)
+             |""".stripMargin)
+      }
+      // a tombstoned key inserts; an upserted key updates its live row
+      assert(got(7L) == (("m7", -1.0)) && got(160L) == (("m160", -1.0)))
+      assert(got(5L) == (("m5", -1.0)) && got(250L) == (("m250", -1.0)))
+      assert(!got.contains(150L) && !got.contains(151L))
+      assert(got(1000L) == (("m1000", -1.0)) && got.size == 298, mode)
+    }
+  }
+
+  test("rewrite-path DELETE over live equality deletes = the same DELETE " +
+      "after compaction") {
+    Seq("cow", "mor").foreach { mode =>
+      val got = sameAsCompacted(mode, s"eq_del_$mode") { t =>
+        spark.sql(s"DELETE FROM graftrl.default.$t " +
+          "WHERE k IN (SELECT id FROM range(0, 300) WHERE id % 50 = 0 " +
+          "OR id IN (5, 7))")
+      }
+      assert(!got.contains(5L) && !got.contains(150L) &&
+        !got.contains(250L) && !got.contains(7L))
+      assert(got(6L) == (("v6", 6.0)) && got.size == 290, mode)
+    }
+  }
+
+  test("Layout.mergeInto over live equality deletes = the same merge " +
+      "after compaction") {
+    import spark.implicits._
+    val src = Seq((5L, "g5", 1.0, false), (7L, "g7", 1.0, false),
+      (160L, "g160", 1.0, true), (250L, "g250", 1.0, true),
+      (151L, "g151", 1.0, false), (2000L, "g2000", 1.0, false))
+      .toDF("k", "v", "amt", "gone")
+    Seq("cow", "mor").foreach { mode =>
+      val got = sameAsCompacted(mode, s"eq_lmrg_$mode") { t =>
+        ops.Layout.mergeInto(spark, tablePath(t), src, "k",
+          deleteWhen = Some($"gone"))
+      }
+      assert(got(5L) == (("g5", 1.0)) && got(7L) == (("g7", 1.0)))
+      assert(!got.contains(160L) && !got.contains(250L))
+      assert(got(151L) == (("g151", 1.0)) && got(2000L) == (("g2000", 1.0)))
+      assert(got.size == 298, mode)
+    }
+  }
+
+  test("without GraftExtensions, SELECT * and count(*) of an " +
+      "equality-upserted table = readSnapshot") {
+    makeEqTable("eq_plain", "mor")
+    val plain = {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      SparkSession.builder().getOrCreate()
+    }
+    try {
+      plain.conf.set("spark.sql.catalog.graftplain", "graft.sql.GraftCatalog")
+      plain.conf.set("spark.sql.catalog.graftplain.warehouse", wh)
+      // no per-file dispatch split the read: the row-based scan serves it
+      val all = plain.sql("SELECT * FROM graftplain.default.eq_plain")
+      assert(all.queryExecution.executedPlan.toString
+        .contains("graft-cow-scan"), all.queryExecution.executedPlan)
+      val expected = ops.Layout.readSnapshot(plain, tablePath("eq_plain"))
+      assert(all.collect().map(_.toString).sorted.toSeq ==
+        expected.collect().map(_.toString).sorted.toSeq)
+      assert(plain.sql("SELECT count(*) FROM graftplain.default.eq_plain")
+        .head.getLong(0) == expected.count())
+      assert(expected.count() == 300 - 2 - 1)
+    } finally {
+      SparkSession.setActiveSession(spark)
+      SparkSession.setDefaultSession(spark)
+    }
+  }
 }

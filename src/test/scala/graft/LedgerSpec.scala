@@ -275,7 +275,8 @@ class LedgerSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     // anti-joins keyed (file, enclosing member), each with its reason;
     // a delete mask joined against its sidecars costs a broadcast job
-    // per sidecar read — masks go through Layout.morMask instead
+    // per sidecar read — masks go through Layout.maskSpec instead (the
+    // SQL layer included: its row-based scan masks in the task too)
     val allowed = Map(
       ("graft/ops/layout/RowLevel.scala", "mergeInto") ->
         ("MERGE's own semantics: source keys absent from the target " +
@@ -288,8 +289,9 @@ class LedgerSpec extends AnyFunSuite {
       finally ls.close()
     }
     val sources = scalaFiles("graft/ops/layout") ++
-      scalaFiles("graft/streaming")
+      scalaFiles("graft/sql") ++ scalaFiles("graft/streaming")
     assert(sources.count(_.startsWith("graft/ops/layout/")) >= 7 &&
+      sources.contains("graft/sql/GraftRowLevel.scala") &&
       sources.contains("graft/streaming/ManifestStream.scala"),
       s"guard lost its source files: $sources")
     // a join-type string literal in code (comments blanked), or
@@ -304,11 +306,40 @@ class LedgerSpec extends AnyFunSuite {
     }.distinct
     val unlisted = sites.filterNot(allowed.contains)
     assert(unlisted.isEmpty,
-      "anti-join in the layout or streaming code — a merge-on-read mask " +
-        "must apply in the scan task (Layout.morMask), or allow-list the " +
+      "anti-join in the layout, SQL or streaming code — a merge-on-read " +
+        "mask must apply in the scan task (Layout.maskSpec), or allow-list the " +
         s"join with a reason: ${unlisted.mkString("; ")}")
     val stale = allowed.keySet -- sites
     assert(stale.isEmpty, s"allow-list names anti-joins that are gone: $stale")
+  }
+
+  test("one merge-on-read mask: MorMask.Spec is built only by " +
+      "Layout.maskSpec") {
+    import scala.jdk.CollectionConverters._
+    // every read — DataFrame, streaming, the SQL row-based scan — masks
+    // through the spec Layout.maskSpec builds; a second construction
+    // site is a second copy of the mask rule
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = {
+      val w = java.nio.file.Files.walk(root)
+      try w.iterator().asScala.map(f => root.relativize(f).toString)
+        .filter(_.endsWith(".scala")).toSeq.sorted
+      finally w.close()
+    }
+    assert(files.exists(_.startsWith("graft/sql/")) &&
+      files.contains("graft/ops/layout/Reads.scala"),
+      s"guard lost its source files: ${files.size}")
+    val built =
+      """\bnew\s+(?:(?:graft\.functions\.)?MorMask\s*\.\s*)?Spec\b""".r
+    val sites = files.flatMap { rel =>
+      val code = ParquetCalls.codeOnly(new String(
+        java.nio.file.Files.readAllBytes(root.resolve(rel)),
+        java.nio.charset.StandardCharsets.UTF_8))
+      built.findAllMatchIn(code)
+        .map(m => (rel, ParquetCalls.enclosing(code, m.start)))
+    }
+    assert(sites == Seq(("graft/ops/layout/Reads.scala", "maskSpec")),
+      s"MorMask.Spec built outside Layout.maskSpec: $sites")
   }
 
   test("session conf writes in src/main are allow-listed; AQE and the " +

@@ -4,18 +4,22 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual}
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Layout
 
 /** Pins the in-task merge-on-read mask ([[graft.functions.MorMask]]):
-  * every masked read returns exactly the rows of the anti-join form it
-  * replaced — kept here as the oracle — for position deletes, equality
-  * deletes and both; nested equality sets; int-then-long, string,
-  * floating (NaN, -0.0) and NULL keys; several sidecars per file and
-  * one sidecar over several files; a pushed-down filter that skips row
-  * groups; a renamed column of an id-mapped table. And a masked read is
-  * one Spark job at any sidecar count. */
+  * every masked read — the DataFrame read core and the row-based SQL
+  * scan ([[graft.sql.GraftCowScan]], whose `_pos` must equal
+  * `_metadata.row_index`) — returns exactly the rows of the anti-join
+  * form it replaced — kept here as the oracle — for position deletes,
+  * equality deletes and both; nested equality sets; int-then-long,
+  * string, floating (NaN, -0.0) and NULL keys; several sidecars per file
+  * and one sidecar over several files; a pushed-down filter that skips
+  * row groups; a renamed column of an id-mapped table. And a masked read
+  * is one Spark job at any sidecar count. */
 class MorMaskSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -50,24 +54,26 @@ class MorMaskSpec extends AnyFunSuite {
   /** The anti-join form masked reads used before the in-task mask: the
     * position sidecars of the dv'd lines anti-joined on (grp, pos), then
     * each distinct equality-delete set anti-joined on its key columns
-    * under its key files' footers widened into one schema. */
-  private def antiJoinRead(t: String, lines: Seq[String]): DataFrame = {
+    * under its key files' footers widened into one schema. Each row
+    * carries its file's name and `_metadata.row_index` as `__name` and
+    * `__pos`. */
+  private def antiJoinRows(t: String, lines: Seq[String]): DataFrame = {
     val schema = Layout.versionSchema(spark, t, Some(head(t))).get
     Layout.ensureFieldIdRead(spark, schema)
     def read(ls: Seq[String]) =
       spark.read.schema(schema).parquet(ls.map(l => abs(t, relOf(l))): _*)
+        .withColumn("__grp",
+          substring_index(col("_metadata.file_path"), "/", -2))
+        .withColumn("__name",
+          substring_index(col("_metadata.file_path"), "/", -1))
+        .withColumn("__pos", col("_metadata.row_index"))
     def dvApplied(ls: Seq[String]): DataFrame = {
       val (dvLines, plain) = ls.partition(l => Layout.entryDvs(l).nonEmpty)
       if (dvLines.isEmpty) return read(plain)
       val del = Layout.readSidecars(spark,
           dvLines.flatMap(Layout.entryDvs).distinct.map(abs(t, _)))
         .select(col("grp").as("__grp"), col("pos").as("__pos"))
-      val masked = read(dvLines)
-        .withColumn("__grp",
-          substring_index(col("_metadata.file_path"), "/", -2))
-        .withColumn("__pos", col("_metadata.row_index"))
-        .join(del, Seq("__grp", "__pos"), "left_anti")
-        .drop("__grp", "__pos")
+      val masked = read(dvLines).join(del, Seq("__grp", "__pos"), "left_anti")
       if (plain.isEmpty) masked else masked.unionByName(read(plain))
     }
     lines.groupBy(l => Layout.entryEqs(l).toSet).toSeq.map {
@@ -85,6 +91,42 @@ class MorMaskSpec extends AnyFunSuite {
     }.reduce(_ unionByName _)
   }
 
+  private def antiJoinRead(t: String, lines: Seq[String]): DataFrame =
+    antiJoinRows(t, lines).drop("__grp", "__name", "__pos")
+
+  /** `lines` read through the row-based SQL scan with `_file` and `_pos`
+    * requested and `pushed` handed to parquet: the data columns, the
+    * file's name as `__name`, `_pos` as `__pos`. The readers run here,
+    * one per file, as a scan task would run them. */
+  private def rowScanRead(t: String, lines: Seq[String],
+      pushed: Seq[Filter]): DataFrame = {
+    val schema = ColumnBridge.nullableSchema(
+      Layout.versionSchema(spark, t, Some(head(t))).get)
+    Layout.ensureFieldIdRead(spark, schema)
+    val entries = lines.map { l =>
+      val p = fs.makeQualified(new Path(t, relOf(l)))
+      (l, p.toString, fs.getFileStatus(p).getLen)
+    }
+    val scan = new graft.sql.GraftCowScan(t, entries, schema,
+      schema.add("_file", StringType).add("_pos", LongType), pushed.toArray,
+      "spec")
+    val out = scan.readSchema()
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(out)
+    val factory = scan.createReaderFactory()
+    val got = scan.planInputPartitions().toSeq.flatMap { p =>
+      val r = factory.createReader(p)
+      try Iterator.continually(r).takeWhile(_.next())
+        .map(r => toRow(r.get()).asInstanceOf[org.apache.spark.sql.Row])
+        .toList
+      finally r.close()
+    }
+    spark.createDataFrame(java.util.Arrays.asList(got: _*), out)
+      .withColumn("__name", substring_index(col("_file"), "/", -1))
+      .withColumnRenamed("_pos", "__pos")
+      .drop("_file")
+  }
+
   private def maskedRead(t: String, lines: Seq[String]): DataFrame = {
     val root = new Path(t)
     Layout.readManifestLines(spark, fs, root, head(t), lines)
@@ -93,13 +135,19 @@ class MorMaskSpec extends AnyFunSuite {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
 
-  /** The masked read of `lines` equals the oracle's, and is not empty. */
+  /** The masked read of `lines` equals the oracle's, and is not empty;
+    * so does their read through the row-based SQL scan (`pushed` handed
+    * to parquet), its `_pos` included. */
   private def sameAsOracle(t: String, lines: Seq[String] = Nil,
-      where: Column = lit(true)): Seq[String] = {
+      where: Column = lit(true), pushed: Seq[Filter] = Nil): Seq[String] = {
     val ls = if (lines.isEmpty) headLines(t) else lines
     val got = rows(maskedRead(t, ls).where(where))
     assert(got == rows(antiJoinRead(t, ls).where(where)))
     assert(got.nonEmpty, "fixture masks every row")
+    val scanned = rowScanRead(t, ls, pushed).where(where)
+    assert(rows(scanned) == rows(antiJoinRows(t, ls).where(where)
+      .select(scanned.columns.toSeq.map(col): _*)),
+      "the row-based SQL scan masks (or numbers its rows) differently")
     got
   }
 
@@ -283,7 +331,8 @@ class MorMaskSpec extends AnyFunSuite {
     try assert(groups.getRowGroups.size > 2, "one row group only")
     finally groups.close()
     Layout.deleteWhere(spark, t, col("k") % 3 === 0)
-    val got = sameAsOracle(t, where = col("k") >= 5000L)
+    val got = sameAsOracle(t, where = col("k") >= 5000L,
+      pushed = Seq(GreaterThanOrEqual("k", 5000L)))
     assert(got.size == (5000 until 6000).count(_ % 3 != 0))
   }
 

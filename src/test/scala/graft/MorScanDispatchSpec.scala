@@ -64,8 +64,10 @@ class MorScanDispatchSpec extends AnyFunSuite {
     makeMor(t)
     // position-delete k in [0, 10): dv lands on the FIRST file only
     spark.sql(s"DELETE FROM gmor.default.$t WHERE k < 10")
-    assert(ops.Layout.versionDvs(spark, tablePath(t),
-      ops.Layout.history(spark, tablePath(t)).map(_._1).max).nonEmpty,
+    val root = new Path(tablePath(t))
+    assert(ops.Layout.versionMasks(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root,
+      ops.Layout.history(spark, tablePath(t)).map(_._1).max)._1,
       "precondition: the DELETE must have produced a deletion vector")
 
     val df = spark.sql(s"SELECT k, v FROM gmor.default.$t")
@@ -173,10 +175,10 @@ class MorScanDispatchSpec extends AnyFunSuite {
   }
 
   test("SQL read of an equality-upserted snapshot serves through the dispatch") {
-    // r19: equality deletes mask by KEY — only the dispatch rewrite
-    // (readManifestLines' anti-join branch) can apply them; the
-    // fallback row scan refuses. With extensions on, plain SQL must
-    // serve the post-upsert state exactly.
+    // r19: equality deletes mask by KEY — the dispatch rewrite's masked
+    // branch (readManifestLines' in-task mask) applies them, as the
+    // row-based scan does without extensions. With extensions on, plain
+    // SQL must serve the post-upsert state exactly.
     val t = "equ"
     makeMor(t)
     import spark.implicits._
@@ -217,17 +219,25 @@ class MorScanDispatchSpec extends AnyFunSuite {
     makeMor(t)
     spark.sql(s"DELETE FROM gmor.default.$t WHERE k < 10 OR k >= 290")
     val v = ops.Layout.history(spark, tablePath(t)).map(_._1).max
-    var dvs = Map.empty[String, Array[Long]]
+    val root = new Path(tablePath(t))
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     var df: DataFrame = null
     val jobs = JobCount.during(spark, "dispatch-plan") {
-      dvs = ops.Layout.versionDvs(spark, tablePath(t), v)
+      // the row-based scan's mask, as its reader factory builds it
+      ops.Layout.linesMaskSpec(spark, fs, root,
+        ops.Layout.versionSchema(spark, tablePath(t), Some(v)).get,
+        ops.Layout.manifestLinesOf(spark, tablePath(t), v))
       df = spark.sql(s"SELECT k, v FROM gmor.default.$t")
       df.queryExecution.executedPlan
     }
-    assert(jobs == 0, s"versionDvs + planning scheduled $jobs job(s)")
-    // the first file's first ten ordinals, the last file's last ten
-    assert(dvs.values.map(_.toSeq).toSet ==
-      Set(0L until 10L, 90L until 100L), dvs.view.mapValues(_.toSeq).toMap)
+    assert(jobs == 0, s"mask build + planning scheduled $jobs job(s)")
+    // the first file's first ten ordinals, the last file's last ten:
+    // exactly the row ids a `_file`/`_pos` scan no longer serves
+    val missing = spark.sql(s"SELECT _file, _pos FROM gmor.default.$t")
+      .collect().groupBy(_.getString(0)).values
+      .map(rs => (0L until 100L).filterNot(rs.map(_.getLong(1)).toSet))
+      .filter(_.nonEmpty).toSet
+    assert(missing == Set(0L until 10L, 90L until 100L), missing)
     assert(df.count() == 280)
   }
 }
