@@ -5,7 +5,7 @@ import java.util.OptionalLong
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, GenericInternalRow, JoinedRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, GenericInternalRow, JoinedRow, Predicate => CatalystPredicate, UnsafeProjection}
 import org.apache.spark.sql.connector.catalog.MetadataColumn
 import org.apache.spark.sql.connector.expressions.{Expressions, Literal => V2Literal, NamedReference}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
@@ -163,14 +163,18 @@ class GraftRowLevelOperation(
 /** Standard v1-filter pushdown + column pruning; `_file`/`_pos` are
   * synthesized by the reader, everything else flows to the parquet
   * machinery. Shared by the COW and the delta (merge-on-read) row-level
-  * operations — `register` lets the COW op capture its commit scan. */
+  * operations — `register` lets the COW op capture its commit scan;
+  * `wholeGroups` marks the COW op's scans, which push nothing to
+  * parquet. */
 class GraftCowScanBuilder(table: String, entries: Seq[(String, String, Long)],
     tableSchema: StructType, label: String,
-    register: GraftCowScan => Unit) extends ScanBuilder
+    register: GraftCowScan => Unit, wholeGroups: Boolean = false)
+    extends ScanBuilder
     with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
 
   def this(op: GraftRowLevelOperation) = this(op.tablePath, op.entries,
-    op.tableSchema, s"${op.tablePath}@v${op.pinnedVersion}", op.registerScan)
+    op.tableSchema, s"${op.tablePath}@v${op.pinnedVersion}", op.registerScan,
+    wholeGroups = true)
 
   private var required: StructType = tableSchema
   private var pushed: Array[Filter] = Array.empty
@@ -181,9 +185,13 @@ class GraftCowScanBuilder(table: String, entries: Seq[(String, String, Long)],
   /** Filters over data columns push to parquet (row-group pruning);
     * everything is ALSO kept as residual (returned array) so Spark
     * re-evaluates — the parquet push is best-effort, the double
-    * evaluation is the standard file-source contract. */
+    * evaluation is the standard file-source contract. A group-based
+    * (copy-on-write) scan pushes none: Spark hands it the command's
+    * condition, yet the rewrite must read EVERY row of each file it
+    * replaces, and parquet's row-group skipping would drop the
+    * non-matching rows from the rewritten file. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(_.references.forall(r =>
+    if (!wholeGroups) pushed = filters.filter(_.references.forall(r =>
       r != GraftRowLevel.FileColumnName && r != GraftRowLevel.PosColumnName))
     filters
   }
@@ -284,8 +292,9 @@ class GraftCowScan(table: String, entries: Seq[(String, String, Long)],
     * [[MorMaskExpr]] — the same mask and spec builder every DataFrame
     * read uses — keyed on Spark's own parquet row index, which also
     * serves `_pos`. Key columns the plan pruned are read for the mask
-    * and projected away. Pushed filters apply everywhere: the row index
-    * stays exact when parquet skips row groups. */
+    * and projected away. Pushed filters (a copy-on-write rewrite has
+    * none) apply to masked files too: the row index stays exact when
+    * parquet skips row groups. */
   override def createReaderFactory(): PartitionReaderFactory = {
     val spark = SparkSession.active
     val masked = files.map(_._1).filter(l =>
@@ -315,9 +324,11 @@ class GraftCowScan(table: String, entries: Seq[(String, String, Long)],
         case (c, d, t) => if (d == t) refOf(c) else Cast(refOf(c), t, Some(tz))
       }, spec)
     }
-    val out = dataRequired.indices.map(ref) ++
-      (if (wantsFile) Seq(ref(read.size + 1)) else Nil) ++
-      (if (wantsPos) Seq(ref(read.size - 1)) else Nil)
+    // None: the read rows are the output as they are
+    val out = if (read == dataRequired && !wantsFile) None
+      else Some(dataRequired.indices.map(ref) ++
+        (if (wantsFile) Seq(ref(read.size + 1)) else Nil) ++
+        (if (wantsPos) Seq(ref(read.size - 1)) else Nil))
     GraftCowReaderFactory(ColumnBridge.parquetReaderFunc(spark,
       tableSchema, read, pushedFilters.toSeq, Map.empty), keep, out)
   }
@@ -336,30 +347,37 @@ case class GraftCowInputPartition(path: String, length: Long)
   extends InputPartition
 
 /** Executor-side: parquet-read one file, keep the rows `keep` passes
-  * and project `out` — both bound to the read row followed by the
-  * file's (url-encoded path, `_file` value). */
+  * (code-generated) and project `out` — both bound to the read row
+  * followed by the file's (url-encoded path, `_file` value). Without
+  * either, the parquet rows pass through as they are. */
 case class GraftCowReaderFactory(
     readFunc: org.apache.spark.sql.execution.datasources.PartitionedFile =>
       Iterator[InternalRow],
     keep: Option[Expression],
-    out: Seq[Expression])
+    out: Option[Seq[Expression]])
   extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition)
       : PartitionReader[InternalRow] = {
     val gp = p.asInstanceOf[GraftCowInputPartition]
     val pf = ColumnBridge.partitionedFile(gp.path, gp.length)
-    val file = new GenericInternalRow(Array[Any](
-      UTF8String.fromString(pf.urlEncodedPath),
-      UTF8String.fromString(gp.path)))
-    val joined = new JoinedRow
-    val rows = readFunc(pf).map(joined(_, file))
-    val it = keep.fold(rows)(k => rows.filter(k.eval(_).asInstanceOf[Boolean]))
-    val project = UnsafeProjection.create(out)
+    val rows = readFunc(pf)
+    val it = if (keep.isEmpty && out.isEmpty) rows else {
+      val file = new GenericInternalRow(Array[Any](
+        UTF8String.fromString(pf.urlEncodedPath),
+        UTF8String.fromString(gp.path)))
+      val joined = new JoinedRow
+      val withFile: Iterator[InternalRow] = rows.map(joined(_, file))
+      val kept = keep.fold(withFile) { k =>
+        val pred = CatalystPredicate.create(k)
+        withFile.filter(pred.eval)
+      }
+      out.fold(kept)(o => kept.map(UnsafeProjection.create(o)))
+    }
     new PartitionReader[InternalRow] {
       private var row: InternalRow = _
       override def next(): Boolean =
-        if (it.hasNext) { row = project(it.next()); true } else false
+        if (it.hasNext) { row = it.next(); true } else false
       override def get(): InternalRow = row
       override def close(): Unit = ()
     }
