@@ -108,14 +108,15 @@ private[ops] trait RowLevel { this: Layout.type =>
     * data columns + `__grp` (the file's position-delete group key) +
     * `__pos` (its 0-based row ordinal) — what a MOR write needs to
     * record the matched positions. Position deletes mask in the scan
-    * task ([[linesMask]]); equality deletes do not apply here. */
+    * task ([[linesMask]]); equality deletes only with `withEqs`. */
   private def readLinesPos(spark: SparkSession, fs: FileSystem,
-      root: Path, v: Int, lines: Seq[String]): DataFrame = {
+      root: Path, v: Int, lines: Seq[String],
+      withEqs: Boolean = false): DataFrame = {
     val frame = readVersionFiles(spark, fs, root, v,
       lines.map(l => new Path(root, entryPath(l)).toString))
-    (if (lines.forall(entryDvs(_).isEmpty)) frame
-     else frame.where(linesMask(spark, fs, root, frame, lines,
-       withEqs = false)))
+    (if (lines.forall(l => entryDvs(l).isEmpty &&
+        (!withEqs || entryEqs(l).isEmpty))) frame
+     else frame.where(linesMask(spark, fs, root, frame, lines, withEqs)))
       .withColumn("__grp",
         substring_index(col("_metadata.file_path"), "/", -2))
       .withColumn("__pos", col("_metadata.row_index"))
@@ -536,11 +537,14 @@ private[ops] trait RowLevel { this: Layout.type =>
     try {
       val files = manifestFiles(fs, root, v0)
       val abs = files.map(l => l -> new Path(root, entryPath(l)).toString)
-      val snap = readVersionFiles(spark, fs, root, v0, abs.map(_._2))
+      // the LIVE rows (position and equality deletes masked): a source
+      // key whose only target rows are deleted affects no file and
+      // inserts
+      val snapLive = readManifestLines(spark, fs, root, v0, files)
       // the source may carry EXTRA columns (e.g. the deleteWhen
       // marker); only the table's columns flow into updates/inserts —
       // but it must cover all of them
-      val tcols = snap.columns.toSeq
+      val tcols = snapLive.columns.toSeq
       require(tcols.forall(src.columns.contains),
         "mergeInto: source must carry every table column; missing: " +
           tcols.filterNot(src.columns.contains).mkString(", "))
@@ -564,7 +568,7 @@ private[ops] trait RowLevel { this: Layout.type =>
       val uniq = src.agg(count(lit(1)).as("n"),
         countDistinct(col(key)).as("k"),
         count(when(col(key).isNull, 1)).as("nulls"))
-      val affectedNames = snap
+      val affectedNames = snapLive
         .select(col(key), input_file_name().as("__f"))
         .join(src.select(col(key)), Seq(key), "left_semi")
         .select(col("__f")).distinct()
@@ -610,7 +614,6 @@ private[ops] trait RowLevel { this: Layout.type =>
       // re-bought the same rows for one number). Single evaluation also
       // makes the r21 determinism concern moot, and the SOURCE stays
       // persisted above, pinning any nondeterminism where it can arise.
-      val snapLive = readManifestLines(spark, fs, root, v0, files)
       val inserts = upSrc.select(tcols.map(col): _*)
         .join(snapLive.select(col(key)), Seq(key), "left_anti")
       val insObs = org.apache.spark.sql.Observation()
@@ -631,7 +634,7 @@ private[ops] trait RowLevel { this: Layout.type =>
             if (affLines.isEmpty)
               (Seq.empty[(String, Long)], Map.empty[String, Seq[String]])
             else stageDv(spark, fs, root,
-              readLinesPos(spark, fs, root, v0, affLines)
+              readLinesPos(spark, fs, root, v0, affLines, withEqs = true)
                 .join(src.select(col(key)), Seq(key), "left_semi")
                 .select(col("__grp").as("grp"), col("__pos").as("pos")))
           try {

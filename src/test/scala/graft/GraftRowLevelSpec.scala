@@ -415,6 +415,87 @@ class GraftRowLevelSpec extends AnyFunSuite {
     }
   }
 
+  test("UPDATE and DELETE keep every row of a multi-row-group file " +
+      "that carries deletes") {
+    import spark.implicits._
+    Seq("cow", "mor").foreach { mode =>
+      val t = s"row_groups_$mode"
+      spark.sql(s"DROP TABLE IF EXISTS graftrl.default.$t")
+      spark.sql(s"""CREATE TABLE graftrl.default.$t
+                   |  (k BIGINT, v STRING, amt DOUBLE)
+                   |TBLPROPERTIES ('graft.rowlevel.mode' = 'mor')"""
+        .stripMargin)
+      spark.conf.set("parquet.block.size", "4096")
+      try spark.sql(
+        s"""INSERT INTO graftrl.default.$t
+           |SELECT /*+ REPARTITION(1) */ id AS k, concat('v', id) AS v,
+           |  CAST(id AS DOUBLE) AS amt
+           |FROM range(0, 6000, 1, 1)""".stripMargin)
+      finally spark.conf.unset("parquet.block.size")
+      val groups = snapFiles(t).map { f =>
+        val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new Path(f), spark.sparkContext.hadoopConfiguration))
+        try footer.getRowGroups.size finally footer.close()
+      }
+      assert(groups.max > 2, "one row group only")
+      // a position and an equality delete on the file
+      spark.sql(s"DELETE FROM graftrl.default.$t WHERE k = 42")
+      ops.Layout.upsertByKeys(spark, tablePath(t), Seq(7L).toDF("k"), "k",
+        deleteOnly = true)
+      spark.sql(s"ALTER TABLE graftrl.default.$t SET TBLPROPERTIES " +
+        s"('graft.rowlevel.mode' = '$mode')")
+      assert(masksOf(t) == ((true, true)))
+      // each condition holds in one row group only; the untranslatable
+      // conjunct keeps the DELETE off the metadata-only path
+      spark.sql(s"UPDATE graftrl.default.$t SET v = 'x' WHERE k = 5000")
+      spark.sql(s"DELETE FROM graftrl.default.$t " +
+        "WHERE k = 5001 AND length(v) > 0")
+      val expected = (0L until 6000L).filterNot(Set(7L, 42L, 5001L))
+        .map(k => (k, if (k == 5000L) "x" else s"v$k", k.toDouble))
+      assert(allRows(t) == expected, mode)
+      assert(ops.Layout.readSnapshot(spark, tablePath(t))
+        .select("k", "v", "amt").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
+        .toSeq.sorted == expected, mode)
+    }
+  }
+
+  test("Layout.mergeInto: a source key whose target rows are all deleted " +
+      "affects no file") {
+    import spark.implicits._
+    Seq("cow", "mor").foreach { mode =>
+      val t = s"eq_dead_$mode"
+      makeEqTable(t, mode)
+      // dv positions over the head's sidecars
+      def positions: Long = {
+        val root = new Path(tablePath(t))
+        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val dvs = ops.Layout.manifestLinesOf(spark, tablePath(t),
+          ops.Layout.currentVersion(fs, root))
+          .flatMap(ops.Layout.entryDvs).distinct
+        if (dvs.isEmpty) 0L
+        else spark.read.parquet(dvs.map(new Path(root, _).toString): _*)
+          .count()
+      }
+      // k 160 is tombstoned: the merge only inserts it
+      val (_, rewritten, inserted) = ops.Layout.mergeInto(spark,
+        tablePath(t), Seq((160L, "g160", 1.0)).toDF("k", "v", "amt"), "k")
+      assert(rewritten == 0 && inserted == 1, mode)
+      // beside live k 8 of the same file, tombstoned k 7 inserts and its
+      // dead row takes no position delete
+      val before = positions
+      val (_, rewritten2, inserted2) = ops.Layout.mergeInto(spark,
+        tablePath(t), Seq((7L, "g7", 1.0), (8L, "g8", 1.0))
+          .toDF("k", "v", "amt"), "k")
+      assert(rewritten2 == 1 && inserted2 == 1, mode)
+      if (mode == "mor") assert(positions == before + 1)
+      val got = allRows(t).map { case (k, v, a) => k -> ((v, a)) }.toMap
+      assert(got(7L) == (("g7", 1.0)) && got(8L) == (("g8", 1.0)) &&
+        got(160L) == (("g160", 1.0)) && got.size == 300 - 3 + 2, mode)
+    }
+  }
+
   test("without GraftExtensions, SELECT * and count(*) of an " +
       "equality-upserted table = readSnapshot") {
     makeEqTable("eq_plain", "mor")
