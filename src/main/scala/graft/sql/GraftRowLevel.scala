@@ -312,7 +312,7 @@ class GraftCowScan(table: String, entries: Seq[(String, String, Long)],
     val rowIndex = if (mask.isEmpty && !wantsPos) Nil else Seq(StructField(
       ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType))
     val read = StructType(dataRequired ++ keyFields ++ rowIndex)
-    // read row ++ (url-encoded file path, `_file` value)
+    // read row ++ (`_file` value, url-encoded file path)
     def ref(i: Int): Expression =
       BoundReference(i, if (i < read.size) read(i).dataType else StringType,
         nullable = true)
@@ -320,17 +320,18 @@ class GraftCowScan(table: String, entries: Seq[(String, String, Long)],
       ref(read.fields.indexWhere(_.name.equalsIgnoreCase(c)))
     val tz = spark.conf.get("spark.sql.session.timeZone")
     val keep = mask.map { case (spec, _) =>
-      MorMaskExpr(Seq(ref(read.size), ref(read.size - 1)) ++ keys.map {
+      MorMaskExpr(Seq(ref(read.size + 1), ref(read.size - 1)) ++ keys.map {
         case (c, d, t) => if (d == t) refOf(c) else Cast(refOf(c), t, Some(tz))
       }, spec)
     }
-    // None: the read rows are the output as they are
-    val out = if (read == dataRequired && !wantsFile) None
+    // None: the read rows, `_file` appended when wanted, are the output
+    val out = if (read == dataRequired) None
       else Some(dataRequired.indices.map(ref) ++
-        (if (wantsFile) Seq(ref(read.size + 1)) else Nil) ++
+        (if (wantsFile) Seq(ref(read.size)) else Nil) ++
         (if (wantsPos) Seq(ref(read.size - 1)) else Nil))
     GraftCowReaderFactory(ColumnBridge.parquetReaderFunc(spark,
-      tableSchema, read, pushedFilters.toSeq, Map.empty), keep, out)
+      tableSchema, read, pushedFilters.toSeq, Map.empty), keep, out,
+      wantsFile)
   }
 
   override def estimateStatistics(): Statistics = new Statistics {
@@ -348,13 +349,15 @@ case class GraftCowInputPartition(path: String, length: Long)
 
 /** Executor-side: parquet-read one file, keep the rows `keep` passes
   * (code-generated) and project `out` — both bound to the read row
-  * followed by the file's (url-encoded path, `_file` value). Without
-  * either, the parquet rows pass through as they are. */
+  * followed by the file's (`_file` value, url-encoded path). Without
+  * `out`, the parquet rows pass through uncopied, with the `_file` value
+  * appended when `wantsFile`. */
 case class GraftCowReaderFactory(
     readFunc: org.apache.spark.sql.execution.datasources.PartitionedFile =>
       Iterator[InternalRow],
     keep: Option[Expression],
-    out: Option[Seq[Expression]])
+    out: Option[Seq[Expression]],
+    wantsFile: Boolean)
   extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition)
@@ -362,17 +365,22 @@ case class GraftCowReaderFactory(
     val gp = p.asInstanceOf[GraftCowInputPartition]
     val pf = ColumnBridge.partitionedFile(gp.path, gp.length)
     val rows = readFunc(pf)
-    val it = if (keep.isEmpty && out.isEmpty) rows else {
-      val file = new GenericInternalRow(Array[Any](
-        UTF8String.fromString(pf.urlEncodedPath),
-        UTF8String.fromString(gp.path)))
-      val joined = new JoinedRow
-      val withFile: Iterator[InternalRow] = rows.map(joined(_, file))
-      val kept = keep.fold(withFile) { k =>
-        val pred = CatalystPredicate.create(k)
-        withFile.filter(pred.eval)
-      }
-      out.fold(kept)(o => kept.map(UnsafeProjection.create(o)))
+    val path = UTF8String.fromString(gp.path)
+    val joined = new JoinedRow
+    val it = out match {
+      case None if !wantsFile => rows
+      case None =>
+        val file = new GenericInternalRow(Array[Any](path))
+        rows.map(joined(_, file))
+      case Some(o) =>
+        val file = new GenericInternalRow(Array[Any](path,
+          UTF8String.fromString(pf.urlEncodedPath)))
+        val withFile: Iterator[InternalRow] = rows.map(joined(_, file))
+        val kept = keep.fold(withFile) { k =>
+          val pred = CatalystPredicate.create(k)
+          withFile.filter(pred.eval)
+        }
+        kept.map(UnsafeProjection.create(o))
     }
     new PartitionReader[InternalRow] {
       private var row: InternalRow = _
