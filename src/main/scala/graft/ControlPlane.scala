@@ -8,7 +8,7 @@ import org.apache.spark.sql.graft.ColumnBridge
 /** The one rule for CONTROL-PLANE actions — a verb-internal probe whose
   * driver-side result is bounded by file/commit counts, never by data
   * volume (a uniqueness aggregate, an affected-file-name collect, a
-  * limit(1) violation fetch, a per-file stats row): `ControlPlane(df)`
+  * limit(1) violation fetch): `ControlPlane(df)`
   * is `df` bound to a clone of its session with AQE off, so the action
   * taken on it plans without adaptive execution.
   *

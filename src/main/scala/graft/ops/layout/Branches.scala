@@ -187,10 +187,8 @@ private[ops] trait Branches { this: Layout.type =>
     val bHead = currentVersion(fs, root, chain)
     require(bHead > 0,
       s"no such branch '$name' on $table — create_branch first")
-    val bProps = propsOf(fs, root, bHead, chain)
-    val added = stageTxn(spark, fs, root, df, chain = chain)
-    val entries = withStats(spark, fs, root, added, statsColumns,
-      extraProps = bProps)
+    val entries = stageTxn(spark, fs, root, df, chain = chain,
+      statsColumns = statsColumns).map(_.line)
     casCommit(fs, root, s"appendBranch($name)", head =>
       manifestFiles(fs, root, head, chain) ++ entries,
       appendSchemaFor(fs, root, df, chain = chain),

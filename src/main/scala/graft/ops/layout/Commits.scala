@@ -1,16 +1,16 @@
 package graft.ops
 package layout
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.graft.{ColumnBridge, FileAggregate}
 import org.apache.spark.sql.types
 import graft.{ControlPlane, SizeTier}
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** The commit protocol: publish, the commit lock, the manifest CAS,
-  * transaction staging, the commit verbs, the schema DDL verbs, the
-  * transaction verbs and the per-file stats pass.
+  * transaction staging with its per-file statistics, the commit verbs,
+  * the schema DDL verbs and the transaction verbs.
   * Mixed into [[graft.ops.Layout]]. */
 private[ops] trait Commits { this: Layout.type =>
   /** Publish `tmp` as `dst` atomically-failing-if-`dst`-exists — the
@@ -431,17 +431,23 @@ private[ops] trait Commits { this: Layout.type =>
       headLines.filterNot(inputSet) ++ added
     }, head => schemaOf(fs, root, head)) // a rewrite never changes schema
 
-  /** Stage `df` into a fresh uuid'd data/txn-* dir and return its
-    * root-relative file (path, bytes) pairs — invisible until a manifest
-    * lists them. Sizes ride along from the one listStatus the staging
-    * already does, so recording them in manifest lines is free. */
+  /** Stage `df` into a fresh uuid'd data/txn-* dir — invisible until a
+    * manifest lists its files — and return each committed file with its
+    * manifest line. The line's statistics ([[commitStats]]: the union of
+    * `statsColumns` and what the table's props declare) are computed by
+    * the write task as the file is written, and its size comes from the
+    * one listStatus the staging already does: no commit reads back the
+    * files it staged. `fileAggs` are extra per-file aggregates whose
+    * values each [[Staged]] carries. */
   private[ops] def stageTxn(spark: SparkSession, fs: FileSystem, root: Path,
                        df: DataFrame,
                        createProps: Map[String, String] = Map.empty,
                        stamp: Boolean = true,
                        chain: String = "",
-                       allowNewIds: Boolean = false)
-      : Seq[(String, Long)] = {
+                       allowNewIds: Boolean = false,
+                       statsColumns: Seq[String] = Nil,
+                       fileAggs: Seq[Column] = Nil)
+      : Seq[Staged] = {
     val txn = new Path(root,
       "data/txn-" + java.util.UUID.randomUUID().toString)
     // id-mapped tables stamp field ids on EVERY staged DATA frame
@@ -449,7 +455,7 @@ private[ops] trait Commits { this: Layout.type =>
     // per-verb metadata plumbing, so a rewrite verb whose unionByName
     // dropped the metadata still stages correct footers. stamp = false
     // for internal sidecars (dv position files) that never read under
-    // the table schema.
+    // the table schema, and that record no statistics.
     val resolved = {
       val h = currentVersion(fs, root, chain)
       (h, if (h > 0) propsOf(fs, root, h, chain)
@@ -480,68 +486,102 @@ private[ops] trait Commits { this: Layout.type =>
     val bucketSpec = stagedProps.get(BucketByProp)
       .zip(stagedProps.get(BucketCountProp))
       .map { case (c, n) => (c, n.toInt) }
+    // the statistics follow the MAIN head's props, a branch's own props
+    // over them, and a CREATE's or layout rewrite's props over both
+    val stats =
+      if (!stamp) commitStats(spark, out.schema, Nil, Map.empty, fileAggs)
+      else commitStats(spark, out.schema, statsColumns,
+        (if (chain.isEmpty) Map.empty[String, String]
+         else propsOf(fs, root, currentVersion(fs, root))) ++ stagedProps,
+        fileAggs)
+    def write(frame: DataFrame, partitionBy: Seq[String]) =
+      FileAggregate.writeParquet(frame, txn.toString, partitionBy, stats.agg)
     // a user column that collides with the fanout's duplicated-column
     // names would be silently dropped by the dynamic writer — fall back
     // to the plain write (the invariant is an optimization, data is not)
     val fanoutSafe = !out.columns.exists(_.startsWith("__gp_"))
-    if (stamp && fanoutSafe &&
-        bucketSpec.exists(b => out.columns.contains(b._1))) {
-      // bucket layout: repartition INTO the buckets first (≈N tasks,
-      // each holding whole buckets — without this, every task would
-      // fan a file into every bucket: tasks × N files per commit),
-      // then the same per-value fanout writer
-      val (c, n) = bucketSpec.get
-      val bexpr = bucketPlacementExpr(out.schema, c, n)
-      val fan = out.repartition(n, bexpr).withColumn("__gp_bucket", bexpr)
-      // r22 (guide §7 driver dwell): AQE cannot improve THIS write — the
-      // shuffle width is an explicit repartition(n) that AQE never
-      // coalesces, so adaptivity's only remaining levers (join demotion,
-      // skew splits) live BELOW the repartition and only matter when the
-      // staged frame is big. Below a plan-stats ceiling the write runs
-      // AQE-off: the per-commit shuffle-materialization job + replan
-      // disappear (the r22 StageProbe measured 3 scheduled jobs per
-      // bucket commit, 2 of them AQE machinery), and the file layout is
-      // bit-identical because the partitioning was never adaptive here
-      // to begin with. Above SizeTier.LocalBytes (warehouse scale) AQE
-      // stays on.
-      val localWrite = SizeTier.small(out, SizeTier.LocalBytes)
-      (if (localWrite) ControlPlane(fan) else fan)
-        .write.mode("overwrite").partitionBy("__gp_bucket")
-        .parquet(txn.toString)
-      flattenStagedDirs(fs, txn)
-    } else if (stamp && fanoutSafe && partCols.nonEmpty &&
-        partCols.forall(out.columns.contains)) {
-      val dups = partCols.map(c => s"__gp_$c")
-      val fan = partCols.zip(dups).foldLeft(out) {
-        case (d, (c, g)) => d.withColumn(g, col(c))
-      }
-      fan.write.mode("overwrite").partitionBy(dups: _*).parquet(txn.toString)
-      flattenStagedDirs(fs, txn)
-    } else out.write.mode("overwrite").parquet(txn.toString)
+    val written =
+      if (stamp && fanoutSafe &&
+          bucketSpec.exists(b => out.columns.contains(b._1))) {
+        // bucket layout: repartition INTO the buckets first (≈N tasks,
+        // each holding whole buckets — without this, every task would
+        // fan a file into every bucket: tasks × N files per commit),
+        // then the same per-value fanout writer
+        val (c, n) = bucketSpec.get
+        val bexpr = bucketPlacementExpr(out.schema, c, n)
+        val fan = out.repartition(n, bexpr).withColumn("__gp_bucket", bexpr)
+        // r22 (guide §7 driver dwell): AQE cannot improve THIS write —
+        // the shuffle width is an explicit repartition(n) that AQE never
+        // coalesces, so adaptivity's only remaining levers (join
+        // demotion, skew splits) live BELOW the repartition and only
+        // matter when the staged frame is big. Below a plan-stats
+        // ceiling the write runs AQE-off: the per-commit
+        // shuffle-materialization job + replan disappear (the r22
+        // StageProbe measured 3 scheduled jobs per bucket commit, 2 of
+        // them AQE machinery), and the file layout is bit-identical
+        // because the partitioning was never adaptive here to begin
+        // with. Above SizeTier.LocalBytes (warehouse scale) AQE stays
+        // on.
+        val localWrite = SizeTier.small(out, SizeTier.LocalBytes)
+        flattenStagedDirs(fs, txn,
+          write(if (localWrite) ControlPlane(fan) else fan,
+            Seq("__gp_bucket")))
+      } else if (stamp && fanoutSafe && partCols.nonEmpty &&
+          partCols.forall(out.columns.contains)) {
+        val dups = partCols.map(c => s"__gp_$c")
+        val fan = partCols.zip(dups).foldLeft(out) {
+          case (d, (c, g)) => d.withColumn(g, col(c))
+        }
+        flattenStagedDirs(fs, txn, write(fan, dups))
+      } else write(out, Nil)
+    val byName = written.map(w => w.rel -> w).toMap
     fs.listStatus(txn).toSeq
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(st => (s"data/${txn.getName}/${st.getPath.getName}", st.getLen))
+      .map { st =>
+        val name = st.getPath.getName
+        val w = byName.getOrElse(name, throw new IllegalStateException(
+          s"stageTxn: the write reported no statistics for staged $name"))
+        val rel = s"data/${txn.getName}/$name"
+        Staged(rel, w.rows, stats.line(rel, st.getLen, w.rows, w.values),
+          stats.extra(w.values))
+      }
   }
 
   /** Move every parquet leaf of a dynamic-partition staging tree up
     * into the txn root (metadata renames — no data moves) and drop the
     * now-empty `__gp_*=value` directories. Part-file names REPEAT
     * across partition directories (same job uuid, same task numbering),
-    * so each gets a unique `p<i>-` prefix. */
-  private def flattenStagedDirs(fs: FileSystem, txn: Path): Unit = {
+    * so each gets a unique `p<i>-` prefix; `written` (keyed by the
+    * path under the txn root) is returned keyed by the new names. */
+  private def flattenStagedDirs(fs: FileSystem, txn: Path,
+      written: Seq[FileAggregate.Written]): Seq[FileAggregate.Written] = {
     def leaves(p: Path): Seq[Path] =
       fs.listStatus(p).toSeq.flatMap { st =>
         if (st.isDirectory) leaves(st.getPath)
         else if (st.getPath.getName.endsWith(".parquet")) Seq(st.getPath)
         else Nil
       }
+    val base = fs.makeQualified(txn).toUri.getPath + "/"
     val dirs = fs.listStatus(txn).toSeq.filter(_.isDirectory).map(_.getPath)
-    dirs.flatMap(leaves).zipWithIndex.foreach { case (f, i) =>
-      require(fs.rename(f, new Path(txn, s"p$i-${f.getName}")),
+    val renamed = dirs.flatMap(leaves).zipWithIndex.map { case (f, i) =>
+      val name = s"p$i-${f.getName}"
+      require(fs.rename(f, new Path(txn, name)),
         s"flattenStagedDirs: rename failed for $f")
-    }
+      f.toUri.getPath.stripPrefix(base) -> name
+    }.toMap
     dirs.foreach(d => fs.delete(d, true))
+    written.map(w => w.copy(rel = renamed.getOrElse(w.rel, w.rel)))
   }
+
+  /** Rejects column names the tab-delimited manifest grammar cannot
+    * carry. Called at the TOP of every verb accepting caller
+    * statsColumns — before stageTxn writes anything — so a bad name
+    * fails fast instead of orphaning a staged txn dir until vacuum. */
+  private[ops] def validateStatsColumns(statsColumns: Seq[String]): Unit =
+    require(statsColumns.forall(c =>
+      !c.contains('\t') && !c.contains('\n') && !c.startsWith("@")),
+      "stats column names must not contain tab/newline or start with @ " +
+        "(manifest line currency)")
 
   /** Atomically commit `df` as an APPEND transaction; returns the new
     * version. Retries the manifest CAS a bounded number of times.
@@ -556,19 +596,9 @@ private[ops] trait Commits { this: Layout.type =>
     * clustering columns). Worth pairing with a clustered arrangement
     * (repartitionByRange + sortWithinPartitions, or [[zorderWrite]]'s
     * arrangement) so file bounds are tight and a selective predicate
-    * keeps O(1) files. The stats pass reads back only the just-staged
-    * files (one grouped aggregate over the txn dir, cost ∝ this commit,
-    * not the table). */
-  /** Rejects column names the tab-delimited manifest grammar cannot
-    * carry. Called at the TOP of every verb accepting caller
-    * statsColumns — before stageTxn writes anything — so a bad name
-    * fails fast instead of orphaning a staged txn dir until vacuum. */
-  private[ops] def validateStatsColumns(statsColumns: Seq[String]): Unit =
-    require(statsColumns.forall(c =>
-      !c.contains('\t') && !c.contains('\n') && !c.startsWith("@")),
-      "stats column names must not contain tab/newline or start with @ " +
-        "(manifest line currency)")
-
+    * keeps O(1) files. The bounds are computed by the staging write's
+    * own tasks, per file as it is written ([[stageTxn]]): the commit
+    * schedules no job beyond the write. */
   def commitSnapshot(spark: SparkSession, table: String,
                      df: DataFrame,
                      statsColumns: Seq[String] = Nil,
@@ -594,12 +624,11 @@ private[ops] trait Commits { this: Layout.type =>
     }
     val root = new Path(table)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val added = stageTxn(spark, fs, root, df, createProps = props)
-    // extraProps: a CREATE-with-data's partition/bucket props aren't
-    // head props yet — withStats unions them so the very first commit
-    // records the bounds the SPJ invariant needs
-    val entries = withStats(spark, fs, root, added, statsColumns,
-      extraProps = props)
+    // a CREATE-with-data's partition/bucket props aren't head props
+    // yet — staging unions them so the very first commit records the
+    // bounds the SPJ invariant needs
+    val entries = stageTxn(spark, fs, root, df, createProps = props,
+      statsColumns = statsColumns).map(_.line)
     casCommit(fs, root, "commitSnapshot", head =>
       (if (head == 0) Seq.empty else manifestFiles(fs, root, head)) ++
         entries,
@@ -1055,9 +1084,9 @@ private[ops] trait Commits { this: Layout.type =>
     * instead of waiting for vacuum (best effort — a failure here just
     * leaves a normal crashed-txn orphan). */
   private[ops] def dropStaged(fs: FileSystem, root: Path,
-      staged: Seq[(String, Long)]): Unit =
-    staged.headOption.foreach { case (rel, _) =>
-      fs.delete(new Path(root, rel).getParent, true) }
+      staged: Seq[Staged]): Unit =
+    staged.headOption.foreach(s =>
+      fs.delete(new Path(root, s.rel).getParent, true))
 
   /** [[commitSnapshot]] carrying an exactly-once writer-transaction
     * marker: commits `df` AND records `appId → batchId` in the SAME
@@ -1074,9 +1103,9 @@ private[ops] trait Commits { this: Layout.type =>
       appId: String, batchId: Long,
       statsColumns: Seq[String] = Nil): Option[Int] = {
     validateStatsColumns(statsColumns)
-    txnGuarded(spark, table, df, appId, batchId, "commitSnapshotTxn") {
-      (fs, root, added) =>
-        val entries = withStats(spark, fs, root, added, statsColumns)
+    txnGuarded(spark, table, df, appId, batchId, "commitSnapshotTxn",
+        statsColumns = statsColumns) {
+      (fs, root, entries) =>
         (head => (if (head == 0) Seq.empty
                   else manifestFiles(fs, root, head)) ++ entries,
          appendSchemaFor(fs, root, df))
@@ -1091,8 +1120,8 @@ private[ops] trait Commits { this: Layout.type =>
     validateStatsColumns(statsColumns)
     val root = new Path(table)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val added = withStats(spark, fs, root,
-      stageTxn(spark, fs, root, df, allowNewIds = true), statsColumns)
+    val added = stageTxn(spark, fs, root, df, allowNewIds = true,
+      statsColumns = statsColumns).map(_.line)
     val recorded = replaceSchemaFor(fs, root, df)
     casCommit(fs, root, "replaceSnapshot", _ => added,
       _ => Some(recorded))
@@ -1120,8 +1149,7 @@ private[ops] trait Commits { this: Layout.type =>
       appId: String, batchId: Long): Option[Int] =
     txnGuarded(spark, table, df, appId, batchId, "replaceSnapshotTxn",
       allowNewIds = true) {
-      (fs, root, added) =>
-        val entries = withStats(spark, fs, root, added, Nil)
+      (fs, root, entries) =>
         val recorded = replaceSchemaFor(fs, root, df)
         (_ => entries, _ => Some(recorded))
     }
@@ -1129,12 +1157,12 @@ private[ops] trait Commits { this: Layout.type =>
   /** The one exactly-once commit scaffold both txn verbs share: appId
     * validation, the cheap pre-check, staging, the per-attempt replay
     * re-check inside the CAS, and the abandon-on-replay cleanup. `body`
-    * receives the staged file entries and returns the verb's (listFor,
-    * schemaFor) pair — the only part that differs. */
+    * receives the staged files' manifest lines and returns the verb's
+    * (listFor, schemaFor) pair — the only part that differs. */
   private def txnGuarded(spark: SparkSession, table: String, df: DataFrame,
       appId: String, batchId: Long, op: String,
-      allowNewIds: Boolean = false)(
-      body: (FileSystem, Path, Seq[(String, Long)]) =>
+      allowNewIds: Boolean = false, statsColumns: Seq[String] = Nil)(
+      body: (FileSystem, Path, Seq[String]) =>
         (Int => Seq[String], Int => Option[types.StructType]))
       : Option[Int] = {
     require(!appId.contains('\t') && !appId.contains('\n'),
@@ -1144,8 +1172,9 @@ private[ops] trait Commits { this: Layout.type =>
     // cheap pre-check: skip the staging write entirely on a known replay
     if (txnsOf(fs, root, currentVersion(fs, root)).get(appId)
         .exists(_ >= batchId)) return None
-    val added = stageTxn(spark, fs, root, df, allowNewIds = allowNewIds)
-    val (listFor, schemaFor) = body(fs, root, added)
+    val added = stageTxn(spark, fs, root, df, allowNewIds = allowNewIds,
+      statsColumns = statsColumns)
+    val (listFor, schemaFor) = body(fs, root, added.map(_.line))
     try Some(casCommit(fs, root, op,
       head => {
         // re-checked per CAS attempt: the replay might land between the
@@ -1161,98 +1190,65 @@ private[ops] trait Commits { this: Layout.type =>
     }
   }
 
-  /** Render staged (path, bytes) pairs as manifest lines: `path\t@bytes`
-    * plus a `col\tmin\tmax` bounds group for every requested stats
-    * column (ONE grouped aggregate over only the staged files computes
-    * all columns' bounds at once; cost ∝ the transaction, not the
-    * table). Shared by every commit verb that stages files so a
-    * stats-skipping table keeps its pruning through compaction, delete
-    * and merge rewrites too.
+  /** What a commit records for each file it stages, planned on the
+    * driver for files of `schema` under the table properties `props`
+    * (the head's, merged with a CREATE's or a layout rewrite's own):
+    * the per-file aggregates the staging write evaluates
+    * ([[org.apache.spark.sql.graft.FileAggregate]]) and how
+    * [[CommitStats.line]] renders their values. `extra` aggregates ride
+    * the same write after the statistics' own (a sidecar's
+    * `collect_set(grp)`). Shared by every commit verb that stages files,
+    * so a stats-skipping table keeps its pruning through compaction,
+    * delete and merge rewrites too.
     *
-    * Typing: STRING columns record lexicographic `S:` bounds
+    * Recorded: the union of `statsColumns`, the declared
+    * `graft.stats.columns` and the partition columns gets min/max
+    * bounds; bloom columns, the bucket id and null-proved partition
+    * groups follow the props; declared stats columns also get a KMV
+    * sketch. Typing: STRING columns record lexicographic `S:` bounds
     * (categorical pruning — language, source, partition-ish keys);
     * INTEGRAL columns record lossless `L:` long bounds compared in long
     * (a double round trip on a |v| > 2^53 key could move a recorded max
     * below the true max and wrongly prune); everything else goes through
-    * the double path. Columns absent from the staged frame's schema (an
-    * append predating an evolved column) record no bounds — their files
-    * always survive selection. */
-  private[ops] def withStats(spark: SparkSession, fs: FileSystem, root: Path,
-      staged: Seq[(String, Long)], statsColumns: Seq[String],
-      extraProps: Map[String, String] = Map.empty)
-      : Seq[String] = {
+    * the double path. Columns absent from `schema` (an append predating
+    * an evolved column) record no bounds — their files always survive
+    * selection. (CHECK constraints are not enforced here: the per-attempt
+    * gate inside casCommit validates the added lines against the props
+    * of the exact head each attempt rebases onto. See
+    * AttemptConstraintGate.) */
+  private[graft] def commitStats(spark: SparkSession,
+      schema: types.StructType, statsColumns: Seq[String],
+      props: Map[String, String], extra: Seq[Column] = Nil): CommitStats = {
     validateStatsColumns(statsColumns) // backstop; verbs validate first
-    def bare = staged.map { case (rel, len) => s"$rel\t@$len" }
-    if (staged.isEmpty) return bare
-    // bloom columns and CHECK constraints come from the TABLE's head
-    // props, not a per-verb argument: once set, every commit verb
-    // (append, replace, compact, delete-rewrite) honors them without
-    // each call site having to know — the same carry discipline as the
-    // props themselves. Cost on the no-stats hot path: one head-pointer
-    // read + a manifest-line fetch that hits the rawManifestLines memo
-    // (the committing verb reads the same head lines moments later
-    // anyway) — no extra data IO.
-    val headV = currentVersion(fs, root)
-    val headProps = propsOf(fs, root, headV)
-    val bloomBits = headProps.get(BloomBitsProp).map(_.toInt)
-      .getOrElse(BloomBitsDefault)
-    // (CHECK constraints are NOT enforced here: the per-attempt gate
-    // inside casCommit validates the added lines against the props of
-    // the exact head each attempt rebases onto — enforcement out here
-    // would both double the scan and leave the TOCTOU a concurrently
-    // added constraint opens. See AttemptConstraintGate.)
-    val stagedPaths =
-      staged.map { case (rel, _) => new Path(root, rel).toString }
+    def listed(p: String) = props.get(p).map(splitCols).getOrElse(Nil)
+    val has = schema.fieldNames.toSet
+    def kind(c: String): Char = schema(c).dataType match {
+      case types.StringType => 'S'
+      case types.ByteType | types.ShortType | types.IntegerType |
+           types.LongType => 'L'
+      case _ => 'D'
+    }
     // declared partition columns ALWAYS get bounds, whatever the verb's
     // caller passed: the single-value-per-file invariant the fanout
     // stager maintains is only USEFUL (pruning + SPJ grouping) if every
     // commit records it, and a programmatic commitSnapshot(df) must not
-    // silently break the table's join eligibility. extraProps = a
-    // create-with-data verb's own props (not head props yet).
-    val allProps = headProps ++ extraProps
-    // the caller's columns UNION the declared graft.stats.columns (the
-    // prop means "every commit records these" — a CREATE commit passes
-    // it only through extraProps, and before r19 its staged empty file
-    // silently carried no groups) UNION the partition columns
-    val statsAll = (statsColumns ++
-      allProps.get(StatsColumnsProp).map(splitCols).getOrElse(Nil) ++
-      allProps.get(PartitionedByProp)
-      .map(splitCols).getOrElse(Nil)).distinct
+    // silently break the table's join eligibility. The declared
+    // graft.stats.columns join too (the prop means "every commit
+    // records these" — a CREATE commit carries it only in its own
+    // props)
+    val declared = (statsColumns ++ listed(StatsColumnsProp)).distinct
+    val bounds = (declared ++ listed(PartitionedByProp)).distinct
+      .filter(has).map(c => c -> kind(c))
+    // blooms and the bucket id only for probe-able types; others were
+    // refused at DDL time
+    val blooms = listed(BloomColumnsProp).filter(has)
+      .map(c => c -> kind(c)).filter(_._2 != 'D')
     // bucket layout: each staged file's bucket id, recorded as the
     // synthetic `#bucket` group — min==max per file is the invariant
     // the fanout stager maintains and the SPJ grouping reads back
-    val bucketSpec = allProps.get(BucketByProp)
-      .zip(allProps.get(BucketCountProp))
+    val bucket = props.get(BucketByProp).zip(props.get(BucketCountProp))
       .map { case (c, n) => (c, n.toInt) }
-    if (statsAll.isEmpty && !allProps.contains(BloomColumnsProp) &&
-        bucketSpec.isEmpty)
-      return bare
-    // footer-typed: schema inference would schedule a Spark job per
-    // commit (~70-90 ms with scheduling, r21 StageProbe)
-    val df = readSidecars(spark, stagedPaths)
-    def isIntegral(dt: types.DataType) = dt match {
-      case types.ByteType | types.ShortType | types.IntegerType |
-           types.LongType => true
-      case _ => false
-    }
-    // blooms only for probe-able types; others were refused at DDL time
-    val bloomCols = allProps.get(BloomColumnsProp).map(splitCols)
-      .getOrElse(Nil)
-      .filter(df.columns.contains)
-      .filter(c => isIntegral(df.schema(c).dataType) ||
-        df.schema(c).dataType == types.StringType)
-    val present = statsAll.filter(df.columns.contains)
-    val bucket = bucketSpec.filter { case (c, _) =>
-      df.columns.contains(c) && (isIntegral(df.schema(c).dataType) ||
-        df.schema(c).dataType == types.StringType)
-    }
-    if (present.isEmpty && bloomCols.isEmpty && bucket.isEmpty)
-      return bare
-    def keyed(c: String): Column = df.schema(c).dataType match {
-      case types.StringType           => col(c)
-      case dt if isIntegral(dt)       => col(c).cast("long")
-      case _                          => col(c).cast("double")
-    }
+      .filter { case (c, _) => has(c) && kind(c) != 'D' }
     // identity partition columns get a SECOND, null-PROVED group
     // (`#p:<col>`) alongside the plain bounds: min/max ignore NULLs, so
     // min==max alone cannot prove a file single-valued — a file mixing
@@ -1262,138 +1258,154 @@ private[ops] trait Commits { this: Layout.type =>
     // layouts ONLY on #p groups, which are written exactly when
     // count(col) == count(*) for the file; the fanout stager routes
     // NULL rows to their own file, which then lacks the group and
-    // soundly disables SPJ for the snapshot. Plain bounds (pruning)
-    // are unchanged.
-    val partNn = allProps.get(PartitionedByProp).map(splitCols)
-      .getOrElse(Nil).filter(df.columns.contains)
+    // soundly disables SPJ for the snapshot.
+    val nullProved = listed(PartitionedByProp).filter(has)
     // NDV sketch columns (r19): every DECLARED stats column also
-    // records a per-file KMV sketch — the commit already reads these
-    // bytes, so planner statistics (scanStats → estimateStatistics)
+    // records a per-file KMV sketch — the staging write already sees
+    // every row, so planner statistics (scanStats → estimateStatistics)
     // come free of any later ANALYZE scan. Hashable types only, and
     // declared columns only: a partition column's NDV is its group
     // count, not worth a per-file sketch on every commit.
-    val declared = (statsColumns ++
-      allProps.get(StatsColumnsProp).map(splitCols).getOrElse(Nil))
-      .distinct
-    val ndvCols = present.filter(declared.contains).filter(c =>
-      isIntegral(df.schema(c).dataType) ||
-        df.schema(c).dataType == types.StringType)
-    val aggs = present.flatMap(c =>
-      Seq(min(keyed(c)).as(s"__mn_$c"), max(keyed(c)).as(s"__mx_$c"))) ++
-      bloomCols.map(c => graft.functions.FileBloom
-        .fileBloom(keyed(c), bloomBits).as(s"__bl_$c")) ++
+    val ndv = bounds.collect { case (c, k) if k != 'D' &&
+      declared.contains(c) => c }
+    if (bounds.isEmpty && blooms.isEmpty && bucket.isEmpty)
+      return CommitStats(Nil, Nil, None, Nil, Nil, 0,
+        FileAggregate(spark, schema, extra))
+    def keyed(c: String): Column = kind(c) match {
+      case 'S' => col(c)
+      case 'L' => col(c).cast("long")
+      case _   => col(c).cast("double")
+    }
+    val bloomBits = props.get(BloomBitsProp).map(_.toInt)
+      .getOrElse(BloomBitsDefault)
+    val aggs =
+      bounds.flatMap { case (c, _) =>
+        Seq(min(keyed(c)).as(s"__mn_$c"), max(keyed(c)).as(s"__mx_$c")) } ++
+      blooms.map { case (c, _) => graft.functions.FileBloom
+        .fileBloom(keyed(c), bloomBits).as(s"__bl_$c") } ++
       bucket.toSeq.flatMap { case (c, n) =>
-        val e = bucketPlacementExpr(df.schema, c, n)
-        // count(e) == count(*) is the bucket group's null-free proof
+        val e = bucketPlacementExpr(schema, c, n)
+        // count(e) == rows is the bucket group's null-free proof
         Seq(min(e).as("__bk_mn"), max(e).as("__bk_mx"),
           count(e).as("__bk_nn"))
       } ++
-      Seq(count(lit(1)).as("__rows")) ++
-      partNn.map(c => count(col(c)).as(s"__nn_$c")) ++
-      ndvCols.flatMap(c => Seq(
+      nullProved.map(c => count(col(c)).as(s"__nn_$c")) ++
+      ndv.flatMap(c => Seq(
         graft.functions.KmvDistinct
           .kmvSketch(xxhash64(col(c)), NdvSketchK).as(s"__kv_$c"),
         // non-null count per file: the planner's ColumnStat needs
         // nullCount alongside NDV (hasCountStats) or the estimator
         // ignores the column entirely
         count(col(c)).as(s"__kn_$c")))
-    // AQE off for THIS control-plane aggregate only: its reduce side is
-    // ≤ one row per staged file at any scale (per-file min/max/sketch),
-    // so adaptive replanning can never help, and AQE's per-shuffle stage
-    // materialization turns the collect into TWO scheduled jobs — the
-    // r21 StageProbe measured the extra job + replan at ~60-100 ms per
-    // commit across every committing verb.
-    val rows = ControlPlane(df.groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*)).collect()
-    val rowsIdx = 1 + 2 * present.size + bloomCols.size +
-      (if (bucket.isDefined) 3 else 0)
-    val rendered: Map[String, String] = rows.map { r =>
-      val groups = new StringBuilder
-      val pairs = scala.collection.mutable.Map.empty[String, (String, String)]
-      present.zipWithIndex.foreach { case (c, i) =>
-        val (mnI, mxI) = (1 + 2 * i, 2 + 2 * i)
-        if (!r.isNullAt(mnI) && !r.isNullAt(mxI)) { // all-null → no bounds
-          val pair: Option[(String, String)] =
-            df.schema(c).dataType match {
-              case types.StringType =>
-                Some((encBound(r.getString(mnI)),
-                  encBound(r.getString(mxI))))
-              case dt if isIntegral(dt) =>
-                Some((LongPfx + r.getLong(mnI), LongPfx + r.getLong(mxI)))
-              case _ =>
-                // NaN poisons range comparisons (every NaN compare is
-                // false → a NaN bound would WRONGLY prune a file that
-                // has in-range rows): record no bounds, file survives
-                val (mn, mx) = (r.getDouble(mnI), r.getDouble(mxI))
-                if (mn.isNaN || mx.isNaN) None
-                else Some((mn.toString, mx.toString))
-            }
-          pair.foreach { case (mn, mx) =>
-            pairs(c) = (mn, mx)
-            groups ++= s"\t$c\t$mn\t$mx"
-          }
-        }
-      }
-      // null-proved partition groups: same bound pair, #p:-prefixed
-      // name, written only when the file has ZERO nulls in the column
-      partNn.zipWithIndex.foreach { case (c, k) =>
-        if (pairs.contains(c) &&
-            r.getLong(rowsIdx + 1 + k) == r.getLong(rowsIdx)) {
-          val (mn, mx) = pairs(c)
-          groups ++= s"\t$PartGroupPfx$c\t$mn\t$mx"
-        }
-      }
-      // bloom groups ride the same triple grammar with the "B:" prefix
-      // in the bound slots — bounds readers (entryBounds/decodePair)
-      // skip them by construction, so old tables and mixed lines parse
-      bloomCols.zipWithIndex.foreach { case (c, j) =>
-        val idx = 1 + 2 * present.size + j
-        if (!r.isNullAt(idx)) {
-          val t =
-            if (df.schema(c).dataType == types.StringType) "S" else "L"
-          val b64 = java.util.Base64.getEncoder
-            .encodeToString(r.getAs[Array[Byte]](idx))
-          groups ++= s"\t$c\t$BloomPfx$t:$b64\t$BloomPfx"
-        }
-      }
-      // the synthetic bucket-id group: long bounds under the `#bucket`
-      // name (never collides with a column — '#' only means header at
-      // LINE start); written only when the file is null-FREE on the
-      // bucket expression — a null key row in a keyed file would ride
-      // the wrong partition in the SPJ grouping
-      bucket.foreach { case (c, n) =>
-        val base = 1 + 2 * present.size + bloomCols.size
-        if (!r.isNullAt(base) && !r.isNullAt(base + 1) &&
-            r.getLong(base + 2) == r.getLong(rowsIdx))
-          groups ++= s"\t${bucketGroup(c, n)}\t$LongPfx${r.getLong(base)}" +
-            s"\t$LongPfx${r.getLong(base + 1)}"
-      }
-      // planner statistics (r19): exact per-file row count as a bounds
-      // group, plus one KMV sketch group per hashable stats column
-      groups ++= s"\t$RowsGroup\t$LongPfx${r.getLong(rowsIdx)}" +
-        s"\t$LongPfx${r.getLong(rowsIdx)}"
-      val ndvBase = rowsIdx + 1 + partNn.size
-      ndvCols.zipWithIndex.foreach { case (c, j) =>
-        val idx = ndvBase + 2 * j
-        if (!r.isNullAt(idx)) {
-          val b64 = java.util.Base64.getEncoder
-            .encodeToString(r.getAs[Array[Byte]](idx))
-          val nulls = r.getLong(rowsIdx) - r.getLong(idx + 1)
-          groups ++= s"\t$c\t$KmvPfx$nulls:$b64\t$KmvPfx"
-        }
-      }
-      fsPathOf(r.getString(0)) -> groups.result()
-    }.toMap
-    staged.map { case (rel, len) =>
-      val k = fsPathOf(fs.makeQualified(new Path(root, rel)).toString)
-      // a staged file with NO aggregate row holds zero rows (the
-      // groupBy saw none of it — e.g. the CREATE commit's empty
-      // stage): its exact row count is 0, and recording it keeps
-      // scanStats' "every line counted" invariant instead of one
-      // empty file degrading the snapshot to rows-unknown
-      s"$rel\t@$len" + rendered.getOrElse(k,
-        s"\t$RowsGroup\t${LongPfx}0\t${LongPfx}0")
-    }
+    CommitStats(bounds, blooms, bucket, nullProved, ndv, aggs.size,
+      FileAggregate(spark, schema, aggs ++ extra))
+  }
+}
+
+/** One file a staging write committed: root-relative path, rows, its
+  * manifest line (size and the statistics the write computed included)
+  * and the values of the caller's extra per-file aggregates. */
+private[ops] final case class Staged(rel: String, rows: Long, line: String,
+    values: Row)
+
+/** The rendering half of [[Commits.commitStats]]: the recorded groups, in
+  * line order, and the aggregate that computes them — serializable, so
+  * a SQL writer task renders its file's line itself. `agg`'s first
+  * `nStats` values are the statistics, in the order commitStats lists
+  * them; the rest are a caller's extras. */
+private[graft] final case class CommitStats(bounds: Seq[(String, Char)],
+    blooms: Seq[(String, Char)], bucket: Option[(String, Int)],
+    nullProved: Seq[String], ndv: Seq[String], nStats: Int,
+    agg: FileAggregate) {
+  import Layout.{BloomPfx, KmvPfx, LongPfx, PartGroupPfx, RowsGroup}
+
+  private def record = nStats > 0
+
+  /** `rel`'s manifest line: `path\t@bytes` plus, when the table records
+    * statistics, a `col\tmin\tmax` bounds group for every bounds column
+    * and the other groups (see the grammar at [[Layout.entryBounds]]). */
+  def line(rel: String, bytes: Long, rows: Long, values: Row): String = {
+    val bare = s"$rel\t@$bytes"
+    // a file with no rows (the CREATE commit's empty stage) records its
+    // exact row count, 0, and nothing else — keeping scanStats' "every
+    // line counted" invariant instead of one empty file degrading the
+    // snapshot to rows-unknown
+    if (!record) bare
+    else if (rows == 0L) s"$bare\t$RowsGroup\t${LongPfx}0\t${LongPfx}0"
+    else bare + groups(rows, values)
   }
 
+  /** The caller's extra aggregates' values. */
+  def extra(values: Row): Row = Row.fromSeq(values.toSeq.drop(nStats))
+
+  private def groups(rows: Long, r: Row): String = {
+    val bloomBase = 2 * bounds.size
+    val bucketBase = bloomBase + blooms.size
+    val nnBase = bucketBase + (if (bucket.isDefined) 3 else 0)
+    val ndvBase = nnBase + nullProved.size
+    def b64(i: Int) =
+      java.util.Base64.getEncoder.encodeToString(r.getAs[Array[Byte]](i))
+    val groups = new StringBuilder
+    val pairs = scala.collection.mutable.Map.empty[String, (String, String)]
+    bounds.zipWithIndex.foreach { case ((c, k), i) =>
+      val (mnI, mxI) = (2 * i, 2 * i + 1)
+      if (!r.isNullAt(mnI) && !r.isNullAt(mxI)) { // all-null → no bounds
+        val pair: Option[(String, String)] = k match {
+          case 'S' => Some((Layout.encBound(r.getString(mnI)),
+            Layout.encBound(r.getString(mxI))))
+          case 'L' => Some((LongPfx + r.getLong(mnI), LongPfx + r.getLong(mxI)))
+          case _ =>
+            // NaN poisons range comparisons (every NaN compare is
+            // false → a NaN bound would WRONGLY prune a file that has
+            // in-range rows): record no bounds, file survives
+            val (mn, mx) = (r.getDouble(mnI), r.getDouble(mxI))
+            if (mn.isNaN || mx.isNaN) None
+            else Some((mn.toString, mx.toString))
+        }
+        pair.foreach { case (mn, mx) =>
+          pairs(c) = (mn, mx)
+          groups ++= s"\t$c\t$mn\t$mx"
+        }
+      }
+    }
+    // null-proved partition groups: same bound pair, #p:-prefixed
+    // name, written only when the file has ZERO nulls in the column
+    nullProved.zipWithIndex.foreach { case (c, k) =>
+      if (pairs.contains(c) && r.getLong(nnBase + k) == rows) {
+        val (mn, mx) = pairs(c)
+        groups ++= s"\t$PartGroupPfx$c\t$mn\t$mx"
+      }
+    }
+    // bloom groups ride the same triple grammar with the "B:" prefix
+    // in the bound slots — bounds readers (entryBounds/decodePair)
+    // skip them by construction, so old tables and mixed lines parse
+    blooms.zipWithIndex.foreach { case ((c, t), j) =>
+      if (!r.isNullAt(bloomBase + j))
+        groups ++= s"\t$c\t$BloomPfx$t:${b64(bloomBase + j)}\t$BloomPfx"
+    }
+    // the synthetic bucket-id group: long bounds under the `#bucket`
+    // name (never collides with a column — '#' only means header at
+    // LINE start); written only when the file is null-FREE on the
+    // bucket expression — a null key row in a keyed file would ride
+    // the wrong partition in the SPJ grouping
+    bucket.foreach { case (c, n) =>
+      if (!r.isNullAt(bucketBase) && !r.isNullAt(bucketBase + 1) &&
+          r.getLong(bucketBase + 2) == rows)
+        groups ++= s"\t${Layout.bucketGroup(c, n)}" +
+          s"\t$LongPfx${r.getLong(bucketBase)}" +
+          s"\t$LongPfx${r.getLong(bucketBase + 1)}"
+    }
+    // planner statistics (r19): exact per-file row count as a bounds
+    // group, plus one KMV sketch group per hashable stats column
+    groups ++= s"\t$RowsGroup\t$LongPfx$rows\t$LongPfx$rows"
+    ndv.zipWithIndex.foreach { case (c, j) =>
+      val idx = ndvBase + 2 * j
+      if (!r.isNullAt(idx)) {
+        val nulls = rows - r.getLong(idx + 1)
+        groups ++= s"\t$c\t$KmvPfx$nulls:${b64(idx)}\t$KmvPfx"
+      }
+    }
+    groups.result()
+  }
 }
+

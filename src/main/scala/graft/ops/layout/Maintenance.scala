@@ -277,10 +277,9 @@ private[ops] trait Maintenance { this: Layout.type =>
     // would silently strip a skipping table's pruning. The caller's
     // statsColumns win when given; otherwise the table's own recorded
     // columns carry, so a plain OPTIMIZE never strips pruning either.
-    val added = withStats(spark, fs, root,
-      stageTxn(spark, fs, root, arranged),
+    val added = stageTxn(spark, fs, root, arranged, statsColumns =
       if (statsColumns.nonEmpty) statsColumns
-      else statsColumnsOf(fs, root, v0))
+      else statsColumnsOf(fs, root, v0)).map(_.line)
     val v = replaceCommit(fs, root, "compactSnapshot", inputs.toSet, added)
     val bytesAfter = added.map(l => entrySize(l).getOrElse(
       fs.getFileStatus(new Path(root, entryPath(l))).getLen)).sum
@@ -316,11 +315,10 @@ private[ops] trait Maintenance { this: Layout.type =>
     val bytesIn = dvLines.map(l => entrySize(l).getOrElse(
       fs.getFileStatus(new Path(root, entryPath(l))).getLen)).sum
     val staged = stageTxn(spark, fs, root,
-      readManifestLines(spark, fs, root, v0, dvLines))
-    val added = withStats(spark, fs, root, staged,
-      statsColumnsOf(fs, root, v0))
+      readManifestLines(spark, fs, root, v0, dvLines),
+      statsColumns = statsColumnsOf(fs, root, v0))
     val v = try replaceCommit(fs, root, "compactDeletes",
-      dvLines.toSet, added)
+      dvLines.toSet, staged.map(_.line))
     catch { case e: Throwable => dropStaged(fs, root, staged); throw e }
     (v, dvLines.size, plain.size, bytesIn)
   }
@@ -441,9 +439,9 @@ private[ops] trait Maintenance { this: Layout.type =>
           (bytesBefore + targetFileBytes - 1) / targetFileBytes).toInt)
       }
     val staged = stageTxn(spark, fs, root, arranged,
-      createProps = stagingOverrides)
-    val added = withStats(spark, fs, root, staged,
-      statsColumnsOf(fs, root, v0), extraProps = stagingOverrides)
+      createProps = stagingOverrides,
+      statsColumns = statsColumnsOf(fs, root, v0))
+    val added = staged.map(_.line)
     val inputSet = inputs.toSet
     val v = try casCommit(fs, root, "relayout",
       { head =>

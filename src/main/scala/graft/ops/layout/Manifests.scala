@@ -552,7 +552,7 @@ private[ops] trait Manifests { this: Layout.type =>
   private[graft] def bucketGroup(c: String, n: Int): String =
     s"#bucket:$n:$c"
   /** Null-proved identity-partition group name prefix: `#p:<col>` —
-    * written by withStats only when the file has ZERO nulls in the
+    * written by commitStats only when the file has ZERO nulls in the
     * column, so an SPJ grouping keyed on it can never misplace
     * NULL-key rows (plain min/max bounds ignore nulls and cannot prove
     * that). Legacy files lack the group → the snapshot soundly falls

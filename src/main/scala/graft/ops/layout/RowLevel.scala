@@ -86,19 +86,16 @@ private[ops] trait RowLevel { this: Layout.type =>
     // table's pruning — the guard compactSnapshot already carries.
     // A rewrite that keeps ZERO rows stages nothing: the affected
     // files' entries simply leave the manifest (no empty placeholder
-    // file enters it). r22: that zero-rows decision used to be a
-    // separate isEmpty (limit-1) job on every delete; it now rides the
-    // rewrite write as an observed row count — stage, and if the
+    // file enters it). The zero-rows decision reads the per-file row
+    // counts the rewrite write itself returns — stage, and if the
     // rewrite proved empty, drop the txn dir and record nothing.
-    val keptObs = org.apache.spark.sql.Observation()
-    val keptStaged = stageTxn(spark, fs, root,
-      kept.observe(keptObs, count(lit(1)).as("rows")))
+    val keptStaged = stageTxn(spark, fs, root, kept,
+      statsColumns = statsColumnsOf(fs, root, v0))
     val added =
-      if (keptObs.get("rows").asInstanceOf[Long] == 0L) {
+      if (keptStaged.forall(_.rows == 0L)) {
         dropStaged(fs, root, keptStaged)
         Seq.empty[String]
-      } else withStats(spark, fs, root, keptStaged,
-        statsColumnsOf(fs, root, v0))
+      } else keptStaged.map(_.line)
     val v = replaceCommit(fs, root, "deleteWhere",
       affected.map(_._1).toSet, added)
     (v, affected.size, untouched.size)
@@ -122,37 +119,27 @@ private[ops] trait RowLevel { this: Layout.type =>
       .withColumn("__pos", col("_metadata.row_index"))
   }
 
-  /** Stage a (grp, pos) frame as position-delete sidecar parquet and
-    * resolve which sidecar file holds which group's deletes. Returns
-    * (staged pairs, grp → sidecar rel paths); empty map = no matches
-    * (the staged dir, if any empty files were written, is dropped by
-    * the caller). The write is fully distributed — clustered by grp so
-    * one data file's positions land in few sidecars — and costs
+  /** Stage a (grp, pos) frame as ONE position-delete sidecar parquet
+    * and learn which groups it covers. Returns (staged files, grp →
+    * sidecar rel paths); empty map = no matches (the caller drops the
+    * staged dir). The write task collects each sidecar's groups as it
+    * writes them (`collect_set(grp)` per file), so the pointer the
+    * manifest line needs comes from the same evaluation of `positions`
+    * that staged the bytes — no read-back. The position shuffle runs
+    * AQE-off at width 1 (one job, one sidecar, like upsertByKeys' key
+    * sidecar): positions are two narrow columns, the matching scan
+    * upstream keeps its parallelism, and AQE's coalescing already made
+    * this write one task up to its advisory partition size. Cost
     * ∝ matched rows, never table size: THE merge-on-read bargain. */
   private def stageDv(spark: SparkSession, fs: FileSystem, root: Path,
-      positions: DataFrame)
-      : (Seq[(String, Long)], Map[String, Seq[String]]) = {
+      positions: DataFrame): (Seq[Staged], Map[String, Seq[String]]) = {
     val staged = stageTxn(spark, fs, root,
-      positions.repartition(col("grp")), stamp = false)
-    if (staged.isEmpty) return (staged, Map.empty)
-    // one metadata-light pass over the just-staged sidecars maps each
-    // group to the sidecar file(s) carrying its positions — the
-    // manifest line needs the pointer, and reading back the staged
-    // bytes (not re-evaluating `positions`) keeps check and commit on
-    // the same evaluation
-    val relByNorm = staged.map { case (rel, _) =>
-      fsPathOf(fs.makeQualified(new Path(root, rel)).toString) -> rel
-    }.toMap
-    val mapping = ControlPlane(
-      readSidecars(spark,
-          staged.map { case (rel, _) => new Path(root, rel).toString })
-        .select(col("grp"), input_file_name().as("f")).distinct())
-      .collect()
-      .groupBy(_.getString(0))
-      .map { case (g, rows) =>
-        g -> rows.map(r => relByNorm(fsPathOf(r.getString(1))))
-          .toSeq.distinct.sorted
-      }
+      ControlPlane(positions.repartition(col("grp")), Some(1)),
+      stamp = false, fileAggs = Seq(collect_set(col("grp")).as("grps")))
+    val mapping = staged.filter(_.rows > 0L)
+      .flatMap(s => s.values.getSeq[String](0).map(_ -> s.rel))
+      .groupBy(_._1)
+      .map { case (g, rels) => g -> rels.map(_._2).distinct.sorted }
     (staged, mapping)
   }
 
@@ -324,12 +311,10 @@ private[ops] trait RowLevel { this: Layout.type =>
       }
     }
     val dataStaged =
-      if (deleteOnly) Seq.empty[(String, Long)]
-      else stageTxn(spark, fs, root, batch)
-    val dataEntries =
-      if (dataStaged.isEmpty) Seq.empty[String]
-      else withStats(spark, fs, root, dataStaged,
-        statsColumnsOf(fs, root, v0))
+      if (deleteOnly) Seq.empty[Staged]
+      else stageTxn(spark, fs, root, batch,
+        statsColumns = statsColumnsOf(fs, root, v0))
+    val dataEntries = dataStaged.map(_.line)
     var annotated = 0
     val v = try casCommit(fs, root, "upsertByKeys",
       { head =>
@@ -348,9 +333,8 @@ private[ops] trait RowLevel { this: Layout.type =>
           if (refuted(l)) l // bounds prove no batch key present
           else {
             annotated += 1
-            sidecars.foldLeft(l) { case (acc, (rel, _)) =>
-              withEqGroup(acc, rel, keyCols)
-            }
+            sidecars.foldLeft(l)((acc, s) =>
+              withEqGroup(acc, s.rel, keyCols))
           }
         } ++ dataEntries
       },
@@ -410,11 +394,14 @@ private[ops] trait RowLevel { this: Layout.type =>
     // check-what-you-commit guarantee the staged-bytes re-read gave,
     // minus one scheduled job per backfill). Only the FAILURE path still
     // reads the staged files back, to quote an offending row.
+    val stats =
+      if (statsColumns.nonEmpty) statsColumns
+      else statsColumnsOf(fs, root, v0)
     val offObs = org.apache.spark.sql.Observation()
     val dataStaged = stageTxn(spark, fs, root, data.observe(offObs,
-      count(when(!coalesce(predicate, lit(false)), 1)).as("off")))
-    val stagedPaths = dataStaged.map { case (rel, _) =>
-      new Path(root, rel).toString }
+      count(when(!coalesce(predicate, lit(false)), 1)).as("off")),
+      statsColumns = stats)
+    val stagedPaths = dataStaged.map(s => new Path(root, s.rel).toString)
     try {
       if (offObs.get("off").asInstanceOf[Long] > 0L) {
         val offenders = ControlPlane(readSidecars(spark, stagedPaths)
@@ -441,15 +428,11 @@ private[ops] trait RowLevel { this: Layout.type =>
     // stage as a second txn in the SAME commit — the swap is one
     // REPLACE CAS, never an observable delete-then-insert gap
     val carriedStaged =
-      if (affected.isEmpty) Seq.empty[(String, Long)]
+      if (affected.isEmpty) Seq.empty[Staged]
       else stageTxn(spark, fs, root,
         readManifestLines(spark, fs, root, v0, affected.map(_._1))
-          .where(!coalesce(predicate, lit(false))))
-    val stats =
-      if (statsColumns.nonEmpty) statsColumns
-      else statsColumnsOf(fs, root, v0)
-    val added = withStats(spark, fs, root,
-      dataStaged ++ carriedStaged, stats)
+          .where(!coalesce(predicate, lit(false))), statsColumns = stats)
+    val added = (dataStaged ++ carriedStaged).map(_.line)
     val inputSet = affected.map(_._1).toSet
     val v0Lines = files.toSet
     beforeCommit()
@@ -632,7 +615,7 @@ private[ops] trait RowLevel { this: Layout.type =>
           // open for write (r16 verdict task 1)
           val (dvStaged, grpToSidecars) =
             if (affLines.isEmpty)
-              (Seq.empty[(String, Long)], Map.empty[String, Seq[String]])
+              (Seq.empty[Staged], Map.empty[String, Seq[String]])
             else stageDv(spark, fs, root,
               readLinesPos(spark, fs, root, v0, affLines, withEqs = true)
                 .join(src.select(col(key)), Seq(key), "left_semi")
@@ -652,15 +635,15 @@ private[ops] trait RowLevel { this: Layout.type =>
             // track the data files too: a failed commit must drop BOTH
             // stage sets, not orphan the data half until vacuum (r17
             // ADVICE — deleteWhereMor/replaceWhere already do this)
-            var dataStaged = Seq.empty[(String, Long)]
+            var dataStaged = Seq.empty[Staged]
             try {
-              dataStaged = stageTxn(spark, fs, root, newData)
+              dataStaged = stageTxn(spark, fs, root, newData,
+                statsColumns = statsColumnsOf(fs, root, v0))
               // the staged write evaluated the insert arm; its observed
               // count is THE inserted-row number (read after the action,
               // so it never blocks)
               val nInserted = insObs.get("n").asInstanceOf[Long]
-              val added = annotated ++ withStats(spark, fs, root,
-                dataStaged, statsColumnsOf(fs, root, v0))
+              val added = annotated ++ dataStaged.map(_.line)
               val v = replaceCommit(fs, root, "mergeIntoMor",
                 affLines.toSet, added)
               (v, affected.size, nInserted)
@@ -728,25 +711,19 @@ private[ops] trait RowLevel { this: Layout.type =>
           // rewritten + inserted files keep the table's recorded
           // bounds, as in deleteWhere; a rewrite keeping ZERO rows
           // (every row of the affected files deleted) stages nothing
-          // and the affected entries simply leave the manifest.
-          // r22: the zero-rows decision used to be a separate isEmpty
-          // (limit-1) job on every COW merge — and one that would have
-          // fired the insert-count observation early, off a partial
-          // evaluation. It now rides the SAME write as a second observed
-          // metric: stage, and if the staged union proved empty, drop
+          // and the affected entries simply leave the manifest. The
+          // zero-rows decision reads the per-file row counts the write
+          // returns: stage, and if the staged union proved empty, drop
           // the txn dir and record nothing (one extra empty-dir
-          // write+delete on that rare path; one fewer scheduled job on
-          // every other merge).
-          val totObs = org.apache.spark.sql.Observation()
-          val dataStaged = stageTxn(spark, fs, root,
-            staged.observe(totObs, count(lit(1)).as("rows")))
+          // write+delete on that rare path, no job on any merge).
+          val dataStaged = stageTxn(spark, fs, root, staged,
+            statsColumns = statsColumnsOf(fs, root, v0))
           val nInserted = insObs.get("n").asInstanceOf[Long]
           val added =
-            if (totObs.get("rows").asInstanceOf[Long] == 0L) {
+            if (dataStaged.forall(_.rows == 0L)) {
               dropStaged(fs, root, dataStaged)
               Seq.empty[String]
-            } else withStats(spark, fs, root, dataStaged,
-              statsColumnsOf(fs, root, v0))
+            } else dataStaged.map(_.line)
           val v = replaceCommit(fs, root, "mergeInto",
             affLines.toSet, added)
           (v, affected.size, nInserted)
@@ -778,26 +755,35 @@ private[ops] trait RowLevel { this: Layout.type =>
     }
   }
 
-  /** Commit a row-level rewrite: swap `affectedLines` (the groups the
-    * COW scan read) for `staged` root-relative files — one REPLACE CAS,
-    * re-recording the table's stats columns on the rewritten files like
-    * every other rewrite verb. An empty `affectedLines` (no group
-    * matched, pure not-matched inserts) degenerates to an append. */
-  private[graft] def commitRewrite(spark: SparkSession, table: String,
-      version: Int, affectedLines: Set[String],
-      staged: Seq[(String, Long)], op: String): Int = {
+  /** The statistics a SQL row-level writer records on the files it
+    * stages into `table` (rows of `schema`): the same [[commitStats]]
+    * every rewrite verb records — the pinned `version`'s stats columns
+    * under the head's props — evaluated by the writer task itself,
+    * which renders its file's manifest line. */
+  private[graft] def rowLevelStats(spark: SparkSession, table: String,
+      version: Int, schema: types.StructType): CommitStats = {
     val root = new Path(table)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val added =
-      if (staged.isEmpty) Seq.empty[String]
-      else withStats(spark, fs, root, staged,
-        statsColumnsOf(fs, root, version))
+    val head = currentVersion(fs, root)
+    commitStats(spark, schema, statsColumnsOf(fs, root, version),
+      if (head > 0) propsOf(fs, root, head) else Map.empty)
+  }
+
+  /** Commit a row-level rewrite: swap `affectedLines` (the groups the
+    * COW scan read) for `added`, the manifest lines (statistics
+    * included) of the files the writer tasks staged — one REPLACE CAS.
+    * An empty `affectedLines` (no group matched, pure not-matched
+    * inserts) degenerates to an append. */
+  private[graft] def commitRewrite(spark: SparkSession, table: String,
+      affectedLines: Set[String], added: Seq[String], op: String): Int = {
+    val root = new Path(table)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     replaceCommit(fs, root, op, affectedLines, added)
   }
 
   /** Commit a DELTA row-level write (the merge-on-read half of the SQL
     * row-level surface, [[graft.sql.GraftDeltaOperation]]): the tasks
-    * staged `dataStaged` (insert/update-new rows) and position-delete
+    * staged data files (insert/update-new rows) and position-delete
     * sidecars; `grpToSidecars` says which sidecar(s) carry each data
     * file's deleted ordinals. ONE REPLACE CAS swaps the affected lines
     * for the same lines with dv groups appended and adds the new data
@@ -805,10 +791,11 @@ private[ops] trait RowLevel { this: Layout.type =>
     * UPDATE/MERGE costs the matched+inserted rows, not the matched-file
     * bytes. Grps whose file was concurrently compacted away surface as
     * the standard REPLACE conflict (the annotated line is no longer in
-    * the head). */
+    * the head). `dataLines` are the new data files' manifest lines, as
+    * their writer tasks rendered them. */
   private[graft] def commitDelta(spark: SparkSession, table: String,
       version: Int, grpToSidecars: Map[String, Seq[String]],
-      dataStaged: Seq[(String, Long)], op: String): Int = {
+      dataLines: Seq[String], op: String): Int = {
     val root = new Path(table)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val affected = manifestFiles(fs, root, version)
@@ -821,11 +808,7 @@ private[ops] trait RowLevel { this: Layout.type =>
     val annotated = affected.map { l =>
       grpToSidecars(grpOfRel(entryPath(l))).sorted.foldLeft(l)(withDvGroup)
     }
-    val added = annotated ++ (
-      if (dataStaged.isEmpty) Seq.empty[String]
-      else withStats(spark, fs, root, dataStaged,
-        statsColumnsOf(fs, root, version)))
-    replaceCommit(fs, root, op, affected.toSet, added)
+    replaceCommit(fs, root, op, affected.toSet, annotated ++ dataLines)
   }
 
   /** Snapshot GC (VACUUM): drop manifests older than the newest

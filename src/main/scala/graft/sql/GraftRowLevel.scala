@@ -11,7 +11,7 @@ import org.apache.spark.sql.connector.expressions.{Expressions, Literal => V2Lit
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.graft.{ColumnBridge, FileAggregate}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
@@ -19,6 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.MorMaskExpr
 import graft.ops.Layout
+import graft.ops.layout.CommitStats
 
 /** Group-based row-level SQL (`MERGE INTO` / `UPDATE` / rewrite-path
   * `DELETE`) for graft-manifest tables — the copy-on-write half Spark's
@@ -40,10 +41,11 @@ import graft.ops.Layout
   *      driven by Catalyst instead of by hand;
   *   3. the WRITE stages each task's rows as parquet files into a fresh
   *      txn dir (Spark's own `ParquetFileFormat.prepareWrite` factory,
-  *      via the bridge — ReplaceDataExec has no V1 write fallback) and
+  *      via the bridge — ReplaceDataExec has no V1 write fallback),
+  *      each task computing its file's statistics as it writes, and
   *      the COMMIT is one [[Layout.commitRewrite]] CAS: head − scanned
-  *      groups + staged files, stats columns re-recorded, serialized
-  *      through the same manifest arbiter as every programmatic verb.
+  *      groups + staged files, serialized through the same manifest
+  *      arbiter as every programmatic verb.
   *
   * Scale posture (the 100 TB question): the rewrite cost is bounded by
   * the matched-file footprint + insert volume, never the table — group
@@ -406,22 +408,23 @@ class GraftCowBatchWrite(op: GraftRowLevelOperation) extends BatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory = {
-    val (factory, conf) = ColumnBridge.parquetWriterFactory(
-      SparkSession.active, writeSchema, Map.empty)
-    GraftCowWriterFactory(op.tablePath, txnRel, factory, conf, writeSchema)
+    val spark = SparkSession.active
+    val (factory, conf) =
+      ColumnBridge.parquetWriterFactory(spark, writeSchema, Map.empty)
+    GraftCowWriterFactory(op.tablePath, txnRel, factory, conf, writeSchema,
+      Layout.rowLevelStats(spark, op.tablePath, op.pinnedVersion,
+        writeSchema))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val staged = messages.toSeq.collect {
-      case m: GraftCowCommitMessage if m.relPath != null =>
-        (m.relPath, m.bytes)
+    val added = messages.toSeq.collect {
+      case m: GraftCowCommitMessage if m.line != null => m.line
     }
     val scan = op.commitScan
     require(scan != null,
       "row-level write committed without a configured scan")
     val affected = scan.files.map(_._1).toSet
-    Layout.commitRewrite(SparkSession.active, op.tablePath,
-      op.pinnedVersion, affected, staged,
+    Layout.commitRewrite(SparkSession.active, op.tablePath, affected, added,
       s"${op.command().toString.toLowerCase}Sql")
   }
 
@@ -433,8 +436,9 @@ class GraftCowBatchWrite(op: GraftRowLevelOperation) extends BatchWrite {
   }
 }
 
-case class GraftCowCommitMessage(relPath: String, bytes: Long, rows: Long)
-  extends WriterCommitMessage
+/** A task's staged file as its manifest line (statistics included), or
+  * a null line when the task wrote no row. */
+case class GraftCowCommitMessage(line: String) extends WriterCommitMessage
 
 // ---------------------------------------------------------------------
 // Delta-based (merge-on-read) row-level SQL — `SupportsDelta`. On a
@@ -522,13 +526,14 @@ class GraftDeltaBatchWrite(op: GraftDeltaOperation)
     val (dvFactory, dvConf) =
       ColumnBridge.parquetWriterFactory(spark, dvSchema, Map.empty)
     GraftDeltaWriterFactory(op.tablePath, txnRel, dataFactory, dvFactory,
-      dataConf, dvConf, writeSchema, dvSchema)
+      dataConf, dvConf, writeSchema, dvSchema,
+      Layout.rowLevelStats(spark, op.tablePath, op.pinnedVersion,
+        writeSchema))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val ms = messages.toSeq.collect { case m: GraftDeltaCommitMessage => m }
-    val dataStaged = ms.collect {
-      case m if m.dataRel != null => (m.dataRel, m.dataBytes) }
+    val dataLines = ms.collect { case m if m.dataLine != null => m.dataLine }
     val grpToSidecars = ms.flatMap(m =>
         m.grps.map(g => g -> m.dvRel)).groupBy(_._1)
       .map { case (g, rs) => g -> rs.map(_._2).distinct.sorted.toSeq }
@@ -536,9 +541,9 @@ class GraftDeltaBatchWrite(op: GraftDeltaOperation)
     // nothing to commit — committing would mint a manifest version
     // identical to the head (version churn + a misleading DESCRIBE
     // HISTORY line per no-op statement; r17 ADVICE)
-    if (grpToSidecars.isEmpty && dataStaged.isEmpty) return
+    if (grpToSidecars.isEmpty && dataLines.isEmpty) return
     Layout.commitDelta(SparkSession.active, op.tablePath,
-      op.pinnedVersion, grpToSidecars, dataStaged,
+      op.pinnedVersion, grpToSidecars, dataLines,
       s"${op.command().toString.toLowerCase}DeltaSql")
   }
 
@@ -550,12 +555,16 @@ class GraftDeltaBatchWrite(op: GraftDeltaOperation)
   }
 }
 
-case class GraftDeltaCommitMessage(dataRel: String, dataBytes: Long,
-    dvRel: String, grps: Array[String]) extends WriterCommitMessage
+/** A task's staged data file as its manifest line (null when it
+  * inserted nothing), and its position-delete sidecar with the file
+  * groups the sidecar covers. */
+case class GraftDeltaCommitMessage(dataLine: String, dvRel: String,
+    grps: Array[String]) extends WriterCommitMessage
 
 /** Per-task delta writer: lazily opens a parquet data writer for
   * inserts and a (grp, pos) sidecar writer for deletes; update =
-  * delete + insert. Names carry (partition, task attempt) so
+  * delete + insert. The data file's statistics are aggregated as its
+  * rows are written. Names carry (partition, task attempt) so
   * speculative retries never collide — the commit coordinator picks one
   * attempt's message, losers stay unreferenced until vacuum. */
 case class GraftDeltaWriterFactory(tablePath: String, txnRel: String,
@@ -565,7 +574,7 @@ case class GraftDeltaWriterFactory(tablePath: String, txnRel: String,
       org.apache.spark.sql.execution.datasources.OutputWriterFactory,
     conf: org.apache.spark.util.SerializableConfiguration,
     dvConf: org.apache.spark.util.SerializableConfiguration,
-    schema: StructType, dvSchema: StructType)
+    schema: StructType, dvSchema: StructType, stats: CommitStats)
     extends DeltaWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long)
@@ -573,17 +582,21 @@ case class GraftDeltaWriterFactory(tablePath: String, txnRel: String,
 
     private var dataWriter:
       org.apache.spark.sql.execution.datasources.OutputWriter = null
+    private var data: FileAggregate.Buffer = null
     private var dvWriter:
       org.apache.spark.sql.execution.datasources.OutputWriter = null
     private val grps = scala.collection.mutable.TreeSet.empty[String]
     private val dvRow = new GenericInternalRow(2)
 
     override def insert(row: InternalRow): Unit = {
-      if (dataWriter == null)
+      if (dataWriter == null) {
         dataWriter = ColumnBridge.newOutputWriter(dataFactory, conf,
           s"$tablePath/$txnRel", f"part-$partitionId%05d-$taskId",
           schema, partitionId, taskId)
+        data = stats.agg.newFile()
+      }
       dataWriter.write(row)
+      data.add(row)
     }
 
     override def delete(meta: InternalRow, id: InternalRow): Unit = {
@@ -619,8 +632,10 @@ case class GraftDeltaWriterFactory(tablePath: String, txnRel: String,
         }
       val (dataRel, dataBytes) = closeAndRel(dataWriter)
       val (dvRel, _) = closeAndRel(dvWriter)
-      GraftDeltaCommitMessage(dataRel, dataBytes, dvRel,
-        grps.toArray)
+      GraftDeltaCommitMessage(
+        if (dataRel == null) null
+        else stats.line(dataRel, dataBytes, data.rows, data.result()),
+        dvRel, grps.toArray)
     }
 
     override def abort(): Unit =
@@ -640,37 +655,42 @@ case class GraftDeltaWriterFactory(tablePath: String, txnRel: String,
 /** Per-task parquet writer: lazily opened (an empty partition stages no
   * file), named by (partition, task attempt) so a speculative retry
   * never collides — the commit coordinator picks exactly one attempt's
-  * message, and losers' files stay unreferenced until vacuum. */
+  * message, and losers' files stay unreferenced until vacuum. The
+  * file's statistics are aggregated as its rows are written and ride
+  * the commit message in its rendered manifest line. */
 case class GraftCowWriterFactory(tablePath: String, txnRel: String,
     factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
     conf: org.apache.spark.util.SerializableConfiguration,
-    schema: StructType) extends DataWriterFactory {
+    schema: StructType, stats: CommitStats) extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] = new DataWriter[InternalRow] {
 
     private var writer:
       org.apache.spark.sql.execution.datasources.OutputWriter = null
-    private var rows = 0L
+    private var file: FileAggregate.Buffer = null
 
     override def write(row: InternalRow): Unit = {
-      if (writer == null)
+      if (writer == null) {
         writer = ColumnBridge.newOutputWriter(factory, conf,
           s"$tablePath/$txnRel", f"part-$partitionId%05d-$taskId",
           schema, partitionId, taskId)
+        file = stats.agg.newFile()
+      }
       writer.write(row)
-      rows += 1
+      file.add(row)
     }
 
     override def commit(): WriterCommitMessage =
-      if (writer == null) GraftCowCommitMessage(null, 0L, 0L)
+      if (writer == null) GraftCowCommitMessage(null)
       else {
         writer.close()
         val p = new Path(writer.path())
         val len = p.getFileSystem(
           new org.apache.hadoop.conf.Configuration(conf.value))
           .getFileStatus(p).getLen
-        GraftCowCommitMessage(s"$txnRel/${p.getName}", len, rows)
+        GraftCowCommitMessage(stats.line(s"$txnRel/${p.getName}", len,
+          file.rows, file.result()))
       }
 
     override def abort(): Unit =
