@@ -354,7 +354,7 @@ class MorMaskSpec extends AnyFunSuite {
     headLines(t).flatMap(l =>
       Layout.entryDvs(l) ++ Layout.entryEqs(l).map(_._1)).distinct.size
 
-  test("a masked read is one job at 1, 4 and 8 sidecars; compaction ≤ 2") {
+  test("a masked read is one job at 1, 4 and 8 sidecars; compaction ≤ 1") {
     import spark.implicits._
     val t = table("jobs")
     val read = () => Layout.readSnapshotWhere(spark, t,
@@ -375,7 +375,7 @@ class MorMaskSpec extends AnyFunSuite {
     val compactJobs = JobCount.during(spark, "mask-compact") {
       Layout.compactDeletes(spark, t)
     }
-    assert(compactJobs <= 2, s"compactDeletes ran $compactJobs jobs")
+    assert(compactJobs <= 1, s"compactDeletes ran $compactJobs jobs")
     assert(liveSidecars(t) == 0)
     assert(rows(Layout.readSnapshot(spark, t)) == before)
   }
