@@ -13,7 +13,8 @@ span name: calls, jobs per call (min-max), jobs, tasks and CPU.
 --name keeps spans whose name starts with PREFIX (e.g. ops.Layout.).
 --site keeps only jobs whose call site matches REGEX, e.g.
 `--site '^parquet at (Manifests|Commits|Reads|Branches|Maintenance|RowLevel)'`
-lists the parquet jobs Layout's seams (ops/layout/) submitted.
+lists the parquet read jobs Layout's seams (ops/layout/) submitted; their
+staging writes show as `writeParquet at <seam file>:<line>`.
 """
 import argparse
 import json
