@@ -13,10 +13,13 @@ import org.apache.spark.sql.types._
   * The reference's SQLite warehouse (CREATE TABLE + chunked append + B-tree
   * indexes, ETLCNPJFinalEmpresaEstabelecimentos.py:113-182) maps to parquet
   * tables with an atomic job commit. Secondary indexes have no Spark
-  * equivalent; their physical role (join/filter locality on cnpj_basico,
-  * id_cnae) is filled by `repartition(col)` at write time — co-located
-  * sorted row groups give min/max skipping on the filter keys, and the
-  * dims are broadcast at query time anyway.
+  * equivalent. Their lookup role falls to the parquet footer: the fact
+  * table is written sorted within each write task on id_cnae, the
+  * flagship's 50-value IN-list column, so each row group's min/max on it
+  * is tight and the pushed-down filter skips row groups that hold no
+  * listed CNAE. The sort is task-local, so the write schedules no
+  * shuffle. Join locality is not needed: the files are not bucketed and
+  * the flagship broadcasts its dims.
   *
   * Typed views implement the §1.4 canonical typing decision: clean
   * numerics/dates get real types; affinity-mixed columns (numero, ddd*,
@@ -25,13 +28,17 @@ import org.apache.spark.sql.types._
   */
 object Warehouse {
 
-  /** S8/S9: overwrite-write a table, partitioned on a locality key —
-    * the physical analogue of the reference's bulk-load-then-index. */
-  def writeTable(df: DataFrame, dir: String, partitionKey: Option[String])
-      : Unit = {
-    val out = partitionKey.fold(df)(k => df.repartition(col(k)))
-    out.write.mode("overwrite").parquet(dir)
-  }
+  /** S8/S9: overwrite-write a table, each write task's rows sorted on
+    * `sortKey` when one is given — the physical analogue of the
+    * reference's bulk-load-then-index. The sort is within partitions:
+    * the write keeps its input's partitioning and runs as one job. A
+    * file's row groups then cover narrow `sortKey` ranges, which is what
+    * parquet min/max skipping needs; a file smaller than one row group
+    * (`parquet.block.size`, 128 MB by default) gains nothing from it. */
+  def writeTable(df: DataFrame, dir: String, sortKey: Option[String])
+      : Unit =
+    sortKey.fold(df)(k => df.sortWithinPartitions(k))
+      .write.mode("overwrite").parquet(dir)
 
   def readTable(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(dir)
@@ -60,12 +67,12 @@ object Warehouse {
     * GraftSession comment); table-level size/row-count stats improve
     * estimates either way. */
   def writeTableWithStats(spark: SparkSession, name: String, df: DataFrame,
-      dir: String, partitionKey: Option[String], statsColumns: Seq[String])
+      dir: String, sortKey: Option[String], statsColumns: Seq[String])
       : DataFrame = {
     val stats = new TableStats(spark, df.schema, statsColumns)
     val obs = Observation()
     writeTable(df.observe(obs, stats.aggregates.head, stats.aggregates.tail: _*),
-      dir, partitionKey)
+      dir, sortKey)
     register(spark, name, df.schema, dir, stats.of(obs.get))
   }
 

@@ -535,7 +535,7 @@ private[ops] trait Commits { this: Layout.type =>
         flattenStagedDirs(fs, txn, write(fan, dups))
       } else write(out, Nil)
     val byName = written.map(w => w.rel -> w).toMap
-    fs.listStatus(txn).toSeq
+    val staged = fs.listStatus(txn).toSeq
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       .map { st =>
         val name = st.getPath.getName
@@ -545,6 +545,10 @@ private[ops] trait Commits { this: Layout.type =>
         Staged(rel, w.rows, stats.line(rel, st.getLen, w.rows, w.values),
           stats.extra(w.values))
       }
+    // a fan-out write of no rows writes no file, but its committer still
+    // leaves the directory (and `_SUCCESS`); no line will name it
+    if (staged.isEmpty) fs.delete(txn, true)
+    staged
   }
 
   /** Move every parquet leaf of a dynamic-partition staging tree up
@@ -1080,13 +1084,14 @@ private[ops] trait Commits { this: Layout.type =>
     override def fillInStackTrace(): Throwable = this
   }
 
-  /** Abandon a staged-but-uncommitted transaction's directory NOW
-    * instead of waiting for vacuum (best effort — a failure here just
-    * leaves a normal crashed-txn orphan). */
+  /** Abandon staged-but-uncommitted transactions' directories NOW
+    * instead of waiting for vacuum — every distinct txn directory among
+    * `staged`, so a verb that staged two txns drops both (best effort —
+    * a failure here just leaves a normal crashed-txn orphan). */
   private[ops] def dropStaged(fs: FileSystem, root: Path,
       staged: Seq[Staged]): Unit =
-    staged.headOption.foreach(s =>
-      fs.delete(new Path(root, s.rel).getParent, true))
+    staged.map(s => new Path(root, s.rel).getParent).distinct
+      .foreach(fs.delete(_, true))
 
   /** [[commitSnapshot]] carrying an exactly-once writer-transaction
     * marker: commits `df` AND records `appId → batchId` in the SAME

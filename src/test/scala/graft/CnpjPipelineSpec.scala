@@ -5,6 +5,9 @@ import java.nio.charset.Charset
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.functions.desc
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cnpj._
@@ -24,50 +27,7 @@ class CnpjPipelineSpec extends AnyFunSuite {
   private val base = "target/test_cnpj"
   private val latin1 = Charset.forName("ISO-8859-1")
 
-  private def writeCsv(sub: String, rows: Seq[String]): Unit = {
-    val dir = Paths.get(s"$base/raw/$sub")
-    Files.createDirectories(dir)
-    Files.write(dir.resolve("data.csv"),
-      rows.mkString("\n").getBytes(latin1))
-  }
-
-  private def fixture(): Unit = {
-    // FIXTURES.md A.1 shape; 9612480 has no matching estabelecimento row
-    writeCsv("empresas", Seq(
-      "9612479;MARCETEX SOLUCOES LTDA;2062;49;195400,00;03;",
-      "9612480;ACUCAR & AÇO LTDA;2062;49;1000,50;01;",
-      "9612481;FORA DO FILTRO SA;2062;49;99,99;05;"))
-    // 30 cols; rows 1-2 pass all three IN filters, row 3 fails them
-    writeCsv("estabelecimentos", Seq(
-      "9612479;0001;83;1;MARCETEX DIVISORIAS;2;20080409;0;;;20080409;" +
-        "1622601;;ESTRADA;ERNESTINA VIEIRA;345;GALPAO3 - SUPERIOR;" +
-        "JARDIM PLANALTO;06382260;SP;6313;11;41898282;;;;;" +
-        "FISCAL@MARCETEX.COM.BR;;",
-      // ddd1/telefone1 EMPTY here: with row 1 carrying "11"/"41898282",
-      // the columns are all-int-with-nulls → pandas float64 → the golden
-      // "11.0" artifact (SURVEY §1.3); numero "001A" keeps them honest on
-      // the object-dtype path.
-      "9612481;0001;99;1;AÇAÍ DO PORTO;3;20100101;0;;;20100101;" +
-        "4321500;;RUA;DAS FLORES;001A;;CENTRO;06000000;SP;7157;;" +
-        ";;;;;CONTATO@ACAI.BR;;",
-      "9612479;0002;64;2;FILIAL FORA;2;20080409;0;;;20080409;" +
-        "9999999;;RUA;OUTRA;10;;BAIRRO;06382261;SP;9999;11;1234;;;;;;;"))
-    writeCsv("cnae", Seq(
-      "1622601;Fabricação de esquadrias de madeira",
-      "4321500;Instalação e manutenção elétrica",
-      "9999999;Fora do filtro"))
-    // CARAPICUIBA carries the golden file's fixed-width padding
-    // (resultado_final.csv row 2 — never trimmed anywhere in the pipeline)
-    writeCsv("municipios", Seq(
-      s"6313;${"CARAPICUIBA".padTo(45, ' ')}",
-      "7157;TABOÃO DA SERRA", "9999;OUTRO"))
-    // FK-only catalogs (optional dirs; loaded for completeness)
-    writeCsv("natureza_juridica", Seq("2062;Sociedade Empresária Limitada"))
-    writeCsv("qualificacao_responsavel", Seq("49;Sócio-Administrador"))
-    writeCsv("pais", Seq("105;BRASIL"))
-    writeCsv("motivo_situacao_cadastral", Seq(
-      "2;ATIVA", "3;SUSPENSA", "8;BAIXADA"))
-  }
+  private def fixture(): Unit = CnpjFixture.write(s"$base/raw")
 
   test("ingest reads headerless latin-1 ;-CSV with applied schema") {
     fixture()
@@ -205,6 +165,77 @@ class CnpjPipelineSpec extends AnyFunSuite {
     ).mkString("", "\n", "\n")
     val text = new String(bytes, 3, bytes.length - 3, "UTF-8")
     assert(text == expected)
+  }
+
+  test("Pipeline.run schedules a pinned job budget") {
+    fixture()
+    val out = new File(s"$base/resultado_jobs.csv")
+    // eight table writes, four broadcast builds and a two-job export: no
+    // write or export of this size shuffles, so a shuffle that creeps
+    // back in shows here as extra jobs
+    val jobs = JobCount.during(spark, "cnpj-run-budget") {
+      Pipeline.run(spark, s"$base/raw", s"$base/wh_jobs",
+        s"$base/export_jobs", out).unpersist()
+    }
+    assert(jobs == 14, s"Pipeline.run scheduled $jobs jobs")
+  }
+
+  test("the id_cnae-sorted fact layout lets the flagship skip row groups") {
+    fixture()
+    Pipeline.buildWarehouse(spark, s"$base/raw", s"$base/wh_rg")
+    def t(n: String) = Warehouse.readTable(spark, s"$base/wh_rg/$n")
+    val expected = Pipeline.flagship(spark, s"$base/wh_rg").collect()
+      .map(_.toString).sorted.toSeq
+    // the three rows arrive in descending id_cnae, so only the sort puts
+    // the one non-flagship CNAE (9999999) in a row group of its own
+    val typed = Warehouse.typedEstabelecimentos(Ingest.readRawCsv(spark,
+      s"$base/raw/estabelecimentos", Schemas.estabelecimentosRaw))
+      .repartition(1).sortWithinPartitions(desc("id_cnae"))
+    // a 1-byte row-group target checked every 2 rows: two rows per group
+    val small = Seq("parquet.block.size" -> "1",
+      "parquet.page.size.row.check.min" -> "2",
+      "parquet.page.size.row.check.max" -> "2")
+    def write(dir: String, sortKey: Option[String]): Unit = {
+      small.foreach { case (k, v) => spark.conf.set(k, v) }
+      try Warehouse.writeTable(typed, dir, sortKey)
+      finally small.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+    def rowGroups(dir: String): Seq[Long] = {
+      import org.apache.parquet.hadoop.ParquetFileReader
+      import org.apache.parquet.hadoop.util.HadoopInputFile
+      import scala.jdk.CollectionConverters._
+      val conf = spark.sparkContext.hadoopConfiguration
+      val files = new File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(files.length == 1, files.toSeq)
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(files.head.getAbsolutePath), conf))
+      try r.getFooter.getBlocks.asScala.map(_.getRowCount).toSeq
+      finally r.close()
+    }
+    def flagshipOver(dir: String): (Seq[String], Long) = {
+      val df = Flagship.query(Warehouse.readTable(spark, dir), t("cnae"),
+        t("empresas"), t("municipios"), t("motivo_situacao_cadastral"))
+      val rows = df.collect().map(_.toString).sorted.toSeq
+      val plan = df.queryExecution.executedPlan
+      val scans = new AdaptiveSparkPlanHelper {}.collect(plan) {
+        case s: FileSourceScanExec => s
+      }.filter(_.relation.location.rootPaths
+        .exists(_.getName == new File(dir).getName))
+      assert(scans.size == 1, plan.toString)
+      (rows, scans.head.metrics("numOutputRows").value)
+    }
+    val sortedDir = s"$base/rg_sorted"
+    val unsortedDir = s"$base/rg_unsorted"
+    write(sortedDir, Some("id_cnae"))
+    write(unsortedDir, None)
+    assert(rowGroups(sortedDir) == Seq(2L, 1L))
+    assert(rowGroups(unsortedDir) == Seq(2L, 1L))
+    val (sortedRows, sortedScanned) = flagshipOver(sortedDir)
+    val (unsortedRows, unsortedScanned) = flagshipOver(unsortedDir)
+    assert(sortedRows == expected && unsortedRows == expected)
+    assert(sortedScanned == 2L && sortedScanned < typed.count(),
+      s"sorted layout scanned $sortedScanned rows")
+    assert(unsortedScanned == 3L, s"unsorted layout scanned $unsortedScanned")
   }
 
   test("FK-only catalogs load with typed keys") {

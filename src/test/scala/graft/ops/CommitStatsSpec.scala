@@ -305,6 +305,32 @@ class CommitStatsSpec extends AnyFunSuite {
       .where(col("p").isNull || col("p") === "").count() == 60)
   }
 
+  test("a stage that commits nothing leaves no txn directory: a failed " +
+      "upsert drops both its txns, an empty fan-out CREATE stages none") {
+    def txnDirs(t: String): Set[String] = {
+      val data = new Path(t, "data")
+      if (!fs.exists(data)) Set.empty
+      else fs.listStatus(data).map(_.getPath.getName)
+        .filter(_.startsWith("txn-")).toSet
+    }
+    val t = fresh("dropped")
+    Layout.commitSnapshot(spark, t, flatRows(0, 100),
+      props = Map(Layout.RowLevelModeProp -> "mor"))
+    Layout.upsertByKeys(spark, t, flatRows(95, 105), "b")
+    val before = txnDirs(t)
+    // a key sidecar and a data txn are staged, then the CAS refuses the
+    // second key-column list
+    val e = intercept[Exception] {
+      Layout.upsertByKeys(spark, t, flatRows(0, 5), "i")
+    }
+    assert(e.getMessage.contains("keyed on"), e.getMessage)
+    assert(txnDirs(t) == before)
+    val p = fresh("empty_partitioned")
+    Layout.commitSnapshot(spark, p, empty("p STRING, k BIGINT"),
+      props = Map(Layout.PartitionedByProp -> "p"))
+    assert(head(p) == 1 && txnDirs(p).isEmpty)
+  }
+
   test("bucketed staging: #bucket, and a null key's file lacks it") {
     val t = fresh("bucketed")
     Layout.commitSnapshot(spark, t, empty("k BIGINT, v STRING"),
