@@ -4,8 +4,6 @@ import java.io.File
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.SizeTier
-
 /** End-to-end CNPJ pipeline — the Spark re-expression of the reference's
   * main() (ETLCNPJFinalEmpresaEstabelecimentos.py:237-265):
   *
@@ -22,7 +20,7 @@ import graft.SizeTier
   * disappears (partitions), PRAGMA/commit dance disappears (atomic job
   * commit). Every arrow after the fetch is distributed. The table
   * writes schedule no shuffle (one job each), and neither does the
-  * export of a result whose fact scan is local-sized ([[exportOrder]]).
+  * export ([[writeExport]]).
   */
 object Pipeline {
 
@@ -96,8 +94,7 @@ object Pipeline {
     // cached: the export writes it and callers typically count/show it —
     // without the cache each action re-runs the 5-way join
     val result = flagship(spark, warehouseDir).cache()
-    Export.writeCsvUtf8SigSingle(exportOrder(spark, warehouseDir, result),
-      exportDir, exportFile)
+    writeExport(result, exportDir, exportFile)
     result
   }
 
@@ -109,28 +106,19 @@ object Pipeline {
       exportDir: String, exportFile: File): DataFrame = {
     buildWarehouse(spark, rawDir, warehouseDir)
     val result = PandasCompat(flagship(spark, warehouseDir)).cache()
-    Export.writeCsvUtf8SigSingle(exportOrder(spark, warehouseDir, result),
-      exportDir, exportFile)
+    writeExport(result, exportDir, exportFile)
     result
   }
 
-  /** `result` in export order, (cnpj_basico, nome_fantasia). When the fact
-    * scan is at or under [[SizeTier.LocalBytes]], the filtered result is
-    * a small fraction of it: it is coalesced into one task and sorted
-    * there, which schedules no range-sampling job and no shuffle, and the
-    * export writes one shard. Under AQE the cached result materializes
-    * as its own query stage at full parallelism; only the sort and the
-    * write run in the one task. Above that, a global sort keeps the
-    * export parallel. The tier keys on the fact table, not on `result`'s
-    * plan: without column statistics a join's size estimate is the
-    * product of its inputs', so a flagship over a few hundred KB of facts
-    * would report exabytes. */
-  private[graft] def exportOrder(spark: SparkSession, warehouseDir: String,
-      result: DataFrame): DataFrame = {
-    val fact = Warehouse.readTableWithStats(spark, "cnpj_estabelecimentos",
-      s"$warehouseDir/estabelecimentos")
-    if (SizeTier.small(fact, SizeTier.LocalBytes))
-      result.coalesce(1).sortWithinPartitions("cnpj_basico", "nome_fantasia")
-    else result.orderBy("cnpj_basico", "nome_fantasia")
-  }
+  /** Write `result` in export order, (cnpj_basico, nome_fantasia), from
+    * one task: the flagship's filters leave a small fraction of the fact
+    * table, so one task sorts it with no range-sampling job and no
+    * shuffle, and the export writes one shard. Under AQE the cached
+    * result materializes as its own query stage at full parallelism;
+    * only the sort and the write run in the one task. */
+  private def writeExport(result: DataFrame, exportDir: String,
+      exportFile: File): Unit =
+    Export.writeCsvUtf8SigSingle(
+      result.coalesce(1).sortWithinPartitions("cnpj_basico", "nome_fantasia"),
+      exportDir, exportFile)
 }

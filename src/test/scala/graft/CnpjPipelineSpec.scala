@@ -7,7 +7,6 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.functions.desc
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cnpj._
@@ -180,62 +179,51 @@ class CnpjPipelineSpec extends AnyFunSuite {
     assert(jobs == 14, s"Pipeline.run scheduled $jobs jobs")
   }
 
-  test("the id_cnae-sorted fact layout lets the flagship skip row groups") {
+  test("buildWarehouse sorts the fact file so the flagship skips row groups") {
     fixture()
-    Pipeline.buildWarehouse(spark, s"$base/raw", s"$base/wh_rg")
-    def t(n: String) = Warehouse.readTable(spark, s"$base/wh_rg/$n")
-    val expected = Pipeline.flagship(spark, s"$base/wh_rg").collect()
+    Pipeline.buildWarehouse(spark, s"$base/raw", s"$base/wh_rg_ref")
+    val expected = Pipeline.flagship(spark, s"$base/wh_rg_ref").collect()
       .map(_.toString).sorted.toSeq
-    // the three rows arrive in descending id_cnae, so only the sort puts
-    // the one non-flagship CNAE (9999999) in a row group of its own
-    val typed = Warehouse.typedEstabelecimentos(Ingest.readRawCsv(spark,
-      s"$base/raw/estabelecimentos", Schemas.estabelecimentosRaw))
-      .repartition(1).sortWithinPartitions(desc("id_cnae"))
+    // the fixture with its non-flagship CNAE (9999999) between the two
+    // flagship rows: only a sort on id_cnae gives it a row group of its own
+    val raw = s"$base/raw_rg"
+    CnpjFixture.write(raw)
+    val est = Paths.get(s"$raw/estabelecimentos/data.csv")
+    val Array(a, b, c) = new String(Files.readAllBytes(est), latin1).split("\n")
+    Files.write(est, Seq(a, c, b).mkString("\n").getBytes(latin1))
     // a 1-byte row-group target checked every 2 rows: two rows per group
     val small = Seq("parquet.block.size" -> "1",
       "parquet.page.size.row.check.min" -> "2",
       "parquet.page.size.row.check.max" -> "2")
-    def write(dir: String, sortKey: Option[String]): Unit = {
-      small.foreach { case (k, v) => spark.conf.set(k, v) }
-      try Warehouse.writeTable(typed, dir, sortKey)
-      finally small.foreach { case (k, _) => spark.conf.unset(k) }
-    }
-    def rowGroups(dir: String): Seq[Long] = {
+    val wh = s"$base/wh_rg"
+    small.foreach { case (k, v) => spark.conf.set(k, v) }
+    try Pipeline.buildWarehouse(spark, raw, wh)
+    finally small.foreach { case (k, _) => spark.conf.unset(k) }
+    val factDir = new File(s"$wh/estabelecimentos")
+    val rowGroups = {
       import org.apache.parquet.hadoop.ParquetFileReader
       import org.apache.parquet.hadoop.util.HadoopInputFile
       import scala.jdk.CollectionConverters._
-      val conf = spark.sparkContext.hadoopConfiguration
-      val files = new File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+      val files = factDir.listFiles().filter(_.getName.endsWith(".parquet"))
       assert(files.length == 1, files.toSeq)
       val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(files.head.getAbsolutePath), conf))
+        new org.apache.hadoop.fs.Path(files.head.getAbsolutePath),
+        spark.sparkContext.hadoopConfiguration))
       try r.getFooter.getBlocks.asScala.map(_.getRowCount).toSeq
       finally r.close()
     }
-    def flagshipOver(dir: String): (Seq[String], Long) = {
-      val df = Flagship.query(Warehouse.readTable(spark, dir), t("cnae"),
-        t("empresas"), t("municipios"), t("motivo_situacao_cadastral"))
-      val rows = df.collect().map(_.toString).sorted.toSeq
-      val plan = df.queryExecution.executedPlan
-      val scans = new AdaptiveSparkPlanHelper {}.collect(plan) {
-        case s: FileSourceScanExec => s
-      }.filter(_.relation.location.rootPaths
-        .exists(_.getName == new File(dir).getName))
-      assert(scans.size == 1, plan.toString)
-      (rows, scans.head.metrics("numOutputRows").value)
-    }
-    val sortedDir = s"$base/rg_sorted"
-    val unsortedDir = s"$base/rg_unsorted"
-    write(sortedDir, Some("id_cnae"))
-    write(unsortedDir, None)
-    assert(rowGroups(sortedDir) == Seq(2L, 1L))
-    assert(rowGroups(unsortedDir) == Seq(2L, 1L))
-    val (sortedRows, sortedScanned) = flagshipOver(sortedDir)
-    val (unsortedRows, unsortedScanned) = flagshipOver(unsortedDir)
-    assert(sortedRows == expected && unsortedRows == expected)
-    assert(sortedScanned == 2L && sortedScanned < typed.count(),
-      s"sorted layout scanned $sortedScanned rows")
-    assert(unsortedScanned == 3L, s"unsorted layout scanned $unsortedScanned")
+    assert(rowGroups == Seq(2L, 1L))
+    val df = Pipeline.flagship(spark, wh)
+    assert(df.collect().map(_.toString).sorted.toSeq == expected)
+    val plan = df.queryExecution.executedPlan
+    val scans = new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case s: FileSourceScanExec => s
+    }.filter(_.relation.location.rootPaths
+      .exists(_.getName == factDir.getName))
+    assert(scans.size == 1, plan.toString)
+    // unsorted, both row groups hold a flagship CNAE and all 3 rows are read
+    val scanned = scans.head.metrics("numOutputRows").value
+    assert(scanned == 2L, s"the flagship scanned $scanned fact rows")
   }
 
   test("FK-only catalogs load with typed keys") {

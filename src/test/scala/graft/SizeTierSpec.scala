@@ -80,35 +80,6 @@ class SizeTierSpec extends AnyFunSuite {
       s"small tier staged $smallFiles files, large $largeFiles")
   }
 
-  test("cnpj export: both tiers write the same bytes; only Large range-sorts") {
-    import java.io.File
-    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val base = "target/graft_io/spec/size_tier_cnpj"
-    CnpjFixture.write(s"$base/raw")
-    def export(t: SizeTier.Tier): Array[Byte] = {
-      val out = new File(s"$base/resultado_$t.csv")
-      forcing(t)(cnpj.Pipeline.run(spark, s"$base/raw", s"$base/wh_$t",
-        s"$base/export_$t", out)).unpersist()
-      java.nio.file.Files.readAllBytes(out.toPath)
-    }
-    val small = export(Small)
-    assert(small.sameElements(export(Large)))
-    // header + the fixture's two flagship rows
-    assert(new String(small, "UTF-8").count(_ == '\n') == 3)
-    def rangeShuffles(t: SizeTier.Tier): Int = {
-      val wh = s"$base/wh_$t"
-      val plan = forcing(t)(cnpj.Pipeline.exportOrder(spark, wh,
-        cnpj.Pipeline.flagship(spark, wh))).queryExecution.executedPlan
-      new AdaptiveSparkPlanHelper {}.collect(plan) {
-        case e: ShuffleExchangeExec => e
-      }.count(_.outputPartitioning.isInstanceOf[RangePartitioning])
-    }
-    assert(rangeShuffles(Small) == 0)
-    assert(rangeShuffles(Large) == 1)
-  }
-
   test("a forced scope left by an exception restores the default") {
     val over = BigInt(SizeTier.LocalBytes) + 1
     assert(SizeTier.small(BigInt(0), SizeTier.LocalBytes))
