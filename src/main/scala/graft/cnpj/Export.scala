@@ -4,10 +4,7 @@ import java.io.{BufferedInputStream, File, FileInputStream, FileOutputStream}
 
 import org.apache.spark.sql.DataFrame
 
-/** CSV export sinks (SURVEY.md §2.1 S6–S7).
-  *
-  * S6 (transform-stage dialect): `;`-separated latin-1 with header —
-  * native Spark CSV options, sharded, scales linearly.
+/** CSV export sink (SURVEY.md §2.1 S7).
   *
   * S7 (final export): the reference writes utf-8-sig, i.e. a UTF-8 BOM
   * (EF BB BF) before the header (pandas to_csv encoding="utf-8-sig",
@@ -19,22 +16,13 @@ import org.apache.spark.sql.DataFrame
   */
 object Export {
 
-  /** S6: sharded `;`-CSV, latin-1, with header. The two whitespace
-    * options matter: Spark's CSV WRITER trims cell whitespace by default,
-    * which would destroy the golden file's fixed-width padding
-    * (nome_municipio, SURVEY §1.3) — pandas to_csv never trims. */
-  def writeCsvLatin1(df: DataFrame, dir: String): Unit =
-    df.write.mode("overwrite")
-      .option("sep", ";").option("header", "true")
-      .option("encoding", "ISO-8859-1")
-      .option("ignoreLeadingWhiteSpace", "false")
-      .option("ignoreTrailingWhiteSpace", "false")
-      .csv(dir)
-
   /** S7: single `;`-CSV file, UTF-8 with BOM, header once — byte-compatible
     * with the reference's pandas export. Spark writes shards (in parallel,
     * each with a header); the driver concatenates keeping only the first
-    * shard's header and prepending the BOM. */
+    * shard's header and prepending the BOM. The two whitespace options
+    * matter: Spark's CSV WRITER trims cell whitespace by default, which
+    * would destroy the golden file's fixed-width padding (nome_municipio,
+    * SURVEY §1.3) — pandas to_csv never trims. */
   def writeCsvUtf8SigSingle(df: DataFrame, dir: String, outFile: File)
       : Unit = {
     df.write.mode("overwrite")

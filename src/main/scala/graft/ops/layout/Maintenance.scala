@@ -309,8 +309,7 @@ private[ops] trait Maintenance { this: Layout.type =>
     val lines = manifestFiles(fs, root, v0)
     // "only_dv" = materialize every row MASK: equality deletes (r19)
     // rewrite away through the same targeted pass as position dvs
-    val (dvLines, plain) = lines.partition(l =>
-      entryDvs(l).nonEmpty || entryEqs(l).nonEmpty)
+    val (dvLines, plain) = lines.partition(masked)
     if (dvLines.isEmpty) return (v0, 0, plain.size, 0L)
     val bytesIn = dvLines.map(l => entrySize(l).getOrElse(
       fs.getFileStatus(new Path(root, entryPath(l))).getLen)).sum

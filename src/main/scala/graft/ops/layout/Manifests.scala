@@ -1053,16 +1053,17 @@ private[ops] trait Manifests { this: Layout.type =>
       java.net.URLEncoder.encode(sidecarRel, "UTF-8") + "\t" + DvPfx
 
   // equality deletes (r19 verdict task 7): ("@eq",
-  // "E:<url-enc sidecar rel>;<url-enc key col>", "E:") — the
+  // "E:<url-enc key file rel>;<url-enc key col>", "E:") — the
   // merge-on-read currency for writers that CANNOT read matched
-  // positions first (streaming CDC upserts): the sidecar is a one-
-  // column parquet of dead KEY VALUES, and a masked read drops rows by
-  // the key instead of the ordinal. Scoping is per-line, like dvs: the
-  // committing verb annotates the lines present at ITS head, so a file
-  // appended later (including the upsert's own batch) is never masked —
-  // exactly Iceberg's sequence-number rule, expressed in the line-copy
-  // currency this manifest already has. Bound decoders reject the E:
-  // prefix like B:/D:/K:, so mixed lines parse everywhere.
+  // positions first (streaming CDC upserts): the key file is a parquet
+  // file whose key columns are the key set (an upsert's own appended
+  // data file, or a tombstone batch's key-only file), and a masked read
+  // drops rows by the key instead of the ordinal. Scoping is per-line,
+  // like dvs: the committing verb annotates the lines present at ITS
+  // head, so a file appended later (including the upsert's own batch)
+  // is never masked — exactly Iceberg's sequence-number rule, expressed
+  // in the line-copy currency this manifest already has. Bound decoders
+  // reject the E: prefix like B:/D:/K:, so mixed lines parse everywhere.
   private val EqCol = "@eq"
   private val EqPfx = "E:"
 
@@ -1099,6 +1100,10 @@ private[ops] trait Manifests { this: Layout.type =>
     }
     b.result()
   }
+
+  /** Whether `line` carries a row mask: position or equality deletes. */
+  private[graft] def masked(line: String): Boolean =
+    entryDvs(line).nonEmpty || entryEqs(line).nonEmpty
 
   /** Refuse a schema DDL touching a column that keys live equality
     * deletes — the annotations mask by NAME, so a rename orphans them

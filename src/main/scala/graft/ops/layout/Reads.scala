@@ -29,8 +29,7 @@ private[ops] trait Reads { this: Layout.type =>
     val lines = manifestFiles(fs, root, v, chain)
     // "dv-free" means MASK-free: equality deletes (r19) disqualify a
     // file from the vectorized branch exactly as position dvs do
-    ((if (dvFreeOnly) lines.filter(l =>
-        entryDvs(l).isEmpty && entryEqs(l).isEmpty) else lines)
+    ((if (dvFreeOnly) lines.filterNot(masked) else lines)
        .map(l => new Path(root, entryPath(l)).toString),
      schemaOf(fs, root, v, chain))
   }
@@ -145,7 +144,7 @@ private[ops] trait Reads { this: Layout.type =>
   /** The merge-on-read mask of a read of data files under `dataSchema`:
     * keep a row unless its file's own sidecars delete it — `dvs` pairs
     * a data file (relative path) with its position-delete sidecars,
-    * `eqs` with its equality-delete (key sidecar, key columns) pointers.
+    * `eqs` with its equality-delete (key file, key columns) pointers.
     * Returns what a task needs ([[MorMask.Spec]]) and the key columns
     * as (name, data type, comparison type). Built from manifest lines on
     * the driver with no Spark job: one stat per sidecar, the key
@@ -289,11 +288,10 @@ private[ops] trait Reads { this: Layout.type =>
     }
     def read(ls: Seq[String]) = readVersionFiles(spark, fs, root, v,
       ls.map(l => new Path(root, entryPath(l)).toString))
-    val (masked, plain) = lines.partition(l =>
-      entryDvs(l).nonEmpty || entryEqs(l).nonEmpty)
-    val maskedRead = if (masked.isEmpty) Nil else {
-      val f = read(masked)
-      Seq(f.where(linesMask(spark, fs, root, f, masked)))
+    val (maskedLines, plain) = lines.partition(masked)
+    val maskedRead = if (maskedLines.isEmpty) Nil else {
+      val f = read(maskedLines)
+      Seq(f.where(linesMask(spark, fs, root, f, maskedLines)))
     }
     (maskedRead ++ (if (plain.isEmpty) Nil else Seq(read(plain))))
       .reduce(_ unionByName _)
@@ -312,7 +310,7 @@ private[ops] trait Reads { this: Layout.type =>
     val root = new Path(table)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dvLines = manifestFiles(fs, root, version)
-      .filter(l => entryDvs(l).nonEmpty || entryEqs(l).nonEmpty)
+      .filter(masked)
     if (dvLines.isEmpty)
       emptyFrame(spark,
         schemaOf(fs, root, version).getOrElse(types.StructType(Nil)))
@@ -423,8 +421,7 @@ private[ops] trait Reads { this: Layout.type =>
     // file universe only — a kept dv-carrying file must never slip into
     // the vectorized branch (its deleted rows would resurrect)
     val lines =
-      if (dvFreeOnly) all.filter(l =>
-        entryDvs(l).isEmpty && entryEqs(l).isEmpty) else all
+      if (dvFreeOnly) all.filterNot(masked) else all
     // bucket pruning (r18): on a `PARTITIONED BY (bucket(N, col))`
     // table, an equality/IN conjunct on the bucket column maps to the
     // placement ids — keep only files whose recorded `#bucket` group

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types
-import graft.{ControlPlane, SizeTier}
+import graft.ControlPlane
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Row-level verbs (delete, upsert, replace, merge) and table history.
@@ -126,10 +126,10 @@ private[ops] trait RowLevel { this: Layout.type =>
     * writes them (`collect_set(grp)` per file), so the pointer the
     * manifest line needs comes from the same evaluation of `positions`
     * that staged the bytes — no read-back. The position shuffle runs
-    * AQE-off at width 1 (one job, one sidecar, like upsertByKeys' key
-    * sidecar): positions are two narrow columns, the matching scan
-    * upstream keeps its parallelism, and AQE's coalescing already made
-    * this write one task up to its advisory partition size. Cost
+    * AQE-off at width 1 (one job, one sidecar, like a tombstone
+    * upsert's key file): positions are two narrow columns, the matching
+    * scan upstream keeps its parallelism, and AQE's coalescing already
+    * made this write one task up to its advisory partition size. Cost
     * ∝ matched rows, never table size: THE merge-on-read bargain. */
   private def stageDv(spark: SparkSession, fs: FileSystem, root: Path,
       positions: DataFrame): (Seq[Staged], Map[String, Seq[String]]) = {
@@ -184,35 +184,48 @@ private[ops] trait RowLevel { this: Layout.type =>
   /** Merge-on-read EQUALITY upsert (r19 verdict task 7) — the CDC-sink
     * verb for writers that CANNOT read matched positions first (a
     * streaming `foreachBatch` must not re-scan a 100 TB table per
-    * micro-batch): one commit that (1) appends `batch`'s rows, (2)
-    * stages a one-column parquet of `batch`'s key values, and (3)
-    * annotates every line present at the commit's head with the
-    * equality-delete pointer. A masked read then drops those files'
-    * rows by KEY ([[readManifestLines]]' in-task mask) — the
-    * pre-existing row version dies, the appended one lives, and files
-    * committed after this upsert (including its own) are never masked
-    * (per-line scoping = Iceberg's sequence-number rule in the
-    * line-copy currency). `deleteOnly = true` records a tombstone
-    * batch (CDC deletes). [[compactSnapshot]] /
+    * micro-batch): one commit that appends `batch`'s rows and annotates
+    * every line present at the commit's head with equality-delete
+    * pointers to the KEY SET — the data files this commit appends,
+    * whose key columns hold exactly the batch's keys. A masked read
+    * then drops those lines' rows by KEY ([[readManifestLines]]'
+    * in-task mask, which reads only the key columns of each key file)
+    * — the pre-existing row version dies, the appended one lives, and
+    * files committed after this upsert (including its own) are never
+    * masked (per-line scoping = Iceberg's sequence-number rule in the
+    * line-copy currency). `deleteOnly = true` records a tombstone batch
+    * (CDC deletes): it appends no data, so its key set is one staged
+    * key-only file. Either way `batch` is evaluated once, by the one
+    * staging write. [[compactSnapshot]] /
     * `CALL system.compact(only_dv => true)` materialize the masks.
+    * Files are immutable, so a key file keeps holding the batch as
+    * written after a later verb masks or compacts its own rows away;
+    * [[expireSnapshots]] keeps every key file a retained version names.
     *
     * One OR MORE integral-or-string key columns (r20: composite CDC
     * keys — (tenant_id, id), (source, doc_id) — are the multi-tenant
-    * shape; a row dies only when EVERY key column matches a sidecar
+    * shape; a row dies only when EVERY key column matches a key-file
     * row, plain multi-column anti-join semantics). Rows with a NULL in
-    * ANY key column never match (SQL join semantics) and are filtered
-    * from the sidecar. Requires `graft.rowlevel.mode='mor'`. All live
-    * eq annotations on a table must share one key-column list —
-    * changing keys mid-stream refuses until a compaction.
+    * ANY key column never match (SQL join semantics), on either side.
+    * Requires `graft.rowlevel.mode='mor'`. All live eq annotations on a
+    * table must share one key-column list — changing keys mid-stream
+    * refuses until a compaction.
     *
-    * Annotation is STATS-PRUNED (r20): a head line whose recorded
-    * per-file bounds on any key column PROVE the batch's whole key
-    * range absent skips the `@eq` pointer — masked-read cost then
-    * tracks delete LOCALITY instead of table size on a key-clustered
-    * table. One-sided as ever: no stats, stats on other columns, or
-    * any overlap → the line annotates (stats are an optimization,
-    * never a correctness input). Write cost ∝ the batch, plus
-    * O(files) manifest-line annotation — zero data-file reads or
+    * Annotation is STATS-PRUNED per key file: the write's own tasks
+    * compute each staged file's min/max on every key column, and a head
+    * line skips a key file's `@eq` pointer when the file holds no
+    * non-null key, or when on some key column the line's recorded
+    * bounds and the file's range are disjoint. A table bucketed or
+    * partitioned on a key column compares the `#bucket`/`#p:` groups
+    * both lines record as well, so each line there takes one group per
+    * upsert, not one per appended file. Masked-read cost then tracks
+    * delete LOCALITY instead of table size on a key-clustered table.
+    * One-sided as ever: no stats, stats on other columns, type drift or
+    * any overlap → the line annotates (stats are an optimization, never
+    * a correctness input). A table partitioned on a NON-key column
+    * appends one file per partition value in the batch, so each
+    * annotated line takes that many groups. Write cost ∝ the batch,
+    * plus O(files) manifest-line annotation — zero data-file reads or
     * rewrites, the property that makes it a streaming sink.
     * Returns (newVersion, linesAnnotated, dataFilesAppended). */
   def upsertByKeys(spark: SparkSession, table: String, batch: DataFrame,
@@ -256,65 +269,53 @@ private[ops] trait RowLevel { this: Layout.type =>
             s"string, got $dt")
       }
     }
-    val keys = batch.select(keyCols.map(col): _*)
-      .where(keyCols.map(col(_).isNotNull).reduce(_ && _)).distinct()
-    // the batch's per-key-column value range, for the annotation skip —
-    // observed ON the sidecar staging write below (r22, guide §6
-    // one-pass I/O: the sidecar write already evaluates exactly these
-    // keys, so a separate range-aggregate job re-bought the same rows
-    // for two values per column); a null pair = zero non-null-keyed
-    // rows, masking nothing
-    val rngObs = org.apache.spark.sql.Observation()
+    // each staged file's range on every key column, computed by the
+    // write's own tasks; a null minimum = no non-null key in the file
     val rangeAggs = keyCols.zipWithIndex.flatMap { case (c, i) =>
       Seq(min(col(c)).as(s"mn$i"), max(col(c)).as(s"mx$i")) }
-    val keysObs = keys.observe(rngObs, rangeAggs.head, rangeAggs.tail: _*)
-    // one sidecar file: keys are micro-batch-bounded by the caller's
-    // trigger, not table-sized. The write's shuffle width is the
-    // explicit repartition(1) — AQE cannot coalesce it, so running the
-    // sidecar stage AQE-off drops the per-upsert shuffle-materialization
-    // job + replan with a bit-identical single-file layout (r22, same
-    // reasoning as stageTxn's bucket write; bounded content per the
-    // micro-batch contract above).
-    val sidecars = stageTxn(spark, fs, root,
-      ControlPlane(keysObs.repartition(1)), stamp = false)
-    // the sidecar write materialized the observed ranges; read them now
-    // (post-action, never blocks) — `refuted` above closes over these
-    // and is first called inside the CAS, well after this point
-    val rangeMap = rngObs.get
-    val batchRanges: Seq[(String, Option[(Any, Any)])] =
-      keyCols.zipWithIndex.map { case (c, i) =>
-        c -> (if (rangeMap(s"mn$i") == null) None
-              else Some((rangeMap(s"mn$i"), rangeMap(s"mx$i"))))
-      }
-    val emptyBatchKeys = batchRanges.forall(_._2.isEmpty)
-    /** true iff `l`'s recorded bounds REFUTE every batch key for some
-      * key column — the annotation is then provably a no-op for this
-      * file. */
-    def refuted(l: String): Boolean = emptyBatchKeys || {
-      val bs = entryBounds(l)
-      batchRanges.exists { case (c, rng) =>
-        rng.exists { case (bMn, bMx) =>
-          bs.get(c).exists {
-            case LongBounds(mn, mx) => (bMn, bMx) match {
-              case (a: Number, b: Number) =>
-                b.longValue < mn || a.longValue > mx
-              case _ => false // type drift: never skip
-            }
-            case StrBounds(mn, mx) => (bMn, bMx) match {
-              case (a: String, b: String) =>
-                !utf8Leq(mn, b) || !utf8Leq(a, mx)
-              case _ => false
-            }
-            case _ => false // NumBounds etc.: never skip
-          }
-        }
-      }
-    }
-    val dataStaged =
-      if (deleteOnly) Seq.empty[Staged]
+    // the key set: the appended data files, or for a tombstone batch one
+    // key-only file (micro-batch-bounded, so one task of a width-1
+    // shuffle that AQE could not coalesce anyway: run AQE-off, one job)
+    val staged =
+      if (deleteOnly) stageTxn(spark, fs, root,
+        ControlPlane(batch.select(keyCols.map(col): _*).repartition(1)),
+        stamp = false, fileAggs = rangeAggs)
       else stageTxn(spark, fs, root, batch,
-        statsColumns = statsColumnsOf(fs, root, v0))
-    val dataEntries = dataStaged.map(_.line)
+        statsColumns = statsColumnsOf(fs, root, v0), fileAggs = rangeAggs)
+    val dataEntries = if (deleteOnly) Nil else staged.map(_.line)
+    def placedOnKey(g: String): Boolean = keyCols.exists(c =>
+      g == PartGroupPfx + c ||
+        g.matches("#bucket:\\d+:" + java.util.regex.Pattern.quote(c)))
+    // per key file: its rel path and the groups a head line is checked
+    // against — its key ranges, plus the `#bucket`/`#p:` groups its own
+    // line records on a key column. A file with no non-null key drops
+    // out: it masks nothing.
+    val keyFiles: Seq[(String, Map[String, ColBounds])] = staged.flatMap {
+      s =>
+        val ranges = keyCols.indices.map(i =>
+          (s.values.get(2 * i), s.values.get(2 * i + 1)))
+        if (ranges.exists(_._1 == null)) None
+        else Some(s.rel ->
+          (entryBounds(s.line).filter(g => placedOnKey(g._1)) ++
+            keyCols.zip(ranges).collect {
+              case (c, (a: Number, b: Number)) =>
+                c -> LongBounds(a.longValue, b.longValue)
+              case (c, (a: String, b: String)) => c -> StrBounds(a, b)
+            }))
+    }
+    /** true iff a line's recorded bounds `bs` and a key file's `f` are
+      * disjoint on some group — the file's keys then provably miss every
+      * row of the line. */
+    def refuted(bs: Map[String, ColBounds],
+        f: Map[String, ColBounds]): Boolean =
+      f.exists { case (g, fb) =>
+        bs.get(g).exists(lb => (lb, fb) match {
+          case (LongBounds(mn, mx), LongBounds(a, b)) => b < mn || a > mx
+          case (StrBounds(mn, mx), StrBounds(a, b)) =>
+            !utf8Leq(mn, b) || !utf8Leq(a, mx)
+          case _ => false // NumBounds, type drift: never skip
+        })
+      }
     var annotated = 0
     val v = try casCommit(fs, root, "upsertByKeys",
       { head =>
@@ -330,18 +331,16 @@ private[ops] trait RowLevel { this: Layout.type =>
             "them away before upserting on a different key")
         annotated = 0
         headLines.map { l =>
-          if (refuted(l)) l // bounds prove no batch key present
-          else {
-            annotated += 1
-            sidecars.foldLeft(l)((acc, s) =>
-              withEqGroup(acc, s.rel, keyCols))
-          }
+          val bs = entryBounds(l)
+          val hits = keyFiles.filterNot(f => refuted(bs, f._2))
+          if (hits.nonEmpty) annotated += 1
+          hits.foldLeft(l)((acc, f) => withEqGroup(acc, f._1, keyCols))
         } ++ dataEntries
       },
       if (deleteOnly) head => schemaOf(fs, root, head)
       else appendSchemaFor(fs, root, batch))
     catch { case e: Throwable =>
-      dropStaged(fs, root, sidecars ++ dataStaged)
+      dropStaged(fs, root, staged)
       throw e
     }
     (v, annotated, dataEntries.size)
@@ -388,22 +387,19 @@ private[ops] trait RowLevel { this: Layout.type =>
     // a non-deterministic (or concurrently-changing) source sneak
     // out-of-predicate rows past the check. A refused (or failed)
     // backfill deletes its txn dir, leaving nothing for vacuum.
-    // r22 (guide §6 one-pass I/O): the offender COUNT rides the staging
-    // write as an observed metric — the write is the evaluation whose
-    // bytes commit, so observing it checks exactly what lands (the same
-    // check-what-you-commit guarantee the staged-bytes re-read gave,
-    // minus one scheduled job per backfill). Only the FAILURE path still
-    // reads the staged files back, to quote an offending row.
+    // The offender COUNT is a per-file aggregate of the staging write:
+    // the write is the evaluation whose bytes commit, so its tasks
+    // check exactly what lands, in no job of its own. Only the FAILURE
+    // path reads the staged files back, to quote an offending row.
     val stats =
       if (statsColumns.nonEmpty) statsColumns
       else statsColumnsOf(fs, root, v0)
-    val offObs = org.apache.spark.sql.Observation()
-    val dataStaged = stageTxn(spark, fs, root, data.observe(offObs,
-      count(when(!coalesce(predicate, lit(false)), 1)).as("off")),
-      statsColumns = stats)
+    val dataStaged = stageTxn(spark, fs, root, data, statsColumns = stats,
+      fileAggs = Seq(count(when(!coalesce(predicate, lit(false)), 1))
+        .as("off")))
     val stagedPaths = dataStaged.map(s => new Path(root, s.rel).toString)
     try {
-      if (offObs.get("off").asInstanceOf[Long] > 0L) {
+      if (dataStaged.map(_.values.getLong(0)).sum > 0L) {
         val offenders = ControlPlane(readSidecars(spark, stagedPaths)
           .where(!coalesce(predicate, lit(false))).limit(1)).collect()
         throw new IllegalArgumentException(

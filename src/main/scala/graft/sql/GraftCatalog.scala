@@ -694,7 +694,7 @@ class GraftTable(path: String, version: Option[Int],
         val all = Layout.rowLevelEntries(spark, path, pinnedVersion)
         val universe =
           if (!dvFreeOnly) all
-          else all.filter { case (l, _, _) => Layout.entryDvs(l).isEmpty }
+          else all.filterNot { case (l, _, _) => Layout.masked(l) }
         val entries = if (skips.isEmpty) universe else {
           val kept = Layout.fileSelection(spark, path, skips,
             Some(pinnedVersion), dvFreeOnly)._1.toSet

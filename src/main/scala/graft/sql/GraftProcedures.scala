@@ -342,10 +342,11 @@ object GraftProcedures {
   /** Equality upsert as SQL (r19): `CALL system.upsert('default.t',
     * source => 'updates_view', key => 'id')` — merge-on-read key
     * upserts without reading a single data file (Layout.upsertByKeys:
-    * append the source's rows, stage a key sidecar, annotate head
-    * lines; masked reads drop the listed keys). `delete_only => true`
-    * records a tombstone batch. The source is any table or view the
-    * session resolves — the natural shape for a CDC staging view. */
+    * append the source's rows and annotate head lines with the appended
+    * files as their key set; masked reads drop those keys).
+    * `delete_only => true` records a tombstone batch as one key-only
+    * file. The source is any table or view the session resolves — the
+    * natural shape for a CDC staging view. */
   private def upsertProc(cat: GraftCatalog): UnboundProcedure =
     new GraftProcedure("upsert") {
       override def parameters(): Array[ProcedureParameter] = Array(

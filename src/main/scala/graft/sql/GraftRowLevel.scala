@@ -299,8 +299,7 @@ class GraftCowScan(table: String, entries: Seq[(String, String, Long)],
     * parquet skips row groups. */
   override def createReaderFactory(): PartitionReaderFactory = {
     val spark = SparkSession.active
-    val masked = files.map(_._1).filter(l =>
-      Layout.entryDvs(l).nonEmpty || Layout.entryEqs(l).nonEmpty)
+    val masked = files.map(_._1).filter(Layout.masked)
     val mask = if (masked.isEmpty) None else {
       val root = new Path(table)
       Some(Layout.linesMaskSpec(spark,

@@ -476,7 +476,7 @@ class ManifestStreamSource(spark: SparkSession, table: String,
     // rows of files committed before them, emitted or about to be.
     // With readChangeFeed (r20) that is exactly expressible: the
     // change-feed batch below serves each upsert commit as key
-    // TOMBSTONES (the sidecar's rows, `_change_type='delete'`) plus
+    // TOMBSTONES (the key files' rows, `_change_type='delete'`) plus
     // the appended row versions (`'insert'`), ordered by
     // `_commit_version` — a consumer folding delete-then-insert per
     // version reconstructs the masked batch read exactly. Without the
@@ -522,7 +522,7 @@ class ManifestStreamSource(spark: SparkSession, table: String,
 
   /** The CDC change-feed batch (r20): every version in (from, to]
     * contributes its appended rows as `_change_type='insert'` and the
-    * key rows of its NEW equality-delete sidecars as `'delete'`
+    * non-null key rows of its NEW equality-delete key files as `'delete'`
     * tombstones (key columns populated, the rest null), each tagged
     * with `_commit_version`. Folding delete-then-insert per version —
     * eq annotations never mask their own commit's files — reconstructs
@@ -573,7 +573,7 @@ class ManifestStreamSource(spark: SparkSession, table: String,
             .withColumn(ct, lit("insert"))
             .withColumn(cv, lit(v.toLong)))
         }
-      // sidecar set NEW at v = this version's upsert tombstones
+      // key files NEW at v = this version's upsert tombstones
       val eqCur = Layout.versionEqMap(fs, root, v).values.flatten.toSet
       val eqNew = (eqCur -- eqPrev).toSeq.sortBy(_._1)
       eqPrev = eqCur
@@ -590,7 +590,10 @@ class ManifestStreamSource(spark: SparkSession, table: String,
               col(f.name).cast(f.dataType).as(f.name)
             else lit(null).cast(f.dataType).as(f.name)
           }
-          rel.select(sel: _*).withColumn(ct, lit("delete"))
+          // a key file may be the upsert's own data file: a row with a
+          // NULL key masks nothing, so it is no tombstone
+          rel.where(keyCols.map(c => col(c).isNotNull).reduce(_ && _))
+            .select(sel: _*).withColumn(ct, lit("delete"))
             .withColumn(cv, lit(v.toLong))
         }
       dels ++ ins

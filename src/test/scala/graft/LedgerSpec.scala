@@ -359,6 +359,48 @@ class LedgerSpec extends AnyFunSuite {
       s"allow-list names input_file_name() calls that are gone: $stale")
   }
 
+  test("every Observation() in src/main is allow-listed: a staging " +
+      "write's own figures come from its per-file aggregates") {
+    import scala.jdk.CollectionConverters._
+    // Observation() calls keyed (file, enclosing member), each with the
+    // reason a `fileAggs` aggregate on the staging write (stageTxn's
+    // FileAggregate, evaluated by the tasks that write each file)
+    // cannot serve
+    val allowed = Map(
+      ("graft/ops/layout/RowLevel.scala", "mergeInto") ->
+        ("counts the insert arm of a union: the staged files mix it " +
+          "with the updated rows, so a per-file count cannot tell them " +
+          "apart"),
+      ("graft/cnpj/Warehouse.scala", "writeTableWithStats") ->
+        "writes through df.write, not stageTxn: no per-file aggregate")
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root)
+    val sources =
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(f => root.relativize(f).toString).toSeq.sorted
+      finally files.close()
+    assert(sources.contains("graft/ops/layout/RowLevel.scala") &&
+      sources.contains("graft/cnpj/Warehouse.scala"),
+      s"guard lost its source files: $sources")
+    val call = """\bObservation\s*\(""".r
+    val sites = sources.flatMap { rel =>
+      val code = ParquetCalls.codeOnly(new String(java.nio.file.Files
+        .readAllBytes(root.resolve(rel)),
+        java.nio.charset.StandardCharsets.UTF_8))
+      call.findAllMatchIn(code)
+        .map(m => (rel, ParquetCalls.enclosing(code, m.start)))
+    }.distinct
+    val unlisted = sites.filterNot(allowed.contains)
+    assert(unlisted.isEmpty,
+      "Observation() in src/main — count or aggregate on the staging " +
+        "write (stageTxn's fileAggs), or allow-list the call with the " +
+        "reason a per-file aggregate cannot serve: " +
+        unlisted.mkString("; "))
+    val stale = allowed.keySet -- sites
+    assert(stale.isEmpty,
+      s"allow-list names Observation() calls that are gone: $stale")
+  }
+
   test("one merge-on-read mask: MorMask.Spec is built only by " +
       "Layout.maskSpec") {
     import scala.jdk.CollectionConverters._

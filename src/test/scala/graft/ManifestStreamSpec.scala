@@ -485,6 +485,33 @@ class ManifestStreamSpec extends AnyFunSuite {
       e.getCause.getMessage)
   }
 
+  test("readChangeFeed: an upsert row with a NULL key inserts and emits " +
+      "no tombstone") {
+    import graft.ops.Layout._
+    import spark.implicits._
+    val table = freshTable("cdc_null_key")
+    commitSnapshot(spark, table,
+      (1L to 3L).map(i => (Option(i), s"v$i")).toDF("id", "name"),
+      props = Map(RowLevelModeProp -> "mor"))
+    // one data file holds both rows, so it is a key file with a NULL key
+    upsertByKeys(spark, table,
+      Seq((Option(2L), "v2b"), (Option.empty[Long], "nokey"))
+        .toDF("id", "name").coalesce(1), "id")
+    val name = freshName()
+    val q = spark.readStream.format("graft-manifest")
+      .option("readChangeFeed", "true").load(table)
+      .writeStream.format("memory").queryName(name).start()
+    try q.processAllAvailable() finally q.stop()
+    val feed = spark.table(name)
+      .select("id", "name", "_change_type", "_commit_version")
+      .as[(java.lang.Long, String, String, Long)].collect().toSeq
+    val dels = feed.filter(_._3 == "delete")
+    assert(dels.map(r => (Option(r._1).map(_.longValue), r._4)) ==
+      Seq((Some(2L), 2L)), s"tombstones wrong: $dels")
+    assert(feed.filter(r => r._3 == "insert" && r._4 == 2L).map(_._2)
+      .toSet == Set("v2b", "nokey"))
+  }
+
   test("readChangeFeed: a REPLACE anywhere in the range refuses — " +
       "including history before a from=0 initial load") {
     import graft.ops.Layout._

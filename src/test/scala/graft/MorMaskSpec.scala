@@ -16,10 +16,13 @@ import graft.ops.Layout
   * `_metadata.row_index`) — returns exactly the rows of the anti-join
   * form it replaced — kept here as the oracle — for position deletes,
   * equality deletes and both; nested equality sets; int-then-long,
-  * string, floating (NaN, -0.0) and NULL keys; several sidecars per file
-  * and one sidecar over several files; a pushed-down filter that skips
-  * row groups; a renamed column of an id-mapped table. And a masked read
-  * is one Spark job at any sidecar count. */
+  * string, floating (NaN, -0.0), NULL and composite keys, the upsert
+  * cases with the upsert's own data files as the key set; several
+  * sidecars per file and one sidecar over several files; a table
+  * bucketed on its key, one `@eq` group per line per upsert; a
+  * pushed-down filter that skips row groups; a renamed column of an
+  * id-mapped table. And a masked read is one Spark job at any sidecar
+  * count. */
 class MorMaskSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -170,6 +173,19 @@ class MorMaskSpec extends AnyFunSuite {
     s"_spec_keys/$name/$f"
   }
 
+  /** [[Layout.upsertByKeys]] of `batch`, asserting that its key set is
+    * its own appended data files: every `@eq` group the commit adds
+    * names a file whose line the same commit adds. */
+  private def upsert(t: String, batch: DataFrame, keys: Seq[String]): Unit = {
+    def eqs = headLines(t).flatMap(Layout.entryEqs).map(_._1).toSet
+    val (filesBefore, eqsBefore) = (headLines(t).map(relOf).toSet, eqs)
+    Layout.upsertByKeys(spark, t, batch, keys, deleteOnly = false)
+    val appended = headLines(t).map(relOf).toSet -- filesBefore
+    val added = eqs -- eqsBefore
+    assert(added.nonEmpty && added.subsetOf(appended),
+      s"key set $added is not among the appended data files $appended")
+  }
+
   private def table(name: String, n: Long = 400L, files: Int = 4,
       props: Map[String, String] = Mor): String = {
     import spark.implicits._
@@ -251,9 +267,8 @@ class MorMaskSpec extends AnyFunSuite {
     assert(Layout.versionSchema(spark, t).get("k").dataType ==
       org.apache.spark.sql.types.IntegerType)
     sameAsOracle(t)
-    Layout.upsertByKeys(spark, t, Seq((7, "i7")).toDF("k", "v"), "k")
-    Layout.upsertByKeys(spark, t, Seq((8L, "l8"), (7L, "l7")).toDF("k", "v"),
-      "k")
+    upsert(t, Seq((7, "i7")).toDF("k", "v"), Seq("k"))
+    upsert(t, Seq((8L, "l8"), (7L, "l7")).toDF("k", "v"), Seq("k"))
     val got = sameAsOracle(t)
     assert(!got.exists(_.startsWith("4|")) && !got.exists(_.startsWith("40|")))
     assert(got.contains("7|l7") && got.contains("8|l8") &&
@@ -267,10 +282,10 @@ class MorMaskSpec extends AnyFunSuite {
     Layout.commitSnapshot(spark, t,
       names.zipWithIndex.map { case (s, i) => (s, i) }.toDF("s", "n")
         .repartition(2), props = Mor)
-    Layout.upsertByKeys(spark, t,
+    upsert(t,
       Seq(("\u00e9", 100), ("\u65e5\u672c", 101), ("", 102), ("b", 103))
         .toDF("s", "n"),
-      "s")
+      Seq("s"))
     val got = sameAsOracle(t)
     assert(got.contains("é|3") && got.contains("a|0") &&
       got.contains("A|1"))
@@ -314,6 +329,43 @@ class MorMaskSpec extends AnyFunSuite {
     val lines = headLines(t).map(withEq(_, keys, Seq("a", "b")))
     val got = sameAsOracle(t, lines)
     assert(got.map(_.split('|').last).toSet == Set("n1", "xn", "y2", "nn"))
+    // the same composite keys as an upsert batch: its data files, NULL
+    // keys and all, are the key set
+    upsert(t, Seq[(Option[String], Option[Long], String)](
+      (None, Some(1L), "u1"), (Some("x"), None, "u2"),
+      (Some("x"), Some(1L), "u3"), (None, None, "u4"))
+      .toDF("a", "b", "tag"), Seq("a", "b"))
+    assert(sameAsOracle(t).map(_.split('|').last).toSet ==
+      Set("n1", "xn", "y2", "nn", "u1", "u2", "u3", "u4"))
+  }
+
+  test("a table bucketed on its key: one @eq group per line per upsert") {
+    import spark.implicits._
+    val t = fresh("bucketed")
+    val props = Mor ++ Map(Layout.BucketByProp -> "k",
+      Layout.BucketCountProp -> "4")
+    Layout.commitSnapshot(spark, t, spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType.fromDDL("k BIGINT, v STRING")),
+      props = props)
+    Layout.commitSnapshot(spark, t,
+      (0L until 400L).map(i => (i, s"v$i")).toDF("k", "v"))
+    (1 to 2).foreach { i =>
+      val before = headLines(t).map(relOf).toSet
+      val eqsBefore = headLines(t).flatMap(Layout.entryEqs).map(_._1).toSet
+      val batch = (0L until 40L).map(k => (k * 10 + i, s"u$i-$k"))
+      val (_, annotated, appended) = Layout.upsertByKeys(spark, t,
+        batch.toDF("k", "v"), "k")
+      assert(appended > 1, s"upsert $i appended $appended file(s)")
+      val groups = headLines(t).filter(l => before(relOf(l)))
+        .map(l => Layout.entryEqs(l).map(_._1).count(e => !eqsBefore(e)))
+      assert(groups.forall(_ <= 1) && groups.count(_ == 1) == annotated &&
+        annotated > 0, s"upsert $i: new groups per line $groups")
+    }
+    val got = sameAsOracle(t)
+    assert(got.size == 400)
+    assert(got.contains("12|u2-1") && !got.contains("12|v12") &&
+      got.contains("11|u1-1") && got.contains("13|v13"))
   }
 
   test("a pushed-down filter that skips row groups keeps the ordinals") {
@@ -361,10 +413,11 @@ class MorMaskSpec extends AnyFunSuite {
       Seq(Layout.SkipRange("k", 0L, 10000L))).collect()
     val jobs = (1 to 8).flatMap { i =>
       // each op stages exactly one sidecar: a point delete touches one
-      // file, an upsert writes one key file
+      // file, an upsert writes one data file, its key file
       if (i % 2 == 1) Layout.deleteWhere(spark, t, col("k") === i * 47L)
       else Layout.upsertByKeys(spark, t,
-        Seq((i * 43L, s"u$i"), (399L - i, s"t$i")).toDF("k", "v"), "k")
+        Seq((i * 43L, s"u$i"), (399L - i, s"t$i")).toDF("k", "v")
+          .coalesce(1), "k")
       assert(liveSidecars(t) == i)
       if (Set(1, 4, 8)(i))
         Some(i -> JobCount.during(spark, s"mask-read-$i")(read()))

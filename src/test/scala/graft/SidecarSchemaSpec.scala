@@ -53,8 +53,9 @@ class SidecarSchemaSpec extends AnyFunSuite {
       .map(abs(table, _))
 
   /** A merge-on-read table carrying live position deletes AND equality
-    * deletes: two files, one upsert (eq sidecar on `k`), one delete
-    * (dv sidecar), one more upsert. Returns (table, expected rows). */
+    * deletes: two files, one upsert (its data files key `k`), one
+    * delete (dv sidecar), one more upsert. Returns (table, expected
+    * rows). */
   private def morTable(name: String): (String, Seq[(Long, String)]) = {
     import spark.implicits._
     val t = fresh(name)
@@ -211,8 +212,9 @@ class SidecarSchemaSpec extends AnyFunSuite {
         (0 until 10).map(i => (i, s"v$i")).toDF("k", "v"),
         props = Map(Layout.RowLevelModeProp -> "mor"))
       Layout.upsertByKeys(spark, t, Seq((2, "u2")).toDF("k", "v"), "k")
+      // one data file per upsert: each upsert's key file
       Layout.upsertByKeys(spark, t, Seq((3L, "w3"), (20L, "n20"))
-        .toDF("k", "v"), "k")
+        .toDF("k", "v").coalesce(1), "k")
       val keyFiles = eqFiles(t).sorted
       assert(keyFiles.size == 2)
       seen += spark.read.parquet(keyFiles.head).schema("k").dataType ==

@@ -899,6 +899,51 @@ class SnapshotIsolationSpec extends AnyFunSuite {
       .select("v").as[Double].head() == 310.0)
   }
 
+  test("expire keeps a key-set data file while a retained version's @eq names it") {
+    import ops.Layout._
+    import spark.implicits._
+    val table = "target/graft_io/spec/eq_upsert_expire"
+    dropTable(spark, table)
+    val root = new Path(table)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def head = currentVersion(fs, root)
+    def pathOf(l: String) = l.takeWhile(_ != '\t')
+    def rows(v: Int) = readSnapshot(spark, table, Some(v)).select("id", "v")
+      .as[(Long, Double)].collect().toSet
+    commitSnapshot(spark, table,
+      (0L until 100L).map(i => (i, i * 1.0)).toDF("id", "v").coalesce(1),
+      props = Map(RowLevelModeProp -> "mor"))
+    upsertByKeys(spark, table,
+      Seq((5L, 50.0), (1000L, 1.0)).toDF("id", "v").coalesce(1), "id")
+    val keyRel = manifestLinesOf(spark, table, head).flatMap(entryEqs)
+      .map(_._1).distinct
+    assert(keyRel.size == 1, keyRel)
+    val keyFile = new Path(root, keyRel.head)
+    // a copy-on-write replaceWhere rewrites the key file alone (no other
+    // file holds an id >= 1000): the head then names it only through
+    // the base file's @eq group
+    replaceWhere(spark, table, Seq((1000L, 2.0)).toDF("id", "v"),
+      col("id") >= 1000L)
+    val vEq = head
+    val eqLines = manifestLinesOf(spark, table, vEq)
+    assert(!eqLines.map(pathOf).contains(keyRel.head) &&
+      eqLines.flatMap(entryEqs).map(_._1).contains(keyRel.head))
+    val expected = (0L until 100L).filter(_ != 5L).map(i => (i, i * 1.0))
+      .toSet ++ Set((5L, 50.0), (1000L, 2.0))
+    assert(rows(vEq) == expected)
+    // compaction drops every line naming it from the head
+    compactSnapshot(spark, table)
+    assert(!manifestLinesOf(spark, table, head).exists(l =>
+      pathOf(l) == keyRel.head || entryEqs(l).nonEmpty))
+    expireSnapshots(spark, table, keepLast = 2, orphanOlderThanMs = 0)
+    assert(fs.exists(keyFile),
+      "expire swept a key file a retained version's @eq group names")
+    assert(rows(vEq) == expected && rows(head) == expected)
+    expireSnapshots(spark, table, keepLast = 1, orphanOlderThanMs = 0)
+    assert(!fs.exists(keyFile), "a key file no version names survived")
+    assert(rows(head) == expected)
+  }
+
   test("concurrent MOR deletes on disjoint files both land through the CAS rebase") {
     import ops.Layout._
     import spark.implicits._

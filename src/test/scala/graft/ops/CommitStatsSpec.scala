@@ -20,7 +20,8 @@ import graft.{ControlPlane, JobCount}
   * several files, the rewrite verbs, and the SQL copy-on-write and
   * merge-on-read writers. Also pins the group → sidecar map a
   * merge-on-read delete takes from its write against a read of the
-  * staged sidecars, and the job budget of the refresh verbs. */
+  * staged sidecars, and the job budget of the refresh verbs, an
+  * upsert's one staged txn included. */
 class CommitStatsSpec extends AnyFunSuite {
 
   private val base = "target/graft_io/spec/commit_stats"
@@ -305,21 +306,22 @@ class CommitStatsSpec extends AnyFunSuite {
       .where(col("p").isNull || col("p") === "").count() == 60)
   }
 
+  private def txnDirs(t: String): Set[String] = {
+    val data = new Path(t, "data")
+    if (!fs.exists(data)) Set.empty
+    else fs.listStatus(data).map(_.getPath.getName)
+      .filter(_.startsWith("txn-")).toSet
+  }
+
   test("a stage that commits nothing leaves no txn directory: a failed " +
-      "upsert drops both its txns, an empty fan-out CREATE stages none") {
-    def txnDirs(t: String): Set[String] = {
-      val data = new Path(t, "data")
-      if (!fs.exists(data)) Set.empty
-      else fs.listStatus(data).map(_.getPath.getName)
-        .filter(_.startsWith("txn-")).toSet
-    }
+      "upsert drops its txn, an empty fan-out CREATE stages none") {
     val t = fresh("dropped")
     Layout.commitSnapshot(spark, t, flatRows(0, 100),
       props = Map(Layout.RowLevelModeProp -> "mor"))
     Layout.upsertByKeys(spark, t, flatRows(95, 105), "b")
     val before = txnDirs(t)
-    // a key sidecar and a data txn are staged, then the CAS refuses the
-    // second key-column list
+    // the data txn is staged, then the CAS refuses the second
+    // key-column list
     val e = intercept[Exception] {
       Layout.upsertByKeys(spark, t, flatRows(0, 5), "i")
     }
@@ -435,15 +437,28 @@ class CommitStatsSpec extends AnyFunSuite {
     assert(committed == read)
   }
 
-  test("job budget: upsertByKeys 2, merge-on-read deleteWhere 1, " +
-      "compactDeletes 1") {
+  test("job budget: upsertByKeys 1 (deleteOnly too), merge-on-read " +
+      "deleteWhere 1, compactDeletes 1") {
     val t = fresh("jobs")
     Layout.commitSnapshot(spark, t, flatRows(0, 400).repartition(4),
       Seq("l"), props = Map(Layout.StatsColumnsProp -> "b",
         Layout.RowLevelModeProp -> "mor"))
     val batch = flatRows(395, 405)
+    val txnsBefore = txnDirs(t)
     val upsert = JobCount.during(spark, "budget-upsert") {
       Layout.upsertByKeys(spark, t, batch, "b")
+    }
+    // the upsert stages one txn, its data files, and they are its key set
+    val upsertTxns = txnDirs(t) -- txnsBefore
+    assert(upsertTxns.size == 1, upsertTxns)
+    val added = staged(t, head(t)).map(Layout.entryPath)
+    assert(added.nonEmpty &&
+      added.forall(_.startsWith(s"data/${upsertTxns.head}/")), added)
+    val keySet = lines(t, head(t)).flatMap(Layout.entryEqs).map(_._1).toSet
+    assert(keySet.nonEmpty && keySet.subsetOf(added.toSet), keySet)
+    val tombstones = JobCount.during(spark, "budget-tombstones") {
+      Layout.upsertByKeys(spark, t, spark.range(10, 13).toDF("b"), "b",
+        deleteOnly = true)
     }
     val delete = JobCount.during(spark, "budget-delete") {
       Layout.deleteWhere(spark, t, col("b") === 17L)
@@ -451,7 +466,7 @@ class CommitStatsSpec extends AnyFunSuite {
     val compact = JobCount.during(spark, "budget-compact") {
       Layout.compactDeletes(spark, t)
     }
-    assert((upsert, delete, compact) == ((2, 1, 1)))
-    assert(Layout.readSnapshot(spark, t).count() == 404)
+    assert((upsert, tombstones, delete, compact) == ((1, 1, 1, 1)))
+    assert(Layout.readSnapshot(spark, t).count() == 401)
   }
 }
