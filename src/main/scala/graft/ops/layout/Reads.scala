@@ -148,10 +148,10 @@ private[ops] trait Reads { this: Layout.type =>
     * Returns what a task needs ([[MorMask.Spec]]) and the key columns
     * as (name, data type, comparison type). Built from manifest lines on
     * the driver with no Spark job: one stat per sidecar, the key
-    * sidecars' footers (each file's own, widened into one schema —
-    * upserts may key one column int, then long), and Spark's parquet
-    * read function; the rows load inside the task that reads the file
-    * ([[MorMask]]). */
+    * files' footers (each file's own key columns, widened into one
+    * schema — upserts may key one column int, then long), and Spark's
+    * parquet read function; the rows load inside the task that reads
+    * the file ([[MorMask]]). */
   private[graft] def maskSpec(spark: SparkSession, fs: FileSystem,
       root: Path, dataSchema: types.StructType,
       dvs: Seq[(String, Seq[String])],
@@ -174,16 +174,22 @@ private[ops] trait Reads { this: Layout.type =>
       MorMask.grpOf(new Path(root, rel).toUri.toString) ->
         s.map(sizes(_)._1).distinct.toArray
     }.toMap
-    val keyPaths = eqs.flatMap(_._2.map(_._1)).distinct
-    val keySchema = keyPaths
-      .map(p => ColumnBridge.parquetFooterSchema(spark,
-        Seq(new Path(root, p).toString)))
-      .reduceOption(mergeWiden)
     def field(s: types.StructType, c: String, what: String) =
       s.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
         throw new IllegalArgumentException(s"$what lacks key column `$c`"))
-    val stored = keySchema.toSeq.flatMap(s =>
-      keyCols.map(field(s, _, "equality-delete sidecar")))
+    // each key file's footer projected to the key columns before the
+    // widening merge: a key file may be a data file, whose other columns
+    // can have changed type since; read by name, as a key-only
+    // tombstone file carries no field ids
+    val stored = eqs.flatMap(_._2.map(_._1)).distinct
+      .map { p =>
+        val footer = ColumnBridge.parquetFooterSchema(spark,
+          Seq(new Path(root, p).toString))
+        types.StructType(keyCols.map(c =>
+          field(footer, c, s"equality-delete key file $p")
+            .copy(metadata = types.Metadata.empty)))
+      }
+      .reduceOption(mergeWiden).toSeq.flatMap(_.fields)
     val dataTypes = keyCols.map(field(dataSchema, _, "data").dataType)
     // both sides widen to one type, as a join's equality coerces them
     val cmp = stored.zip(dataTypes).zip(keyCols).map { case ((f, d), c) =>

@@ -215,11 +215,12 @@ private[ops] trait RowLevel { this: Layout.type =>
     * compute each staged file's min/max on every key column, and a head
     * line skips a key file's `@eq` pointer when the file holds no
     * non-null key, or when on some key column the line's recorded
-    * bounds and the file's range are disjoint. A table bucketed or
-    * partitioned on a key column compares the `#bucket`/`#p:` groups
-    * both lines record as well, so each line there takes one group per
-    * upsert, not one per appended file. Masked-read cost then tracks
-    * delete LOCALITY instead of table size on a key-clustered table.
+    * bounds and the file's range are disjoint. A table bucketed on a key
+    * column compares the `#bucket` group both lines record as well, so
+    * each line there takes one group per upsert, not one per appended
+    * file; a table partitioned on a key column gets the same from the
+    * key ranges alone. Masked-read cost then tracks delete LOCALITY
+    * instead of table size on a key-clustered table.
     * One-sided as ever: no stats, stats on other columns, type drift or
     * any overlap → the line annotates (stats are an optimization, never
     * a correctness input). A table partitioned on a NON-key column
@@ -283,20 +284,19 @@ private[ops] trait RowLevel { this: Layout.type =>
       else stageTxn(spark, fs, root, batch,
         statsColumns = statsColumnsOf(fs, root, v0), fileAggs = rangeAggs)
     val dataEntries = if (deleteOnly) Nil else staged.map(_.line)
-    def placedOnKey(g: String): Boolean = keyCols.exists(c =>
-      g == PartGroupPfx + c ||
-        g.matches("#bucket:\\d+:" + java.util.regex.Pattern.quote(c)))
+    def bucketOnKey(g: String): Boolean = keyCols.exists(c =>
+      g.matches("#bucket:\\d+:" + java.util.regex.Pattern.quote(c)))
     // per key file: its rel path and the groups a head line is checked
-    // against — its key ranges, plus the `#bucket`/`#p:` groups its own
-    // line records on a key column. A file with no non-null key drops
-    // out: it masks nothing.
+    // against — its key ranges, plus the `#bucket` group its own line
+    // records on a key column. A file with no non-null key drops out:
+    // it masks nothing.
     val keyFiles: Seq[(String, Map[String, ColBounds])] = staged.flatMap {
       s =>
         val ranges = keyCols.indices.map(i =>
           (s.values.get(2 * i), s.values.get(2 * i + 1)))
         if (ranges.exists(_._1 == null)) None
         else Some(s.rel ->
-          (entryBounds(s.line).filter(g => placedOnKey(g._1)) ++
+          (entryBounds(s.line).filter(g => bucketOnKey(g._1)) ++
             keyCols.zip(ranges).collect {
               case (c, (a: Number, b: Number)) =>
                 c -> LongBounds(a.longValue, b.longValue)

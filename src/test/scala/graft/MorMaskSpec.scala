@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual}
-import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.sql.types.{LongType, Metadata, StringType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Layout
@@ -21,7 +21,8 @@ import graft.ops.Layout
   * sidecars per file and one sidecar over several files; a table
   * bucketed on its key, one `@eq` group per line per upsert; a
   * pushed-down filter that skips row groups; a renamed column of an
-  * id-mapped table. And a masked read is one Spark job at any sidecar
+  * id-mapped table; key files whose non-key columns disagree in type
+  * and in field ids. And a masked read is one Spark job at any sidecar
   * count. */
 class MorMaskSpec extends AnyFunSuite {
 
@@ -57,7 +58,8 @@ class MorMaskSpec extends AnyFunSuite {
   /** The anti-join form masked reads used before the in-task mask: the
     * position sidecars of the dv'd lines anti-joined on (grp, pos), then
     * each distinct equality-delete set anti-joined on its key columns
-    * under its key files' footers widened into one schema. Each row
+    * under its key files' key columns widened into one schema, read by
+    * name. Each row
     * carries its file's name and `_metadata.row_index` as `__name` and
     * `__pos`. */
   private def antiJoinRows(t: String, lines: Seq[String]): DataFrame = {
@@ -86,7 +88,9 @@ class MorMaskSpec extends AnyFunSuite {
           val cols = eqSet.head._2
           val paths = eqSet.map(e => abs(t, e._1)).toSeq
           val keySchema = paths
-            .map(p => ColumnBridge.parquetFooterSchema(spark, Seq(p)))
+            .map(p => StructType(cols.map(c =>
+              ColumnBridge.parquetFooterSchema(spark, Seq(p))(c)
+                .copy(metadata = Metadata.empty))))
             .reduce(Layout.mergeWiden)
           dvApplied(ls).join(spark.read.schema(keySchema).parquet(paths: _*)
             .select(cols.map(col): _*), cols, "left_anti")
@@ -399,6 +403,37 @@ class MorMaskSpec extends AnyFunSuite {
     val got = sameAsOracle(t)
     assert(Layout.readSnapshot(spark, t).columns.toSeq == Seq("k", "w"))
     assert(got.contains("5|u5") && !got.contains("13|v13"))
+  }
+
+  test("key files whose non-key columns disagree in type and field ids") {
+    import spark.implicits._
+    val t = fresh("retyped")
+    Layout.commitSnapshot(spark, t,
+      (0L until 300L).map(i => (i, i.toInt, -i.toInt)).toDF("k", "v", "z")
+        .repartition(3),
+      props = Mor + (Layout.ColumnMappingProp -> "id"))
+    upsert(t, Seq((5L, 500, 0), (150L, 1500, 0)).toDF("k", "v", "z"),
+      Seq("k"))
+    Layout.dropColumns(spark, t, Seq("v"))
+    Layout.addColumns(spark, t, Seq(
+      org.apache.spark.sql.types.StructField("v", StringType)))
+    // the two upserts' key files hold `v` as INT and as STRING; the
+    // mask reads only their key columns
+    upsert(t, Seq((6L, 1, "s6"), (150L, 1, "s150")).toDF("k", "z", "v"),
+      Seq("k"))
+    // a key-only tombstone file (no field ids) beside stamped data files
+    Layout.upsertByKeys(spark, t, Seq(7L, 5L).toDF("k"), Seq("k"),
+      deleteOnly = true)
+    assert(headLines(t).exists(l => Layout.entryEqs(l).size >= 3),
+      "some line should carry every upsert's key files")
+    val got = sameAsOracle(t)
+    assert(got.contains("6|1|s6") && got.contains("150|1|s150") &&
+      got.contains("8|-8|null"))
+    assert(!got.exists(r => r.startsWith("5|") || r.startsWith("7|")) &&
+      got.count(_.startsWith("150|")) == 1)
+    Layout.compactDeletes(spark, t)
+    assert(headLines(t).forall(l => Layout.entryEqs(l).isEmpty))
+    assert(rows(Layout.readSnapshot(spark, t)) == got)
   }
 
   /** Live sidecars (position and equality) on the head's lines. */
