@@ -431,6 +431,49 @@ private[ops] trait Commits { this: Layout.type =>
       headLines.filterNot(inputSet) ++ added
     }, head => schemaOf(fs, root, head)) // a rewrite never changes schema
 
+  /** The REPLACE-rewrite tail of the copy-on-write verbs and the
+    * compactions: stage `frame` as one txn recording `statsColumns`, and
+    * publish the staged files' lines through `commit` — a
+    * [[replaceCommit]] of the verb's inputs, or [[deleteCommit]]. A
+    * rewrite that keeps no row (every staged file holds 0 rows) drops
+    * its txn and adds no line: its inputs simply leave the manifest. Any
+    * failure, the CAS refusing included, drops the staged txn. Returns
+    * (new version, lines added). */
+  private[ops] def rewriteCommit(spark: SparkSession, fs: FileSystem,
+      root: Path, frame: DataFrame, statsColumns: Seq[String])(
+      commit: Seq[String] => Int): (Int, Seq[String]) = {
+    val staged = stageTxn(spark, fs, root, frame,
+      statsColumns = statsColumns)
+    try {
+      val added =
+        if (staged.forall(_.rows == 0L)) {
+          dropStaged(fs, root, staged)
+          Seq.empty[String]
+        } else staged.map(_.line)
+      (commit(added), added)
+    } catch { case e: Throwable => dropStaged(fs, root, staged); throw e }
+  }
+
+  /** The delete-commit tail of the merge-on-read verbs: one REPLACE CAS
+    * swapping each of `lines` whose file group ([[grpOfRel]]) has
+    * position-delete sidecars in `grpToSidecars` for the same line with
+    * those sidecars appended as dv groups, plus `dataLines`. Every group
+    * must name one of `lines`. Any failure, the CAS refusing included,
+    * drops `staged` (the sidecars' txn). */
+  private[ops] def deleteCommit(fs: FileSystem, root: Path, op: String,
+      lines: Seq[String], grpToSidecars: Map[String, Seq[String]],
+      dataLines: Seq[String], staged: Seq[Staged] = Nil): Int =
+    try {
+      val affected = byGrp(lines, grpToSidecars.keySet)._1
+      val absent = grpToSidecars.keySet --
+        affected.map(l => grpOfRel(entryPath(l)))
+      require(absent.isEmpty, s"$op: delete positions reference files " +
+        s"absent from the pinned version ($absent)")
+      replaceCommit(fs, root, op, affected.toSet, affected.map(l =>
+        grpToSidecars(grpOfRel(entryPath(l))).sorted.foldLeft(l)(
+          withDvGroup)) ++ dataLines)
+    } catch { case e: Throwable => dropStaged(fs, root, staged); throw e }
+
   /** Stage `df` into a fresh uuid'd data/txn-* dir — invisible until a
     * manifest lists its files — and return each committed file with its
     * manifest line. The line's statistics ([[commitStats]]: the union of

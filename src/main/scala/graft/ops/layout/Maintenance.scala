@@ -139,8 +139,9 @@ private[ops] trait Maintenance { this: Layout.type =>
     * managed by [[commitSnapshot]]/[[readSnapshot]], use
     * [[compactSnapshot]] (OPTIMIZE as a REPLACE commit; old files stay
     * put until [[expireSnapshots]]) instead. This directory form is for
-    * plain, listing-read parquet directories only. */
-  /** `onlySmallerThan`: incremental OPTIMIZE — bin-pack ONLY files below
+    * plain, listing-read parquet directories only.
+    *
+    * `onlySmallerThan`: incremental OPTIMIZE — bin-pack ONLY files below
     * the threshold and carry every file at or above it into the new
     * table unchanged (hard link where the FS supports it, metadata-only;
     * copy otherwise). This is how production OPTIMIZE actually runs at
@@ -277,10 +278,10 @@ private[ops] trait Maintenance { this: Layout.type =>
     // would silently strip a skipping table's pruning. The caller's
     // statsColumns win when given; otherwise the table's own recorded
     // columns carry, so a plain OPTIMIZE never strips pruning either.
-    val added = stageTxn(spark, fs, root, arranged, statsColumns =
+    val (v, added) = rewriteCommit(spark, fs, root, arranged,
       if (statsColumns.nonEmpty) statsColumns
-      else statsColumnsOf(fs, root, v0)).map(_.line)
-    val v = replaceCommit(fs, root, "compactSnapshot", inputs.toSet, added)
+      else statsColumnsOf(fs, root, v0))(
+      replaceCommit(fs, root, "compactSnapshot", inputs.toSet, _))
     val bytesAfter = added.map(l => entrySize(l).getOrElse(
       fs.getFileStatus(new Path(root, entryPath(l))).getLen)).sum
     (v, CompactStats(inputs.size, added.size,
@@ -313,43 +314,13 @@ private[ops] trait Maintenance { this: Layout.type =>
     if (dvLines.isEmpty) return (v0, 0, plain.size, 0L)
     val bytesIn = dvLines.map(l => entrySize(l).getOrElse(
       fs.getFileStatus(new Path(root, entryPath(l))).getLen)).sum
-    val staged = stageTxn(spark, fs, root,
+    val (v, _) = rewriteCommit(spark, fs, root,
       readManifestLines(spark, fs, root, v0, dvLines),
-      statsColumns = statsColumnsOf(fs, root, v0))
-    val v = try replaceCommit(fs, root, "compactDeletes",
-      dvLines.toSet, staged.map(_.line))
-    catch { case e: Throwable => dropStaged(fs, root, staged); throw e }
+      statsColumnsOf(fs, root, v0))(
+      replaceCommit(fs, root, "compactDeletes", dvLines.toSet, _))
     (v, dvLines.size, plain.size, bytesIn)
   }
 
-  /** Guarded partition-spec evolution (r19 verdict task 4) — the
-    * legitimate path [[setTableProps]]' layout refusal points at,
-    * without the CREATE-new-table detour: ONE REPLACE commit re-fans
-    * the whole table out under the TARGET layout (through the same
-    * staging writer every insert uses, so the single-value-per-file /
-    * one-bucket-per-file invariant and the spec-qualified stats groups
-    * are re-recorded for the new spec) and swaps the three layout
-    * properties atomically in the same manifest. Per-version props make
-    * time travel sound for free: a reader pinned to a pre-relayout
-    * version reads THAT version's props and keys its files under the
-    * OLD spec; the new head keys under the new one — no version ever
-    * mixes. Guards:
-    *   - live WAP branches refuse (their staged files were placed
-    *     under the current layout; publish or drop them first);
-    *   - the REPLACE is strict: if ANY commit lands between the
-    *     re-stage and the CAS, relayout refuses rather than adopt
-    *     files placed under a layout this commit is about to retire
-    *     (re-run it — the rewrite is idempotent, orphaned staging is
-    *     vacuum-reclaimed like any crashed txn's);
-    *   - a writer that raced the OTHER way (staged under the old
-    *     layout, landed after) is handled by the spec-qualified
-    *     `#bucket:<N>:<col>` / null-proved `#p:<col>` group names: its
-    *     files lack the new spec's groups, so SPJ soundly degrades to
-    *     the unkeyed scan until one compaction re-places them — never
-    *     a wrong grouping.
-    * Identity columns and bucket specs are mutually exclusive, as at
-    * CREATE; empty arguments flatten the table to an unpartitioned
-    * bin-packed layout. Returns (newVersion, filesBefore, filesAfter). */
   /** Validate a target layout against version `v`'s recorded schema
     * and props; returns the layout-prop map the target declares. ONE
     * definition shared by [[relayout]] and [[evolveLayout]] (the
@@ -400,6 +371,34 @@ private[ops] trait Maintenance { this: Layout.type =>
   private val LayoutPropKeys =
     Seq(PartitionedByProp, BucketByProp, BucketCountProp)
 
+  /** Guarded partition-spec evolution (r19 verdict task 4) — the
+    * legitimate path [[setTableProps]]' layout refusal points at,
+    * without the CREATE-new-table detour: ONE REPLACE commit re-fans
+    * the whole table out under the TARGET layout (through the same
+    * staging writer every insert uses, so the single-value-per-file /
+    * one-bucket-per-file invariant and the spec-qualified stats groups
+    * are re-recorded for the new spec) and swaps the three layout
+    * properties atomically in the same manifest. Per-version props make
+    * time travel sound for free: a reader pinned to a pre-relayout
+    * version reads THAT version's props and keys its files under the
+    * OLD spec; the new head keys under the new one — no version ever
+    * mixes. Guards:
+    *   - live WAP branches refuse (their staged files were placed
+    *     under the current layout; publish or drop them first);
+    *   - the REPLACE is strict: if ANY commit lands between the
+    *     re-stage and the CAS, relayout refuses rather than adopt
+    *     files placed under a layout this commit is about to retire
+    *     (re-run it — the rewrite is idempotent, orphaned staging is
+    *     vacuum-reclaimed like any crashed txn's);
+    *   - a writer that raced the OTHER way (staged under the old
+    *     layout, landed after) is handled by the spec-qualified
+    *     `#bucket:<N>:<col>` / null-proved `#p:<col>` group names: its
+    *     files lack the new spec's groups, so SPJ soundly degrades to
+    *     the unkeyed scan until one compaction re-places them — never
+    *     a wrong grouping.
+    * Identity columns and bucket specs are mutually exclusive, as at
+    * CREATE; empty arguments flatten the table to an unpartitioned
+    * bin-packed layout. Returns (newVersion, filesBefore, filesAfter). */
   def relayout(spark: SparkSession, table: String,
       partitionedBy: Seq[String] = Nil,
       bucketBy: Option[String] = None,
@@ -517,6 +516,16 @@ private[ops] trait Maintenance { this: Layout.type =>
         root, h, partitionedBy, bucketBy, bucketCount); () })
   }
 
+  /** Snapshot GC (VACUUM): drop manifests older than the newest
+    * `keepLast`, then delete every data file + empty txn directory no
+    * retained manifest references — this is what finally reclaims
+    * crashed-transaction orphans and files only historical snapshots
+    * used. Deletion order is the safe one: manifests first (so a
+    * concurrent reader can no longer pin a doomed version), files
+    * second; unreferenced txn dirs younger than `orphanOlderThanMs` are
+    * spared — they may be a live commit between staging and publish
+    * (pass 0 to force, tests only). Returns (#manifests, #files)
+    * removed. */
   def expireSnapshots(spark: SparkSession, table: String,
                       keepLast: Int = 2,
                       orphanOlderThanMs: Long = 30L * 60 * 1000)

@@ -34,23 +34,6 @@ private[ops] trait Reads { this: Layout.type =>
      schemaOf(fs, root, v, chain))
   }
 
-  /** Storage-partitioned-join (SPJ) grouping of a snapshot (r18): when
-    * EVERY data file of `version` is single-valued on every declared
-    * partition column — manifest bounds with min == max, the invariant
-    * the [[stageTxn]] fanout writer maintains — returns the partition
-    * columns plus each file's (size, key values), keyed by the same
-    * unqualified absolute path [[snapshotLayout]] renders. Key values
-    * are Long for integral columns, String for string columns (the two
-    * bound types whose min==max PROVES single-valuedness; double bounds
-    * are excluded — NaN/-0.0 equality is not value identity).
-    *
-    * None whenever ANY file lacks the invariant: SPJ silently degrades
-    * to the plain vectorized scan rather than ever risk a wrong
-    * grouping — a wrong group here WOULD be a wrong answer downstream,
-    * because Spark elides the join shuffle on the strength of this
-    * report. Multi-value files enter a partitioned table only through
-    * pre-feature history or MOR delta-inserts; one compaction restores
-    * eligibility (its rewrite re-stages through the fanout writer). */
   /** Snapshot planner statistics from manifest lines alone — the
     * ANALYZE that never scans (r19 verdict task 6): exact row count
     * (the per-file `#rows` groups summed; None if ANY file predates
@@ -93,6 +76,23 @@ private[ops] trait Reads { this: Layout.type =>
       }.toMap)
   }
 
+  /** Storage-partitioned-join (SPJ) grouping of a snapshot (r18): when
+    * EVERY data file of `version` is single-valued on every declared
+    * partition column — manifest bounds with min == max, the invariant
+    * the [[stageTxn]] fanout writer maintains — returns the partition
+    * columns plus each file's (size, key values), keyed by the same
+    * unqualified absolute path [[snapshotLayout]] renders. Key values
+    * are Long for integral columns, String for string columns (the two
+    * bound types whose min==max PROVES single-valuedness; double bounds
+    * are excluded — NaN/-0.0 equality is not value identity).
+    *
+    * None whenever ANY file lacks the invariant: SPJ silently degrades
+    * to the plain vectorized scan rather than ever risk a wrong
+    * grouping — a wrong group here WOULD be a wrong answer downstream,
+    * because Spark elides the join shuffle on the strength of this
+    * report. Multi-value files enter a partitioned table only through
+    * pre-feature history or MOR delta-inserts; one compaction restores
+    * eligibility (its rewrite re-stages through the fanout writer). */
   private[graft] def spjFileKeys(spark: SparkSession, table: String,
       version: Int): Option[(SpjShape, Map[String, (Long, Seq[Any])])] = {
     val root = new Path(table)
@@ -574,40 +574,29 @@ private[ops] trait Reads { this: Layout.type =>
     * loudly rather than answered wrong. */
   def readChanges(spark: SparkSession, table: String,
                   fromVersion: Int, toVersion: Int): DataFrame = {
-    require(fromVersion <= toVersion,
-      s"readChanges: fromVersion $fromVersion > toVersion $toVersion")
-    val root = new Path(table)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val from =
-      if (fromVersion == 0) Set.empty[String]
-      else manifestFiles(fs, root, fromVersion).toSet
-    val to = manifestFiles(fs, root, toVersion)
-    require(from.subsetOf(to.toSet),
-      s"readChanges: a REPLACE commit landed in ($fromVersion, $toVersion] " +
-        "— line-set diff is not a row-level change log across rewrites")
-    val added = to.filterNot(from)
-    // only open the files actually returned: reading the full snapshot
-    // for schema when the delta is non-empty would cost a footer pass
-    // over the whole table per incremental poll; both branches read
-    // under toVersion's recorded schema (the consumer's contract)
-    if (added.isEmpty)
-      readVersionFiles(spark, fs, root, toVersion,
-        to.map(l => new Path(root, entryPath(l)).toString))
-        .where(lit(false)) // empty delta, stable schema
-    else readVersionFiles(spark, fs, root, toVersion,
-      added.map(l => new Path(root, entryPath(l)).toString))
+    val (added, sch) = changedFilesWithSchema(spark, table, fromVersion,
+      toVersion, "readChanges")
+    // only open the files actually returned; an empty delta is an empty
+    // frame under toVersion's schema (the consumer's contract)
+    if (added.isEmpty) emptyFrame(spark, sch)
+    else {
+      val root = new Path(table)
+      readVersionFiles(spark,
+        root.getFileSystem(spark.sparkContext.hadoopConfiguration), root,
+        toVersion, added)
+    }
   }
 
   /** [[readChanges]]' file-set core, for consumers that plan their own
     * scan (the SQL `CALL system.changes` procedure): (added absolute
     * paths, toVersion's schema — recorded, or inferred from the delta's
     * own footers for legacy tables). Same APPEND-only contract and loud
-    * REPLACE rejection. */
+    * REPLACE rejection; `verb` prefixes the refusal messages. */
   private[graft] def changedFilesWithSchema(spark: SparkSession,
-      table: String, fromVersion: Int, toVersion: Int)
-      : (Seq[String], types.StructType) = {
+      table: String, fromVersion: Int, toVersion: Int,
+      verb: String = "changes"): (Seq[String], types.StructType) = {
     require(fromVersion <= toVersion,
-      s"changes: fromVersion $fromVersion > toVersion $toVersion")
+      s"$verb: fromVersion $fromVersion > toVersion $toVersion")
     val root = new Path(table)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val from =
@@ -615,7 +604,7 @@ private[ops] trait Reads { this: Layout.type =>
       else manifestFiles(fs, root, fromVersion).toSet
     val to = manifestFiles(fs, root, toVersion)
     require(from.subsetOf(to.toSet),
-      s"changes: a REPLACE commit landed in ($fromVersion, $toVersion] " +
+      s"$verb: a REPLACE commit landed in ($fromVersion, $toVersion] " +
         "— line-set diff is not a row-level change log across rewrites")
     def abs(ls: Seq[String]) =
       ls.map(l => new Path(root, entryPath(l)).toString)
@@ -623,7 +612,7 @@ private[ops] trait Reads { this: Layout.type =>
     val sch = schemaOf(fs, root, toVersion).getOrElse {
       val basis = if (added.nonEmpty) added else abs(to)
       require(basis.nonEmpty,
-        s"changes: $table has no recorded schema and no files to infer " +
+        s"$verb: $table has no recorded schema and no files to infer " +
           "one from")
       ColumnBridge.parquetFooterSchema(spark, basis)
     }

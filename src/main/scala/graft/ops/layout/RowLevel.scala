@@ -11,34 +11,16 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 /** Row-level verbs (delete, upsert, replace, merge) and table history.
   * Mixed into [[graft.ops.Layout]]. */
 private[ops] trait RowLevel { this: Layout.type =>
-  /** URI-scheme/slash-insensitive normal form for matching
-    * input_file_name() output against manifest-derived paths. The two
-    * sides arrive differently encoded: input_file_name() reports a
-    * URL-ENCODED uri (SparkPath — a space is `%20`), while a qualified
-    * hadoop Path renders the raw characters. Parse as a URI first (which
-    * DECODES escapes); fall back to hadoop-Path normalization for
-    * strings a strict URI parser rejects (raw spaces etc.), whose
-    * getPath decodes Path's own quoting. Both routes land on the
-    * decoded filesystem path, so `/data/my table/x` staged by a writer
-    * matches `file:///data/my%20table/x` reported by a scan. */
-  private[ops] def fsPathOf(p: String): String =
-    try {
-      val u = new java.net.URI(p)
-      if (u.getPath != null && u.getPath.nonEmpty) u.getPath
-      else new Path(p).toUri.getPath
-    } catch { case _: java.net.URISyntaxException =>
-      new Path(p).toUri.getPath
-    }
-
   /** Copy-on-write row-level DELETE — the next most-used lifecycle verb
     * after append/compact (GDPR erasure, late-fact correction): rewrite
     * ONLY the files that contain matching rows, REPLACE-commit the swap.
     * Mechanics: (1) one pruned scan over the head snapshot finds the
-    * affected files via input_file_name() (the predicate pushes into the
+    * affected files ([[affectedGrps]]: the predicate pushes into the
     * parquet scan, so row-group stats skip most files before any row is
-    * read); (2) only those files are re-read and rewritten with the
-    * predicate negated into a new txn dir; (3) the CAS commits
-    * head − affected + rewritten. Untouched files keep their manifest
+    * read, and a row already deleted marks no file); (2) only those
+    * files are re-read and rewritten with the predicate negated into a
+    * new txn dir; (3) the CAS commits head − affected + rewritten
+    * ([[rewriteCommit]]). Untouched files keep their manifest
     * entries and are never opened for write — at 100 TB a selective
     * delete costs the affected files, not the table. The delete applies
     * to rows visible in the snapshot read at entry; an append racing
@@ -55,57 +37,32 @@ private[ops] trait RowLevel { this: Layout.type =>
     if (morEnabled(propsOf(fs, root, v0)))
       return deleteWhereMor(spark, fs, root, table, v0, predicate)
     val files = manifestFiles(fs, root, v0)
-    val abs = files.map(l => l -> new Path(root, entryPath(l)).toString)
-    // read under the recorded schema: a predicate on an evolved column
-    // must see null (and keep the row) on pre-evolution files, not fail
-    // to resolve. The detection scan is PLAIN (input_file_name() is
-    // single-source-only, and a file whose only matching rows are
-    // already position-deleted merely gets an unnecessary — dv-applied,
-    // so harmless — rewrite)
-    val affectedAbs = ControlPlane(
-      readVersionFiles(spark, fs, root, v0, abs.map(_._2))
-        .where(predicate)
-        .select(input_file_name().as("f")).distinct())
-      .collect().map(r => fsPathOf(r.getString(0))).toSet
-    // qualify through the FS before normalizing: a relative table root
-    // ("target/…") would otherwise never string-match the absolute URIs
-    // input_file_name() reports
-    val (affected, untouched) = abs.partition { case (_, a) =>
-      affectedAbs.contains(fsPathOf(fs.makeQualified(new Path(a)).toString))
-    }
+    val (affected, untouched) = byGrp(files, ControlPlane(
+      affectedGrps(spark, fs, root, v0, files, _.where(predicate)))
+      .collect().map(_.getString(0)).toSet)
     if (affected.isEmpty) return (v0, 0, untouched.size)
     // SQL DELETE semantics: remove rows where the predicate is TRUE —
     // rows where it evaluates NULL are KEPT (a bare !predicate would
     // drop them, silently deleting every row with a null in a predicate
     // column). Dv-aware read: rows a prior MOR delete removed must not
     // resurrect through this rewrite (the new line carries no dv group).
-    val kept = readManifestLines(spark, fs, root, v0, affected.map(_._1))
+    val kept = readManifestLines(spark, fs, root, v0, affected)
       .where(!coalesce(predicate, lit(false)))
     // rewritten files re-record the table's stats columns (if any):
     // without this, every delete would silently strip a skipping
-    // table's pruning — the guard compactSnapshot already carries.
-    // A rewrite that keeps ZERO rows stages nothing: the affected
-    // files' entries simply leave the manifest (no empty placeholder
-    // file enters it). The zero-rows decision reads the per-file row
-    // counts the rewrite write itself returns — stage, and if the
-    // rewrite proved empty, drop the txn dir and record nothing.
-    val keptStaged = stageTxn(spark, fs, root, kept,
-      statsColumns = statsColumnsOf(fs, root, v0))
-    val added =
-      if (keptStaged.forall(_.rows == 0L)) {
-        dropStaged(fs, root, keptStaged)
-        Seq.empty[String]
-      } else keptStaged.map(_.line)
-    val v = replaceCommit(fs, root, "deleteWhere",
-      affected.map(_._1).toSet, added)
+    // table's pruning — the guard compactSnapshot already carries
+    val (v, _) = rewriteCommit(spark, fs, root, kept,
+      statsColumnsOf(fs, root, v0))(
+      replaceCommit(fs, root, "deleteWhere", affected.toSet, _))
     (v, affected.size, untouched.size)
   }
 
   /** `lines` read dv-applied with the position currency retained:
-    * data columns + `__grp` (the file's position-delete group key) +
+    * data columns + `__grp` (the file's group key, [[grpOfRel]]) +
     * `__pos` (its 0-based row ordinal) — what a MOR write needs to
-    * record the matched positions. Position deletes mask in the scan
-    * task ([[linesMask]]); equality deletes only with `withEqs`. */
+    * record the matched positions, and what names a file for every
+    * row-level verb. Position deletes mask in the scan task
+    * ([[linesMask]]); equality deletes only with `withEqs`. */
   private def readLinesPos(spark: SparkSession, fs: FileSystem,
       root: Path, v: Int, lines: Seq[String],
       withEqs: Boolean = false): DataFrame = {
@@ -119,18 +76,36 @@ private[ops] trait RowLevel { this: Layout.type =>
       .withColumn("__pos", col("_metadata.row_index"))
   }
 
+  /** The files of `lines` a row-level verb touches: the distinct
+    * `__grp` keys of the LIVE rows (position and equality deletes
+    * masked) that `matching` keeps, read under `v`'s recorded schema —
+    * a file whose only matching rows are already deleted is not
+    * affected. [[byGrp]] splits the lines by the collected keys. */
+  private def affectedGrps(spark: SparkSession, fs: FileSystem, root: Path,
+      v: Int, lines: Seq[String],
+      matching: DataFrame => DataFrame): DataFrame =
+    matching(readLinesPos(spark, fs, root, v, lines, withEqs = true))
+      .select(col("__grp")).distinct()
+
+  /** `lines` split into (those whose file's group key is in `grps`,
+    * the rest). */
+  private[ops] def byGrp(lines: Seq[String], grps: Set[String])
+      : (Seq[String], Seq[String]) =
+    lines.partition(l => grps.contains(grpOfRel(entryPath(l))))
+
   /** Stage a (grp, pos) frame as ONE position-delete sidecar parquet
     * and learn which groups it covers. Returns (staged files, grp →
-    * sidecar rel paths); empty map = no matches (the caller drops the
-    * staged dir). The write task collects each sidecar's groups as it
-    * writes them (`collect_set(grp)` per file), so the pointer the
-    * manifest line needs comes from the same evaluation of `positions`
-    * that staged the bytes — no read-back. The position shuffle runs
-    * AQE-off at width 1 (one job, one sidecar, like a tombstone
-    * upsert's key file): positions are two narrow columns, the matching
-    * scan upstream keeps its parallelism, and AQE's coalescing already
-    * made this write one task up to its advisory partition size. Cost
-    * ∝ matched rows, never table size: THE merge-on-read bargain. */
+    * sidecar rel paths); a frame with no rows stages nothing (its txn
+    * is dropped) and maps no group. The write task collects each
+    * sidecar's groups as it writes them (`collect_set(grp)` per file),
+    * so the pointer the manifest line needs comes from the same
+    * evaluation of `positions` that staged the bytes — no read-back.
+    * The position shuffle runs AQE-off at width 1 (one job, one
+    * sidecar, like a tombstone upsert's key file): positions are two
+    * narrow columns, the matching scan upstream keeps its parallelism,
+    * and AQE's coalescing already made this write one task up to its
+    * advisory partition size. Cost ∝ matched rows, never table size:
+    * THE merge-on-read bargain. */
   private def stageDv(spark: SparkSession, fs: FileSystem, root: Path,
       positions: DataFrame): (Seq[Staged], Map[String, Seq[String]]) = {
     val staged = stageTxn(spark, fs, root,
@@ -140,7 +115,8 @@ private[ops] trait RowLevel { this: Layout.type =>
       .flatMap(s => s.values.getSeq[String](0).map(_ -> s.rel))
       .groupBy(_._1)
       .map { case (g, rels) => g -> rels.map(_._2).distinct.sorted }
-    (staged, mapping)
+    if (mapping.nonEmpty) (staged, mapping)
+    else { dropStaged(fs, root, staged); (Nil, Map.empty) }
   }
 
   /** Merge-on-read DELETE (`graft.rowlevel.mode = 'mor'`, r16 verdict
@@ -149,13 +125,14 @@ private[ops] trait RowLevel { this: Layout.type =>
     * dedup-driven point deletes makes that the dominant write cost),
     * record the matched (file, ordinal) pairs in a position-delete
     * sidecar parquet and swap the affected manifest lines for the same
-    * lines with a dv pointer group appended. Data files are NEVER
-    * opened for write; delete cost ∝ matched rows. Every snapshot read
-    * anti-applies the sidecars ([[readManifestLines]]);
-    * [[compactSnapshot]] materializes them away; pinned readers of
-    * pre-delete versions see pre-delete lines (no dv group) and are
-    * untouched — the same isolation story as every REPLACE commit.
-    * Returns (newVersion, filesAnnotated, filesUntouched). */
+    * lines with a dv pointer group appended ([[deleteCommit]]). Data
+    * files are NEVER opened for write; delete cost ∝ matched rows.
+    * Every snapshot read anti-applies the sidecars
+    * ([[readManifestLines]]); [[compactSnapshot]] materializes them
+    * away; pinned readers of pre-delete versions see pre-delete lines
+    * (no dv group) and are untouched — the same isolation story as
+    * every REPLACE commit. Returns (newVersion, filesAnnotated,
+    * filesUntouched). */
   private def deleteWhereMor(spark: SparkSession, fs: FileSystem,
       root: Path, table: String, v0: Int, predicate: Column)
       : (Int, Int, Int) = {
@@ -166,19 +143,10 @@ private[ops] trait RowLevel { this: Layout.type =>
       .where(predicate)
       .select(col("__grp").as("grp"), col("__pos").as("pos"))
     val (staged, grpToSidecars) = stageDv(spark, fs, root, matched)
-    if (grpToSidecars.isEmpty) {
-      dropStaged(fs, root, staged)
-      return (v0, 0, files.size)
-    }
-    val (affected, untouched) = files.partition(l =>
-      grpToSidecars.contains(grpOfRel(entryPath(l))))
-    val annotated = affected.map { l =>
-      grpToSidecars(grpOfRel(entryPath(l))).foldLeft(l)(withDvGroup)
-    }
-    val v = try replaceCommit(fs, root, "deleteWhereMor",
-      affected.toSet, annotated)
-    catch { case e: Throwable => dropStaged(fs, root, staged); throw e }
-    (v, affected.size, untouched.size)
+    if (grpToSidecars.isEmpty) return (v0, 0, files.size)
+    val v = deleteCommit(fs, root, "deleteWhereMor", files, grpToSidecars,
+      Nil, staged)
+    (v, grpToSidecars.size, files.size - grpToSidecars.size)
   }
 
   /** Merge-on-read EQUALITY upsert (r19 verdict task 7) — the CDC-sink
@@ -411,25 +379,19 @@ private[ops] trait RowLevel { this: Layout.type =>
       case e: Throwable => dropStaged(fs, root, dataStaged); throw e
     }
     val files = manifestFiles(fs, root, v0)
-    val abs = files.map(l => l -> new Path(root, entryPath(l)).toString)
-    val affectedAbs = ControlPlane(
-      readVersionFiles(spark, fs, root, v0, abs.map(_._2))
-        .where(predicate)
-        .select(input_file_name().as("f")).distinct())
-      .collect().map(r => fsPathOf(r.getString(0))).toSet
-    val (affected, untouched) = abs.partition { case (_, a) =>
-      affectedAbs.contains(fsPathOf(fs.makeQualified(new Path(a)).toString))
-    }
+    val affected = byGrp(files, ControlPlane(
+      affectedGrps(spark, fs, root, v0, files, _.where(predicate)))
+      .collect().map(_.getString(0)).toSet)._1
     // survivors of the affected files (predicate-false/null rows carry)
     // stage as a second txn in the SAME commit — the swap is one
     // REPLACE CAS, never an observable delete-then-insert gap
     val carriedStaged =
       if (affected.isEmpty) Seq.empty[Staged]
       else stageTxn(spark, fs, root,
-        readManifestLines(spark, fs, root, v0, affected.map(_._1))
+        readManifestLines(spark, fs, root, v0, affected)
           .where(!coalesce(predicate, lit(false))), statsColumns = stats)
     val added = (dataStaged ++ carriedStaged).map(_.line)
-    val inputSet = affected.map(_._1).toSet
+    val inputSet = affected.toSet
     val v0Lines = files.toSet
     beforeCommit()
     // Serializable conflict check (r16 advice): replaceCommit's subset
@@ -478,7 +440,7 @@ private[ops] trait RowLevel { this: Layout.type =>
     * two-source-rows-per-key merge is ambiguous) and share the table's
     * schema. Mechanics mirror the delete: (1) one scan of the head
     * snapshot left-semi-joined against the source keys finds the files
-    * holding matched rows via input_file_name(); (2) ONLY those files
+    * holding matched live rows ([[affectedGrps]]); (2) ONLY those files
     * are rewritten — their non-matched rows carried as-is, matched rows
     * replaced by the source row — and every not-matched source row is
     * appended to the same staged transaction; (3) the CAS commits
@@ -515,7 +477,6 @@ private[ops] trait RowLevel { this: Layout.type =>
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val files = manifestFiles(fs, root, v0)
-      val abs = files.map(l => l -> new Path(root, entryPath(l)).toString)
       // the LIVE rows (position and equality deletes masked): a source
       // key whose only target rows are deleted affects no file and
       // inserts
@@ -539,31 +500,26 @@ private[ops] trait RowLevel { this: Layout.type =>
       // distinct-count job (countDistinct skips NULLs, so unique ⇔
       // n == k + (1 if any null) — at most one NULL-keyed row is
       // allowed: it never matches the ON clause, so it is always a
-      // plain insert, as in SQL MERGE). The affected-file scan captures
-      // the provenance column BEFORE the key join — input_file_name()
-      // is single-source-only and cannot be evaluated on join output;
-      // files matched by EITHER clause (update or delete keys) are
-      // affected.
+      // plain insert, as in SQL MERGE). Files matched by EITHER clause
+      // (update or delete keys) are affected.
       val uniq = src.agg(count(lit(1)).as("n"),
         countDistinct(col(key)).as("k"),
         count(when(col(key).isNull, 1)).as("nulls"))
-      val affectedNames = snapLive
-        .select(col(key), input_file_name().as("__f"))
-        .join(src.select(col(key)), Seq(key), "left_semi")
-        .select(col("__f")).distinct()
+      val affectedNames = affectedGrps(spark, fs, root, v0, files,
+        _.join(src.select(col(key)), Seq(key), "left_semi"))
       // ONE control probe: the uniqueness aggregate and the
       // affected-file scan both read inputs already pinned for this
       // merge (the persisted source; the v0 snapshot), and neither
       // result depends on the other, so one unioned collect runs them as
       // a single scheduled job instead of two. The union rides a tagged
-      // 4-column shape; the uniqueness row is the one with a NULL file
-      // name (input_file_name() is never NULL on a file scan).
+      // 4-column shape; the uniqueness row is the one with a NULL group
+      // key (a scanned row's `__grp` is never NULL).
       // SnapshotIsolationSpec and the q_snapshot_merge oracle pin the
       // merge's results.
       val rows = ControlPlane(
-        uniq.select(lit(null).cast("string").as("__f"),
+        uniq.select(lit(null).cast("string").as("__grp"),
             col("n"), col("k"), col("nulls"))
-          .unionByName(affectedNames.select(col("__f"),
+          .unionByName(affectedNames.select(col("__grp"),
             lit(null).cast("long").as("n"),
             lit(null).cast("long").as("k"),
             lit(null).cast("long").as("nulls"))))
@@ -571,14 +527,9 @@ private[ops] trait RowLevel { this: Layout.type =>
       val (us, as) = rows.partition(_.isNullAt(0))
       val (nTotal, nDistinct, nNulls) =
         (us.head.getLong(1), us.head.getLong(2), us.head.getLong(3))
-      val affNames = as.toSeq.map(_.getString(0))
       require(nTotal == nDistinct + math.min(nNulls, 1L),
         s"mergeInto: source is not unique on `$key`")
-      val affectedAbs = affNames.map(fsPathOf).toSet
-      val (affected, _) = abs.partition { case (_, a) =>
-        affectedAbs.contains(
-          fsPathOf(fs.makeQualified(new Path(a)).toString))
-      }
+      val affected = byGrp(files, as.map(_.getString(0)).toSet)._1
       // not-matched non-delete source rows insert regardless of whether
       // any file matched; matched-file rows are rewritten with updates
       // applied. The anti-join runs against the LIVE key set
@@ -601,53 +552,36 @@ private[ops] trait RowLevel { this: Layout.type =>
       // (the MOR empty-affected placeholder) takes the bare frame, so
       // the metric fires once, from the write that commits the rows
       val insertsObs = inserts.observe(insObs, count(lit(1)).as("n"))
-      locally {
-        val affLines = affected.map(_._1)
+      // rewritten + inserted files keep the table's recorded bounds, as
+      // in deleteWhere; a staged union that proved empty (every row of
+      // the affected files deleted, nothing inserted) adds no line
+      val stats = statsColumnsOf(fs, root, v0)
+      val (v, _) =
         if (morEnabled(propsOf(fs, root, v0))) {
           // merge-on-read MERGE: matched target rows (update AND delete
           // keys) are position-deleted via a dv sidecar; updated rows
           // and inserts append as new data files — ONE commit, write
           // cost ∝ matched + inserted rows, affected data files never
           // open for write (r16 verdict task 1)
-          val (dvStaged, grpToSidecars) =
-            if (affLines.isEmpty)
-              (Seq.empty[Staged], Map.empty[String, Seq[String]])
-            else stageDv(spark, fs, root,
-              readLinesPos(spark, fs, root, v0, affLines, withEqs = true)
-                .join(src.select(col(key)), Seq(key), "left_semi")
-                .select(col("__grp").as("grp"), col("__pos").as("pos")))
-          try {
-            val annotated = affLines.map { l =>
-              grpToSidecars.getOrElse(grpOfRel(entryPath(l)), Nil)
-                .foldLeft(l)(withDvGroup)
-            }
-            val updated =
-              if (affLines.isEmpty) inserts.where(lit(false))
-              else readManifestLines(spark, fs, root, v0, affLines)
-                .select(col(key))
-                .join(upSrc, Seq(key), "inner")
-                .select(tcols.map(col): _*)
-            val newData = updated.unionByName(insertsObs)
-            // track the data files too: a failed commit must drop BOTH
-            // stage sets, not orphan the data half until vacuum (r17
-            // ADVICE — deleteWhereMor/replaceWhere already do this)
-            var dataStaged = Seq.empty[Staged]
-            try {
-              dataStaged = stageTxn(spark, fs, root, newData,
-                statsColumns = statsColumnsOf(fs, root, v0))
-              // the staged write evaluated the insert arm; its observed
-              // count is THE inserted-row number (read after the action,
-              // so it never blocks)
-              val nInserted = insObs.get("n").asInstanceOf[Long]
-              val added = annotated ++ dataStaged.map(_.line)
-              val v = replaceCommit(fs, root, "mergeIntoMor",
-                affLines.toSet, added)
-              (v, affected.size, nInserted)
-            } catch { case e: Throwable =>
-              dropStaged(fs, root, dataStaged); throw e
-            }
-          } catch { case e: Throwable =>
-            dropStaged(fs, root, dvStaged); throw e
+          val updated =
+            if (affected.isEmpty) inserts.where(lit(false))
+            else readManifestLines(spark, fs, root, v0, affected)
+              .select(col(key))
+              .join(upSrc, Seq(key), "inner")
+              .select(tcols.map(col): _*)
+          // the sidecar stages inside the data write's tail: a failure
+          // of either drops both stage sets
+          rewriteCommit(spark, fs, root, updated.unionByName(insertsObs),
+            stats) { added =>
+            val (dvStaged, grpToSidecars) =
+              if (affected.isEmpty)
+                (Seq.empty[Staged], Map.empty[String, Seq[String]])
+              else stageDv(spark, fs, root,
+                readLinesPos(spark, fs, root, v0, affected, withEqs = true)
+                  .join(src.select(col(key)), Seq(key), "left_semi")
+                  .select(col("__grp").as("grp"), col("__pos").as("pos")))
+            deleteCommit(fs, root, "mergeIntoMor", affected, grpToSidecars,
+              added, dvStaged)
           }
         } else {
           val staged =
@@ -655,7 +589,7 @@ private[ops] trait RowLevel { this: Layout.type =>
             else {
               // dv-aware: rows a prior MOR delete removed must not
               // resurrect through this rewrite
-              val old = readManifestLines(spark, fs, root, v0, affLines)
+              val old = readManifestLines(spark, fs, root, v0, affected)
               // ONE left-outer join, not a carried(anti) +
               // updated(inner) pair, which would read the affected files
               // TWICE and shuffle/join them twice for decisions
@@ -704,27 +638,13 @@ private[ops] trait RowLevel { this: Layout.type =>
                 }: _*)
                 .unionByName(insertsObs)
             }
-          // rewritten + inserted files keep the table's recorded
-          // bounds, as in deleteWhere; a rewrite keeping ZERO rows
-          // (every row of the affected files deleted) stages nothing
-          // and the affected entries simply leave the manifest. The
-          // zero-rows decision reads the per-file row counts the write
-          // returns: stage, and if the staged union proved empty, drop
-          // the txn dir and record nothing (one extra empty-dir
-          // write+delete on that rare path, no job on any merge).
-          val dataStaged = stageTxn(spark, fs, root, staged,
-            statsColumns = statsColumnsOf(fs, root, v0))
-          val nInserted = insObs.get("n").asInstanceOf[Long]
-          val added =
-            if (dataStaged.forall(_.rows == 0L)) {
-              dropStaged(fs, root, dataStaged)
-              Seq.empty[String]
-            } else dataStaged.map(_.line)
-          val v = replaceCommit(fs, root, "mergeInto",
-            affLines.toSet, added)
-          (v, affected.size, nInserted)
+          rewriteCommit(spark, fs, root, staged, stats)(
+            replaceCommit(fs, root, "mergeInto", affected.toSet, _))
         }
-      }
+      // the staged write evaluated the insert arm; its observed count is
+      // THE inserted-row number (read after the action, so it never
+      // blocks)
+      (v, affected.size, insObs.get("n").asInstanceOf[Long])
     } finally src.unpersist()
   }
 
@@ -781,57 +701,30 @@ private[ops] trait RowLevel { this: Layout.type =>
     * row-level surface, [[graft.sql.GraftDeltaOperation]]): the tasks
     * staged data files (insert/update-new rows) and position-delete
     * sidecars; `grpToSidecars` says which sidecar(s) carry each data
-    * file's deleted ordinals. ONE REPLACE CAS swaps the affected lines
-    * for the same lines with dv groups appended and adds the new data
-    * files — no pre-existing data file is ever rewritten, so a SQL
-    * UPDATE/MERGE costs the matched+inserted rows, not the matched-file
-    * bytes. Grps whose file was concurrently compacted away surface as
-    * the standard REPLACE conflict (the annotated line is no longer in
-    * the head). `dataLines` are the new data files' manifest lines, as
-    * their writer tasks rendered them. */
+    * file's deleted ordinals. ONE REPLACE CAS ([[deleteCommit]]) swaps
+    * the affected lines for the same lines with dv groups appended and
+    * adds the new data files — no pre-existing data file is ever
+    * rewritten, so a SQL UPDATE/MERGE costs the matched+inserted rows,
+    * not the matched-file bytes. Grps whose file was concurrently
+    * compacted away surface as the standard REPLACE conflict (the
+    * annotated line is no longer in the head). `dataLines` are the new
+    * data files' manifest lines, as their writer tasks rendered them;
+    * a failed commit leaves their txn to the write's abort. */
   private[graft] def commitDelta(spark: SparkSession, table: String,
       version: Int, grpToSidecars: Map[String, Seq[String]],
       dataLines: Seq[String], op: String): Int = {
     val root = new Path(table)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val affected = manifestFiles(fs, root, version)
-      .filter(l => grpToSidecars.contains(grpOfRel(entryPath(l))))
-    require(affected.map(l => grpOfRel(entryPath(l))).toSet ==
-      grpToSidecars.keySet,
-      s"$op: delete positions reference files absent from the pinned " +
-        s"version (${grpToSidecars.keySet -- affected.map(l =>
-          grpOfRel(entryPath(l)))})")
-    val annotated = affected.map { l =>
-      grpToSidecars(grpOfRel(entryPath(l))).sorted.foldLeft(l)(withDvGroup)
-    }
-    replaceCommit(fs, root, op, affected.toSet, annotated ++ dataLines)
+    deleteCommit(fs, root, op, manifestFiles(fs, root, version),
+      grpToSidecars, dataLines)
   }
 
-  /** Snapshot GC (VACUUM): drop manifests older than the newest
-    * `keepLast`, then delete every data file + empty txn directory no
-    * retained manifest references — this is what finally reclaims
-    * crashed-transaction orphans and files only historical snapshots
-    * used. Deletion order is the safe one: manifests first (so a
-    * concurrent reader can no longer pin a doomed version), files
-    * second; unreferenced txn dirs younger than `orphanOlderThanMs` are
-    * spared — they may be a live commit between staging and publish
-    * (pass 0 to force, tests only). Returns (#manifests, #files)
-    * removed. */
-  /** Per-version commit summary — the DESCRIBE HISTORY analogue:
-    * (version, committed-at epoch-ms from the manifest's mtime, file
-    * count, recorded bytes, commit UUID), ascending by version. Expired
-    * versions are absent by design. O(surviving versions) manifest
-    * reads, zero data-file access — table size never enters. Surfaced
-    * as SQL via `CALL <cat>.system.history('t')`
-    * ([[graft.sql.GraftProcedures]]). */
-  /** One-row table summary for `CALL system.detail` — head version,
-    * live file count, recorded data bytes, schema DDL, and the table
-    * properties: the DESCRIBE DETAIL analogue. O(manifest) metadata
+  /** One-row table summary for `CALL system.detail`, the DESCRIBE
+    * DETAIL analogue: (head version, live files, recorded bytes, schema
+    * DDL, props, files carrying live deletion vectors, distinct dv
+    * sidecars) — the last two are the MOR-health signal: a growing
+    * sidecar count says "schedule a compaction". O(manifest) metadata
     * reads, zero data-file IO at any table size. */
-  /** (head version, live files, recorded bytes, schema DDL, props,
-    * files carrying live deletion vectors, distinct dv sidecars) — the
-    * last two are the MOR-health signal: a growing sidecar count says
-    * "schedule a compaction", still from metadata alone. */
   def tableDetail(spark: SparkSession, table: String)
       : (Int, Int, Long, String, Map[String, String], Int, Int) = {
     val root = new Path(table)
@@ -847,6 +740,13 @@ private[ops] trait RowLevel { this: Layout.type =>
       dvs.size, dvs.flatten.distinct.size)
   }
 
+  /** Per-version commit summary — the DESCRIBE HISTORY analogue:
+    * (version, committed-at epoch-ms from the manifest's mtime, file
+    * count, recorded bytes, commit UUID, committing verb), ascending by
+    * version. Expired versions are absent by design. O(surviving
+    * versions) manifest reads, zero data-file access — table size never
+    * enters. Surfaced as SQL via `CALL <cat>.system.history('t')`
+    * ([[graft.sql.GraftProcedures]]). */
   def history(spark: SparkSession, table: String)
       : Seq[(Int, Long, Int, Long, String, String)] = {
     val root = new Path(table)

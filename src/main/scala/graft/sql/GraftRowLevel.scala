@@ -37,8 +37,8 @@ import graft.ops.layout.CommitStats
   *      column, Spark builds a runtime `IN` subquery over it (collect
   *      the distinct `_file`s satisfying the command's condition), and
   *      [[GraftCowScan.filter]] prunes the group list — the COW analogue
-  *      of [[Layout.mergeInto]]'s input_file_name() semi-join, just
-  *      driven by Catalyst instead of by hand;
+  *      of [[Layout.mergeInto]]'s affected-file semi-join, just driven
+  *      by Catalyst instead of by hand;
   *   3. the WRITE stages each task's rows as parquet files into a fresh
   *      txn dir (Spark's own `ParquetFileFormat.prepareWrite` factory,
   *      via the bridge — ReplaceDataExec has no V1 write fallback),

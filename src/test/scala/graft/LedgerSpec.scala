@@ -313,50 +313,28 @@ class LedgerSpec extends AnyFunSuite {
     assert(stale.isEmpty, s"allow-list names anti-joins that are gone: $stale")
   }
 
-  test("no commit reads back the files it staged: every " +
-      "input_file_name() in the layout and SQL code is allow-listed") {
+  test("src/main names a data file one way: no input_file_name()") {
     import scala.jdk.CollectionConverters._
-    // input_file_name() calls keyed (file, enclosing member), each with
-    // its reason. A commit's per-file statistics and a delete sidecar's
-    // file groups come from the staging write's own tasks
-    // (FileAggregate); reading the just-staged files back to learn them
-    // costs a Spark job per commit
-    val probe = "affected-file probe: reads the table's committed " +
-      "files to pick the ones to rewrite, not files this verb staged"
-    val allowed = Map(
-      ("graft/ops/layout/RowLevel.scala", "deleteWhere") ->
-        s"copy-on-write deleteWhere's $probe",
-      ("graft/ops/layout/RowLevel.scala", "replaceWhereImpl") ->
-        s"replaceWhere's $probe",
-      ("graft/ops/layout/RowLevel.scala", "mergeInto") ->
-        s"mergeInto's $probe")
-    val root = java.nio.file.Paths.get("src/main/scala")
-    def scalaFiles(dir: String): Seq[String] = {
-      val ls = java.nio.file.Files.list(root.resolve(dir))
-      try ls.iterator().asScala.map(f => root.relativize(f).toString)
-        .filter(_.endsWith(".scala")).toSeq.sorted
-      finally ls.close()
-    }
-    val sources = scalaFiles("graft/ops/layout") ++ scalaFiles("graft/sql")
-    assert(sources.count(_.startsWith("graft/ops/layout/")) >= 7 &&
-      sources.contains("graft/sql/GraftRowLevel.scala"),
-      s"guard lost its source files: $sources")
+    // a row-level verb names a file by its group key (Layout.grpOfRel:
+    // the last two segments of `_metadata.file_path`, txn dir + file
+    // name). input_file_name() reports a URL-encoded URI, which matches
+    // a manifest path only after decoding both sides; a commit's own
+    // per-file statistics come from the staging write (FileAggregate)
     val call = """\binput_file_name\s*\(""".r
-    val sites = sources.flatMap { rel =>
-      val code = ParquetCalls.codeOnly(new String(java.nio.file.Files
-        .readAllBytes(root.resolve(rel)),
-        java.nio.charset.StandardCharsets.UTF_8))
-      call.findAllMatchIn(code)
-        .map(m => (rel, ParquetCalls.enclosing(code, m.start)))
-    }.distinct
-    val unlisted = sites.filterNot(allowed.contains)
-    assert(unlisted.isEmpty,
-      "input_file_name() in the layout or SQL code — per-file commit " +
-        "statistics come from the staging write (Layout.commitStats), " +
-        "or allow-list the call with a reason: " + unlisted.mkString("; "))
-    val stale = allowed.keySet -- sites
-    assert(stale.isEmpty,
-      s"allow-list names input_file_name() calls that are gone: $stale")
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val (scanned, sites) =
+      try {
+        val srcs = files.iterator().asScala
+          .filter(f => f.toString.endsWith(".scala") ||
+            f.toString.endsWith(".java")).toSeq
+        (srcs.size, srcs.filter(f => call.findFirstIn(new String(
+          java.nio.file.Files.readAllBytes(f),
+          java.nio.charset.StandardCharsets.UTF_8)).isDefined))
+      } finally files.close()
+    assert(scanned > 50, s"guard lost its source files: $scanned")
+    assert(sites.isEmpty,
+      "input_file_name() in src/main — name a file by its group key " +
+        s"(Layout.grpOfRel / readLinesPos' __grp): ${sites.mkString("; ")}")
   }
 
   test("every Observation() in src/main is allow-listed: a staging " +

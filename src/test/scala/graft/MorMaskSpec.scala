@@ -22,8 +22,9 @@ import graft.ops.Layout
   * bucketed on its key, one `@eq` group per line per upsert; a
   * pushed-down filter that skips row groups; a renamed column of an
   * id-mapped table; key files whose non-key columns disagree in type
-  * and in field ids. And a masked read is one Spark job at any sidecar
-  * count. */
+  * and in field ids. A row already deleted by key marks no file for a
+  * copy-on-write rewrite. And a masked read is one Spark job at any
+  * sidecar count. */
 class MorMaskSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -437,6 +438,25 @@ class MorMaskSpec extends AnyFunSuite {
   }
 
   /** Live sidecars (position and equality) on the head's lines. */
+  test("a row already deleted by key marks no file for a copy-on-write " +
+      "deleteWhere or replaceWhere") {
+    import spark.implicits._
+    val t = table("tombstone_cow")
+    Layout.upsertByKeys(spark, t, Seq(7L).toDF("k"), "k", deleteOnly = true)
+    Layout.setTableProps(spark, t, Map(Layout.RowLevelModeProp -> "cow"),
+      Nil)
+    val v = head(t)
+    val lines = headLines(t)
+    assert(Layout.deleteWhere(spark, t, col("k") === 7L) == ((v, 0, 4)))
+    val (_, rewritten) = Layout.replaceWhere(spark, t,
+      Seq((7L, "r7")).toDF("k", "v"), col("k") === 7L)
+    assert(rewritten == 0)
+    // the replace appended its batch and kept every line it read
+    assert(headLines(t).filterNot(lines.contains).size == 1)
+    assert(rows(Layout.readSnapshot(spark, t)) ==
+      (0L until 400L).map(k => if (k == 7L) "7|r7" else s"$k|v$k").sorted)
+  }
+
   private def liveSidecars(t: String): Int =
     headLines(t).flatMap(l =>
       Layout.entryDvs(l) ++ Layout.entryEqs(l).map(_._1)).distinct.size

@@ -198,6 +198,42 @@ class SnapshotIsolationSpec extends AnyFunSuite {
     }
   }
 
+  test("row-level verbs under a table root holding a space and a %: " +
+      "each result equals the prior snapshot replayed") {
+    import ops.Layout._
+    import spark.implicits._
+    Seq("cow", "mor").foreach { mode =>
+      val table = s"target/graft_io/spec/odd root %41 100%/$mode"
+      val root = new Path(table)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.delete(root, true)
+      commitSnapshot(spark, table, spark.range(0, 200)
+        .select(col("id").as("k"), concat(lit("v"), col("id")).as("v"))
+        .repartition(4), props = Map(RowLevelModeProp -> mode))
+      def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
+        df.as[(Long, String)].collect().toSeq.sorted
+      /** `verb`'s result against `replay` of the snapshot before it. */
+      def check(what: String)(
+          replay: org.apache.spark.sql.DataFrame =>
+            org.apache.spark.sql.DataFrame)(verb: => Int): Unit = {
+        val want = rows(replay(readSnapshot(spark, table)))
+        assert(verb > 0, s"$mode $what touched no file")
+        assert(rows(readSnapshot(spark, table)) == want, s"$mode $what")
+      }
+      val del = col("k") % 10 === 3
+      check("deleteWhere")(_.where(!del))(
+        deleteWhere(spark, table, del)._2)
+      val range = col("k") >= 20L && col("k") < 30L
+      val batch = Seq((20L, "r20"), (24L, "r24")).toDF("k", "v")
+      check("replaceWhere")(_.where(!range).unionByName(batch))(
+        replaceWhere(spark, table, batch, range)._2)
+      // 13 was deleted above: it inserts, as 500 does
+      val src = Seq((5L, "m5"), (13L, "m13"), (500L, "m500")).toDF("k", "v")
+      check("mergeInto")(_.join(src, Seq("k"), "left_anti")
+        .unionByName(src))(mergeInto(spark, table, src, "k")._2)
+    }
+  }
+
   test("a REPLACE commit whose inputs were swapped by a racing REPLACE aborts") {
     import ops.Layout._
     val table = "target/graft_io/spec/nation_replace_conflict"

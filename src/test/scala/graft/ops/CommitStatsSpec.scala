@@ -20,8 +20,9 @@ import graft.{ControlPlane, JobCount}
   * several files, the rewrite verbs, and the SQL copy-on-write and
   * merge-on-read writers. Also pins the group → sidecar map a
   * merge-on-read delete takes from its write against a read of the
-  * staged sidecars, and the job budget of the refresh verbs, an
-  * upsert's one staged txn included. */
+  * staged sidecars, the job budget of the refresh and row-level verbs,
+  * an upsert's one staged txn included, and that a refused REPLACE
+  * leaves no staged txn behind. */
 class CommitStatsSpec extends AnyFunSuite {
 
   private val base = "target/graft_io/spec/commit_stats"
@@ -61,6 +62,20 @@ class CommitStatsSpec extends AnyFunSuite {
       else lines(t, v - 1).map(Layout.entryPath).toSet
     lines(t, v).filterNot(l => before.contains(Layout.entryPath(l)))
   }
+
+  /** The decoded filesystem path of `p`, for matching
+    * input_file_name() output (a URL-encoded uri: a space is `%20`)
+    * against a qualified hadoop Path (raw characters). Parse as a URI
+    * first, which decodes escapes; fall back to hadoop-Path
+    * normalization for strings a strict URI parser rejects. */
+  private def fsPathOf(p: String): String =
+    try {
+      val u = new java.net.URI(p)
+      if (u.getPath != null && u.getPath.nonEmpty) u.getPath
+      else new Path(p).toUri.getPath
+    } catch { case _: java.net.URISyntaxException =>
+      new Path(p).toUri.getPath
+    }
 
   /** The read-back stats pass a commit ran before the write computed
     * the statistics, verbatim but for its inputs: the staged (path,
@@ -333,6 +348,33 @@ class CommitStatsSpec extends AnyFunSuite {
     assert(head(p) == 1 && txnDirs(p).isEmpty)
   }
 
+  test("a refused REPLACE leaves data/ as it was: compactSnapshot, " +
+      "copy-on-write deleteWhere and mergeInto") {
+    // A CHECK constraint calling `race_hook` is evaluated on the files a
+    // commit adds, inside the CAS loop once the head's lines have been
+    // checked. Armed, its first call commits a REPLACE that drops every
+    // line the verb read, so the verb's next CAS attempt refuses.
+    spark.udf.register("race_hook", (_: Long) => { RaceHook.fire(); true })
+    def refused(name: String)(verb: String => Unit): Unit = {
+      val t = fresh(s"refused_$name")
+      Layout.commitSnapshot(spark, t, flatRows(0, 100).repartition(2),
+        props = Map(Layout.ConstraintPropPrefix + "race" -> "race_hook(b)"))
+      val root = new Path(t)
+      val inputs = lines(t, head(t)).toSet
+      val before = txnDirs(t)
+      RaceHook.arm(() =>
+        Layout.replaceCommit(fs, root, "race", inputs, Nil))
+      val e = intercept[IllegalArgumentException](verb(t))
+      assert(e.getMessage.contains("concurrent REPLACE conflict"),
+        s"$name: ${e.getMessage}")
+      assert(RaceHook.disarmed, s"$name: the racing commit never ran")
+      assert(txnDirs(t) == before, s"$name left a staged txn")
+    }
+    refused("compact")(t => Layout.compactSnapshot(spark, t))
+    refused("delete")(t => Layout.deleteWhere(spark, t, col("b") === 7L))
+    refused("merge")(t => Layout.mergeInto(spark, t, flatRows(95, 105), "b"))
+  }
+
   test("bucketed staging: #bucket, and a null key's file lacks it") {
     val t = fresh("bucketed")
     Layout.commitSnapshot(spark, t, empty("k BIGINT, v STRING"),
@@ -423,14 +465,14 @@ class CommitStatsSpec extends AnyFunSuite {
     val sidecars = annotated.flatMap(Layout.entryDvs).distinct
     assert(sidecars.size == 1, s"one delete stages one sidecar: $sidecars")
     val root = new Path(t)
-    val relOf = sidecars.map(rel => Layout.fsPathOf(
+    val relOf = sidecars.map(rel => fsPathOf(
       fs.makeQualified(new Path(root, rel)).toString) -> rel).toMap
     val read = ControlPlane(Layout.readSidecars(spark,
         sidecars.map(rel => new Path(root, rel).toString))
       .select(col("grp"), input_file_name().as("f")).distinct())
       .collect().groupBy(_.getString(0))
       .map { case (g, rs) =>
-        g -> rs.map(r => relOf(Layout.fsPathOf(r.getString(1)))).toSeq.sorted
+        g -> rs.map(r => relOf(fsPathOf(r.getString(1)))).toSeq.sorted
       }
     val committed = annotated.map(l =>
       Layout.grpOfRel(Layout.entryPath(l)) -> Layout.entryDvs(l).sorted).toMap
@@ -468,5 +510,43 @@ class CommitStatsSpec extends AnyFunSuite {
     }
     assert((upsert, tombstones, delete, compact) == ((1, 1, 1, 1)))
     assert(Layout.readSnapshot(spark, t).count() == 401)
+    // the row-level verbs that find their affected files by a scan: the
+    // scan is one control-plane job, as it was before it read masked
+    // rows (the merge-on-read merge leaves dvs for the copy-on-write
+    // verbs' scans to mask)
+    val mergeMor = JobCount.during(spark, "budget-merge-mor") {
+      Layout.mergeInto(spark, t, flatRows(398, 410), "b")
+    }
+    Layout.setTableProps(spark, t, Map(Layout.RowLevelModeProp -> "cow"),
+      Nil)
+    val deleteCow = JobCount.during(spark, "budget-delete-cow") {
+      Layout.deleteWhere(spark, t, col("b") === 20L)
+    }
+    val replace = JobCount.during(spark, "budget-replace") {
+      Layout.replaceWhere(spark, t, flatRows(30, 33),
+        col("b") >= 30L && col("b") < 33L)
+    }
+    val mergeCow = JobCount.during(spark, "budget-merge-cow") {
+      Layout.mergeInto(spark, t, flatRows(408, 412), "b")
+    }
+    assert((mergeMor, deleteCow, replace, mergeCow) == ((7, 2, 3, 5)))
+    assert(Layout.readSnapshot(spark, t).count() == 407)
+  }
+}
+
+/** A one-shot action a task fires from inside a UDF: the local-mode
+  * executor shares this JVM, so the driver arms it and the first task
+  * to call [[fire]] runs it. */
+object RaceHook {
+  private var action: Option[() => Unit] = None
+
+  def arm(a: () => Unit): Unit = synchronized { action = Some(a) }
+
+  def disarmed: Boolean = synchronized(action.isEmpty)
+
+  def fire(): Unit = synchronized {
+    val a = action
+    action = None
+    a.foreach(_())
   }
 }
