@@ -632,10 +632,8 @@ class GraftTable(path: String, version: Option[Int],
       .get(Layout.RowLevelModeProp).exists(_.equalsIgnoreCase("mor"))
     new RowLevelOperationBuilder {
       override def build(): RowLevelOperation =
-        if (mor) new GraftDeltaOperation(path, pinnedVersion,
-          ColumnBridge.nullableSchema(schema()), info.command())
-        else new GraftRowLevelOperation(path, pinnedVersion,
-          ColumnBridge.nullableSchema(schema()), info.command())
+        if (mor) new GraftDeltaOperation(GraftTable.this, info.command())
+        else new GraftRowLevelOperation(GraftTable.this, info.command())
     }
   }
 
@@ -673,37 +671,23 @@ class GraftTable(path: String, version: Option[Int],
   /** Plain reads ride Spark's vectorized parquet ScanBuilder (pushdown,
     * columnar batches); a plan requesting `_file`/`_pos`, or any read of
     * a snapshot with live row masks that the per-file dispatch did not
-    * split (a session without GraftExtensions), takes the row-based COW
-    * scan, which synthesizes the metadata columns and masks position
-    * and equality deletes in the task. */
+    * split (a session without GraftExtensions), takes [[rowScan]]. */
   override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = {
+      : ScanBuilder = scanBuilder(options, hasLiveDvs, rowScan)
+
+  /** The table's one scan builder: `rowBased` sends every plan to
+    * `rowScanFor` (a row-level operation's reads, which build on
+    * [[rowScan]]); otherwise only the plans [[newScanBuilder]] names. */
+  private[sql] def scanBuilder(options: CaseInsensitiveStringMap,
+      rowBased: Boolean,
+      rowScanFor: (StructType, Array[Filter], Seq[Layout.Skip]) =>
+        org.apache.spark.sql.connector.read.Scan): ScanBuilder = {
     val (files, _) = pinnedLayout
     // id-mapped table: the DSv2 parquet scan (and the row-based cow
     // scan's reader) must match columns by field id, not name
     Layout.ensureFieldIdRead(spark, schema())
     new org.apache.spark.sql.graft.SnapshotScanBuilder(spark, files,
-      schema(), options.asCaseSensitiveMap(),
-      (required, pushedData, skips) => {
-        // the row-based scan keeps manifest-level skipping: bounds
-        // predicates prune its file-group list exactly as they prune
-        // the vectorized scan's file list
-        require(branch.isEmpty,
-          s"branch read of $path@${branch.get} cannot serve " +
-            "metadata-column scans — audit reads are plain SELECTs")
-        val all = Layout.rowLevelEntries(spark, path, pinnedVersion)
-        val universe =
-          if (!dvFreeOnly) all
-          else all.filterNot { case (l, _, _) => Layout.masked(l) }
-        val entries = if (skips.isEmpty) universe else {
-          val kept = Layout.fileSelection(spark, path, skips,
-            Some(pinnedVersion), dvFreeOnly)._1.toSet
-          universe.filter { case (l, _, _) => kept.contains(l) }
-        }
-        new GraftCowScan(path, entries,
-          ColumnBridge.nullableSchema(schema()), required, pushedData,
-          s"$path@v$pinnedVersion")
-      },
+      schema(), options.asCaseSensitiveMap(), rowScanFor,
       // manifest-level file skipping for SQL WHERE clauses: bounds
       // predicates evaluate against THIS pinned version's recorded
       // per-file stats, dropping whole files before any footer opens;
@@ -713,7 +697,7 @@ class GraftTable(path: String, version: Option[Int],
       prune = if (branch.isDefined) null
         else skips => Layout.prunedFilePaths(spark, path, skips,
           Some(pinnedVersion), dvFreeOnly),
-      hasDv = hasLiveDvs,
+      rowBased = rowBased,
       spjKeys = spjKeys,
       // manifest-derived planner stats (r19): memoized per table
       // handle, O(manifest) on first use, zero data IO. Branch reads
@@ -724,6 +708,33 @@ class GraftTable(path: String, version: Option[Int],
         if (branch.isDefined || dvFreeOnly || hasLiveDvs)
           (None, Map.empty)
         else memoScanStats)
+  }
+
+  /** The pinned snapshot's file groups as the row-based scan lists them
+    * (see [[Layout.rowLevelEntries]]). */
+  private lazy val rowEntries = {
+    val all = Layout.rowLevelEntries(spark, path, pinnedVersion)
+    if (!dvFreeOnly) all
+    else all.filterNot { case (l, _, _) => Layout.masked(l) }
+  }
+
+  /** The row-based scan of the pinned snapshot over the data filters
+    * `pushed` to parquet. Its file groups are pruned by `skips` through
+    * the same manifest rule ([[Layout.fileSelection]]) as the vectorized
+    * scan's file list, so `SELECT`, `UPDATE`, `DELETE` and `MERGE` skip
+    * the same files. */
+  private[sql] def rowScan(required: StructType, pushed: Array[Filter],
+      skips: Seq[Layout.Skip]): GraftCowScan = {
+    require(branch.isEmpty,
+      s"branch read of $path@${branch.get} cannot serve " +
+        "metadata-column scans — audit reads are plain SELECTs")
+    val entries = if (skips.isEmpty) rowEntries else {
+      val kept = Layout.fileSelection(spark, path, skips,
+        Some(pinnedVersion), dvFreeOnly)._1.toSet
+      rowEntries.filter { case (l, _, _) => kept.contains(l) }
+    }
+    new GraftCowScan(path, entries, ColumnBridge.nullableSchema(schema()),
+      required, pushed, s"$path@v$pinnedVersion")
   }
 
   private lazy val memoScanStats

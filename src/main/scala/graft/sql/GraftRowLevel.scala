@@ -17,7 +17,7 @@ import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.MorMaskExpr
+import graft.functions.{MorMask, MorMaskExpr}
 import graft.ops.Layout
 import graft.ops.layout.CommitStats
 
@@ -28,36 +28,45 @@ import graft.ops.layout.CommitStats
   *
   *   1. the ANALYZER rewrites the command into a `ReplaceData` plan that
   *      reads the table through [[GraftRowLevelOperation.newScanBuilder]]
-  *      (the COW scan), applies the merge/update logic, and writes every
-  *      surviving row of the affected file-groups back through
+  *      — the pinned [[GraftTable]]'s own scan builder, always on its
+  *      row-based scan — applies the merge/update logic, and writes
+  *      every surviving row of the affected file-groups back through
   *      [[GraftRowLevelOperation.newWriteBuilder]];
-  *   2. the OPTIMIZER's RowLevelOperationRuntimeGroupFiltering narrows
-  *      "affected" from ALL files to the files that actually hold
-  *      matching rows: the operation declares a per-row `_file` metadata
-  *      column, Spark builds a runtime `IN` subquery over it (collect
-  *      the distinct `_file`s satisfying the command's condition), and
+  *   2. the SCAN drops every file whose manifest bounds refute the
+  *      command's pushed condition, by the rule a `SELECT … WHERE`
+  *      skips files with (`SnapshotScanBuilder.skipOf` →
+  *      `Layout.fileSelection`): such a file holds no row to change, so
+  *      it is neither read nor replaced;
+  *   3. the OPTIMIZER's RowLevelOperationRuntimeGroupFiltering narrows
+  *      the rest to the files that actually hold matching rows: the
+  *      operation declares a per-row `_file` metadata column, Spark
+  *      builds a runtime `IN` subquery over it (collect the distinct
+  *      `_file`s satisfying the command's condition, a read of the
+  *      table itself, which skips files by the same bounds), and
   *      [[GraftCowScan.filter]] prunes the group list — the COW analogue
   *      of [[Layout.mergeInto]]'s affected-file semi-join, just driven
   *      by Catalyst instead of by hand;
-  *   3. the WRITE stages each task's rows as parquet files into a fresh
-  *      txn dir (Spark's own `ParquetFileFormat.prepareWrite` factory,
-  *      via the bridge — ReplaceDataExec has no V1 write fallback),
-  *      each task computing its file's statistics as it writes, and
-  *      the COMMIT is one [[Layout.commitRewrite]] CAS: head − scanned
-  *      groups + staged files, serialized through the same manifest
-  *      arbiter as every programmatic verb.
+  *   4. the WRITE stages each task's rows as one parquet file into a
+  *      fresh txn dir ([[StagedFile]]: Spark's own
+  *      `ParquetFileFormat.prepareWrite` factory, via the bridge —
+  *      ReplaceDataExec has no V1 write fallback), each task computing
+  *      its file's statistics as it writes, and the COMMIT is one
+  *      [[Layout.commitRewrite]] CAS: head − scanned groups + staged
+  *      files, serialized through the same manifest arbiter as every
+  *      programmatic verb.
   *
   * Scale posture (the 100 TB question): the rewrite cost is bounded by
-  * the matched-file footprint + insert volume, never the table — group
-  * filtering prunes unmatched files BEFORE any parquet footer opens
-  * (the subquery scans only the condition's columns), untouched files
-  * carry by manifest line, and the commit is O(manifest). The COW scan
-  * itself is row-based (the per-row `_file` append precludes returning
-  * ColumnarBatches), a deliberate trade: row-level commands are
-  * write-dominated, and the scan feeds a join anyway. It applies the
-  * pinned snapshot's merge-on-read deletes — position and equality —
-  * with the same in-task [[graft.functions.MorMask]] every other read
-  * uses, so no deleted row resurrects through a rewrite.
+  * the matched-file footprint + insert volume, never the table —
+  * manifest skipping and group filtering prune unmatched files BEFORE
+  * any parquet footer opens (the subquery scans only the condition's
+  * columns), untouched files carry by manifest line, and the commit is
+  * O(manifest). The row-based scan (the per-row `_file` append
+  * precludes returning ColumnarBatches) is a deliberate trade:
+  * row-level commands are write-dominated, and the scan feeds a join
+  * anyway. It applies the pinned snapshot's merge-on-read deletes —
+  * position and equality — with the same in-task
+  * [[graft.functions.MorMask]] every other read uses, so no deleted row
+  * resurrects through a rewrite.
   *
   * On a `graft.rowlevel.mode = 'mor'` table the SAME commands take the
   * DELTA rewrite instead ([[GraftDeltaOperation]], `SupportsDelta`):
@@ -67,7 +76,7 @@ import graft.ops.layout.CommitStats
   * entries, updates as delete + re-insert — and NO pre-existing data
   * file is rewritten, so a point UPDATE costs its matched rows, not
   * its matched files' bytes (see the classes at the bottom of this
-  * file).
+  * file). Its scan skips files by the same manifest rule.
   *
   * Reference anchor: the nightly re-load upsert the reference runs as
   * DROP + bulk re-insert (`ETLCNPJFinalEmpresaEstabelecimentos.py:
@@ -106,38 +115,59 @@ object GraftRowLevel {
   private[sql] val PosColumnName = "_pos"
 }
 
-/** One SQL command's worth of row-level state: pins the snapshot version
-  * (scan list and commit base must agree), hands out scan/write
-  * builders, and remembers the MAIN scan so the commit knows which
-  * groups were read. The group-filter subquery builds a SECOND scan
-  * from this same operation (RowLevelOperationTable delegates every
-  * newScanBuilder here) — first-built wins the commit-scan slot, which
-  * is correct because Spark builds the main ReplaceData scan during
-  * early pushdown and only then runs the group-filtering rule that
-  * spawns the subquery's. */
-class GraftRowLevelOperation(
-    val tablePath: String,
-    val pinnedVersion: Int,
-    val tableSchema: StructType,
-    cmd: RowLevelOperation.Command) extends RowLevelOperation {
+/** One SQL command's worth of row-level state, shared by the two
+  * rewrites: the pinned [[GraftTable]] (scan list and commit base must
+  * agree on its version) and its one scan builder, always on the
+  * row-based scan, which serves `_file` and `_pos` and masks the
+  * snapshot's merge-on-read deletes. `kind` names the rewrite. */
+sealed abstract class GraftRowLevelBase(table: GraftTable,
+    cmd: RowLevelOperation.Command, kind: String) extends RowLevelOperation {
 
-  /** (manifest line, qualified absolute path, bytes) per file-group of
-    * the pinned snapshot — absolute path is the `_file` currency. */
-  val entries: Seq[(String, String, Long)] =
-    Layout.rowLevelEntries(SparkSession.active, tablePath, pinnedVersion)
+  val tablePath: String = table.tableDir
+  val pinnedVersion: Int = table.pinnedV
+  val tableSchema: StructType = ColumnBridge.nullableSchema(table.schema())
+  protected def label = s"$tablePath@v$pinnedVersion"
 
-  @volatile private var mainScan: GraftCowScan = null
-  private[sql] def registerScan(s: GraftCowScan): Unit = synchronized {
-    if (mainScan == null) mainScan = s
-  }
-  private[sql] def commitScan: GraftCowScan = mainScan
+  /** The row-based scan of one plan's read of this operation. */
+  protected def rowScan(required: StructType, pushed: Array[Filter],
+      skips: Seq[Layout.Skip]): Scan = table.rowScan(required, pushed, skips)
 
   override def command(): RowLevelOperation.Command = cmd
 
   override def newScanBuilder(options:
-      org.apache.spark.sql.util.CaseInsensitiveStringMap): ScanBuilder = {
-    Layout.ensureFieldIdRead(SparkSession.active, tableSchema)
-    new GraftCowScanBuilder(this)
+      org.apache.spark.sql.util.CaseInsensitiveStringMap): ScanBuilder =
+    table.scanBuilder(options, rowBased = true, rowScan)
+
+  /** `_file` rides along for runtime group filtering (the IN-subquery
+    * over matched files prunes the scan's group list). */
+  override def requiredMetadataAttributes(): Array[NamedReference] =
+    Array(Expressions.column(GraftRowLevel.FileColumnName))
+
+  override def description(): String = s"graft-$kind[$cmd $label]"
+}
+
+/** The copy-on-write rewrite. Remembers its MAIN scan so the commit
+  * knows which groups were read: the group-filter subquery reads the
+  * table itself, so the first scan this operation builds is the
+  * ReplaceData scan; first-built wins the commit-scan slot regardless. */
+class GraftRowLevelOperation(table: GraftTable,
+    cmd: RowLevelOperation.Command)
+    extends GraftRowLevelBase(table, cmd, "cow") {
+
+  @volatile private var mainScan: GraftCowScan = null
+  private[sql] def commitScan: GraftCowScan = mainScan
+
+  /** Pushes no filter to parquet: Spark hands a group-based scan the
+    * command's condition, yet the rewrite must read EVERY row of each
+    * file it replaces, and parquet's row-group skipping would drop the
+    * non-matching rows from the rewritten file. Manifest skipping by the
+    * same condition stays: it drops whole files, which are then neither
+    * read nor replaced. */
+  override protected def rowScan(required: StructType,
+      pushed: Array[Filter], skips: Seq[Layout.Skip]): Scan = {
+    val s = table.rowScan(required, Array.empty, skips)
+    synchronized { if (mainScan == null) mainScan = s }
+    s
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
@@ -149,62 +179,9 @@ class GraftRowLevelOperation(
       override def build(): Write = new Write {
         override def toBatch: BatchWrite =
           new GraftCowBatchWrite(GraftRowLevelOperation.this)
-        override def description(): String =
-          s"graft-cow-write[$tablePath@v$pinnedVersion]"
+        override def description(): String = s"graft-cow-write[$label]"
       }
     }
-  }
-
-  override def requiredMetadataAttributes(): Array[NamedReference] =
-    Array(Expressions.column(GraftRowLevel.FileColumnName))
-
-  override def description(): String =
-    s"graft-cow[$cmd $tablePath@v$pinnedVersion]"
-}
-
-/** Standard v1-filter pushdown + column pruning; `_file`/`_pos` are
-  * synthesized by the reader, everything else flows to the parquet
-  * machinery. Shared by the COW and the delta (merge-on-read) row-level
-  * operations — `register` lets the COW op capture its commit scan;
-  * `wholeGroups` marks the COW op's scans, which push nothing to
-  * parquet. */
-class GraftCowScanBuilder(table: String, entries: Seq[(String, String, Long)],
-    tableSchema: StructType, label: String,
-    register: GraftCowScan => Unit, wholeGroups: Boolean = false)
-    extends ScanBuilder
-    with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
-
-  def this(op: GraftRowLevelOperation) = this(op.tablePath, op.entries,
-    op.tableSchema, s"${op.tablePath}@v${op.pinnedVersion}", op.registerScan,
-    wholeGroups = true)
-
-  private var required: StructType = tableSchema
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  /** Filters over data columns push to parquet (row-group pruning);
-    * everything is ALSO kept as residual (returned array) so Spark
-    * re-evaluates — the parquet push is best-effort, the double
-    * evaluation is the standard file-source contract. A group-based
-    * (copy-on-write) scan pushes none: Spark hands it the command's
-    * condition, yet the rewrite must read EVERY row of each file it
-    * replaces, and parquet's row-group skipping would drop the
-    * non-matching rows from the rewritten file. */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    if (!wholeGroups) pushed = filters.filter(_.references.forall(r =>
-      r != GraftRowLevel.FileColumnName && r != GraftRowLevel.PosColumnName))
-    filters
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def build(): Scan = {
-    val scan = new GraftCowScan(table, entries, tableSchema, required,
-      pushed, label)
-    register(scan)
-    scan
   }
 }
 
@@ -213,12 +190,13 @@ class GraftCowScanBuilder(table: String, entries: Seq[(String, String, Long)],
   * columns null-fill, the format's add-column evolution), with the
   * `_file` group id appended per row when requested. Implements runtime
   * group filtering: Spark's IN-subquery over `_file` prunes the group
-  * list before any footer opens. Built from raw pieces (not the
-  * operation) because TWO plan shapes need it: the ReplaceData main
-  * scan, and the ordinary table read when a plan requests `_file` or
-  * the snapshot carries merge-on-read deletes without the per-file
-  * dispatch (see [[org.apache.spark.sql.graft.SnapshotScanBuilder]]).
-  * `table` is the root the entries' sidecar pointers resolve against. */
+  * list before any footer opens. [[GraftTable.rowScan]] builds it, over
+  * the file groups its manifest skipping kept, for every plan that
+  * needs rows rather than columnar batches: a row-level operation's
+  * reads, a read requesting `_file`/`_pos`, and a read of a masked
+  * snapshot without the per-file dispatch (see
+  * [[org.apache.spark.sql.graft.SnapshotScanBuilder]]). `table` is the
+  * root the entries' sidecar pointers resolve against. */
 class GraftCowScan(table: String, entries: Seq[(String, String, Long)],
     tableSchema: StructType, required: StructType,
     pushedFilters: Array[Filter], label: String) extends Scan with Batch
@@ -393,38 +371,26 @@ case class GraftCowReaderFactory(
   }
 }
 
-/** The V2 batch write behind ReplaceData: tasks stage parquet files into
-  * one fresh txn dir (invisible until a manifest lists them), the driver
-  * commit is a single REPLACE CAS swapping the scanned groups for the
-  * staged files. Abort deletes the txn dir — staged-but-uncommitted
-  * files are also vacuum's normal prey, the same crash story as every
-  * other verb. */
-class GraftCowBatchWrite(op: GraftRowLevelOperation) extends BatchWrite {
+/** The driver half of a row-level write: the tasks stage files into
+  * one fresh txn dir (invisible until a manifest lists them) and the
+  * driver commits them in one CAS. Abort deletes the txn dir —
+  * staged-but-uncommitted files are also vacuum's normal prey, the same
+  * crash story as every other verb. */
+abstract class GraftStagedBatchWrite(op: GraftRowLevelBase)
+    extends BatchWrite {
 
   private val txnRel = "data/txn-" + java.util.UUID.randomUUID().toString
-  private val writeSchema =
-    ColumnBridge.nullableSchema(op.tableSchema)
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : DataWriterFactory = {
+  /** One kind of staged file, `prefix`-named: data files under the
+    * table's schema and statistics, or `stats`-less sidecars. */
+  protected def staged(prefix: String, schema: StructType,
+      stats: Boolean): StagedFiles = {
     val spark = SparkSession.active
     val (factory, conf) =
-      ColumnBridge.parquetWriterFactory(spark, writeSchema, Map.empty)
-    GraftCowWriterFactory(op.tablePath, txnRel, factory, conf, writeSchema,
-      Layout.rowLevelStats(spark, op.tablePath, op.pinnedVersion,
-        writeSchema))
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val added = messages.toSeq.collect {
-      case m: GraftCowCommitMessage if m.line != null => m.line
-    }
-    val scan = op.commitScan
-    require(scan != null,
-      "row-level write committed without a configured scan")
-    val affected = scan.files.map(_._1).toSet
-    Layout.commitRewrite(SparkSession.active, op.tablePath, affected, added,
-      s"${op.command().toString.toLowerCase}Sql")
+      ColumnBridge.parquetWriterFactory(spark, schema, Map.empty)
+    StagedFiles(s"${op.tablePath}/$txnRel", txnRel, prefix, factory, conf,
+      schema, if (!stats) None else Some(Layout.rowLevelStats(spark,
+        op.tablePath, op.pinnedVersion, schema)))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -435,9 +401,107 @@ class GraftCowBatchWrite(op: GraftRowLevelOperation) extends BatchWrite {
   }
 }
 
-/** A task's staged file as its manifest line (statistics included), or
-  * a null line when the task wrote no row. */
-case class GraftCowCommitMessage(line: String) extends WriterCommitMessage
+/** A task's staged files: its data file's manifest line (statistics
+  * included), null when it wrote no row; and, on the delta path, its
+  * position-delete sidecar (txn-relative, null when none) with the file
+  * groups the sidecar covers. */
+case class StagedCommitMessage(dataLine: String, dvRel: String,
+    grps: Array[String]) extends WriterCommitMessage
+
+/** One kind of staged parquet file of a row-level write, as its tasks
+  * open them: a serializable writer factory with its own hadoop conf
+  * (ParquetWriteSupport reads the schema from the conf, not the
+  * OutputWriter argument, so two kinds must not share one), and the
+  * statistics each data file's manifest line records. */
+case class StagedFiles(dir: String, txnRel: String, prefix: String,
+    factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
+    conf: org.apache.spark.util.SerializableConfiguration,
+    schema: StructType, stats: Option[CommitStats]) {
+  def open(partitionId: Int, taskId: Long): StagedFile =
+    new StagedFile(this, partitionId, taskId)
+}
+
+/** One task's staged file: opened on its first row (an empty task
+  * stages no file), named by (partition, task attempt) so a speculative
+  * retry never collides — the commit coordinator picks exactly one
+  * attempt's message, and losers' files stay unreferenced until vacuum.
+  * With statistics, they are aggregated as its rows are written and
+  * ride the commit message in its rendered manifest line. */
+final class StagedFile(kind: StagedFiles, partitionId: Int, taskId: Long) {
+  private var writer:
+    org.apache.spark.sql.execution.datasources.OutputWriter = null
+  private var agg: FileAggregate.Buffer = null
+
+  def write(row: InternalRow): Unit = {
+    if (writer == null) {
+      writer = ColumnBridge.newOutputWriter(kind.factory, kind.conf,
+        kind.dir, f"${kind.prefix}-$partitionId%05d-$taskId", kind.schema,
+        partitionId, taskId)
+      agg = kind.stats.map(_.agg.newFile()).orNull
+    }
+    writer.write(row)
+    if (agg != null) agg.add(row)
+  }
+
+  private def path = new Path(writer.path())
+  private def fs = path.getFileSystem(
+    new org.apache.hadoop.conf.Configuration(kind.conf.value))
+
+  /** Closes the file: its manifest line when it records statistics,
+    * else its txn-relative path; null when no row reached it. */
+  def commit(): String =
+    if (writer == null) null
+    else {
+      writer.close()
+      val rel = s"${kind.txnRel}/${path.getName}"
+      kind.stats.fold(rel)(s => s.line(rel, fs.getFileStatus(path).getLen,
+        agg.rows, agg.result()))
+    }
+
+  def abort(): Unit =
+    if (writer != null) {
+      try writer.close() catch { case _: Throwable => () }
+      try fs.delete(path, false) catch { case _: java.io.IOException => () }
+    }
+}
+
+/** The V2 batch write behind ReplaceData: the driver commit is a single
+  * REPLACE CAS swapping the scanned groups for the staged files. */
+class GraftCowBatchWrite(op: GraftRowLevelOperation)
+    extends GraftStagedBatchWrite(op) {
+
+  override def createBatchWriterFactory(info: PhysicalWriteInfo)
+      : DataWriterFactory = GraftCowWriterFactory(
+    staged("part", op.tableSchema, stats = true))
+
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    val added = messages.toSeq.collect {
+      case m: StagedCommitMessage if m.dataLine != null => m.dataLine
+    }
+    val scan = op.commitScan
+    require(scan != null,
+      "row-level write committed without a configured scan")
+    val affected = scan.files.map(_._1).toSet
+    Layout.commitRewrite(SparkSession.active, op.tablePath, affected, added,
+      s"${op.command().toString.toLowerCase}Sql")
+  }
+}
+
+/** Per-task copy-on-write writer: every row goes to the task's one
+  * staged data file. */
+case class GraftCowWriterFactory(data: StagedFiles)
+    extends DataWriterFactory {
+
+  override def createWriter(partitionId: Int, taskId: Long)
+      : DataWriter[InternalRow] = new DataWriter[InternalRow] {
+    private val file = data.open(partitionId, taskId)
+    override def write(row: InternalRow): Unit = file.write(row)
+    override def commit(): WriterCommitMessage =
+      StagedCommitMessage(file.commit(), null, Array.empty)
+    override def abort(): Unit = file.abort()
+    override def close(): Unit = ()
+  }
+}
 
 // ---------------------------------------------------------------------
 // Delta-based (merge-on-read) row-level SQL — `SupportsDelta`. On a
@@ -453,85 +517,41 @@ case class GraftCowCommitMessage(line: String) extends WriterCommitMessage
 // text).
 // ---------------------------------------------------------------------
 
-/** The merge-on-read twin of [[GraftRowLevelOperation]]: same pinned
-  * snapshot, same shared COW scan (which serves the `_pos` ordinal and
-  * masks existing position and equality deletes, so a re-UPDATE of a
-  * survivor row is keyed on TRUE file ordinals), but writes ride
-  * [[GraftDeltaBatchWrite]]. */
-class GraftDeltaOperation(
-    val tablePath: String,
-    val pinnedVersion: Int,
-    val tableSchema: StructType,
-    cmd: RowLevelOperation.Command) extends RowLevelOperation
-    with SupportsDelta {
-
-  val entries: Seq[(String, String, Long)] =
-    Layout.rowLevelEntries(SparkSession.active, tablePath, pinnedVersion)
-
-  override def command(): RowLevelOperation.Command = cmd
-
-  override def newScanBuilder(options:
-      org.apache.spark.sql.util.CaseInsensitiveStringMap): ScanBuilder = {
-    Layout.ensureFieldIdRead(SparkSession.active, tableSchema)
-    new GraftCowScanBuilder(tablePath, entries, tableSchema,
-      s"$tablePath@v$pinnedVersion(mor)", _ => ())
-  }
+/** The merge-on-read rewrite: same pinned snapshot and scan (which
+  * serves the `_pos` ordinal and masks existing position and equality
+  * deletes, so a re-UPDATE of a survivor row is keyed on TRUE file
+  * ordinals), but writes ride [[GraftDeltaBatchWrite]]. */
+class GraftDeltaOperation(table: GraftTable,
+    cmd: RowLevelOperation.Command)
+    extends GraftRowLevelBase(table, cmd, "delta") with SupportsDelta {
 
   override def rowId(): Array[NamedReference] = Array(
     Expressions.column(GraftRowLevel.FileColumnName),
     Expressions.column(GraftRowLevel.PosColumnName))
-
-  /** `_file` rides along for runtime group filtering (the IN-subquery
-    * over matched files still prunes the scan's group list). */
-  override def requiredMetadataAttributes(): Array[NamedReference] =
-    Array(Expressions.column(GraftRowLevel.FileColumnName))
 
   override def newWriteBuilder(info: LogicalWriteInfo)
       : DeltaWriteBuilder = new DeltaWriteBuilder {
     override def build(): DeltaWrite = new DeltaWrite {
       override def toBatch: DeltaBatchWrite =
         new GraftDeltaBatchWrite(GraftDeltaOperation.this)
-      override def description(): String =
-        s"graft-delta-write[$tablePath@v$pinnedVersion]"
+      override def description(): String = s"graft-delta-write[$label]"
     }
   }
-
-  override def description(): String =
-    s"graft-delta[$cmd $tablePath@v$pinnedVersion]"
 }
 
-/** Tasks stage insert/update rows as parquet AND position deletes as
-  * (grp, pos) sidecar parquet into one fresh txn dir; the driver commit
-  * is a single REPLACE CAS via [[Layout.commitDelta]]. */
+/** Tasks stage insert/update rows as data files AND position deletes as
+  * (grp, pos) sidecars ([[MorMask.DvSchema]]) into one fresh txn dir;
+  * the driver commit is a single REPLACE CAS via [[Layout.commitDelta]]. */
 class GraftDeltaBatchWrite(op: GraftDeltaOperation)
-    extends DeltaBatchWrite {
-
-  private val txnRel = "data/txn-" + java.util.UUID.randomUUID().toString
-  private val writeSchema = ColumnBridge.nullableSchema(op.tableSchema)
-  private[sql] val dvSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("grp", StringType,
-      nullable = false),
-    org.apache.spark.sql.types.StructField("pos",
-      org.apache.spark.sql.types.LongType, nullable = false)))
+    extends GraftStagedBatchWrite(op) with DeltaBatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : DeltaWriterFactory = {
-    val spark = SparkSession.active
-    // each factory carries ITS schema inside its hadoop conf
-    // (ParquetWriteSupport reads the schema from the conf, not the
-    // OutputWriter argument) — the two writers must not share one
-    val (dataFactory, dataConf) =
-      ColumnBridge.parquetWriterFactory(spark, writeSchema, Map.empty)
-    val (dvFactory, dvConf) =
-      ColumnBridge.parquetWriterFactory(spark, dvSchema, Map.empty)
-    GraftDeltaWriterFactory(op.tablePath, txnRel, dataFactory, dvFactory,
-      dataConf, dvConf, writeSchema, dvSchema,
-      Layout.rowLevelStats(spark, op.tablePath, op.pinnedVersion,
-        writeSchema))
-  }
+      : DeltaWriterFactory = GraftDeltaWriterFactory(
+    staged("part", op.tableSchema, stats = true),
+    staged("dv", MorMask.DvSchema, stats = false))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val ms = messages.toSeq.collect { case m: GraftDeltaCommitMessage => m }
+    val ms = messages.toSeq.collect { case m: StagedCommitMessage => m }
     val dataLines = ms.collect { case m if m.dataLine != null => m.dataLine }
     val grpToSidecars = ms.flatMap(m =>
         m.grps.map(g => g -> m.dvRel)).groupBy(_._1)
@@ -545,69 +565,28 @@ class GraftDeltaBatchWrite(op: GraftDeltaOperation)
       op.pinnedVersion, grpToSidecars, dataLines,
       s"${op.command().toString.toLowerCase}DeltaSql")
   }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    val dir = new Path(op.tablePath, txnRel)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try fs.delete(dir, true) catch { case _: java.io.IOException => () }
-  }
 }
 
-/** A task's staged data file as its manifest line (null when it
-  * inserted nothing), and its position-delete sidecar with the file
-  * groups the sidecar covers. */
-case class GraftDeltaCommitMessage(dataLine: String, dvRel: String,
-    grps: Array[String]) extends WriterCommitMessage
-
-/** Per-task delta writer: lazily opens a parquet data writer for
-  * inserts and a (grp, pos) sidecar writer for deletes; update =
-  * delete + insert. The data file's statistics are aggregated as its
-  * rows are written. Names carry (partition, task attempt) so
-  * speculative retries never collide — the commit coordinator picks one
-  * attempt's message, losers stay unreferenced until vacuum. */
-case class GraftDeltaWriterFactory(tablePath: String, txnRel: String,
-    dataFactory:
-      org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-    dvFactory:
-      org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-    conf: org.apache.spark.util.SerializableConfiguration,
-    dvConf: org.apache.spark.util.SerializableConfiguration,
-    schema: StructType, dvSchema: StructType, stats: CommitStats)
+/** Per-task delta writer: inserts go to the task's staged data file,
+  * deletes to its (grp, pos) sidecar; update = delete + insert. */
+case class GraftDeltaWriterFactory(data: StagedFiles, dvs: StagedFiles)
     extends DeltaWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long)
       : DeltaWriter[InternalRow] = new DeltaWriter[InternalRow] {
-
-    private var dataWriter:
-      org.apache.spark.sql.execution.datasources.OutputWriter = null
-    private var data: FileAggregate.Buffer = null
-    private var dvWriter:
-      org.apache.spark.sql.execution.datasources.OutputWriter = null
+    private val inserts = data.open(partitionId, taskId)
+    private val deletes = dvs.open(partitionId, taskId)
     private val grps = scala.collection.mutable.TreeSet.empty[String]
     private val dvRow = new GenericInternalRow(2)
 
-    override def insert(row: InternalRow): Unit = {
-      if (dataWriter == null) {
-        dataWriter = ColumnBridge.newOutputWriter(dataFactory, conf,
-          s"$tablePath/$txnRel", f"part-$partitionId%05d-$taskId",
-          schema, partitionId, taskId)
-        data = stats.agg.newFile()
-      }
-      dataWriter.write(row)
-      data.add(row)
-    }
+    override def insert(row: InternalRow): Unit = inserts.write(row)
 
     override def delete(meta: InternalRow, id: InternalRow): Unit = {
       // row id = (_file qualified path, _pos ordinal), rowId() order
       val grp = Layout.grpOfRel(id.getUTF8String(0).toString)
-      if (dvWriter == null)
-        dvWriter = ColumnBridge.newOutputWriter(dvFactory, dvConf,
-          s"$tablePath/$txnRel", f"dv-$partitionId%05d-$taskId",
-          dvSchema, partitionId, taskId)
       dvRow.update(0, UTF8String.fromString(grp))
       dvRow.setLong(1, id.getLong(1))
-      dvWriter.write(dvRow)
+      deletes.write(dvRow)
       grps += grp
     }
 
@@ -616,91 +595,10 @@ case class GraftDeltaWriterFactory(tablePath: String, txnRel: String,
       delete(meta, id); insert(row)
     }
 
-    override def commit(): WriterCommitMessage = {
-      def closeAndRel(
-          w: org.apache.spark.sql.execution.datasources.OutputWriter)
-          : (String, Long) =
-        if (w == null) (null, 0L)
-        else {
-          w.close()
-          val p = new Path(w.path())
-          val len = p.getFileSystem(
-            new org.apache.hadoop.conf.Configuration(conf.value))
-            .getFileStatus(p).getLen
-          (s"$txnRel/${p.getName}", len)
-        }
-      val (dataRel, dataBytes) = closeAndRel(dataWriter)
-      val (dvRel, _) = closeAndRel(dvWriter)
-      GraftDeltaCommitMessage(
-        if (dataRel == null) null
-        else stats.line(dataRel, dataBytes, data.rows, data.result()),
-        dvRel, grps.toArray)
-    }
-
-    override def abort(): Unit =
-      Seq(dataWriter, dvWriter).filter(_ != null).foreach { w =>
-        try w.close() catch { case _: Throwable => () }
-        val p = new Path(w.path())
-        try p.getFileSystem(
-          new org.apache.hadoop.conf.Configuration(conf.value))
-          .delete(p, false)
-        catch { case _: java.io.IOException => () }
-      }
-
-    override def close(): Unit = ()
-  }
-}
-
-/** Per-task parquet writer: lazily opened (an empty partition stages no
-  * file), named by (partition, task attempt) so a speculative retry
-  * never collides — the commit coordinator picks exactly one attempt's
-  * message, and losers' files stay unreferenced until vacuum. The
-  * file's statistics are aggregated as its rows are written and ride
-  * the commit message in its rendered manifest line. */
-case class GraftCowWriterFactory(tablePath: String, txnRel: String,
-    factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-    conf: org.apache.spark.util.SerializableConfiguration,
-    schema: StructType, stats: CommitStats) extends DataWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long)
-      : DataWriter[InternalRow] = new DataWriter[InternalRow] {
-
-    private var writer:
-      org.apache.spark.sql.execution.datasources.OutputWriter = null
-    private var file: FileAggregate.Buffer = null
-
-    override def write(row: InternalRow): Unit = {
-      if (writer == null) {
-        writer = ColumnBridge.newOutputWriter(factory, conf,
-          s"$tablePath/$txnRel", f"part-$partitionId%05d-$taskId",
-          schema, partitionId, taskId)
-        file = stats.agg.newFile()
-      }
-      writer.write(row)
-      file.add(row)
-    }
-
     override def commit(): WriterCommitMessage =
-      if (writer == null) GraftCowCommitMessage(null)
-      else {
-        writer.close()
-        val p = new Path(writer.path())
-        val len = p.getFileSystem(
-          new org.apache.hadoop.conf.Configuration(conf.value))
-          .getFileStatus(p).getLen
-        GraftCowCommitMessage(stats.line(s"$txnRel/${p.getName}", len,
-          file.rows, file.result()))
-      }
+      StagedCommitMessage(inserts.commit(), deletes.commit(), grps.toArray)
 
-    override def abort(): Unit =
-      if (writer != null) {
-        try writer.close() catch { case _: Throwable => () }
-        val p = new Path(writer.path())
-        try p.getFileSystem(
-          new org.apache.hadoop.conf.Configuration(conf.value))
-          .delete(p, false)
-        catch { case _: java.io.IOException => () }
-      }
+    override def abort(): Unit = { inserts.abort(); deletes.abort() }
 
     override def close(): Unit = ()
   }

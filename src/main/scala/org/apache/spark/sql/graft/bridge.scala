@@ -258,19 +258,21 @@ object ColumnBridge {
     spark.sparkContext.listenerBus.waitUntilEmpty()
 }
 
-/** Snapshot scan builder serving BOTH read shapes of a graft-manifest
-  * table: the VECTORIZED parquet path (Spark's own ParquetScanBuilder —
+/** The one scan builder of a graft-manifest table, serving BOTH read
+  * shapes: the VECTORIZED parquet path (Spark's own ParquetScanBuilder —
   * filter pushdown, aggregate pushdown, columnar read) for plain reads,
-  * switching to a caller-supplied row-based per-file scan ONLY when the
-  * plan requires the `_file` metadata column — which exactly one plan
-  * shape does: the row-level group-filter subquery, which scans the
-  * ORIGINAL table relation asking "which files hold matching rows".
-  * Lives in the bridge package because delegation needs the
-  * `private[sql]` catalyst-filter pushdown trait FileScanBuilder uses.
+  * and a caller-supplied row-based per-file scan for every plan that
+  * requests the `_file`/`_pos` metadata columns (the row-level
+  * group-filter subquery), for every read of a snapshot with live row
+  * masks, and for every read of a row-level operation (`rowBased`).
+  * Both shapes skip files by the same manifest rule: the pushed WHERE
+  * conjuncts' [[SnapshotScanBuilder.skipOf]] bounds predicates. Lives in
+  * the bridge package because delegation needs the `private[sql]`
+  * catalyst-filter pushdown trait FileScanBuilder uses.
   *
-  * Filters referencing `_file` stay residual (never reach parquet,
-  * which cannot serve the column); everything else delegates, so the
-  * fast path's pushdown is EXACTLY what the direct builder did. */
+  * Filters referencing `_file`/`_pos` stay residual (never reach
+  * parquet, which cannot serve the columns); everything else delegates,
+  * so the fast path's pushdown is EXACTLY what the direct builder did. */
 class SnapshotScanBuilder(
     spark: SparkSession,
     files: Seq[String],
@@ -281,7 +283,7 @@ class SnapshotScanBuilder(
       Seq[graft.ops.Layout.Skip]) =>
         org.apache.spark.sql.connector.read.Scan,
     prune: Seq[graft.ops.Layout.Skip] => (Seq[String], Int) = null,
-    hasDv: Boolean = false,
+    rowBased: Boolean = false,
     spjKeys: Option[(Array[org.apache.spark.sql.connector.expressions.Expression],
       Seq[org.apache.spark.sql.types.DataType],
       Map[String, (Long, Seq[Any])])] = None,
@@ -294,11 +296,15 @@ class SnapshotScanBuilder(
 
   import org.apache.spark.sql.execution.datasources.v2.FileScanBuilder
 
-  // var, not val: pushFilters may REBUILD the parquet builder over the
-  // manifest-pruned file list (see below) — safe because Spark's
-  // pushdown order is filters → aggregates → column pruning → build
-  private var inner: FileScanBuilder =
-    ColumnBridge.parquetScanBuilder(spark, files, schema, options)
+  // the file universe the built scan will read — manifest pruning
+  // narrows it; the SPJ regrouping must key exactly this set
+  private var currentFiles: Seq[String] = files
+  // Spark's parquet builder over the kept files, built on first use —
+  // which a `rowBased` builder never makes: its InMemoryFileIndex stats
+  // every file it lists. Spark's pushdown order is filters → aggregates
+  // → column pruning → build, so it is built after manifest pruning.
+  private lazy val inner: FileScanBuilder =
+    ColumnBridge.parquetScanBuilder(spark, currentFiles, schema, options)
       .asInstanceOf[FileScanBuilder]
   private def innerAgg =
     inner.asInstanceOf[
@@ -308,13 +314,13 @@ class SnapshotScanBuilder(
   private val MetaCols = Set("_file", "_pos")
   private var wantsFile = false
   private var required: org.apache.spark.sql.types.StructType = schema
-  // bounds predicates derived from pushed filters — forwarded to the
-  // row-based scan so manifest pruning survives the dv-forced path
+  // the row-based scan's inputs: bounds predicates derived from pushed
+  // filters (its manifest pruning) and the data filters as v1 filters
+  // (its parquet pushdown)
   private var lastSkips: Seq[graft.ops.Layout.Skip] = Nil
+  private var rowFilters: Array[org.apache.spark.sql.sources.Filter] =
+    Array.empty
   private var prunedFiles: Boolean = false
-  // the file universe the built scan will read — manifest pruning
-  // narrows it; the SPJ regrouping must key exactly this set
-  private var currentFiles: Seq[String] = files
   // a pushed aggregate's output rows are NOT keyed by partition value —
   // the keyed wrapper must never claim a partitioning over them
   private var aggPushed = false
@@ -331,9 +337,7 @@ class SnapshotScanBuilder(
     // now made for `SELECT ... WHERE` text. Sound because a Skip is a
     // NECESSARY condition of its conjunct (bounds only ever prove
     // absence), and the exact predicates still evaluate on surviving
-    // rows through the normal parquet pushdown below. The builder is
-    // rebuilt over the kept list; pushed-filter/column state is empty
-    // at this point (filters are pushed first).
+    // rows through the normal parquet pushdown below.
     if (prune != null) {
       val skips = onData.flatMap(SnapshotScanBuilder.skipOf)
       lastSkips = skips
@@ -341,47 +345,50 @@ class SnapshotScanBuilder(
         val (kept, total) = prune(skips)
         SnapshotScanBuilder.lastPrune = Some((kept.size, total))
         if (kept.size < total) {
-          inner = ColumnBridge.parquetScanBuilder(spark, kept, schema,
-            options).asInstanceOf[FileScanBuilder]
           currentFiles = kept
           prunedFiles = true
         }
       } else SnapshotScanBuilder.lastPrune = None
     }
-    onFile ++ inner.pushFilters(onData)
+    rowFilters = onData.filter(_.deterministic).flatMap(e =>
+      org.apache.spark.sql.execution.datasources.DataSourceStrategy
+        .translateFilter(e, supportNestedPredicatePushdown = true)).toArray
+    // the row-based scan keeps every filter residual
+    if (rowBased) filters else onFile ++ inner.pushFilters(onData)
   }
 
   override def pushedFilters
       : Array[org.apache.spark.sql.connector.expressions.filter.Predicate] =
-    inner.pushedFilters
+    if (rowBased) rowFilters.map(_.toV2) else inner.pushedFilters
 
   override def pruneColumns(
       requiredSchema: org.apache.spark.sql.types.StructType): Unit = {
     wantsFile = requiredSchema.fieldNames.exists(MetaCols)
     required = requiredSchema
-    inner.pruneColumns(org.apache.spark.sql.types.StructType(
-      requiredSchema.filterNot(f => MetaCols(f.name))))
+    if (!rowBased && !wantsFile)
+      inner.pruneColumns(requiredSchema)
   }
 
-  // a table with live row masks must never answer from parquet
-  // footers: a pushed-down COUNT(*)/MIN/MAX would include position- or
+  // a row-based read must never answer from parquet footers: a
+  // pushed-down COUNT(*)/MIN/MAX would include position- or
   // equality-deleted rows
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-      : Boolean = !hasDv && innerAgg.supportCompletePushDown(agg)
+      : Boolean = !rowBased && innerAgg.supportCompletePushDown(agg)
 
   override def pushAggregation(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
       : Boolean = {
-    val pushed = !wantsFile && !hasDv && innerAgg.pushAggregation(agg)
+    val pushed = !wantsFile && !rowBased && innerAgg.pushAggregation(agg)
     if (pushed) aggPushed = true
     pushed
   }
 
-  /** Plans requesting `_file` take the row-based scan (which
-    * synthesizes it); so does EVERY read of a version with live row
-    * masks (position or equality deletes) that reaches this builder —
-    * the row-based reader masks them in the task. Mask-free tables keep
+  /** Plans requesting `_file`/`_pos` take the row-based scan (which
+    * synthesizes them); so does every read of a `rowBased` builder — a
+    * row-level operation's, or any read of a version with live row masks
+    * (position or equality deletes) that reaches this builder: the
+    * row-based reader masks them in the task. Mask-free plain reads keep
     * the vectorized parquet path untouched.
     *
     * SPJ (r18): an eligible partitioned snapshot (caller passed
@@ -393,10 +400,7 @@ class SnapshotScanBuilder(
     * over a pushed aggregate (its rows aren't keyed), and any
     * conversion gap falls back to the plain scan. */
   override def build(): org.apache.spark.sql.connector.read.Scan =
-    if (wantsFile || hasDv)
-      fileScanFor(required,
-        org.apache.spark.sql.internal.connector.PredicateUtils
-          .toV1(inner.pushedFilters), lastSkips)
+    if (wantsFile || rowBased) fileScanFor(required, rowFilters, lastSkips)
     else {
       val base0 = inner.build()
       // manifest-derived planner stats (r19): enrich the scan's

@@ -408,19 +408,70 @@ class LedgerSpec extends AnyFunSuite {
       s"MorMask.Spec built outside Layout.maskSpec: $sites")
   }
 
+  test("one row-based scan and one skip rule: GraftCowScan is built only " +
+      "by GraftTable.rowScan, Skips from catalyst filters only by skipOf") {
+    import scala.jdk.CollectionConverters._
+    // SELECT and the row-level commands read through the table's one
+    // scan builder; a second builder of the row-based scan, or a second
+    // filter → Skip translation, is a second copy of the skipping rule
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = {
+      val w = java.nio.file.Files.walk(root)
+      try w.iterator().asScala.map(f => root.relativize(f).toString)
+        .filter(_.endsWith(".scala")).toSeq.sorted
+      finally w.close()
+    }
+    val bridge = "org/apache/spark/sql/graft/bridge.scala"
+    assert(files.contains(bridge) &&
+      files.contains("graft/sql/GraftCatalog.scala"),
+      s"guard lost its source files: ${files.size}")
+    val code = files.map(rel => rel -> ParquetCalls.codeOnly(new String(
+      java.nio.file.Files.readAllBytes(root.resolve(rel)),
+      java.nio.charset.StandardCharsets.UTF_8))).toMap
+    def sitesOf(re: scala.util.matching.Regex,
+        in: Seq[String] = files): Seq[(String, String)] =
+      in.flatMap(rel => re.findAllMatchIn(code(rel))
+        .filterNot { m =>
+          // a `case` pattern on the same line matches a Skip, not builds one
+          val from = code(rel).lastIndexOf('\n', m.start) + 1
+          """\bcase\b""".r.findFirstIn(code(rel).substring(from, m.start))
+            .isDefined
+        }
+        .map(m => (rel, ParquetCalls.enclosing(code(rel), m.start))))
+    assert(sitesOf("""\bnew\s+GraftCowScan\s*\(""".r) ==
+      Seq(("graft/sql/GraftCatalog.scala", "rowScan")),
+      "GraftCowScan built outside GraftTable.rowScan: " +
+        sitesOf("""\bnew\s+GraftCowScan\s*\(""".r))
+    val skipOf = """(?<!def )\bskipOf\b""".r
+    assert(sitesOf(skipOf) == Seq((bridge, "pushFilters")),
+      s"skipOf used outside SnapshotScanBuilder.pushFilters: " +
+        sitesOf(skipOf))
+    // files that read catalyst expressions build Skips only in skipOf
+    val imports =
+      """import\s+org\.apache\.spark\.sql\.catalyst\.expressions""".r
+    val catalyst =
+      files.filter(rel => imports.findFirstIn(code(rel)).isDefined)
+    assert(catalyst.contains(bridge), s"guard lost skipOf's file: $catalyst")
+    val built = sitesOf("""\bSkip(?:Range|Equals|In)\s*\(""".r, catalyst)
+      .distinct
+    assert(built.nonEmpty && built.forall { case (f, m) =>
+        f == bridge && Set("skipOf", "eqSkip")(m) },
+      s"a Skip derived from catalyst expressions outside skipOf: $built")
+  }
+
   test("session conf writes in src/main are allow-listed; AQE and the " +
       "time zone are never written to a caller's session") {
     import scala.jdk.CollectionConverters._
     // each write keyed (file, enclosing member, receiver, key argument),
     // with the reason it may touch that session
     val allowed = Map(
-      ("graft/sql/GraftCatalog.scala", "catalogFor", "s",
+      ("graft/sql/GraftSql.scala", "catalogFor", "s",
         "s\"spark.sql.catalog.$name\"") ->
         "registers the bench keys' catalog on the session that queries it",
-      ("graft/sql/GraftCatalog.scala", "catalogFor", "s",
+      ("graft/sql/GraftSql.scala", "catalogFor", "s",
         "s\"spark.sql.catalog.$name.warehouse\"") ->
         "the registered catalog's warehouse root",
-      ("graft/sql/GraftCatalog.scala", "withWapBranch", "s",
+      ("graft/sql/GraftSql.scala", "withWapBranch", "s",
         "\"spark.graft.wap.branch\"") ->
         "WAP scope: set for the body, the caller's value restored after",
       ("graft/ops/layout/Manifests.scala", "ensureFieldIdRead", "spark",
