@@ -721,9 +721,11 @@ private[ops] trait RowLevel { this: Layout.type =>
 
   /** One-row table summary for `CALL system.detail`, the DESCRIBE
     * DETAIL analogue: (head version, live files, recorded bytes, schema
-    * DDL, props, files carrying live deletion vectors, distinct dv
-    * sidecars) — the last two are the MOR-health signal: a growing
-    * sidecar count says "schedule a compaction". O(manifest) metadata
+    * DDL, props, files carrying a live row mask, distinct mask files)
+    * — the last two are the MOR-health signal: a mask is a position
+    * delete or an equality delete ([[masked]]), a mask file a
+    * position-delete sidecar or an equality-delete key file, and a
+    * growing count says "schedule a compaction". O(manifest) metadata
     * reads, zero data-file IO at any table size. */
   def tableDetail(spark: SparkSession, table: String)
       : (Int, Int, Long, String, Map[String, String], Int, Int) = {
@@ -733,11 +735,12 @@ private[ops] trait RowLevel { this: Layout.type =>
     require(v > 0, s"tableDetail: no committed version in $table")
     val lines = manifestFiles(fs, root, v)
     val entries = versionFileEntries(fs, root, v)
-    val dvs = lines.map(entryDvs).filter(_.nonEmpty)
+    val masks = lines.filter(masked)
+      .map(l => entryDvs(l) ++ entryEqs(l).map(_._1))
     (v, entries.size, entries.flatMap(_._2).sum,
       schemaOf(fs, root, v).map(_.toDDL).getOrElse(""),
       propsOf(fs, root, v),
-      dvs.size, dvs.flatten.distinct.size)
+      masks.size, masks.flatten.distinct.size)
   }
 
   /** Per-version commit summary — the DESCRIBE HISTORY analogue:

@@ -300,8 +300,9 @@ object GraftProcedures {
           "schema", DataTypes.StringType, nullable = false),
         org.apache.spark.sql.types.StructField(
           "properties", DataTypes.StringType, nullable = false),
-        // merge-on-read health: files masked by live deletion vectors
-        // and distinct sidecars — a growing count says "compact"
+        // merge-on-read health: files masked by live position or
+        // equality deletes, and the distinct sidecars and key files
+        // they point to — a growing count says "compact"
         org.apache.spark.sql.types.StructField(
           "dv_files", DataTypes.IntegerType, nullable = false),
         org.apache.spark.sql.types.StructField(

@@ -304,6 +304,38 @@ class GraftProcedureSpec extends AnyFunSuite {
     assert(spark.sql(s"SELECT COUNT(*) FROM $t").head.getLong(0) == 800)
   }
 
+  test("detail counts the files equality deletes mask and their key files") {
+    val c = cat
+    val t = "proc_detail_eq"
+    spark.sql(s"DROP TABLE IF EXISTS $c.default.$t")
+    spark.sql(s"""CREATE TABLE $c.default.$t (k BIGINT, v STRING)
+                |TBLPROPERTIES ('graft.rowlevel.mode' = 'mor')""".stripMargin)
+    spark.sql(s"INSERT INTO $c.default.$t " +
+      "SELECT /*+ REPARTITION(1) */ id, 'a' FROM range(10)")
+    def masks() = {
+      val d = spark.sql(s"CALL $c.system.detail('default.$t')").head()
+      (d.getInt(5), d.getInt(6))
+    }
+    // no stats: a key set masks both lines, the empty CREATE file's too
+    spark.range(0, 3).selectExpr("id AS k")
+      .createOrReplaceTempView("proc_detail_eq_dead")
+    spark.sql(s"""CALL $c.system.upsert('default.$t',
+      |source => 'proc_detail_eq_dead', key => 'k',
+      |delete_only => true)""".stripMargin)
+    assert(masks() == ((2, 1)), "one key-only file masks two lines")
+    // an upsert's own data file is its key file
+    spark.sql("SELECT 5L AS k, 'b' AS v")
+      .createOrReplaceTempView("proc_detail_eq_src")
+    spark.sql(s"""CALL $c.system.upsert('default.$t',
+      |source => 'proc_detail_eq_src', key => 'k')""".stripMargin)
+    assert(masks() == ((2, 2)), "two key files mask the same two lines")
+    spark.sql(s"CALL $c.system.compact('default.$t', only_dv => true)")
+    assert(masks() == ((0, 0)), "compaction materializes the masks")
+    assert(spark.sql(s"SELECT k, v FROM $c.default.$t ORDER BY k").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq ==
+      (3L to 9L).map(k => (k, if (k == 5L) "b" else "a")))
+  }
+
   test("system.upsert merges by key through SQL; detail reports manifest stats") {
     val c = cat
     val t = s"$c.default.proc_upsert"
