@@ -307,8 +307,8 @@ private[ops] trait Branches { this: Layout.type =>
           (mainS, brS) match {
             case (Some(m), Some(b)) =>
               val merged = mergeWiden(m, b)
-              if (idMapped(propsOf(fs, root, head)))
-                Some(restampIds(m, merged))
+              val props = propsOf(fs, root, head)
+              if (idMapped(props)) Some(restampIds(m, merged, props))
               else Some(merged)
             case _ => mainS.orElse(brS)
           }

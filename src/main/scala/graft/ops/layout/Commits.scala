@@ -322,10 +322,11 @@ private[ops] trait Commits { this: Layout.type =>
         // O(data) one (r18 ADVICE)
         if (gated) gate.check(head, all, constraintsOf(props))
         val attemptId = java.util.UUID.randomUUID().toString
+        val schema = schemaFor(head)
         val header = Seq(CommitHeader + attemptId, OpHeader + enc(op)) ++
-          (schemaFor(head).map(s => SchemaHeader + s.json).toSeq ++
-            props.toSeq.sorted.map { case (k, v2) =>
-              s"$PropHeader${enc(k)}\t${enc(v2)}" } ++
+          (schema.map(s => SchemaHeader + s.json).toSeq ++
+            withColumnIdMark(props, schema).toSeq.sorted.map {
+              case (k, v2) => s"$PropHeader${enc(k)}\t${enc(v2)}" } ++
             txns.toSeq.sorted.map { case (app, b) => s"$TxnHeader$app\t$b" })
         // Physical form (see the delta/checkpoint comment above): a
         // DELTA when the change is incremental and the head's chain has
@@ -746,6 +747,13 @@ private[ops] trait Commits { this: Layout.type =>
         !unset.contains(ColumnMappingProp),
       s"$ColumnMappingProp is immutable — set it at CREATE TABLE " +
         "(rewrite into a new mapped table to change it)")
+    // the field-id high-water mark is the commit protocol's own record:
+    // lowering or dropping it would let a re-added column reuse a
+    // dropped column's id
+    require(!set.contains(MaxColumnIdProp) &&
+        !unset.contains(MaxColumnIdProp),
+      s"$MaxColumnIdProp is maintained by every commit and cannot be " +
+        "set or unset")
     // the layout properties are CREATE-time immutable too, and for a
     // sharper reason than column mapping: every committed manifest line
     // records the #p:<col>/#bucket group its file was PLACED under. A
@@ -849,8 +857,8 @@ private[ops] trait Commits { this: Layout.type =>
           prior.fields ++ cols.map(_.copy(nullable = true)))
         // id-mapped tables assign the new columns' field ids HERE —
         // the one atomic place (appends refuse unknown columns)
-        Some(if (idMapped(propsOf(fs, root, head))) restampIds(prior, s)
-             else s)
+        val props = propsOf(fs, root, head)
+        Some(if (idMapped(props)) restampIds(prior, s, props) else s)
       })
   }
 
@@ -1013,7 +1021,8 @@ private[ops] trait Commits { this: Layout.type =>
               s"column-mapped table: column '$n' is not in the " +
                 "recorded schema — ALTER TABLE ADD COLUMN first"))
             restampIds(prior,
-              mergeWiden(prior, ColumnBridge.nullableSchema(df.schema)))
+              mergeWiden(prior, ColumnBridge.nullableSchema(df.schema)),
+              headProps)
           } else
             mergeWiden(prior, ColumnBridge.nullableSchema(df.schema))
         }
@@ -1183,9 +1192,11 @@ private[ops] trait Commits { this: Layout.type =>
       df: DataFrame): types.StructType = {
     val s = ColumnBridge.nullableSchema(df.schema)
     val head = currentVersion(fs, root)
-    if (head > 0 && idMapped(propsOf(fs, root, head)))
+    val props =
+      if (head > 0) propsOf(fs, root, head) else Map.empty[String, String]
+    if (idMapped(props))
       schemaOf(fs, root, head).filter(hasFieldIds)
-        .map(prior => restampIds(prior, s)).getOrElse(s)
+        .map(prior => restampIds(prior, s, props)).getOrElse(s)
     else s
   }
 

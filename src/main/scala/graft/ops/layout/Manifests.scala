@@ -1224,17 +1224,44 @@ private[ops] trait Manifests { this: Layout.type =>
     types.StructType(s.fields.zipWithIndex.map { case (f, i) =>
       withId(f, i + 1L) })
 
+  /** `graft.column.max_id`: the highest field id an id-mapped table
+    * has ever assigned — Delta's `maxColumnId`, Iceberg's
+    * `last-column-id`. The table's schema alone cannot tell: a dropped
+    * column's id leaves it, and minting max+1 over the survivors would
+    * hand that id to the next added column, whose reads would then
+    * match the dropped column's values in old files. Every commit that
+    * records an id-carrying schema advances it ([[withColumnIdMark]]);
+    * it carries like every table property and is never set by hand. */
+  val MaxColumnIdProp = "graft.column.max_id"
+
+  /** The next field id a table with head `props` and schema `prior` may
+    * assign: past its high-water mark and past every id `prior` holds. */
+  private[ops] def nextColumnId(props: Map[String, String],
+      prior: types.StructType): Long =
+    (prior.fields.iterator.filter(_.metadata.contains(FieldIdKey))
+      .map(_.metadata.getLong(FieldIdKey)) ++
+      props.get(MaxColumnIdProp).map(_.toLong) ++ Iterator(0L)).max + 1
+
+  /** `props` with [[MaxColumnIdProp]] advanced over the field ids of the
+    * schema a commit records (unchanged when it records none). */
+  private[ops] def withColumnIdMark(props: Map[String, String],
+      schema: Option[types.StructType]): Map[String, String] =
+    schema.filter(hasFieldIds).fold(props)(s =>
+      props + (MaxColumnIdProp -> (nextColumnId(props, s) - 1).toString))
+
   /** Carry `prior`'s ids onto `merged` by (case-insensitive) name;
-    * fields new in `merged` get fresh ids past the prior maximum —
-    * ids are never reused, so a rename can never collide with a
-    * historical column. */
+    * fields new in `merged` get fresh ids past the table's high-water
+    * mark ([[nextColumnId]] under head `props`) — ids are never reused,
+    * so neither a rename nor a re-added column can collide with a
+    * historical one. */
   private[ops] def restampIds(prior: types.StructType,
-      merged: types.StructType): types.StructType = {
+      merged: types.StructType,
+      props: Map[String, String]): types.StructType = {
     val byName = prior.fields.iterator
       .filter(_.metadata.contains(FieldIdKey))
       .map(f => f.name.toLowerCase -> f.metadata.getLong(FieldIdKey))
       .toMap
-    var next = (byName.valuesIterator ++ Iterator(0L)).max + 1
+    var next = nextColumnId(props, prior)
     types.StructType(merged.fields.map { f =>
       val id = byName.getOrElse(f.name.toLowerCase,
         { val v = next; next += 1; v })
@@ -1289,11 +1316,11 @@ private[ops] trait Manifests { this: Layout.type =>
           f.name.toLowerCase -> f.metadata.getLong(FieldIdKey)).toMap
         // REPLACE verbs may carry new columns: they record the frame's
         // own schema (replaceSchemaFor → restampIds), so fresh ids are
-        // minted HERE with the identical max+1-in-frame-order rule —
+        // minted HERE with the identical next-in-frame-order rule —
         // footer ids and the recorded schema agree by construction.
         // Appends keep the refusal: their schema evolves through DDL,
         // and an append minting ids would race a concurrent rename.
-        var next = (idByName.valuesIterator ++ Iterator(0L)).max + 1
+        var next = nextColumnId(props, rs)
         df.schema.fields.map { f =>
           val id = idByName.getOrElse(f.name.toLowerCase,
             if (allowNewIds) { val v = next; next += 1; v }

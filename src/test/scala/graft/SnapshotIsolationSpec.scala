@@ -1087,6 +1087,36 @@ class SnapshotIsolationSpec extends AnyFunSuite {
       .where(col("note") === "x").count() == 1)
   }
 
+  test("a dropped column's field id is never reused: re-adding the name " +
+      "reads NULL from the old files (id-mapped table)") {
+    import ops.Layout._
+    import spark.implicits._
+    val table = "target/graft_io/spec/drop_readd_ids"
+    val root = new Path(table)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(root, true)
+    commitSnapshot(spark, table, Seq((1L, "s1"), (3L, "s3")).toDF("k", "v"),
+      props = Map(ColumnMappingProp -> "id"))
+    def idOf(c: String) = snapshotLayout(spark, table, None)._2.get
+      .apply(c).metadata.getLong(FieldIdKey)
+    val dropped = idOf("v")
+    dropColumns(spark, table, Seq("v"))
+    addColumns(spark, table, Seq(org.apache.spark.sql.types.StructField(
+      "v", org.apache.spark.sql.types.StringType)))
+    assert(idOf("v") > dropped, s"re-added v took id ${idOf("v")}")
+    assert(readSnapshot(spark, table).where(col("v").isNotNull).count() == 0)
+    commitSnapshot(spark, table, Seq((5L, "new")).toDF("k", "v"))
+    assert(readSnapshot(spark, table).orderBy("k").collect()
+      .map(r => (r.getLong(0), Option(r.getString(1)))).toSeq ==
+      Seq((1L, None), (3L, None), (5L, Some("new"))))
+    // the high-water mark is the commit protocol's own: no DDL moves it
+    val ex = intercept[IllegalArgumentException](
+      setTableProps(spark, table, Map("graft.column.max_id" -> "1"), Nil))
+    assert(ex.getMessage.contains("graft.column.max_id"))
+    intercept[IllegalArgumentException](
+      setTableProps(spark, table, Map.empty, Seq("graft.column.max_id")))
+  }
+
   test("compactDeletes rewrites ONLY dv'd files; the rest stay byte-identical") {
     import ops.Layout._
     import spark.implicits._
