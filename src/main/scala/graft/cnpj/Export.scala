@@ -1,58 +1,63 @@
 package graft.cnpj
 
-import java.io.{BufferedInputStream, File, FileInputStream, FileOutputStream}
+import java.io.{BufferedOutputStream, File, FileOutputStream, OutputStreamWriter}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, StandardCopyOption}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** CSV export sink (SURVEY.md §2.1 S7).
   *
   * S7 (final export): the reference writes utf-8-sig, i.e. a UTF-8 BOM
   * (EF BB BF) before the header (pandas to_csv encoding="utf-8-sig",
   * ETLCNPJFinalEmpresaEstabelecimentos.py:187). Spark never emits a BOM,
-  * so the single-file+BOM form is a driver-side merge of the sharded
-  * output — an export-for-humans step kept OUT of the distributed path
-  * (at 100 TB you keep the shards; merging to one file is inherently
-  * serial no matter the engine).
+  * and one file is serial by nature, so the export is written on the
+  * driver from the collected rows — an export-for-humans step kept OUT
+  * of the distributed path (at 100 TB you keep a sharded CSV write; one
+  * file is a single writer no matter the engine).
   */
 object Export {
 
   /** S7: single `;`-CSV file, UTF-8 with BOM, header once — byte-compatible
-    * with the reference's pandas export. Spark writes shards (in parallel,
-    * each with a header); the driver concatenates keeping only the first
-    * shard's header and prepending the BOM. The two whitespace options
-    * matter: Spark's CSV WRITER trims cell whitespace by default, which
-    * would destroy the golden file's fixed-width padding (nome_municipio,
-    * SURVEY §1.3) — pandas to_csv never trims. */
+    * with the reference's pandas export. `df` is collected in its own
+    * order (a driver-local frame, as `Pipeline.run` passes, runs no job)
+    * and rendered by Spark's own CSV row writer, `UnivocityGenerator`,
+    * under the options Spark's CSV data source would write with, so each
+    * line holds the bytes `df.write.csv` writes for its row. The two
+    * whitespace options matter: Spark's CSV WRITER trims cell whitespace
+    * by default, which would destroy the golden file's fixed-width
+    * padding (nome_municipio, SURVEY §1.3) — pandas to_csv never trims.
+    *
+    * The rows are written to a temporary file in `dir`, which is moved
+    * onto `outFile` in one rename: a failed export leaves `outFile` as it
+    * was, never truncated. Every row passes through the driver, so the
+    * export is bounded by `spark.driver.maxResultSize`; a larger result
+    * fails the collect loudly rather than writing part of it. */
   def writeCsvUtf8SigSingle(df: DataFrame, dir: String, outFile: File)
       : Unit = {
-    df.write.mode("overwrite")
-      .option("sep", ";").option("header", "true")
-      .option("encoding", "UTF-8")
-      .option("ignoreLeadingWhiteSpace", "false")
-      .option("ignoreTrailingWhiteSpace", "false")
-      .csv(dir)
-    mergeShards(new File(dir).listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
-      .sortBy(_.getName).toSeq, outFile)
-  }
-
-  /** BOM, then the shards in order, each after the first without its
-    * header line (up to and including its first `\n`). Streamed shard by
-    * shard, so no shard's size is bounded by a byte array's. */
-  private[graft] def mergeShards(parts: Seq[File], outFile: File): Unit = {
-    val out = new FileOutputStream(outFile)
+    val spark = df.sparkSession
+    val options = new CSVOptions(Map(
+        "sep" -> ";", "header" -> "true", "encoding" -> "UTF-8",
+        "ignoreLeadingWhiteSpace" -> "false",
+        "ignoreTrailingWhiteSpace" -> "false"),
+      spark.sessionState.conf.csvColumnPruning,
+      spark.sessionState.conf.sessionLocalTimeZone)
+    val rows = ColumnBridge.collectInternal(df)
+    val tmp = Files.createTempFile(
+      Files.createDirectories(new File(dir).toPath), ".export-", ".csv")
     try {
-      out.write(Array[Byte](0xEF.toByte, 0xBB.toByte, 0xBF.toByte)) // BOM
-      parts.zipWithIndex.foreach { case (p, i) =>
-        val in = new BufferedInputStream(new FileInputStream(p))
-        try {
-          if (i > 0) {
-            var b = in.read()
-            while (b != -1 && b != '\n') b = in.read()
-          }
-          in.transferTo(out)
-        } finally in.close()
-      }
-    } finally out.close()
+      val writer = new OutputStreamWriter(new BufferedOutputStream(
+        new FileOutputStream(tmp.toFile)), StandardCharsets.UTF_8)
+      try {
+        writer.write('\uFEFF') // the BOM: EF BB BF in UTF-8
+        val gen = new UnivocityGenerator(df.schema, writer, options)
+        gen.writeHeaders()
+        rows.foreach(gen.write)
+        gen.close()
+      } finally writer.close()
+      Files.move(tmp, outFile.toPath, StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
   }
 }

@@ -3,6 +3,8 @@ package graft.cnpj
 import java.io.File
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder}
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** End-to-end CNPJ pipeline — the Spark re-expression of the reference's
   * main() (ETLCNPJFinalEmpresaEstabelecimentos.py:237-265):
@@ -18,9 +20,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The re-header stage disappears entirely (schema-on-read), chunking
   * disappears (partitions), PRAGMA/commit dance disappears (atomic job
-  * commit). Every arrow after the fetch is distributed. The table
-  * writes schedule no shuffle (one job each), and neither does the
-  * export ([[writeExport]]).
+  * commit). Every arrow after the fetch but the single-file export is
+  * distributed. The table writes schedule no shuffle (one job each), and
+  * each registers its table with one catalog call; the flagship runs as
+  * one collect plus its broadcast builds, and the export is written on
+  * the driver from the collected rows ([[exportInOrder]]), with no job
+  * of its own. Each phase's jobs carry a `cnpj <phase>` description
+  * ([[graft.Phase]]).
   */
 object Pipeline {
 
@@ -34,7 +40,8 @@ object Pipeline {
     * (readme.md:135) — so the flagship (and any ad-hoc query over the
     * catalog names) plans with row counts and filter selectivity instead
     * of raw file bytes. The statistics ride each table's write (see
-    * [[Warehouse.writeTableWithStats]]): loading reads nothing back.
+    * [[Warehouse.writeTableWithStats]]): loading reads nothing back, and
+    * registering a table is one catalog call, not a DDL statement.
     * flagship() reads through these registrations when they point at
     * this warehouse. */
   def buildWarehouse(spark: SparkSession, rawDir: String, warehouseDir: String)
@@ -54,8 +61,10 @@ object Pipeline {
       ("motivo_situacao_cadastral", Schemas.motivoSituacaoRaw,
         Warehouse.typedMotivoSituacao _, None, Seq("id_situacao_cadastral"))
     ).foreach { case (t, schema, typed, key, statsColumns) =>
-      Warehouse.writeTableWithStats(spark, s"cnpj_$t", typed(raw(t, schema)),
-        s"$warehouseDir/$t", key, statsColumns)
+      graft.Phase("cnpj", s"load $t") {
+        Warehouse.writeTableWithStats(spark, s"cnpj_$t",
+          typed(raw(t, schema)), s"$warehouseDir/$t", key, statsColumns)
+      }
     }
 
     // FK-only catalogs (referenced by the DDL's FOREIGN KEYs, never queried
@@ -70,8 +79,10 @@ object Pipeline {
       ("pais", Schemas.paisRaw, Warehouse.typedPais _)
     ).foreach { case (sub, schema, typed) =>
       if (new File(s"$rawDir/$sub").isDirectory)
-        Warehouse.writeTable(typed(raw(sub, schema)),
-          s"$warehouseDir/$sub", None)
+        graft.Phase("cnpj", s"load $sub") {
+          Warehouse.writeTable(typed(raw(sub, schema)),
+            s"$warehouseDir/$sub", None)
+        }
     }
   }
 
@@ -87,15 +98,13 @@ object Pipeline {
   }
 
   /** Full run: warehouse → flagship → single-file BOM'd CSV export
-    * (the reference's resultado_final.csv shape). */
+    * (the reference's resultado_final.csv shape). Returns the exported
+    * rows as a driver-local frame (see [[exportInOrder]]): counting,
+    * showing or unpersisting it re-runs no join. */
   def run(spark: SparkSession, rawDir: String, warehouseDir: String,
       exportDir: String, exportFile: File): DataFrame = {
     buildWarehouse(spark, rawDir, warehouseDir)
-    // cached: the export writes it and callers typically count/show it —
-    // without the cache each action re-runs the 5-way join
-    val result = flagship(spark, warehouseDir).cache()
-    writeExport(result, exportDir, exportFile)
-    result
+    exportInOrder(flagship(spark, warehouseDir), exportDir, exportFile)
   }
 
   /** Full run rendered pandas-compat (the golden resultado_final.csv
@@ -105,20 +114,40 @@ object Pipeline {
   def runCompat(spark: SparkSession, rawDir: String, warehouseDir: String,
       exportDir: String, exportFile: File): DataFrame = {
     buildWarehouse(spark, rawDir, warehouseDir)
-    val result = PandasCompat(flagship(spark, warehouseDir)).cache()
-    writeExport(result, exportDir, exportFile)
-    result
+    exportInOrder(PandasCompat(flagship(spark, warehouseDir)), exportDir,
+      exportFile)
   }
 
-  /** Write `result` in export order, (cnpj_basico, nome_fantasia), from
-    * one task: the flagship's filters leave a small fraction of the fact
-    * table, so one task sorts it with no range-sampling job and no
-    * shuffle, and the export writes one shard. Under AQE the cached
-    * result materializes as its own query stage at full parallelism;
-    * only the sort and the write run in the one task. */
-  private def writeExport(result: DataFrame, exportDir: String,
-      exportFile: File): Unit =
-    Export.writeCsvUtf8SigSingle(
-      result.coalesce(1).sortWithinPartitions("cnpj_basico", "nome_fantasia"),
-      exportDir, exportFile)
+  /** The export order, (cnpj_basico, nome_fantasia), ascending with nulls
+    * first — what `sortWithinPartitions` on the two columns gives. */
+  private val exportOrder = Seq("cnpj_basico", "nome_fantasia")
+
+  /** Collect `result` once, at full parallelism, sort it on the driver in
+    * export order and write the export from the sorted rows; return them
+    * as a driver-local frame. The flagship's filters leave a small
+    * fraction of the fact table, and a single-file export passes every
+    * row through the driver anyway, so the query runs as one job (plus
+    * its broadcast builds) with no sort or write stage after it. The
+    * order is Catalyst's own row ordering over the collected rows, so
+    * strings compare by UTF-8 bytes as Spark's sort compares them, not by
+    * Java's UTF-16 `String` order. Bounded by `spark.driver.maxResultSize`:
+    * a larger result fails the collect. */
+  private[graft] def exportInOrder(result: DataFrame, exportDir: String,
+      exportFile: File): DataFrame = {
+    val spark = result.sparkSession
+    val schema = result.schema
+    val rows = graft.Phase("cnpj", "flagship") {
+      ColumnBridge.collectInternal(result)
+    }
+    val ordering = new InterpretedOrdering(exportOrder.map { c =>
+      val i = schema.fieldIndex(c)
+      SortOrder(BoundReference(i, schema(i).dataType, nullable = true),
+        Ascending)
+    })
+    val sorted = ColumnBridge.localFrame(spark, schema, rows.sorted(ordering))
+    graft.Phase("cnpj", "export") {
+      Export.writeCsvUtf8SigSingle(sorted, exportDir, exportFile)
+    }
+    sorted
+  }
 }

@@ -2,7 +2,7 @@ package graft.cnpj
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, TableIdentifier}
-import org.apache.spark.sql.catalyst.catalog.CatalogStatistics
+import org.apache.spark.sql.catalyst.catalog.{CatalogStatistics, CatalogStorageFormat, CatalogTable, CatalogTableType}
 import org.apache.spark.sql.catalyst.plans.logical.ColumnStat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
@@ -50,7 +50,9 @@ object Warehouse {
     * without reading the table back. The statistics are aggregates an
     * `Observation` evaluates while the write streams its rows, the
     * registration takes the frame's own schema (no inference job), and
-    * the size is the data-file sum ANALYZE itself records.
+    * the size is the data-file sum ANALYZE itself records. The table is
+    * registered with its statistics in one catalog call ([[register]]);
+    * nothing is returned, since reading the table back would resolve it.
     *
     * Why the statistics matter at warehouse scale: without them the
     * planner sees only file bytes, and a FILTERED relation keeps its
@@ -68,7 +70,7 @@ object Warehouse {
     * estimates either way. */
   def writeTableWithStats(spark: SparkSession, name: String, df: DataFrame,
       dir: String, sortKey: Option[String], statsColumns: Seq[String])
-      : DataFrame = {
+      : Unit = {
     val stats = new TableStats(spark, df.schema, statsColumns)
     val obs = Observation()
     writeTable(df.observe(obs, stats.aggregates.head, stats.aggregates.tail: _*),
@@ -77,12 +79,14 @@ object Warehouse {
   }
 
   /** The same registration and statistics for a parquet directory that
-    * already exists: one schema read and one aggregate scan.
+    * already exists: one schema read and one aggregate scan, then the
+    * same one catalog call as [[writeTableWithStats]].
     *
     * Overwrite-by-design in both verbs: re-registration replaces the
-    * previous definition, matching the overwrite warehouse write. */
+    * previous definition, its cached data and its resolved relation,
+    * matching the overwrite warehouse write. */
   def analyzeTable(spark: SparkSession, name: String, dir: String,
-      statsColumns: Seq[String] = Nil): DataFrame = {
+      statsColumns: Seq[String] = Nil): Unit = {
     val df = readTable(spark, dir)
     val stats = new TableStats(spark, df.schema, statsColumns)
     val row = df.agg(stats.aggregates.head, stats.aggregates.tail: _*).head()
@@ -150,25 +154,39 @@ object Warehouse {
   }
 
   /** (Re-)register `dir` as the external parquet table `name` with the
-    * given schema (made nullable, as Spark reads parquet back) and store
-    * its statistics. The location travels as an option value, never
-    * spliced into SQL text, so any directory name registers. It is
+    * given schema (made nullable, as Spark reads parquet back) and its
+    * statistics, in one catalog call: the `CatalogTable` that
+    * `spark.catalog.createTable(name, "parquet", schema, Map("path" ->
+    * dir))` stores, field for field (WarehouseStatsSpec pins it), with
+    * the statistics already on it. The size is `ANALYZE`'s, from one
+    * listing of `dir`. A previous table of that name goes first, as a
+    * `DropTableCommand` drops it: its cached data and its resolved
+    * relation are invalidated, so neither a caller's cached frame nor
+    * the next `spark.table(name)` serves the old files. The location is
     * qualified first: a relative path would otherwise resolve against
     * spark.sql.warehouse.dir, not the cwd the caller wrote the parquet
-    * to. */
+    * to. No data source is resolved and no SQL text is parsed. */
   private def register(spark: SparkSession, name: String, schema: StructType,
-      dir: String, stats: BigInt => CatalogStatistics): DataFrame = {
+      dir: String, stats: BigInt => CatalogStatistics): Unit = {
     val ident = TableIdentifier(name)
+    val cat = spark.sessionState.catalog
     val loc = {
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
+        .toUri
     }
-    spark.sql(s"DROP TABLE IF EXISTS ${ident.quotedString}")
-    spark.catalog.createTable(ident.quotedString, "parquet",
-      ColumnBridge.nullableSchema(schema), Map("path" -> loc.toString))
-    spark.sessionState.catalog.alterTableStats(ident,
-      Some(stats(ColumnBridge.tableTotalSize(spark, ident))))
-    spark.table(ident.quotedString)
+    ColumnBridge.uncacheTable(spark, ident)
+    cat.invalidateCachedTable(ident)
+    cat.dropTable(ident, ignoreIfNotExists = true, purge = false)
+    cat.createTable(CatalogTable(
+      identifier = ident,
+      tableType = CatalogTableType.EXTERNAL,
+      storage = CatalogStorageFormat.empty.copy(locationUri = Some(loc),
+        properties = Map("path" -> loc.toString)),
+      schema = ColumnBridge.nullableSchema(schema),
+      provider = Some("parquet"),
+      stats = Some(stats(ColumnBridge.locationSize(spark, ident, loc)))),
+      ignoreIfExists = false)
   }
 
   /** Read through the catalog table when one named `name` is registered

@@ -680,7 +680,7 @@ class GraftTable(path: String, version: Option[Int],
     * [[rowScan]]); otherwise only the plans [[newScanBuilder]] names. */
   private[sql] def scanBuilder(options: CaseInsensitiveStringMap,
       rowBased: Boolean,
-      rowScanFor: (StructType, Array[Filter], Seq[Layout.Skip]) =>
+      rowScanFor: (StructType, Array[Filter], Option[Seq[String]]) =>
         org.apache.spark.sql.connector.read.Scan): ScanBuilder = {
     val (files, _) = pinnedLayout
     // id-mapped table: the DSv2 parquet scan (and the row-based cow
@@ -719,19 +719,22 @@ class GraftTable(path: String, version: Option[Int],
   }
 
   /** The row-based scan of the pinned snapshot over the data filters
-    * `pushed` to parquet. Its file groups are pruned by `skips` through
-    * the same manifest rule ([[Layout.fileSelection]]) as the vectorized
-    * scan's file list, so `SELECT`, `UPDATE`, `DELETE` and `MERGE` skip
-    * the same files. */
+    * `pushed` to parquet, reading the file groups of `kept` (the scan
+    * builder's files after its manifest skipping, None when it skipped
+    * none). The skip is the builder's one evaluation of the manifest
+    * rule ([[Layout.fileSelection]]), the one its vectorized scan reads
+    * by too, so `SELECT`, `UPDATE`, `DELETE` and `MERGE` skip the same
+    * files. */
   private[sql] def rowScan(required: StructType, pushed: Array[Filter],
-      skips: Seq[Layout.Skip]): GraftCowScan = {
+      kept: Option[Seq[String]]): GraftCowScan = {
     require(branch.isEmpty,
       s"branch read of $path@${branch.get} cannot serve " +
         "metadata-column scans — audit reads are plain SELECTs")
-    val entries = if (skips.isEmpty) rowEntries else {
-      val kept = Layout.fileSelection(spark, path, skips,
-        Some(pinnedVersion), dvFreeOnly)._1.toSet
-      rowEntries.filter { case (l, _, _) => kept.contains(l) }
+    val entries = kept.fold(rowEntries) { files =>
+      val fs = new Path(path).getFileSystem(
+        spark.sparkContext.hadoopConfiguration)
+      val keep = files.map(f => fs.makeQualified(new Path(f)).toString).toSet
+      rowEntries.filter { case (_, p, _) => keep(p) }
     }
     new GraftCowScan(path, entries, ColumnBridge.nullableSchema(schema()),
       required, pushed, s"$path@v$pinnedVersion")

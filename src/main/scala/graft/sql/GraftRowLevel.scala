@@ -130,7 +130,7 @@ sealed abstract class GraftRowLevelBase(table: GraftTable,
 
   /** The row-based scan of one plan's read of this operation. */
   protected def rowScan(required: StructType, pushed: Array[Filter],
-      skips: Seq[Layout.Skip]): Scan = table.rowScan(required, pushed, skips)
+      kept: Option[Seq[String]]): Scan = table.rowScan(required, pushed, kept)
 
   override def command(): RowLevelOperation.Command = cmd
 
@@ -164,8 +164,8 @@ class GraftRowLevelOperation(table: GraftTable,
     * same condition stays: it drops whole files, which are then neither
     * read nor replaced. */
   override protected def rowScan(required: StructType,
-      pushed: Array[Filter], skips: Seq[Layout.Skip]): Scan = {
-    val s = table.rowScan(required, Array.empty, skips)
+      pushed: Array[Filter], kept: Option[Seq[String]]): Scan = {
+    val s = table.rowScan(required, Array.empty, kept)
     synchronized { if (mainScan == null) mainScan = s }
     s
   }
@@ -204,7 +204,7 @@ class GraftCowScan(table: String, entries: Seq[(String, String, Long)],
 
   /** Survivor groups — starts at the full pinned snapshot, narrowed by
     * [[filter]]; the write's commit swaps exactly this list. */
-  @volatile private[sql] var files: Seq[(String, String, Long)] = entries
+  @volatile private[graft] var files: Seq[(String, String, Long)] = entries
 
   private val wantsFile =
     required.fieldNames.contains(GraftRowLevel.FileColumnName)

@@ -50,15 +50,49 @@ object ColumnBridge {
       : org.apache.spark.sql.types.StructType =
     s.asNullable
 
-  /** A catalog table's data size exactly as `ANALYZE TABLE` measures it
-    * (`CommandUtils.calculateTotalSize`: the summed length of the data
-    * files under its location) — a file listing, not a Spark job. */
-  def tableTotalSize(spark: SparkSession,
-      table: org.apache.spark.sql.catalyst.TableIdentifier): BigInt = {
+  /** The data size `ANALYZE TABLE` records for an unpartitioned table
+    * stored at `location` (`CommandUtils.calculateSingleLocationSize`:
+    * the summed length of the files under it, skipping Spark's hidden
+    * and staging files). One file listing, no Spark job; `table` only
+    * names the table in a listing failure's log line. */
+  def locationSize(spark: SparkSession,
+      table: org.apache.spark.sql.catalyst.TableIdentifier,
+      location: java.net.URI): BigInt =
+    org.apache.spark.sql.execution.command.CommandUtils
+      .calculateSingleLocationSize(
+        spark.asInstanceOf[classic.SparkSession].sessionState, table,
+        Some(location))
+
+  /** Drop every cached plan over catalog table `table`, and the plans
+    * cached over those (`cascade`), found by the table's qualified name
+    * — no relation is resolved to find them. */
+  def uncacheTable(spark: SparkSession,
+      table: org.apache.spark.sql.catalyst.TableIdentifier): Unit = {
     val cs = spark.asInstanceOf[classic.SparkSession]
-    org.apache.spark.sql.execution.command.CommandUtils.calculateTotalSize(
-      cs, cs.sessionState.catalog.getTableMetadata(table))._1
+    cs.sharedState.cacheManager.uncacheTableOrView(cs,
+      cs.sessionState.catalog.qualifyIdentifier(table).nameParts,
+      cascade = true)
   }
+
+  /** `df`'s rows on the driver as Catalyst rows, in `df`'s order —
+    * `Dataset.collect` without the conversion to external `Row`s: one
+    * SQL execution, the plan's jobs at their own parallelism (none for a
+    * driver-local plan). Bounded by `spark.driver.maxResultSize`. */
+  def collectInternal(df: DataFrame)
+      : Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    val qe = df.asInstanceOf[classic.Dataset[_]].queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+      Some("collect"))(qe.executedPlan.executeCollect())
+  }
+
+  /** A driver-local frame over `rows` of `schema` (a `LocalRelation`):
+    * actions on it re-run no upstream plan. */
+  def localFrame(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): DataFrame =
+    ofRows(spark, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema),
+      rows))
 
   /** The schema `spark.read.parquet(paths: _*)` would infer for parquet
     * FILES (not directories), read from one footer on the driver instead
@@ -279,8 +313,7 @@ class SnapshotScanBuilder(
     schema: org.apache.spark.sql.types.StructType,
     options: java.util.Map[String, String],
     fileScanFor: (org.apache.spark.sql.types.StructType,
-      Array[org.apache.spark.sql.sources.Filter],
-      Seq[graft.ops.Layout.Skip]) =>
+      Array[org.apache.spark.sql.sources.Filter], Option[Seq[String]]) =>
         org.apache.spark.sql.connector.read.Scan,
     prune: Seq[graft.ops.Layout.Skip] => (Seq[String], Int) = null,
     rowBased: Boolean = false,
@@ -314,10 +347,8 @@ class SnapshotScanBuilder(
   private val MetaCols = Set("_file", "_pos")
   private var wantsFile = false
   private var required: org.apache.spark.sql.types.StructType = schema
-  // the row-based scan's inputs: bounds predicates derived from pushed
-  // filters (its manifest pruning) and the data filters as v1 filters
-  // (its parquet pushdown)
-  private var lastSkips: Seq[graft.ops.Layout.Skip] = Nil
+  // the row-based scan's input besides the kept files: the data filters
+  // as v1 filters (its parquet pushdown)
   private var rowFilters: Array[org.apache.spark.sql.sources.Filter] =
     Array.empty
   private var prunedFiles: Boolean = false
@@ -340,7 +371,6 @@ class SnapshotScanBuilder(
     // rows through the normal parquet pushdown below.
     if (prune != null) {
       val skips = onData.flatMap(SnapshotScanBuilder.skipOf)
-      lastSkips = skips
       if (skips.nonEmpty) {
         val (kept, total) = prune(skips)
         SnapshotScanBuilder.lastPrune = Some((kept.size, total))
@@ -400,7 +430,8 @@ class SnapshotScanBuilder(
     * over a pushed aggregate (its rows aren't keyed), and any
     * conversion gap falls back to the plain scan. */
   override def build(): org.apache.spark.sql.connector.read.Scan =
-    if (wantsFile || rowBased) fileScanFor(required, rowFilters, lastSkips)
+    if (wantsFile || rowBased)
+      fileScanFor(required, rowFilters, Some(currentFiles).filter(_ => prunedFiles))
     else {
       val base0 = inner.build()
       // manifest-derived planner stats (r19): enrich the scan's

@@ -4,7 +4,9 @@ import java.io.File
 import java.nio.charset.Charset
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
@@ -87,50 +89,102 @@ class CnpjPipelineSpec extends AnyFunSuite {
     assert(text.contains("AÇAÍ DO PORTO")) // UTF-8 re-encoded from latin-1
   }
 
-  test("export merge streams shards into the bytes a whole-shard merge writes") {
-    // the merge as it was: each shard read whole, the header dropped by
-    // index — the byte oracle for the streamed merge
-    def wholeShardMerge(parts: Seq[File]): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream()
-      out.write(Array[Byte](0xEF.toByte, 0xBB.toByte, 0xBF.toByte))
-      parts.zipWithIndex.foreach { case (p, i) =>
-        val bytes = Files.readAllBytes(p.toPath)
-        if (i == 0) out.write(bytes)
-        else {
-          val nl = bytes.indexOf('\n'.toByte)
-          if (nl >= 0 && nl + 1 < bytes.length)
-            out.write(bytes, nl + 1, bytes.length - nl - 1)
-        }
-      }
-      out.toByteArray
-    }
-    // hand-made shards: a header-only shard, one without a trailing
-    // newline, one with no newline at all, multi-byte UTF-8 cells
-    val dir = new File(s"$base/merge_shards"); dir.mkdirs()
-    val header = "cnpj_basico;nome_fantasia\n"
-    val shards = Seq(
-      header + "1;AÇAÍ\n2;B\n",
-      header,
-      header + "3;C",
-      "cnpj_basico;nome_fantasia",
-      header + "4;TABOÃO\n5;\n").zipWithIndex.map { case (text, i) =>
-      val f = new File(dir, f"part-$i%05d.csv")
-      Files.write(f.toPath, text.getBytes("UTF-8"))
-      f
-    }
-    val merged = new File(s"$base/merged.csv")
-    Export.mergeShards(shards, merged)
-    assert(Files.readAllBytes(merged.toPath).sameElements(wholeShardMerge(shards)))
-    // and Spark's own shards, through the export verb
-    val df = spark.range(0, 500).selectExpr("id AS cnpj_basico",
-      "concat('AÇAÍ ', id) AS nome_fantasia").repartition(3)
-    val out = new File(s"$base/merged_spark.csv")
-    Export.writeCsvUtf8SigSingle(df, s"$base/export_shards", out)
-    val sparkShards = new File(s"$base/export_shards").listFiles()
+  /** Spark's CSV write of `df` from one sorted task, as the export wrote
+    * it before it collected its rows: the shards Spark wrote, merged whole
+    * behind a BOM with each header after the first dropped. The byte
+    * oracle for [[Export.writeCsvUtf8SigSingle]]. */
+  private def shardMergeExport(df: DataFrame, dir: String): Array[Byte] = {
+    df.coalesce(1).sortWithinPartitions("cnpj_basico", "nome_fantasia")
+      .write.mode("overwrite")
+      .option("sep", ";").option("header", "true")
+      .option("encoding", "UTF-8")
+      .option("ignoreLeadingWhiteSpace", "false")
+      .option("ignoreTrailingWhiteSpace", "false")
+      .csv(dir)
+    val parts = new File(dir).listFiles()
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
       .sortBy(_.getName).toSeq
-    assert(sparkShards.size > 1)
-    assert(Files.readAllBytes(out.toPath).sameElements(wholeShardMerge(sparkShards)))
+    val out = new java.io.ByteArrayOutputStream()
+    out.write(Array[Byte](0xEF.toByte, 0xBB.toByte, 0xBF.toByte))
+    parts.zipWithIndex.foreach { case (p, i) =>
+      val bytes = Files.readAllBytes(p.toPath)
+      if (i == 0) out.write(bytes)
+      else {
+        val nl = bytes.indexOf('\n'.toByte)
+        if (nl >= 0 && nl + 1 < bytes.length)
+          out.write(bytes, nl + 1, bytes.length - nl - 1)
+      }
+    }
+    out.toByteArray
+  }
+
+  /** Cells Spark's CSV writer must quote, escape or keep as they are, over
+    * three partitions; each (cnpj_basico, nome_fantasia) key is unique.
+    * "Ａ" (U+FF21) sorts before "😀" (a surrogate pair) in UTF-8 byte
+    * order, as Spark sorts strings, and after it in Java's UTF-16 order. */
+  private def awkwardFrame(): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("cnpj_basico", LongType),
+      StructField("nome_fantasia", StringType),
+      StructField("complemento", StringType),
+      StructField("capital_social", DecimalType(18, 2)),
+      StructField("data_de_inicio_atividade", DateType)))
+    def d(s: String) = java.sql.Date.valueOf(s)
+    def dec(s: String) = new java.math.BigDecimal(s)
+    val rows = Seq(
+      Row(2L, "TABOÃO DA SERRA".padTo(45, ' '), null, null, null),
+      Row(1L, "diz \"oi\"", "aspas \" no meio", dec("0.10"), d("2008-04-09")),
+      Row(1L, "A;B", ";", dec("195400.00"), d("1999-12-31")),
+      Row(null, "SEM CNPJ", "", dec("-1.50"), d("2020-02-29")),
+      Row(1L, null, "", dec("99.99"), null),
+      Row(1L, "", null, null, d("1970-01-01")),
+      Row(1L, "  espaços  ", "  ", dec("1.00"), d("2010-01-01")),
+      Row(1L, "AÇAÍ DO PORTO", "linha\nquebrada", dec("12.34"), null),
+      Row(1L, "\uFF21", "Ａ", dec("5.00"), d("2001-01-01")),
+      Row(1L, "\uD83D\uDE00", "😀", dec("6.00"), d("2002-02-02")),
+      Row(3L, "ÿ", "\t tab", dec("7.00"), d("2003-03-03")))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+  }
+
+  test("export writes the bytes of Spark's CSV writer and a whole-shard merge") {
+    val df = awkwardFrame()
+    val expected = shardMergeExport(df, s"$base/export_oracle")
+    val out = new File(s"$base/export_oracle.csv")
+    val local = Pipeline.exportInOrder(df, s"$base/export_new", out)
+    assert(new String(Files.readAllBytes(out.toPath), "UTF-8") ==
+      new String(expected, "UTF-8"))
+    assert(Files.readAllBytes(out.toPath).sameElements(expected))
+    // the returned rows are the export's, in Spark's sort order
+    assert(local.collect().toSeq == df.coalesce(1)
+      .sortWithinPartitions("cnpj_basico", "nome_fantasia").collect().toSeq)
+    // the driver-local frame exports again without a job, to the same bytes
+    val again = new File(s"$base/export_again.csv")
+    val jobs = JobCount.during(spark, "cnpj-export-local") {
+      Export.writeCsvUtf8SigSingle(local, s"$base/export_new", again)
+    }
+    assert(jobs == 0, s"exporting a driver-local frame ran $jobs jobs")
+    assert(Files.readAllBytes(again.toPath).sameElements(expected))
+    // the export directory keeps no temporary file
+    assert(new File(s"$base/export_new").list().isEmpty)
+  }
+
+  test("a failed export leaves the previous file whole") {
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    val out = new File(s"$base/export_kept.csv")
+    Files.write(out.toPath, "previous export\n".getBytes("UTF-8"))
+    val failing = awkwardFrame().withColumn("nome_fantasia",
+      when(col("cnpj_basico") === 3L, raise_error(lit("no export")))
+        .otherwise(col("nome_fantasia")))
+    intercept[Exception] {
+      Export.writeCsvUtf8SigSingle(failing, s"$base/export_failed", out)
+    }
+    assert(new String(Files.readAllBytes(out.toPath), "UTF-8") ==
+      "previous export\n")
+    val left = Option(new File(s"$base/export_failed").list())
+      .getOrElse(Array.empty[String])
+    assert(left.isEmpty, left.toSeq)
   }
 
   test("pandas-compat golden export reproduces the reference artifacts byte-for-byte") {
@@ -166,17 +220,89 @@ class CnpjPipelineSpec extends AnyFunSuite {
     assert(text == expected)
   }
 
-  test("Pipeline.run schedules a pinned job budget") {
+  test("Pipeline.run schedules 13 jobs: 8 writes, 4 broadcasts, 1 collect") {
     fixture()
     val out = new File(s"$base/resultado_jobs.csv")
-    // eight table writes, four broadcast builds and a two-job export: no
-    // write or export of this size shuffles, so a shuffle that creeps
-    // back in shows here as extra jobs
+    // eight table writes, the flagship's four broadcast builds and the
+    // one collect its export writes from: no write of this size
+    // shuffles and the export schedules nothing of its own, so a
+    // shuffle, a sort or a materialization that creeps back in shows
+    // here as extra jobs
     val jobs = JobCount.during(spark, "cnpj-run-budget") {
       Pipeline.run(spark, s"$base/raw", s"$base/wh_jobs",
         s"$base/export_jobs", out).unpersist()
     }
-    assert(jobs == 14, s"Pipeline.run scheduled $jobs jobs")
+    assert(jobs == 13, s"Pipeline.run scheduled $jobs jobs")
+  }
+
+  test("every job Pipeline.run schedules carries its cnpj phase, and the " +
+      "caller's description and tags come back") {
+    fixture()
+    val sc = spark.sparkContext
+    // (job group, description, tags) of every job started
+    val started = mutable.ArrayBuffer.empty[(String, String, Set[String])]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties)
+          .flatMap(p => Option(p.getProperty(k))).getOrElse("")
+        started.synchronized(started += ((prop("spark.jobGroup.id"),
+          prop("spark.job.description"),
+          prop("spark.job.tags").split(",").filter(_.nonEmpty).toSet)))
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("cnpj-phases", "the caller's own")
+      sc.addJobTag("caller")
+      try {
+        Pipeline.run(spark, s"$base/raw", s"$base/wh_phases",
+          s"$base/export_phases", new File(s"$base/resultado_phases.csv"))
+          .unpersist()
+        assert(sc.getLocalProperty("spark.job.description") ==
+          "the caller's own")
+        assert(sc.getJobTags() == Set("caller"))
+      } finally { sc.removeJobTag("caller"); sc.clearJobGroup() }
+      org.apache.spark.sql.graft.ColumnBridge.drainListenerBus(spark)
+    } finally sc.removeSparkListener(listener)
+    val jobs = started.synchronized(started.filter(_._1 == "cnpj-phases")
+      .toSeq)
+    assert(jobs.size == 13, jobs)
+    jobs.foreach { case (_, d, tags) =>
+      assert(d.startsWith("cnpj "), jobs)
+      // beside Spark's own session, execution and broadcast tags
+      assert(tags("caller") && tags.filter(_.startsWith("cnpj:")) ==
+        Set("cnpj:" + d.stripPrefix("cnpj ")), jobs)
+    }
+    val perPhase = jobs.groupBy(_._2).map { case (d, js) => d -> js.size }
+    // the flagship's four broadcast builds run on AQE's threads, which
+    // capture the collecting thread's properties
+    assert(perPhase == Map("cnpj flagship" -> 5) ++ Seq("empresas",
+      "estabelecimentos", "cnae", "municipios", "motivo_situacao_cadastral",
+      "natureza_juridica", "qualificacao_responsavel", "pais")
+      .map(t => s"cnpj load $t" -> 1), perPhase)
+  }
+
+  test("Phase restores the caller's description and tags, also when its " +
+      "body throws, and nests") {
+    val sc = spark.sparkContext
+    assert(sc.getLocalProperty("spark.job.description") == null)
+    intercept[IllegalStateException] {
+      Phase("cnpj", "outer") {
+        assert(sc.getLocalProperty("spark.job.description") == "cnpj outer")
+        Phase("cnpj", "inner") {
+          assert(sc.getLocalProperty("spark.job.description") ==
+            "cnpj inner")
+          assert(sc.getJobTags() == Set("cnpj:outer", "cnpj:inner"))
+        }
+        assert(sc.getLocalProperty("spark.job.description") == "cnpj outer")
+        assert(sc.getJobTags() == Set("cnpj:outer"))
+        throw new IllegalStateException("phase body failed")
+      }
+    }
+    assert(sc.getLocalProperty("spark.job.description") == null)
+    assert(sc.getJobTags().isEmpty)
+    assert(!spark.conf.getAll.keys.exists(_.startsWith("spark.job.")))
   }
 
   test("buildWarehouse sorts the fact file so the flagship skips row groups") {

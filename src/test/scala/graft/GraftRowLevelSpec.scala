@@ -2,6 +2,7 @@ package graft
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.SnapshotScanBuilder
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the row-level SQL surface ([[graft.sql.GraftRowLevel]]):
@@ -601,6 +602,19 @@ class GraftRowLevelSpec extends AnyFunSuite {
       val read = try recordsPerStage(spark.sql(verb(t)))
         finally spark.conf.unset("spark.sql.parquet.filterPushdown")
       assert(allRows(t) == rowsOfDf(replay), s"$mode ${verb(t)}")
+      // the row-based scan reads the files its builder's one manifest
+      // skip kept
+      SnapshotScanBuilder.lastPrune = None
+      val rowScanFiles = spark.sql(
+          s"SELECT _file, k FROM graftrl.default.$t WHERE k = 150")
+        .queryExecution.executedPlan.collect {
+          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+            b.scan
+        }.collect { case s: graft.sql.GraftCowScan => s.files.size }
+      val (kept, total) = SnapshotScanBuilder.lastPrune
+        .getOrElse(fail(s"$mode $t: no manifest prune"))
+      assert(rowScanFiles == Seq(kept) && kept < total,
+        s"$mode $t: row scan files $rowScanFiles, kept $kept of $total")
       s"$mode ${verb(t).split("\\s+").take(2).mkString(" ")}" -> read
     }
     // every scan, each file pruned by its bounds on k

@@ -459,6 +459,46 @@ class LedgerSpec extends AnyFunSuite {
       s"a Skip derived from catalyst expressions outside skipOf: $built")
   }
 
+  test("the warehouse registers a table in one catalog call and the " +
+      "pipeline materializes nothing beside its export's collect") {
+    import scala.jdk.CollectionConverters._
+    // Warehouse.register drops and creates through the session catalog,
+    // statistics included: DROP TABLE text (parsed and analyzed),
+    // spark.catalog.createTable (a data source resolution and a listing)
+    // and a separate alterTableStats are the round trips it replaced,
+    // banned in register too. Pipeline.run exports from one collect, so
+    // a .cache() would be a materialization job of its own
+    val root = java.nio.file.Paths.get("src/main/scala/graft/cnpj")
+    val files = {
+      val w = java.nio.file.Files.list(root)
+      try w.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.endsWith(".scala")).toSeq.sorted
+      finally w.close()
+    }
+    assert(files.contains("Warehouse.scala") &&
+      files.contains("Pipeline.scala"), s"guard lost its source files: $files")
+    def read(f: String) = new String(java.nio.file.Files.readAllBytes(
+      root.resolve(f)), java.nio.charset.StandardCharsets.UTF_8)
+    val code = files.map(f => f -> ParquetCalls.codeOnly(read(f))).toMap
+    val withStrings =
+      files.map(f => f -> ParquetCalls.codeOnly(read(f), keepStrings = true))
+        .toMap
+    def sites(re: scala.util.matching.Regex, in: Map[String, String])
+        : Seq[(String, String)] =
+      files.flatMap(f => re.findAllMatchIn(in(f))
+        .filterNot(m => m.groupCount > 0 && m.group(1) == "sessionState")
+        .map(m => (f, ParquetCalls.enclosing(in(f), m.start))))
+    val roundTrips = sites("""(?i)\bDROP\s+TABLE\b""".r, withStrings) ++
+      sites("""(\w+)\s*\.\s*catalog\s*\.\s*createTable\b""".r, code) ++
+      sites("""\balterTableStats\b""".r, code)
+    assert(roundTrips.isEmpty,
+      s"catalog DDL round trips in graft/cnpj: $roundTrips")
+    val pipeline = code("Pipeline.scala")
+    val cached = """\.\s*(?:cache|persist)\s*\(""".r.findAllMatchIn(pipeline)
+      .map(m => ParquetCalls.enclosing(pipeline, m.start)).toSeq
+    assert(cached.isEmpty, s"Pipeline caches a frame in: $cached")
+  }
+
   test("session conf writes in src/main are allow-listed; AQE and the " +
       "time zone are never written to a caller's session") {
     import scala.jdk.CollectionConverters._
@@ -547,8 +587,8 @@ private object ConfWrites {
 private object ParquetCalls {
   /** `src` with comments and string-literal contents blanked to spaces
     * (same length, newlines kept), so parens and calls inside them
-    * never count. */
-  def codeOnly(src: String): String = {
+    * never count; with `keepStrings`, only the comments. */
+  def codeOnly(src: String, keepStrings: Boolean = false): String = {
     val b = new StringBuilder(src)
     def blank(from: Int, to: Int): Unit =
       (from until math.min(to, b.length)).foreach(j =>
@@ -586,9 +626,13 @@ private object ParquetCalls {
       } else if (src.startsWith("/*", i)) {
         val e = endOf("*/", i + 2) + 2; blank(i, e); i = e
       } else if (src.startsWith("\"\"\"", i)) {
-        val e = endOf("\"\"\"", i + 3); blank(i + 3, e); i = e + 3
+        val e = endOf("\"\"\"", i + 3)
+        if (!keepStrings) blank(i + 3, e)
+        i = e + 3
       } else if (src(i) == '"') {
-        val e = skipString(i); blank(i + 1, e - 1); i = e
+        val e = skipString(i)
+        if (!keepStrings) blank(i + 1, e - 1)
+        i = e
       } else if (src(i) == '\'' && i + 2 < src.length &&
           src(i + 2) == '\'') {
         blank(i + 1, i + 2); i += 3

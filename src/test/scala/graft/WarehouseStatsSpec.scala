@@ -178,6 +178,60 @@ class WarehouseStatsSpec extends AnyFunSuite {
     assert(tableOnly.colStats.isEmpty && tableOnly.rowCount.contains(BigInt(4)))
   }
 
+  test("register stores the CatalogTable spark.catalog.createTable stores") {
+    val raw = s"$base/raw"
+    fixture(raw)
+    val wh = s"$base/wh_catalog"
+    Pipeline.buildWarehouse(spark, raw, wh)
+    val cat = spark.sessionState.catalog
+    val ref = "warehouse_stats_spec_created"
+    warehouseStats.foreach { case (t, _) =>
+      val ours = cat.getTableMetadata(TableIdentifier(s"cnpj_$t"))
+      spark.sql(s"DROP TABLE IF EXISTS `$ref`")
+      spark.catalog.createTable(ref, "parquet", ours.schema,
+        Map("path" -> qualified(s"$wh/$t")))
+      val theirs = try cat.getTableMetadata(TableIdentifier(ref))
+        finally spark.sql(s"DROP TABLE `$ref`")
+      assert(ours.schema == theirs.schema, t)
+      assert(ours.provider == theirs.provider, t)
+      assert(ours.location == theirs.location, t)
+      assert(ours.tableType == theirs.tableType, t)
+      assert(ours.storage == theirs.storage, t)
+      // every other field but the name, the clock and the statistics
+      assert(ours.copy(identifier = theirs.identifier,
+        createTime = theirs.createTime,
+        lastAccessTime = theirs.lastAccessTime, stats = theirs.stats) ==
+        theirs, t)
+    }
+  }
+
+  test("a rebuild into the same directory serves its own rows, also " +
+      "through a frame the caller cached") {
+    val raw = s"$base/raw_rebuild"
+    fixture(raw)
+    writeCsv(raw, "motivo_situacao_cadastral", Seq("2;ATIVA", "8;BAIXADA"))
+    val wh = s"$base/wh_rebuild"
+    Pipeline.buildWarehouse(spark, raw, wh)
+    val cached = spark.table("cnpj_estabelecimentos").cache()
+    try {
+      assert(cached.count() == 5)
+      assert(Pipeline.flagship(spark, wh).count() == 2)
+      // the second build keeps one flagship row of the five
+      val first = new String(Files.readAllBytes(
+        Paths.get(s"$raw/estabelecimentos/data.csv")), latin1).split("\n").head
+      writeCsv(raw, "estabelecimentos", Seq(first))
+      Pipeline.buildWarehouse(spark, raw, wh)
+      assert(spark.table("cnpj_estabelecimentos").count() == 1)
+      assert(recorded("cnpj_estabelecimentos")._1.rowCount
+        .contains(BigInt(1)))
+      assert(Pipeline.flagship(spark, wh).count() == 1)
+      // as DROP TABLE leaves it: the old table's cached data is gone
+      assert(!spark.catalog.isCached("cnpj_estabelecimentos"))
+      assertSameAsAnalyze("cnpj_estabelecimentos", s"$wh/estabelecimentos",
+        warehouseStats.toMap.apply("estabelecimentos"))
+    } finally cached.unpersist()
+  }
+
   test("buildWarehouse runs no job beyond its parquet writes") {
     val raw = s"$base/raw"
     fixture(raw)
