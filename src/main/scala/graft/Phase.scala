@@ -10,7 +10,11 @@ import org.apache.spark.sql.SparkSession
   * threads capture them from the submitting thread, and no session conf
   * is written, so a query planned concurrently on another thread never
   * sees them. The caller's description and tags come back afterwards,
-  * also when the body throws, so phases nest. */
+  * also when the body throws, so phases nest. Used by the CNPJ pipeline
+  * (`cnpj load <table>`, `cnpj flagship`, `cnpj export`) and by the table
+  * verbs a refresh runs: `commitSnapshot stage`, `upsertByKeys stage`,
+  * `deleteWhere sidecar` (merge-on-read), `deleteWhere probe` and
+  * `deleteWhere rewrite` (copy-on-write), `compactDeletes rewrite`. */
 object Phase {
   private val Description = "spark.job.description"
   private val Tags = "spark.job.tags"

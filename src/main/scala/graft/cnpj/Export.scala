@@ -30,11 +30,15 @@ object Export {
     * by default, which would destroy the golden file's fixed-width
     * padding (nome_municipio, SURVEY §1.3) — pandas to_csv never trims.
     *
-    * The rows are written to a temporary file in `dir`, which is moved
-    * onto `outFile` in one rename: a failed export leaves `outFile` as it
-    * was, never truncated. Every row passes through the driver, so the
-    * export is bounded by `spark.driver.maxResultSize`; a larger result
-    * fails the collect loudly rather than writing part of it. */
+    * The rows are written to a temporary file beside `outFile`, in its
+    * own directory, which is moved onto `outFile` in one rename: a failed
+    * export leaves `outFile` as it was, never truncated, and the rename
+    * never crosses a filesystem, wherever `outFile` lives. `dir` is
+    * unused: it named where the temporary file went, and a directory on
+    * another filesystem made the atomic move throw. Every row passes
+    * through the driver, so the export is bounded by
+    * `spark.driver.maxResultSize`; a larger result fails the collect
+    * loudly rather than writing part of it. */
   def writeCsvUtf8SigSingle(df: DataFrame, dir: String, outFile: File)
       : Unit = {
     val spark = df.sparkSession
@@ -45,8 +49,8 @@ object Export {
       spark.sessionState.conf.csvColumnPruning,
       spark.sessionState.conf.sessionLocalTimeZone)
     val rows = ColumnBridge.collectInternal(df)
-    val tmp = Files.createTempFile(
-      Files.createDirectories(new File(dir).toPath), ".export-", ".csv")
+    val tmp = Files.createTempFile(Files.createDirectories(
+      outFile.getAbsoluteFile.getParentFile.toPath), ".export-", ".csv")
     try {
       val writer = new OutputStreamWriter(new BufferedOutputStream(
         new FileOutputStream(tmp.toFile)), StandardCharsets.UTF_8)

@@ -1,7 +1,10 @@
 package graft.cnpj
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.util.regex.Pattern
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Pandas/SQLite-compat rendering of the flagship projection (SURVEY.md
   * §1.3 / §7.4.2): reproduces the golden `data/resultado_final.csv`
@@ -23,10 +26,12 @@ import org.apache.spark.sql.functions._
   *     so the golden file shows "195400,00".
   *   - `nome_municipio` keeps its fixed-width padding (no trim anywhere).
   *
-  * Scale posture: the per-column dtype decision needs two boolean facts
-  * per column (any-text? any-null?) — ONE aggregate pass over the result
-  * producing a 1-row flag table, broadcast back with a crossJoin. No
-  * per-row driver logic, no second scan per column.
+  * Like `pd.read_sql_query`, the rendering reads each column's dtype from
+  * the one result it already holds: the two facts per affinity column
+  * (any TEXT cell? any NULL?) are read from the rows of a driver-local
+  * frame, and each column then gets one fixed expression. Over a
+  * `LocalRelation` the projection folds into the relation, so rendering
+  * schedules no job.
   */
 object PandasCompat {
 
@@ -35,42 +40,37 @@ object PandasCompat {
   private val affinityCols = Seq("numero", "ddd1", "telefone1", "ddd2",
     "telefone2")
 
-  private def isIntText(c: Column): Column = c.rlike("^[0-9]+$")
+  /** An INTEGER-affinity cell: the test `rlike` applies, `find` on the
+    * pattern, whose `$` also matches before a final line terminator. */
+  private val IntText = "^[0-9]+$"
+  private val intTextPattern = Pattern.compile(IntText)
 
-  /** Render one affinity column per the pandas dtype rules, given the
-    * column-level flags. */
-  private def render(c: Column, hasText: Column, hasNull: Column): Column = {
-    val asInt = c.cast("long").cast("string") // affinity int: zeros stripped
-    val asFloat = concat(asInt, lit(".0")) // float64 repr
-    when(c.isNull, lit(null))
-      .when(!isIntText(c), c) // TEXT cell passes through (object dtype)
-      .when(hasText, asInt) // object dtype: int cells render bare
-      .when(hasNull, asFloat) // float64: NaN forced widening
-      .otherwise(asInt) // int64
-  }
-
-  /** Apply the compat projection to a flagship result (Flagship.outputCols
-    * schema, canonical types). Output: all columns rendered exactly as the
-    * reference's pandas `to_csv` would. */
-  def apply(result: DataFrame): DataFrame = {
-    val flagExprs = affinityCols.flatMap { n =>
-      Seq(
-        max(when(col(n).isNotNull && !isIntText(col(n)), true)
-          .otherwise(false)).as(s"${n}_has_text"),
-        max(when(col(n).isNull, true).otherwise(false))
-          .as(s"${n}_has_null"))
-    }
-    val flags = result.agg(flagExprs.head, flagExprs.tail: _*)
-    val withFlags = result.crossJoin(broadcast(flags))
+  /** Render the compat projection of `frame`, a DRIVER-LOCAL frame with
+    * the flagship's output columns and canonical types (the sorted rows
+    * `Pipeline` collects, its only caller). Output: all columns rendered
+    * exactly as the reference's pandas `to_csv` would. The dtype flags
+    * are read by collecting `frame`, which runs no job for a
+    * `LocalRelation`; a distributed `frame` would be evaluated twice,
+    * once for the flags and once by the projection. */
+  def apply(frame: DataFrame): DataFrame = {
+    val rows = ColumnBridge.collectInternal(frame)
     val cols = Flagship.outputCols.map {
       case n if affinityCols.contains(n) =>
-        render(col(n), col(s"${n}_has_text"), col(s"${n}_has_null")).as(n)
+        val i = frame.schema.fieldIndex(n)
+        val hasNull = rows.exists(_.isNullAt(i))
+        val hasText = rows.exists(r => !r.isNullAt(i) &&
+          !intTextPattern.matcher(r.getUTF8String(i).toString).find())
+        val c = col(n)
+        val asInt = c.cast("long").cast("string") // zeros stripped
+        (if (hasText) when(c.rlike(IntText), asInt).otherwise(c) // object
+         else if (hasNull) concat(asInt, lit(".0")) // float64: NaN widened
+         else asInt).as(n) // int64
       case "capital_social" =>
         // DECIMAL(18,2) back to the Brazilian comma form SQLite kept as TEXT
         regexp_replace(col("capital_social").cast("string"), "\\.", ",")
           .as("capital_social")
       case n => col(n)
     }
-    withFlags.select(cols: _*)
+    frame.select(cols: _*)
   }
 }

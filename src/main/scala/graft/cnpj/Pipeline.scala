@@ -24,7 +24,7 @@ import org.apache.spark.sql.graft.ColumnBridge
   * distributed. The table writes schedule no shuffle (one job each), and
   * each registers its table with one catalog call; the flagship runs as
   * one collect plus its broadcast builds, and the export is written on
-  * the driver from the collected rows ([[exportInOrder]]), with no job
+  * the driver from the collected rows ([[inExportOrder]]), with no job
   * of its own. Each phase's jobs carry a `cnpj <phase>` description
   * ([[graft.Phase]]).
   */
@@ -99,42 +99,43 @@ object Pipeline {
 
   /** Full run: warehouse → flagship → single-file BOM'd CSV export
     * (the reference's resultado_final.csv shape). Returns the exported
-    * rows as a driver-local frame (see [[exportInOrder]]): counting,
+    * rows as a driver-local frame (see [[inExportOrder]]): counting,
     * showing or unpersisting it re-runs no join. */
   def run(spark: SparkSession, rawDir: String, warehouseDir: String,
       exportDir: String, exportFile: File): DataFrame = {
     buildWarehouse(spark, rawDir, warehouseDir)
-    exportInOrder(flagship(spark, warehouseDir), exportDir, exportFile)
+    export(inExportOrder(flagship(spark, warehouseDir)), exportDir,
+      exportFile)
   }
 
   /** Full run rendered pandas-compat (the golden resultado_final.csv
     * artifacts — float-formatted ddd/telefone, comma-decimal
     * capital_social; see [[PandasCompat]]). The warehouse itself stays
-    * canonically typed; compat is applied only at export. */
+    * canonically typed; compat is a projection over the same collected
+    * rows [[run]] exports, so the flagship runs once and the rendering
+    * schedules no job: both runs take the same jobs. */
   def runCompat(spark: SparkSession, rawDir: String, warehouseDir: String,
       exportDir: String, exportFile: File): DataFrame = {
     buildWarehouse(spark, rawDir, warehouseDir)
-    exportInOrder(PandasCompat(flagship(spark, warehouseDir)), exportDir,
-      exportFile)
+    export(PandasCompat(inExportOrder(flagship(spark, warehouseDir))),
+      exportDir, exportFile)
   }
 
   /** The export order, (cnpj_basico, nome_fantasia), ascending with nulls
     * first — what `sortWithinPartitions` on the two columns gives. */
   private val exportOrder = Seq("cnpj_basico", "nome_fantasia")
 
-  /** Collect `result` once, at full parallelism, sort it on the driver in
-    * export order and write the export from the sorted rows; return them
-    * as a driver-local frame. The flagship's filters leave a small
-    * fraction of the fact table, and a single-file export passes every
-    * row through the driver anyway, so the query runs as one job (plus
-    * its broadcast builds) with no sort or write stage after it. The
-    * order is Catalyst's own row ordering over the collected rows, so
-    * strings compare by UTF-8 bytes as Spark's sort compares them, not by
-    * Java's UTF-16 `String` order. Bounded by `spark.driver.maxResultSize`:
-    * a larger result fails the collect. */
-  private[graft] def exportInOrder(result: DataFrame, exportDir: String,
-      exportFile: File): DataFrame = {
-    val spark = result.sparkSession
+  /** Collect `result` once, at full parallelism, and sort it on the
+    * driver in export order; return the rows as a driver-local frame.
+    * The flagship's filters leave a small fraction of the fact table,
+    * and a single-file export passes every row through the driver
+    * anyway, so the query runs as one job (plus its broadcast builds)
+    * with no sort or write stage after it. The order is Catalyst's own
+    * row ordering over the collected rows, so strings compare by UTF-8
+    * bytes as Spark's sort compares them, not by Java's UTF-16 `String`
+    * order. Bounded by `spark.driver.maxResultSize`: a larger result
+    * fails the collect. */
+  private[graft] def inExportOrder(result: DataFrame): DataFrame = {
     val schema = result.schema
     val rows = graft.Phase("cnpj", "flagship") {
       ColumnBridge.collectInternal(result)
@@ -144,10 +145,17 @@ object Pipeline {
       SortOrder(BoundReference(i, schema(i).dataType, nullable = true),
         Ascending)
     })
-    val sorted = ColumnBridge.localFrame(spark, schema, rows.sorted(ordering))
+    ColumnBridge.localFrame(result.sparkSession, schema,
+      rows.sorted(ordering))
+  }
+
+  /** Write `frame`, a driver-local frame, as the export and return it;
+    * its collect runs no job. */
+  private[graft] def export(frame: DataFrame, exportDir: String,
+      exportFile: File): DataFrame = {
     graft.Phase("cnpj", "export") {
-      Export.writeCsvUtf8SigSingle(sorted, exportDir, exportFile)
+      Export.writeCsvUtf8SigSingle(frame, exportDir, exportFile)
     }
-    sorted
+    frame
   }
 }

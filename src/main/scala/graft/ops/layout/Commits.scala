@@ -650,7 +650,8 @@ private[ops] trait Commits { this: Layout.type =>
   def commitSnapshot(spark: SparkSession, table: String,
                      df: DataFrame,
                      statsColumns: Seq[String] = Nil,
-                     props: Map[String, String] = Map.empty): Int = {
+                     props: Map[String, String] = Map.empty): Int =
+      graft.Phase("commitSnapshot", "stage") {
     validateStatsColumns(statsColumns)
     // props carried by a data commit get the SAME DDL-time validation
     // the SQL CREATE/ALTER paths run (r16 advice: the bare parameter
@@ -754,6 +755,12 @@ private[ops] trait Commits { this: Layout.type =>
         !unset.contains(MaxColumnIdProp),
       s"$MaxColumnIdProp is maintained by every commit and cannot be " +
         "set or unset")
+    // so are the names renames retired: dropping one would let a new
+    // column read a renamed column's data from the pre-rename files
+    require(!set.contains(RetiredColumnsProp) &&
+        !unset.contains(RetiredColumnsProp),
+      s"$RetiredColumnsProp is maintained by RENAME COLUMN and cannot " +
+        "be set or unset")
     // the layout properties are CREATE-time immutable too, and for a
     // sharper reason than column mapping: every committed manifest line
     // records the #p:<col>/#bucket group its file was PLACED under. A
@@ -870,10 +877,12 @@ private[ops] trait Commits { this: Layout.type =>
     * tables (parquet matches by name — old files would silently
     * null-fill) with the documented add+backfill workaround named.
     * Props/constraints referencing the old name refuse first, like
-    * [[dropColumns]]. Pre-rename manifest bounds keep the OLD name and
-    * simply stop pruning new-name predicates on those files — stats are
-    * an optimization, never a correctness input; the next rewrite of
-    * each file re-records them. */
+    * [[dropColumns]]. The old name is retired from its field id
+    * ([[RetiredColumnsProp]]): no other column may take it, while a
+    * rename back to it keeps the id. Pre-rename manifest bounds keep the
+    * OLD name and simply stop pruning new-name predicates on those files
+    * — stats are an optimization, never a correctness input; the next
+    * rewrite of each file re-records them. */
   def renameColumn(spark: SparkSession, table: String,
       from: String, to: String): Int = {
     require(!to.contains('\t') && !to.contains('\n') &&
@@ -882,8 +891,18 @@ private[ops] trait Commits { this: Layout.type =>
         "(manifest line currency)")
     val root = new Path(table)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the renamed field's id at the head this attempt rebases onto, read
+    // in listFor (the first hook each attempt runs), so propsXform —
+    // which receives no head — retires the old name from that id
+    var fromId = 0L
     casCommit(fs, root, "renameColumn",
-      head => manifestFiles(fs, root, head),
+      head => {
+        fromId = schemaOf(fs, root, head).toSeq.flatMap(_.fields)
+          .find(_.name.equalsIgnoreCase(from))
+          .filter(_.metadata.contains(FieldIdKey))
+          .fold(0L)(_.metadata.getLong(FieldIdKey))
+        manifestFiles(fs, root, head)
+      },
       head => {
         val props = propsOf(fs, root, head)
         require(idMapped(props),
@@ -902,6 +921,7 @@ private[ops] trait Commits { this: Layout.type =>
             s"(table columns: ${prior.fieldNames.mkString(", ")})")
         require(!prior.fieldNames.exists(_.equalsIgnoreCase(to)),
           s"renameColumn: column '$to' already exists")
+        requireNotRetired(props, to, Some(fromId))
         Seq(StatsColumnsProp, BloomColumnsProp, ClusterSortProp,
             ClusterZorderProp, PartitionedByProp, BucketByProp)
           .foreach { p =>
@@ -928,7 +948,8 @@ private[ops] trait Commits { this: Layout.type =>
         }
         Some(types.StructType(prior.fields.map(f =>
           if (f.name.equalsIgnoreCase(from)) f.copy(name = to) else f)))
-      })
+      },
+      propsXform = withRetiredColumn(_, from, fromId))
   }
 
   /** `ALTER TABLE ... DROP COLUMN` as a schema-only commit: the data
@@ -1016,10 +1037,14 @@ private[ops] trait Commits { this: Layout.type =>
             // id-mapped: appends never mint ids (see stampFieldIds) —
             // a racing rename would otherwise desync staged footers
             // from the committed schema
-            df.schema.fieldNames.foreach(n => require(
-              prior.fieldNames.exists(_.equalsIgnoreCase(n)),
-              s"column-mapped table: column '$n' is not in the " +
-                "recorded schema — ALTER TABLE ADD COLUMN first"))
+            df.schema.fieldNames
+              .filterNot(n => prior.fieldNames.exists(_.equalsIgnoreCase(n)))
+              .foreach { n =>
+                requireNotRetired(headProps, n, None)
+                throw new IllegalArgumentException(
+                  s"column-mapped table: column '$n' is not in the " +
+                    "recorded schema — ALTER TABLE ADD COLUMN first")
+              }
             restampIds(prior,
               mergeWiden(prior, ColumnBridge.nullableSchema(df.schema)),
               headProps)

@@ -314,10 +314,12 @@ private[ops] trait Maintenance { this: Layout.type =>
     if (dvLines.isEmpty) return (v0, 0, plain.size, 0L)
     val bytesIn = dvLines.map(l => entrySize(l).getOrElse(
       fs.getFileStatus(new Path(root, entryPath(l))).getLen)).sum
-    val (v, _) = rewriteCommit(spark, fs, root,
-      readManifestLines(spark, fs, root, v0, dvLines),
-      statsColumnsOf(fs, root, v0))(
-      replaceCommit(fs, root, "compactDeletes", dvLines.toSet, _))
+    val (v, _) = graft.Phase("compactDeletes", "rewrite") {
+      rewriteCommit(spark, fs, root,
+        readManifestLines(spark, fs, root, v0, dvLines),
+        statsColumnsOf(fs, root, v0))(
+        replaceCommit(fs, root, "compactDeletes", dvLines.toSet, _))
+    }
     (v, dvLines.size, plain.size, bytesIn)
   }
 

@@ -1249,6 +1249,46 @@ private[ops] trait Manifests { this: Layout.type =>
     schema.filter(hasFieldIds).fold(props)(s =>
       props + (MaxColumnIdProp -> (nextColumnId(props, s) - 1).toString))
 
+  /** `graft.column.retired`: every name RENAME COLUMN took off a field
+    * id, with that id (`name:id` pairs, the name lower-cased and
+    * URL-encoded, comma-separated). Spark's parquet reader clips a file's
+    * columns by id, then converts each clipped column to the read field
+    * of the NAME the file stores it under: a new column under a
+    * renamed-away name would take the renamed column's data from every
+    * pre-rename file (PARQUET_COLUMN_DATA_TYPE_MISMATCH, or its values
+    * when the types agree). So, like ids, a retired name is never handed
+    * to another id; renaming the column back keeps its id and stays
+    * allowed. Recorded by [[renameColumn]]; it carries like every table
+    * property and is never set by hand. */
+  val RetiredColumnsProp = "graft.column.retired"
+
+  private[ops] def retiredColumns(props: Map[String, String])
+      : Map[String, Long] =
+    props.get(RetiredColumnsProp).toSeq.flatMap(splitCols).map { e =>
+      val Array(n, id) = e.split(':')
+      dec(n) -> id.toLong
+    }.toMap
+
+  /** `props` with `name` recorded as retired from field `id`. */
+  private[ops] def withRetiredColumn(props: Map[String, String],
+      name: String, id: Long): Map[String, String] =
+    props + (RetiredColumnsProp ->
+      (retiredColumns(props) + (name.toLowerCase -> id)).toSeq.sorted
+        .map { case (n, i) => s"${enc(n)}:$i" }.mkString(","))
+
+  /** Refuse to give `name` a field id other than `id` (a fresh id when
+    * `None`) when a rename retired it from another id. */
+  private[ops] def requireNotRetired(props: Map[String, String],
+      name: String, id: Option[Long]): Unit =
+    retiredColumns(props).get(name.toLowerCase).filterNot(id.contains)
+      .foreach { old =>
+        throw new IllegalArgumentException(
+          s"column name '$name' was retired by RENAME COLUMN from field " +
+            s"id $old: files written before that rename store the " +
+            s"column's data under '$name', and a read would take it for " +
+            "the new column. Choose another name.")
+      }
+
   /** Carry `prior`'s ids onto `merged` by (case-insensitive) name;
     * fields new in `merged` get fresh ids past the table's high-water
     * mark ([[nextColumnId]] under head `props`) — ids are never reused,
@@ -1263,8 +1303,10 @@ private[ops] trait Manifests { this: Layout.type =>
       .toMap
     var next = nextColumnId(props, prior)
     types.StructType(merged.fields.map { f =>
-      val id = byName.getOrElse(f.name.toLowerCase,
-        { val v = next; next += 1; v })
+      val id = byName.getOrElse(f.name.toLowerCase, {
+        requireNotRetired(props, f.name, None)
+        val v = next; next += 1; v
+      })
       withId(f, id)
     })
   }
@@ -1322,13 +1364,15 @@ private[ops] trait Manifests { this: Layout.type =>
         // and an append minting ids would race a concurrent rename.
         var next = nextColumnId(props, rs)
         df.schema.fields.map { f =>
-          val id = idByName.getOrElse(f.name.toLowerCase,
+          val id = idByName.getOrElse(f.name.toLowerCase, {
+            requireNotRetired(props, f.name, None)
             if (allowNewIds) { val v = next; next += 1; v }
             else throw new IllegalArgumentException(
               s"column-mapped table: column '${f.name}' is not in the " +
                 "recorded schema. Id-mapped tables evolve through " +
                 "ALTER TABLE ADD COLUMN (which assigns the field id " +
-                "atomically), then append."))
+                "atomically), then append.")
+          })
           col(f.name).as(f.name, new types.MetadataBuilder()
             .withMetadata(f.metadata).putLong(FieldIdKey, id).build())
         }

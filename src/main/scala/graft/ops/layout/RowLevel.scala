@@ -35,11 +35,16 @@ private[ops] trait RowLevel { this: Layout.type =>
     val v0 = currentVersion(fs, root)
     require(v0 > 0, s"deleteWhere: no committed version in $table")
     if (morEnabled(propsOf(fs, root, v0)))
-      return deleteWhereMor(spark, fs, root, table, v0, predicate)
+      return graft.Phase("deleteWhere", "sidecar") {
+        deleteWhereMor(spark, fs, root, table, v0, predicate)
+      }
     val files = manifestFiles(fs, root, v0)
-    val (affected, untouched) = byGrp(files, ControlPlane(
-      affectedGrps(spark, fs, root, v0, files, _.where(predicate)))
-      .collect().map(_.getString(0)).toSet)
+    val (affected, untouched) = byGrp(files,
+      graft.Phase("deleteWhere", "probe") {
+        ControlPlane(
+          affectedGrps(spark, fs, root, v0, files, _.where(predicate)))
+          .collect().map(_.getString(0)).toSet
+      })
     if (affected.isEmpty) return (v0, 0, untouched.size)
     // SQL DELETE semantics: remove rows where the predicate is TRUE —
     // rows where it evaluates NULL are KEPT (a bare !predicate would
@@ -51,9 +56,10 @@ private[ops] trait RowLevel { this: Layout.type =>
     // rewritten files re-record the table's stats columns (if any):
     // without this, every delete would silently strip a skipping
     // table's pruning — the guard compactSnapshot already carries
-    val (v, _) = rewriteCommit(spark, fs, root, kept,
-      statsColumnsOf(fs, root, v0))(
-      replaceCommit(fs, root, "deleteWhere", affected.toSet, _))
+    val (v, _) = graft.Phase("deleteWhere", "rewrite") {
+      rewriteCommit(spark, fs, root, kept, statsColumnsOf(fs, root, v0))(
+        replaceCommit(fs, root, "deleteWhere", affected.toSet, _))
+    }
     (v, affected.size, untouched.size)
   }
 
@@ -206,7 +212,8 @@ private[ops] trait RowLevel { this: Layout.type =>
     upsertByKeys(spark, table, batch, Seq(keyCol), deleteOnly)
 
   def upsertByKeys(spark: SparkSession, table: String, batch: DataFrame,
-      keyCols: Seq[String], deleteOnly: Boolean): (Int, Int, Int) = {
+      keyCols: Seq[String], deleteOnly: Boolean): (Int, Int, Int) =
+      graft.Phase("upsertByKeys", "stage") {
     val root = new Path(table)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val v0 = currentVersion(fs, root)

@@ -152,7 +152,8 @@ class CnpjPipelineSpec extends AnyFunSuite {
     val df = awkwardFrame()
     val expected = shardMergeExport(df, s"$base/export_oracle")
     val out = new File(s"$base/export_oracle.csv")
-    val local = Pipeline.exportInOrder(df, s"$base/export_new", out)
+    val local = Pipeline.export(Pipeline.inExportOrder(df),
+      s"$base/export_new", out)
     assert(new String(Files.readAllBytes(out.toPath), "UTF-8") ==
       new String(expected, "UTF-8"))
     assert(Files.readAllBytes(out.toPath).sameElements(expected))
@@ -166,9 +167,13 @@ class CnpjPipelineSpec extends AnyFunSuite {
     }
     assert(jobs == 0, s"exporting a driver-local frame ran $jobs jobs")
     assert(Files.readAllBytes(again.toPath).sameElements(expected))
-    // the export directory keeps no temporary file
-    assert(new File(s"$base/export_new").list().isEmpty)
+    // the target's directory keeps no temporary file
+    assert(tempFiles(out.getParentFile).isEmpty)
   }
+
+  /** The export's temporary files left in `dir` (none when it is absent). */
+  private def tempFiles(dir: File): Seq[String] =
+    Option(dir.list()).toSeq.flatten.filter(_.startsWith(".export-"))
 
   test("a failed export leaves the previous file whole") {
     import org.apache.spark.sql.functions.{col, lit, raise_error, when}
@@ -185,6 +190,26 @@ class CnpjPipelineSpec extends AnyFunSuite {
     val left = Option(new File(s"$base/export_failed").list())
       .getOrElse(Array.empty[String])
     assert(left.isEmpty, left.toSeq)
+    assert(tempFiles(out.getParentFile).isEmpty)
+  }
+
+  test("an export whose dir is on another filesystem than its target " +
+      "succeeds and leaves no temporary file") {
+    val shm = Paths.get("/dev/shm")
+    val target = Files.createDirectories(Paths.get(s"$base/export_cross"))
+    assume(Files.isDirectory(shm) && Files.isWritable(shm) &&
+      Files.getFileStore(shm) != Files.getFileStore(target),
+      "needs a writable /dev/shm on another filesystem than target/")
+    val dir = Files.createTempDirectory(shm, "graft-export-dir")
+    try {
+      val out = target.resolve("resultado_cross.csv").toFile
+      val df = awkwardFrame()
+      Export.writeCsvUtf8SigSingle(Pipeline.inExportOrder(df), dir.toString,
+        out)
+      assert(Files.readAllBytes(out.toPath)
+        .sameElements(shardMergeExport(df, s"$base/export_cross_oracle")))
+      assert(tempFiles(dir.toFile).isEmpty && tempFiles(target.toFile).isEmpty)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
   test("pandas-compat golden export reproduces the reference artifacts byte-for-byte") {
@@ -233,6 +258,108 @@ class CnpjPipelineSpec extends AnyFunSuite {
         s"$base/export_jobs", out).unpersist()
     }
     assert(jobs == 13, s"Pipeline.run scheduled $jobs jobs")
+  }
+
+  test("Pipeline.runCompat schedules the 13 jobs of Pipeline.run") {
+    fixture()
+    val out = new File(s"$base/resultado_compat_jobs.csv")
+    // the compat rendering reads its dtype flags from the collected rows
+    // and projects them: a flag aggregate over the flagship plan would
+    // run the fact scan and its joins a second time
+    val jobs = JobCount.during(spark, "cnpj-run-compat-budget") {
+      Pipeline.runCompat(spark, s"$base/raw", s"$base/wh_compat_jobs",
+        s"$base/export_compat_jobs", out).unpersist()
+    }
+    assert(jobs == 13, s"Pipeline.runCompat scheduled $jobs jobs")
+  }
+
+  /** The compat rendering as it was computed over a distributed result:
+    * the ten dtype flags as one aggregate, cross-joined back as a
+    * broadcast, and a five-way CASE per affinity column. The oracle for
+    * [[PandasCompat]]. */
+  private def aggregateCompat(result: DataFrame): DataFrame = {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions._
+    val affinity = Seq("numero", "ddd1", "telefone1", "ddd2", "telefone2")
+    def isIntText(c: Column): Column = c.rlike("^[0-9]+$")
+    val flagExprs = affinity.flatMap { n =>
+      Seq(
+        max(when(col(n).isNotNull && !isIntText(col(n)), true)
+          .otherwise(false)).as(s"${n}_has_text"),
+        max(when(col(n).isNull, true).otherwise(false))
+          .as(s"${n}_has_null"))
+    }
+    val flags = result.agg(flagExprs.head, flagExprs.tail: _*)
+    val cols = Flagship.outputCols.map {
+      case n if affinity.contains(n) =>
+        val c = col(n)
+        val asInt = c.cast("long").cast("string")
+        when(c.isNull, lit(null))
+          .when(!isIntText(c), c)
+          .when(col(s"${n}_has_text"), asInt)
+          .when(col(s"${n}_has_null"), concat(asInt, lit(".0")))
+          .otherwise(asInt).as(n)
+      case "capital_social" =>
+        regexp_replace(col("capital_social").cast("string"), "\\.", ",")
+          .as("capital_social")
+      case n => col(n)
+    }
+    result.crossJoin(broadcast(flags)).select(cols: _*)
+  }
+
+  test("PandasCompat over the collected rows renders what the flag " +
+      "aggregate and cross join rendered") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val affinity = Seq("numero", "ddd1", "telefone1", "ddd2", "telefone2")
+    val schema = StructType(Flagship.outputCols.map {
+      case n @ "cnpj_basico" => StructField(n, LongType)
+      case n @ "capital_social" => StructField(n, DecimalType(18, 2))
+      case n => StructField(n, StringType)
+    })
+    // each case is one column's cells, top to bottom
+    val cases = Seq(
+      "ints, no null (int64)" -> Seq("11", "0", "41898282"),
+      "ints and one null (float64)" -> Seq("11", null, "41898282"),
+      "ints next to text (object)" -> Seq("345", "001A", null),
+      "all null" -> Seq(null, null, null),
+      "leading zeros" -> Seq("007", "0011", "00"),
+      "an empty string" -> Seq("", "12", null),
+      "a digit string with a final line feed" -> Seq("12\n", "3", "4"))
+    def frame(columns: Seq[Seq[String]]): DataFrame = {
+      val rows = columns.head.indices.map { i =>
+        val byName = affinity.zip(columns.map(_(i))).toMap
+        Row.fromSeq(Flagship.outputCols.map {
+          case "cnpj_basico" => i.toLong
+          case "capital_social" => new java.math.BigDecimal(s"$i.50")
+          case n => byName.getOrElse(n, s"$n $i")
+        })
+      }
+      Pipeline.inExportOrder(spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 2), schema))
+    }
+    // every case in all five affinity columns, then the cases side by side
+    val frames = cases.map { case (name, cells) =>
+        name -> frame(affinity.map(_ => cells)) } ++
+      cases.map(_._2).sliding(affinity.size).zipWithIndex.map {
+        case (cols, i) => s"cases $i.. side by side" -> frame(cols) }
+    frames.foreach { case (name, local) =>
+      val expected = aggregateCompat(local).collect().toSeq
+      var got = Seq.empty[Row]
+      val jobs = JobCount.during(spark, "cnpj-compat-local") {
+        got = PandasCompat(local).collect().toSeq
+      }
+      assert(got == expected, name)
+      assert(jobs == 0, s"$name: rendering a driver-local frame ran $jobs jobs")
+    }
+    // the cells as pandas renders them, per dtype
+    def rendered(cells: Seq[String]): Seq[String] =
+      PandasCompat(frame(affinity.map(_ => cells))).collect()
+        .map(_.getAs[String]("numero")).toSeq
+    assert(rendered(Seq("11", "0", "007")) == Seq("11", "0", "7"))
+    assert(rendered(Seq("11", null, "007")) == Seq("11.0", null, "7.0"))
+    assert(rendered(Seq("345", "001A", null)) == Seq("345", "001A", null))
+    assert(rendered(Seq("", "012", null)) == Seq("", "12", null))
   }
 
   test("every job Pipeline.run schedules carries its cnpj phase, and the " +

@@ -337,6 +337,35 @@ class LedgerSpec extends AnyFunSuite {
         s"(Layout.grpOfRel / readLinesPos' __grp): ${sites.mkString("; ")}")
   }
 
+  test("only graft.Phase sets a job description or adds a job tag in " +
+      "src/main") {
+    import scala.jdk.CollectionConverters._
+    // a verb's jobs are named by its Phase, which restores the caller's
+    // description and tags afterwards; a bare setter elsewhere would
+    // leak its name onto the caller's later jobs
+    val setter = ("""\b(?:setJobDescription|setJobGroup|addJobTag|""" +
+      """setLocalProperty)\s*\(""").r
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root)
+    val (scanned, sites) =
+      try {
+        val srcs = files.iterator().asScala
+          .filter(_.toString.endsWith(".scala")).toSeq
+        (srcs.size, srcs.flatMap { f =>
+          val code = ParquetCalls.codeOnly(new String(
+            java.nio.file.Files.readAllBytes(f),
+            java.nio.charset.StandardCharsets.UTF_8))
+          setter.findAllMatchIn(code).map(m =>
+            (root.relativize(f).toString, m.matched))
+        })
+      } finally files.close()
+    assert(scanned > 50, s"guard lost its source files: $scanned")
+    val phase = sites.filter(_._1 == "graft/Phase.scala")
+    assert(phase.nonEmpty, "guard lost graft.Phase's own setters")
+    assert(sites == phase,
+      s"job description or tag set outside graft.Phase: ${sites.diff(phase)}")
+  }
+
   test("every Observation() in src/main is allow-listed: a staging " +
       "write's own figures come from its per-file aggregates") {
     import scala.jdk.CollectionConverters._

@@ -1117,6 +1117,57 @@ class SnapshotIsolationSpec extends AnyFunSuite {
       setTableProps(spark, table, Map.empty, Seq("graft.column.max_id")))
   }
 
+  test("a renamed-away name is retired from its field id: no other column " +
+      "takes it, the table still reads, and a rename back keeps the id " +
+      "(id-mapped table)") {
+    import ops.Layout._
+    import spark.implicits._
+    import org.apache.spark.sql.types.{IntegerType, StringType, StructField}
+    val table = "target/graft_io/spec/rename_retired"
+    val root = new Path(table)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(root, true)
+    commitSnapshot(spark, table, Seq((1L, 10), (3L, 30)).toDF("k", "v"),
+      props = Map(ColumnMappingProp -> "id"))
+    def idOf(c: String) = snapshotLayout(spark, table, None)._2.get
+      .apply(c).metadata.getLong(FieldIdKey)
+    val vId = idOf("v")
+    renameColumn(spark, table, "v", "w")
+    def rows() = readSnapshot(spark, table).orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSeq
+    // the pre-rename file stores `w`'s data under the name `v`: a new `v`
+    // would read it (INT32 read as a string fails every read)
+    def refused(body: => Any): Unit = {
+      val ex = intercept[IllegalArgumentException](body)
+      assert(ex.getMessage.contains("retired by RENAME COLUMN") &&
+        ex.getMessage.contains(s"field id $vId"), ex.getMessage)
+    }
+    refused(addColumns(spark, table, Seq(StructField("v", StringType))))
+    refused(addColumns(spark, table, Seq(StructField("V", StringType))))
+    refused(commitSnapshot(spark, table,
+      Seq((5L, 50, "x")).toDF("k", "w", "v")))
+    addColumns(spark, table, Seq(StructField("u", IntegerType)))
+    refused(renameColumn(spark, table, "u", "v"))
+    assert(readSnapshot(spark, table).columns.toSeq == Seq("k", "w", "u"))
+    assert(rows() == Seq((1L, 10), (3L, 30)))
+    // the protocol's own record: no DDL sets or drops it
+    Seq(Map(RetiredColumnsProp -> "") -> Nil,
+        Map.empty[String, String] -> Seq(RetiredColumnsProp)).foreach {
+      case (set, unset) =>
+        val ex = intercept[IllegalArgumentException](
+          setTableProps(spark, table, set, unset))
+        assert(ex.getMessage.contains(RetiredColumnsProp), ex.getMessage)
+    }
+    // the id that held the name takes it back, and its data with it
+    renameColumn(spark, table, "w", "v")
+    assert(idOf("v") == vId)
+    assert(rows() == Seq((1L, 10), (3L, 30)))
+    commitSnapshot(spark, table, Seq((5L, 50, 7)).toDF("k", "v", "u"))
+    assert(rows() == Seq((1L, 10), (3L, 30), (5L, 50)))
+    // now `w` is retired from the same id
+    refused(addColumns(spark, table, Seq(StructField("w", StringType))))
+  }
+
   test("compactDeletes rewrites ONLY dv'd files; the rest stay byte-identical") {
     import ops.Layout._
     import spark.implicits._

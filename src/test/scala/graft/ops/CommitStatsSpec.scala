@@ -532,6 +532,84 @@ class CommitStatsSpec extends AnyFunSuite {
     assert((mergeMor, deleteCow, replace, mergeCow) == ((7, 2, 3, 5)))
     assert(Layout.readSnapshot(spark, t).count() == 407)
   }
+
+  test("every job of commitSnapshot, upsertByKeys, deleteWhere and " +
+      "compactDeletes carries its verb's phase, and the caller's " +
+      "description and tags come back") {
+    val t = fresh("phases")
+    val sc = spark.sparkContext
+    // (job group, description, tags) of every job started
+    val started =
+      scala.collection.mutable.ArrayBuffer.empty[(String, String, Set[String])]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties)
+          .flatMap(p => Option(p.getProperty(k))).getOrElse("")
+        started.synchronized(started += ((prop("spark.jobGroup.id"),
+          prop("spark.job.description"),
+          prop("spark.job.tags").split(",").filter(_.nonEmpty).toSet)))
+      }
+    }
+    /** Runs `body` under the caller's own job group, description and tag;
+      * returns the group. */
+    def asCaller(group: String)(body: => Any): String = {
+      sc.setJobGroup(group, "the caller's own")
+      sc.addJobTag("caller")
+      try {
+        body
+        assert(sc.getLocalProperty("spark.job.description") ==
+          "the caller's own", group)
+        assert(sc.getJobTags() == Set("caller"), group)
+      } finally { sc.removeJobTag("caller"); sc.clearJobGroup() }
+      group
+    }
+    sc.addSparkListener(listener)
+    val verbs = try {
+      val v = Seq(
+        asCaller("phases-commit") {
+          // a shuffle ahead of the staging write: AQE's stage jobs too
+          Layout.commitSnapshot(spark, t, flatRows(0, 400).repartition(4),
+            Seq("l"), props = Map(Layout.StatsColumnsProp -> "b",
+              Layout.RowLevelModeProp -> "mor"))
+        } -> Set("commitSnapshot stage"),
+        asCaller("phases-upsert") {
+          Layout.upsertByKeys(spark, t, flatRows(395, 405), "b")
+        } -> Set("upsertByKeys stage"),
+        asCaller("phases-tombstones") {
+          Layout.upsertByKeys(spark, t, spark.range(10, 13).toDF("b"), "b",
+            deleteOnly = true)
+        } -> Set("upsertByKeys stage"),
+        asCaller("phases-delete-mor") {
+          Layout.deleteWhere(spark, t, col("b") === 17L)
+        } -> Set("deleteWhere sidecar"),
+        asCaller("phases-compact") {
+          Layout.compactDeletes(spark, t)
+        } -> Set("compactDeletes rewrite"))
+      Layout.setTableProps(spark, t, Map(Layout.RowLevelModeProp -> "cow"),
+        Nil)
+      // the copy-on-write probe is a control-plane job
+      v :+ (asCaller("phases-delete-cow") {
+        Layout.deleteWhere(spark, t, col("b") === 20L)
+      } -> Set("deleteWhere probe", "deleteWhere rewrite"))
+    } finally {
+      org.apache.spark.sql.graft.ColumnBridge.drainListenerBus(spark)
+      sc.removeSparkListener(listener)
+    }
+    val jobs = started.synchronized(started.toSeq)
+    verbs.foreach { case (group, phases) =>
+      val mine = jobs.filter(_._1 == group)
+      assert(mine.map(_._2).toSet == phases, (group, mine))
+      mine.foreach { case (_, d, tags) =>
+        val tag = d.replaceFirst(" ", ":")
+        // beside Spark's own session, execution and broadcast tags
+        assert(tags("caller") && tags(tag) && !tags.exists(g =>
+          g != tag && phases.exists(p => g == p.replaceFirst(" ", ":"))),
+          (group, mine))
+      }
+    }
+    assert(Layout.readSnapshot(spark, t).count() == 400)
+  }
 }
 
 /** A one-shot action a task fires from inside a UDF: the local-mode
